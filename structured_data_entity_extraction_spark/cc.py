@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -106,7 +108,7 @@ def connected_components(
         schema = T.StructType(
             [T.StructField("node", id_type), T.StructField("component", id_type)]
         )
-        return edges.sparkSession.createDataFrame(rows, schema)
+        return local_frame(edges.sparkSession, rows, schema)
 
     try:
         if method == "star":

@@ -28,6 +28,7 @@ from pyspark.sql.functions import pandas_udf
 
 from .cc import connected_components
 from .schemas import CODE_MENTIONS_ARRAY
+from .session import local_frame
 
 # ------------------------------------------------------- extraction spec
 #
@@ -192,7 +193,7 @@ def code_alias_dim(spark: SparkSession, rows=None) -> DataFrame:
             T.StructField("canonical", T.StringType(), False),
         ]
     )
-    return spark.createDataFrame(rows or default_code_alias_rows(), schema)
+    return local_frame(spark, rows or default_code_alias_rows(), schema)
 
 
 # ------------------------------------------------------------- stage B

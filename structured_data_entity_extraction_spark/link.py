@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from . import refsem
 from .extract import parse_window_udf
+from .session import local_frame
 
 PARSED_FIELDS = ["colonia", "calle", "fecha", "valor"]
 
@@ -25,9 +26,11 @@ PARSED_FIELDS = ["colonia", "calle", "fecha", "valor"]
 
 def dim_frames(spark: SparkSession) -> dict[str, DataFrame]:
     """Small dimension tables (≤2.5k rows) from the extracted reference
-    dictionaries -- always broadcast (SURVEY.md §4)."""
-    estado_rank = spark.createDataFrame(
-        [(r, c) for r, c in refsem.estado_rank_dim()],
+    dictionaries -- always broadcast (SURVEY.md §4), as local relations
+    so the broadcast runs no Python."""
+    estado_rank = local_frame(
+        spark,
+        refsem.estado_rank_dim(),
         T.StructType(
             [
                 T.StructField("rank", T.IntegerType(), False),
@@ -35,8 +38,9 @@ def dim_frames(spark: SparkSession) -> dict[str, DataFrame]:
             ]
         ),
     )
-    state_code = spark.createDataFrame(
-        [(k, v) for k, v in refsem.geo_dims()["state_code_map"].items()],
+    state_code = local_frame(
+        spark,
+        refsem.geo_dims()["state_code_map"].items(),
         T.StructType(
             [
                 T.StructField("code", T.StringType(), False),
@@ -44,7 +48,8 @@ def dim_frames(spark: SparkSession) -> dict[str, DataFrame]:
             ]
         ),
     )
-    state_branch = spark.createDataFrame(
+    state_branch = local_frame(
+        spark,
         refsem.state_branch_dim(),
         T.StructType(
             [
@@ -53,7 +58,8 @@ def dim_frames(spark: SparkSession) -> dict[str, DataFrame]:
             ]
         ),
     )
-    muni_alias = spark.createDataFrame(
+    muni_alias = local_frame(
+        spark,
         refsem.muni_alias_dim(),
         T.StructType(
             [

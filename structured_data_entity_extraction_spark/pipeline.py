@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from . import codekg
 from .link import avaluo_records, dim_frames
-from .materialize import StageStore, doc_sha_digest, doc_sha_pairs, sha_invariant_report
+from .materialize import StageStore, doc_sha_identity, sha_invariant_report
 from .triples import records_to_triples
 
 
@@ -33,6 +33,54 @@ def length_gate(docs: DataFrame, min_chars: int = 50, text_col: str = "text") ->
     text exceeds ``min_chars`` (extractorAvaluos.py:18-29 keeps pages
     with >50 chars). JVM-side filter, pushes down to the scan."""
     return docs.filter(F.length(F.trim(F.coalesce(F.col(text_col), F.lit("")))) > min_chars)
+
+
+class StageCommits:
+    """The commit path every pipeline mode shares: build-or-resume
+    (``StageStore.run_stage``) or append one stage, record its manifest
+    rows and wall time in ``metrics["stages"]``, and hold a stage that
+    carries content_sha to the per-row sha256 invariant against the
+    input's (doc_id, content_sha) pairs (BASELINE.json:input_hint)."""
+
+    def __init__(self, spark: SparkSession, store: StageStore, metrics: dict, pairs=None, n_input: int = 0):
+        self.spark, self.store, self.metrics = spark, store, metrics
+        self.pairs, self.n_input = pairs, n_input
+
+    def run(self, stage: str, build, partition_by=None, check: bool = True) -> DataFrame:
+        t0 = time.time()
+        df = self.store.run_stage(self.spark, stage, build, partition_by)
+        self.metrics["stages"][stage] = {
+            "rows": self.store.manifest(stage)["rows"],
+            "wall_s": round(time.time() - t0, 3),
+            "resumed": self.store.last_resumed[stage],
+        }
+        if check:
+            self.check(stage, df)
+        return df
+
+    def append(self, stage: str, df: DataFrame, partition_by=None) -> None:
+        t0 = time.time()
+        self.store.append(df, stage, partition_by)
+        m = self.store.manifest(stage)
+        self.metrics["stages"][stage] = {
+            "appended_rows": m["rows"] - m["appended_from_rows"],
+            "total_rows": m["rows"],
+            "wall_s": round(time.time() - t0, 3),
+        }
+        self.check(stage, df)
+
+    def check(self, stage: str, df: DataFrame) -> None:
+        """A stage may drop docs (explode on []), so the check is
+        "subset with no sha mismatch"."""
+        if self.pairs is None or "content_sha" not in df.columns:
+            return
+        rep = sha_invariant_report(df, self.pairs, self.n_input)
+        self.metrics["stages"][stage].update(rep)
+        if not rep["sha_invariant_ok"]:
+            raise RuntimeError(
+                f"content sha256 invariant violated at stage {stage}: "
+                f"{rep['bad_pairs']} (doc_id, content_sha) pairs not in input"
+            )
 
 
 def run_codekg_pipeline(
@@ -50,42 +98,16 @@ def run_codekg_pipeline(
     first-class stages per the north rule); returns stage row counts +
     timings."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
-    metrics: dict = {"run_id": run_id, "stages": {}}
-
-    # the per-row invariant baseline: (doc_id, sha256(content)) over the
-    # raw input (BASELINE.json:input_hint). A stage may legitimately drop
-    # zero-mention docs (explode on []), so the check is "subset with no
-    # sha mismatch", with the cheap digest-equality fast path.
-    input_pairs, input_digest = input_identity(repos_src)
-    input_pairs = input_pairs.persist()
-    metrics["input_sha_digest"] = input_digest
+    input_pairs, input_digest, n_input = input_identity(repos_src)
+    metrics: dict = {"run_id": run_id, "input_sha_digest": input_digest, "stages": {}}
     # stamp the input identity into every stage manifest: resume only
     # proceeds when the warehouse was built from THIS input (run_stage
     # raises otherwise -- the silent-stale-resume guard)
-    store.input_digest = input_digest
-    store.input_docs = input_pairs.count()
-
-    def timed(stage, build, partition_by=None):
-        t0 = time.time()
-        df = store.run_stage(spark, stage, build, partition_by)
-        info = {
-            "rows": store.manifest(stage)["rows"],
-            "wall_s": round(time.time() - t0, 3),
-            "resumed": store.last_resumed.get(stage, False),
-        }
-        if "content_sha" in df.columns:
-            info.update(sha_invariant_report(df, input_pairs, input_digest))
-            if not info["sha_invariant_ok"]:
-                raise RuntimeError(
-                    f"content sha256 invariant violated at stage {stage}: "
-                    f"{info['bad_pairs']} (doc_id, content_sha) pairs not in input"
-                )
-        metrics["stages"][stage] = info
-        return df
-
+    store.input_digest, store.input_docs = input_digest, n_input
+    commits = StageCommits(spark, store, metrics, input_pairs, n_input)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
 
-    mentions = timed(
+    mentions = commits.run(
         "mentions",
         lambda: codekg.extract_code_mentions(repos_src, bucket_count),
         partition_by=["repo_bucket", "lang"],
@@ -103,14 +125,14 @@ def run_codekg_pipeline(
         store.begin_append(["_input_pairs"])
         store.write_input_pairs(input_pairs)
         store.end_append()
-    candidates = timed(
+    candidates = commits.run(
         "candidates",
         lambda: codekg.link_mentions(mentions, alias_dim, use_lsh=use_lsh),
         partition_by=["repo_bucket", "lang"],
     )
-    edges = timed("edges", lambda: codekg.link_edges(candidates, alias_dim))
-    nodes = timed("nodes", lambda: codekg.canonicalize(candidates, alias_dim, edges))
-    triples = timed(
+    edges = commits.run("edges", lambda: codekg.link_edges(candidates, alias_dim))
+    nodes = commits.run("nodes", lambda: codekg.canonicalize(candidates, alias_dim, edges))
+    commits.run(
         "triples",
         lambda: codekg.build_triples(candidates, nodes),
         partition_by=["repo_bucket", "lang"],
@@ -121,16 +143,17 @@ def run_codekg_pipeline(
 
 
 def input_identity(repos_src: DataFrame):
-    """(distinct (doc_id, content_sha) pairs, additive digest) of a raw
-    repos_src frame; doc_id = sha256(repo\\0path\\0commit). The digest
-    is an action (one aggregate collect)."""
-    keyed = repos_src.select(
-        F.sha2(
-            F.concat_ws("\x00", F.col("repo"), F.col("path"), F.col("commit")), 256
-        ).alias("doc_id"),
-        F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("content_sha"),
+    """(persisted distinct (doc_id, content_sha) pairs, additive digest,
+    pair count) of a raw repos_src frame; doc_id =
+    sha256(repo\\0path\\0commit). Digest and count are one aggregate."""
+    return doc_sha_identity(
+        repos_src.select(
+            F.sha2(
+                F.concat_ws("\x00", F.col("repo"), F.col("path"), F.col("commit")), 256
+            ).alias("doc_id"),
+            F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("content_sha"),
+        )
     )
-    return doc_sha_pairs(keyed), doc_sha_digest(keyed)
 
 
 def ingest_repos_batch(
@@ -181,41 +204,31 @@ def ingest_repos_batch(
             alias_rows=alias_rows,
             replay_ok=True,
         )
-    pairs, digest = input_identity(repos_src_batch)
-    pairs = pairs.persist()
-    store.input_digest = digest
-    store.input_docs = pairs.count()
+    pairs, digest, n_input = input_identity(repos_src_batch)
+    store.input_digest, store.input_docs = digest, n_input
     metrics: dict = {
         "run_id": store.run_id,
         "mode": "bootstrap",
-        "new_docs": store.input_docs,
+        "new_docs": n_input,
         "input_sha_digest": digest,
         "stages": {},
     }
+    commits = StageCommits(spark, store, metrics, pairs, n_input)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
-    mentions = store.run_stage(
-        spark,
+    mentions = commits.run(
         "mentions",
         lambda: codekg.extract_code_mentions(repos_src_batch, bucket_count),
         ["repo_bucket", "lang"],
+        check=False,
     )
-    candidates = store.run_stage(
-        spark,
+    candidates = commits.run(
         "candidates",
         lambda: codekg.link_mentions(mentions, alias_dim, use_lsh=use_lsh),
         ["repo_bucket", "lang"],
+        check=False,
     )
     for stage, df in (("mentions", mentions), ("candidates", candidates)):
-        rep = sha_invariant_report(df, pairs, digest)
-        if not rep["sha_invariant_ok"]:
-            raise RuntimeError(
-                f"content sha256 invariant violated at stage {stage}: "
-                f"{rep['bad_pairs']} (doc_id, content_sha) pairs not in input"
-            )
-        metrics["stages"][stage] = {
-            "rows": store.manifest(stage)["rows"],
-            **rep,
-        }
+        commits.check(stage, df)
     # sidecar LAST: run_stage has now either built the stages from this
     # batch or resumed them under the identity guard, so the sidecar
     # can never describe an input the warehouse does not hold. The
@@ -272,9 +285,7 @@ def append_repos_batch(
             "pipeline once to stamp them before appending"
         )
 
-    new_pairs, new_digest = input_identity(repos_src_new)
-    new_pairs = new_pairs.persist()
-    n_new = new_pairs.count()
+    new_pairs, new_digest, n_new = input_identity(repos_src_new)
     if store.has_input_pairs():
         existing = store.read_input_pairs(spark).select("doc_id", "content_sha").distinct()
     else:
@@ -326,6 +337,7 @@ def append_repos_batch(
         "input_sha_digest": store.input_digest,
         "stages": {},
     }
+    commits = StageCommits(spark, store, metrics, new_pairs, n_new)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
     # the new-batch frames feed both the append write and the
     # downstream link/invariant -- persist so the extraction pUDF runs
@@ -336,21 +348,7 @@ def append_repos_batch(
     ).persist()
     store.begin_append(["mentions", "candidates", "_input_pairs"])
     for stage, df in (("mentions", mentions_new), ("candidates", candidates_new)):
-        t0 = time.time()
-        store.append(df, stage, ["repo_bucket", "lang"])
-        rep = sha_invariant_report(df, new_pairs, new_digest)
-        if not rep["sha_invariant_ok"]:
-            raise RuntimeError(
-                f"content sha256 invariant violated in appended batch at "
-                f"stage {stage}: {rep['bad_pairs']} pairs not in new input"
-            )
-        metrics["stages"][stage] = {
-            "appended_rows": store.manifest(stage)["rows"]
-            - store.manifest(stage)["appended_from_rows"],
-            "total_rows": store.manifest(stage)["rows"],
-            "wall_s": round(time.time() - t0, 3),
-            **rep,
-        }
+        commits.append(stage, df, ["repo_bucket", "lang"])
     if store.has_input_pairs():
         store.append_input_pairs(new_pairs)
     else:
@@ -415,26 +413,18 @@ def run_codekg_pipeline_incremental(
 
     # global stages rebuild from the union (their old manifests carry
     # the pre-append input identity, which run_stage would refuse)
+    commits = StageCommits(spark, store, metrics)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
     candidates_all = store.read(spark, "candidates")
-
-    def timed(stage, build, partition_by=None):
-        t0 = time.time()
-        df = store.run_stage(spark, stage, build, partition_by)
-        metrics["stages"][stage] = {
-            "rows": store.manifest(stage)["rows"],
-            "wall_s": round(time.time() - t0, 3),
-            "rebuilt": True,
-        }
-        return df
-
-    edges = timed("edges", lambda: codekg.link_edges(candidates_all, alias_dim))
-    nodes = timed("nodes", lambda: codekg.canonicalize(candidates_all, alias_dim, edges))
-    timed(
+    edges = commits.run("edges", lambda: codekg.link_edges(candidates_all, alias_dim))
+    nodes = commits.run("nodes", lambda: codekg.canonicalize(candidates_all, alias_dim, edges))
+    commits.run(
         "triples",
         lambda: codekg.build_triples(candidates_all, nodes),
         partition_by=["repo_bucket", "lang"],
     )
+    for stage in ("edges", "nodes", "triples"):
+        metrics["stages"][stage]["rebuilt"] = True
     metrics["triples"] = metrics["stages"]["triples"]["rows"]
     return metrics
 
@@ -456,29 +446,17 @@ def run_avaluo_pipeline(
     dims = dim_frames(spark)
     if min_page_chars is not None:
         docs = length_gate(docs, min_page_chars)
-    input_keyed = docs.select(
-        "doc_id",
-        F.sha2(F.coalesce(F.col("text"), F.lit("")), 256).alias("content_sha"),
+    input_pairs, input_digest, n_input = doc_sha_identity(
+        docs.select(
+            "doc_id",
+            F.sha2(F.coalesce(F.col("text"), F.lit("")), 256).alias("content_sha"),
+        )
     )
-    input_pairs = doc_sha_pairs(input_keyed).persist()
-    input_digest = doc_sha_digest(input_keyed)
-    store.input_digest = input_digest
-    store.input_docs = input_pairs.count()
+    store.input_digest, store.input_docs = input_digest, n_input
     out: dict = {"input_sha_digest": input_digest, "stages": {}}
-    records = store.run_stage(
-        spark, "records", lambda: avaluo_records(docs, dims)
-    )
-    triples = store.run_stage(
-        spark, "triples", lambda: records_to_triples(records)
-    )
-    for stage, df in (("records", records), ("triples", triples)):
-        rep = sha_invariant_report(df, input_pairs, input_digest)
-        out["stages"][stage] = {"rows": store.manifest(stage)["rows"], **rep}
-        if not rep["sha_invariant_ok"]:
-            raise RuntimeError(
-                f"content sha256 invariant violated at stage {stage}: "
-                f"{rep['bad_pairs']} (doc_id, content_sha) pairs not in input"
-            )
+    commits = StageCommits(spark, store, out, input_pairs, n_input)
+    records = commits.run("records", lambda: avaluo_records(docs, dims))
+    commits.run("triples", lambda: records_to_triples(records))
     input_pairs.unpersist()
     out["records"] = out["stages"]["records"]["rows"]
     out["triples"] = out["stages"]["triples"]["rows"]

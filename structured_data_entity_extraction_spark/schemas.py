@@ -85,13 +85,16 @@ TRIPLES = T.StructType(
     ]
 )
 
+# per-file lineage of a committed stage, as its manifest records it
+# (StageStore.lineage): file is the path under <stage>/data, rows and
+# bytes come from the file's parquet footer and size, run_id is the
+# run whose commit wrote it (appends add files under their own run_id)
 LINEAGE = T.StructType(
     [
         T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
+        T.StructField("file", T.StringType(), False),
         T.StructField("rows", T.LongType(), False),
-        T.StructField("content_sha_sum", T.StringType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
+        T.StructField("bytes", T.LongType(), False),
         T.StructField("run_id", T.StringType(), False),
     ]
 )

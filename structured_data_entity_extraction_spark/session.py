@@ -18,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_CONF = {
     # AQE: runtime coalescing + skew-join handling (north_rule)
@@ -65,3 +66,25 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """A driver-side table (tuples in ``schema`` order) as a local
+    relation. The rows travel as a pyarrow Table carrying the declared
+    schema, so the plan holds them in a ``LocalTableScan`` (with Arrow
+    on or off): queries and broadcasts over it run no Python worker and
+    no Spark job. ``createDataFrame`` over a Python list instead plans
+    ``Scan ExistingRDD`` over a PythonRDD, which re-pickles the rows in
+    Python workers on every evaluation."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+            schema=arrow_schema,
+        ),
+        schema,
+    )

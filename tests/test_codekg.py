@@ -149,12 +149,31 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
     out = str(tmp_path / "warehouse")
     m1 = run_codekg_pipeline(spark, repos_df, out, run_id="r1", use_lsh=False)
     assert m1["triples"] > 0
-    # lineage row counts reconcile with manifest totals per stage
+    # lineage row counts reconcile with manifest totals per stage, and
+    # the manifest's observed rows and sha fold match a fresh scan
     store = StageStore(out, run_id="r1")
+    fold = F.conv(F.substring("content_sha", 1, 16), 16, 10).cast("decimal(20,0)")
     for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
+        m = store.manifest(stage)
         lin = store.lineage(spark, stage)
         total = lin.agg(F.sum("rows")).collect()[0][0]
-        assert total == store.manifest(stage)["rows"]
+        assert total == m["rows"]
+        data = os.path.join(out, stage, "data")
+        on_disk = sorted(
+            os.path.relpath(os.path.join(r, f), data)
+            for r, _d, fs in os.walk(data)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+        assert sorted(f["file"] for f in m["lineage"]) == on_disk
+        assert m["files"] == len(on_disk)
+        assert m["bytes"] == sum(f["bytes"] for f in m["lineage"])
+        scan = spark.read.parquet(data)
+        if "content_sha" in scan.columns:
+            rows, sha = scan.agg(F.count(F.lit(1)), F.sum(fold)).collect()[0]
+            assert (m["rows"], m["content_sha_sum"]) == (rows, str(sha))
+        else:
+            assert (m["rows"], m["content_sha_sum"]) == (scan.count(), None)
 
     # kill-after-stage simulation: drop 'triples' commit, resume under a
     # new run_id -> earlier stages are skipped (resumed), output identical
@@ -171,6 +190,38 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
         (r["subj"], r["pred"], r["obj"]) for r in t2.select("subj", "pred", "obj").collect()
     )
     assert rows_before == rows_after
+
+
+def test_sha_invariant_catches_foreign_pair(spark, rows, tmp_path, monkeypatch):
+    """A stage row whose (doc_id, content_sha) pair is not in the input
+    -- a corrupted sha or a foreign row -- is counted by the exact
+    report and aborts the pipeline with 'invariant violated'."""
+    from structured_data_entity_extraction_spark import pipeline
+
+    df = spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows[:30]],
+        REPOS_SRC,
+    )
+    real_extract = codekg.extract_code_mentions
+
+    def planted(repos_src, bucket_count=64):
+        m = real_extract(repos_src, bucket_count)
+        victim = m.select("doc_id").orderBy("doc_id").first()["doc_id"]
+        return m.withColumn(
+            "content_sha",
+            F.when(F.col("doc_id") == victim, F.lit("f" * 64)).otherwise(F.col("content_sha")),
+        )
+
+    pairs, _digest, n_input = pipeline.input_identity(df)
+    rep = pipeline.sha_invariant_report(planted(df), pairs, n_input)
+    assert rep["sha_invariant_ok"] is False and rep["bad_pairs"] == 1
+    clean = pipeline.sha_invariant_report(real_extract(df), pairs, n_input)
+    assert clean["sha_invariant_ok"] is True and clean["bad_pairs"] == 0
+    pairs.unpersist()
+
+    monkeypatch.setattr(codekg, "extract_code_mentions", planted)
+    with pytest.raises(RuntimeError, match="invariant violated at stage mentions: 1 "):
+        run_codekg_pipeline(spark, df, str(tmp_path / "w"), use_lsh=False)
 
 
 def test_resume_refuses_changed_input(spark, repos_df, tmp_path):

@@ -112,6 +112,62 @@ def test_link_mentions_plan_has_no_pyspark_ml(spark):
     assert "BatchEvalPython" not in p  # no row-at-a-time UDF ever
 
 
+def test_pipeline_plans_have_no_python_rdd_scan(spark):
+    """The EvalPython check above cannot see the other Python crossing:
+    a table built on the driver with createDataFrame(<python list>)
+    plans as `Scan ExistingRDD` over a PythonRDD and starts Python
+    workers on every evaluation. The code alias dim, the driver CC
+    result and the avaluo dims are local relations (LocalTableScan), so
+    link, edges, canonicalize and a dim join carry no such scan."""
+    from structured_data_entity_extraction_spark import codekg
+    from structured_data_entity_extraction_spark import link as L
+    from structured_data_entity_extraction_spark.fixtures import repos_src_rows
+    from structured_data_entity_extraction_spark.schemas import REPOS_SRC
+    from structured_data_entity_extraction_spark.session import local_frame
+
+    rows = repos_src_rows(60, seed=7)
+    df = local_frame(
+        spark,
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows],
+        REPOS_SRC,
+    )
+    alias_dim = codekg.code_alias_dim(spark)
+    cands = codekg.link_mentions(codekg.extract_code_mentions(df), alias_dim, use_lsh=True)
+    edges = codekg.link_edges(cands, alias_dim)
+    nodes = codekg.canonicalize(cands, alias_dim, edges)
+    extracted = spark.range(1).select(
+        F.col("id").alias("doc_id"),
+        F.struct(F.lit(0).alias("estado_rank"), F.lit("09").alias("estado_digit")).alias("ext"),
+    )
+    estado = L.resolve_estado(extracted, L.dim_frames(spark))
+    for name, frame in (("link_mentions", cands), ("link_edges", edges),
+                        ("canonicalize", nodes), ("resolve_estado", estado)):
+        p = _plan(frame)
+        assert "Scan ExistingRDD" not in p, (name, p)
+        assert "LocalTableScan" in p, name
+
+
+def test_local_frame_with_zero_rows(spark):
+    """A driver table may be empty (the driver CC path over a graph
+    with no edges): the declared schema still holds, the plan is a
+    local relation."""
+    from pyspark.sql import types as T
+
+    from structured_data_entity_extraction_spark.cc import connected_components
+    from structured_data_entity_extraction_spark.session import local_frame
+
+    schema = T.StructType(
+        [T.StructField("src", T.StringType()), T.StructField("dst", T.StringType())]
+    )
+    empty = local_frame(spark, [], schema)
+    assert empty.schema == schema and empty.collect() == []
+    assert "LocalTableScan" in _plan(empty)
+    comp = connected_components(empty)
+    assert comp.collect() == []
+    assert [f.dataType for f in comp.schema] == [T.StringType(), T.StringType()]
+    assert "Scan ExistingRDD" not in _plan(comp)
+
+
 def test_simhash_candidates_plan_is_one_join(spark):
     """r5 Manku block-permute 'done' criterion: candidate generation is
     ONE equi-join on a single packed long key -- not the old 4-branch

@@ -115,12 +115,26 @@ def test_ngram_packed_and_struct_pair_paths_agree(spark):
 
 def test_first_parsed_struct_min_equals_window_form(spark):
     """first_parsed's pivoted min(struct(anchor_rank, span_start,
-    parsed)) must pick exactly the old window's rn=1 row on tie-free
-    data (the reference guarantees (anchor_rank, span_start) is unique
-    per (doc, field))."""
+    parsed)) must pick exactly the old window's rn=1 row. It relies on
+    (anchor_rank, span_start) being unique per (doc, field), which the
+    reference guarantees; the extractor's real output is checked for
+    that uniqueness here, and a planted tie pins what a break would do
+    (the struct min falls through to the smallest parsed string), so a
+    break fails this test instead of silently changing the selection."""
     from pyspark.sql import Window
 
     from structured_data_entity_extraction_spark import link as L
+    from structured_data_entity_extraction_spark.extract import extract_stage
+    from structured_data_entity_extraction_spark.fixtures import avaluo_docs
+    from structured_data_entity_extraction_spark.schemas import AVALUO_DOCS
+
+    docs = spark.createDataFrame(
+        [(r["doc_id"], r["text"]) for r in avaluo_docs(60, seed=7)], AVALUO_DOCS
+    )
+    real = L.parse_mentions(extract_stage(docs))
+    key = ["doc_id", "field", "anchor_rank", "span_start"]
+    assert real.count() > 0
+    assert real.groupBy(*key).count().filter(F.col("count") > 1).count() == 0
 
     rows = [
         # doc 1: colonia picks rank 0 over rank 1; calle picks earlier span
@@ -132,11 +146,18 @@ def test_first_parsed_struct_min_equals_window_form(spark):
         # doc 3: no parsed fields at all never reaches first_parsed
         (3, "valor", 1, 4, "v1"),
         (3, "valor", 1, 2, "v0"),
+        # doc 4: a planted (anchor_rank, span_start) tie
+        (4, "fecha", 0, 7, "tie-b"),
+        (4, "fecha", 0, 7, "tie-a"),
+        (4, "fecha", 1, 0, "later-rank"),
     ]
     parsed = spark.createDataFrame(
         rows, ["doc_id", "field", "anchor_rank", "span_start", "parsed"]
     )
-    w = Window.partitionBy("doc_id", "field").orderBy("anchor_rank", "span_start")
+    # the window form with parsed as the explicit last sort key: on
+    # tie-free data that key never decides, on the tie it matches the
+    # struct min's fall-through
+    w = Window.partitionBy("doc_id", "field").orderBy("anchor_rank", "span_start", "parsed")
     old = (
         parsed.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -146,6 +167,7 @@ def test_first_parsed_struct_min_equals_window_form(spark):
     )
     new = L.first_parsed(parsed)
     assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
+    assert new.filter(F.col("doc_id") == 4).collect()[0]["fecha"] == "tie-a"
 
 
 def test_resolve_municipio_agg_equals_window_form(spark):

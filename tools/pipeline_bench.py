@@ -11,7 +11,8 @@ Protocol (one JSON line at the end):
   3. re-run to completion in-process with a new run_id: `mentions` must
      report resumed=true (no recompute), later stages build fresh
   4. re-run once more unchanged: every stage resumed, near-zero wall
-  5. report per-stage rows/wall/resumed + lineage file counts
+  5. report per-stage rows/wall/resumed + the manifests' per-file
+     lineage totals (files, rows, bytes)
 
 Usage: python tools/pipeline_bench.py [--mult 4] [--content-scale 10]
        [--cores 8]
@@ -53,6 +54,7 @@ def main():
     ap.add_argument("--cores", type=int, default=8)
     args = ap.parse_args()
 
+    from structured_data_entity_extraction_spark.materialize import StageStore
     from structured_data_entity_extraction_spark.pipeline import run_codekg_pipeline
     from structured_data_entity_extraction_spark.session import get_spark
 
@@ -106,10 +108,15 @@ def main():
     m_idem = run_codekg_pipeline(spark, spark.read.parquet(in_path), wh, run_id="idem")
     idem_wall = round(time.time() - t0, 3)
 
-    lineage_counts = {
-        st: len(os.listdir(os.path.join(wh, st, "_lineage")))
+    store = StageStore(wh)
+    lineage = {
+        st: {
+            "files": len(store.manifest(st)["lineage"]),
+            "rows": sum(f["rows"] for f in store.manifest(st)["lineage"]),
+            "bytes": sum(f["bytes"] for f in store.manifest(st)["lineage"]),
+        }
         for st in ("mentions", "candidates", "edges", "nodes", "triples")
-        if os.path.isdir(os.path.join(wh, st, "_lineage"))
+        if store.is_complete(st)
     }
     out = {
         "metric": "checkpointed_pipeline_10x",
@@ -129,7 +136,7 @@ def main():
             "total_wall_s": idem_wall,
             "all_resumed": all(s["resumed"] for s in m_idem["stages"].values()),
         },
-        "lineage_files": lineage_counts,
+        "lineage": lineage,
         "triples_per_sec_resumed_run": (
             round(m_resume["triples"] / resume_wall, 1) if resume_wall else None
         ),
