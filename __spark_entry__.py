@@ -1249,10 +1249,16 @@ def _codekg_triples_sql() -> str:
     canonicalization, and the (doc_id, pred, obj) triple dedup --
     every stage independently re-expressed in SQL (no golden parquet,
     no builder Python twin). The regex tables are read from
-    codekg.py's own pattern dicts so oracle and engine cannot drift;
-    '(?m)' mirrors the re.MULTILINE flag `_pats` always compiles with
-    (codekg.py:74-78). The 16-minhash r=1 banding joins directly on
-    the minhash (md5(h) equality IS h equality)."""
+    codekg.py's own pattern constants so oracle and engine cannot
+    drift; '(?m)' mirrors the re.MULTILINE semantics those tables are
+    written in. The 16-minhash r=1 banding joins directly on the
+    minhash (md5(h) equality IS h equality).
+
+    Exact on ASCII content only: RE2's \\b, \\w and \\s are ASCII,
+    while the engine pins Python's Unicode classes (codekg._jvm_regex)
+    and RE2 has no lookarounds to pin them with. Non-ASCII parity of
+    the extraction is checked against the Python twin instead
+    (tests/test_codekg.py::test_extract_matches_python_twin_non_ascii)."""
     from structured_data_entity_extraction_spark import codekg
 
     def esc(rx: str) -> str:
@@ -1271,7 +1277,8 @@ def _codekg_triples_sql() -> str:
     dim = ", ".join(
         f"('{_sq(a)}', '{_sq(c)}')" for a, c in codekg.default_code_alias_rows()
     )
-    ident_rx = r"\b[A-Za-z_][A-Za-z0-9_]{2,}\b"
+    ident_rx = codekg._IDENT_PATTERN
+    encoding_rx = esc(codekg._ENCODING_PATTERN)
     return f"""
         WITH RECURSIVE src AS (
           SELECT repo, lang, coalesce(content, '') AS content,
@@ -1285,9 +1292,9 @@ def _codekg_triples_sql() -> str:
           UNION ALL {field_union('class', codekg._CLASS_PATTERNS)}
           UNION ALL {field_union('config', codekg._CONFIG_PATTERNS)}
         ),
-        -- shebang: re.match (string start only), value stripped
-        -- (codekg.py:107-109); encoding cookie: first MULTILINE
-        -- search hit (codekg.py:110-112)
+        -- shebang: '#!' + one non-newline char at string start, the
+        -- rest of the line stripped; encoding cookie: first MULTILINE
+        -- search hit
         shebang AS (
           SELECT doc_id, 'shebang' AS field,
                  trim(regexp_extract(content, '^#!([^\n]+)', 1)) AS value
@@ -1295,11 +1302,11 @@ def _codekg_triples_sql() -> str:
         ),
         encoding AS (
           SELECT doc_id, 'encoding' AS field,
-                 regexp_extract(content, '(?m)^#.*?coding[:=]\\s*([-\\w.]+)', 1) AS value
-          FROM src WHERE regexp_matches(content, '(?m)^#.*?coding[:=]\\s*[-\\w.]+')
+                 regexp_extract(content, '{encoding_rx}', 1) AS value
+          FROM src WHERE regexp_matches(content, '{encoding_rx}')
         ),
         -- distinct identifiers in FIRST-OCCURRENCE order, keyword-
-        -- filtered, capped at 50 per doc (codekg.py:113-123)
+        -- filtered, capped at 50 per doc
         ident_raw AS (
           SELECT doc_id,
                  unnest(regexp_extract_all(content, '{ident_rx}')) AS v,
@@ -1378,7 +1385,6 @@ def _codekg_triples_sql() -> str:
                               WHEN 'config' THEN 'has_config_key'
                               WHEN 'shebang' THEN 'has_shebang'
                               WHEN 'encoding' THEN 'has_encoding'
-                              WHEN '__error__' THEN 'extract_error'
                               ELSE 'mentions_identifier' END AS pred,
                  coalesce(n.canonical, m.value) AS obj,
                  m.doc_id AS doc_id, s.repo, s.lang, s.content_sha,

@@ -8,7 +8,7 @@ MinHash-LSH entity linking -> connected-components canonicalization ->
 (subj, pred, obj) triple materialization.
 
 Stages (each a narrow map or an explicitly-keyed shuffle):
-  A extract  -- one Arrow pUDF pass: imports / function & class
+  A extract  -- one JVM regex projection: imports / function & class
                 declarations / config key-values / identifiers
   B link     -- broadcast equi-join on the alias dim; unmatched values
                 go through MinHash-LSH (char-3-gram Jaccard) blocking
@@ -20,21 +20,20 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from .cc import connected_components
-from .schemas import CODE_MENTIONS_ARRAY
 from .session import local_frame
 
 # ------------------------------------------------------- extraction spec
 #
 # Per-lang anchored patterns -- the code analogue of the per-field anchor
-# lists in extractorAvaluos.py:93,117,551,649,749,876,908. Compiled once
-# per executor at import.
+# lists in extractorAvaluos.py:93,117,551,649,749,876,908. Written in
+# Python ``re`` syntax with re.MULTILINE semantics; the DuckDB oracle and
+# the pure-Python twin (tools/make_goldens.py) read these same tables,
+# and ``_jvm_regex`` pins them for the JVM.
 
 _IMPORT_PATTERNS = {
     "python": [r"^\s*import\s+([\w.]+)", r"^\s*from\s+([\w.]+)\s+import\b"],
@@ -61,7 +60,9 @@ _CONFIG_PATTERNS = {
     "yaml": [r"^([\w.-]+)\s*:"],
     "ini": [r"^([\w.-]+)\s*="],
 }
-_IDENT_RE = re.compile(r"\b[A-Za-z_][A-Za-z0-9_]{2,}\b")
+# PEP-263 encoding cookie: the first hit of a MULTILINE search
+_ENCODING_PATTERN = r"^#.*?coding[:=]\s*([-\w.]+)"
+_IDENT_PATTERN = r"\b[A-Za-z_][A-Za-z0-9_]{2,}\b"
 _KEYWORDS = frozenset(
     "def class import from return if else elif for while in not and or is None True False "
     "fn use let mut pub struct enum impl match func type var const function require "
@@ -69,65 +70,74 @@ _KEYWORDS = frozenset(
 )
 _MAX_IDENTS = 50
 
-_compiled: dict = {}
+# Python ``re`` on str is Unicode-aware; java.util.regex is ASCII unless
+# flagged, and JDK 19+ redefines ``\b``. Pin Python's classes explicitly:
+# \w = str.isalnum() or '_'; \s = str.isspace(); \b = a \w/non-\w edge.
+# (?d) makes ^ and . treat only \n as a line break, as Python does.
+_W = r"[\p{L}\p{N}_]"
+_SPACE = r"\t-\r\x1c-\x20\x85\p{Z}"
+_JVM_ESCAPE = {
+    "w": _W,
+    "s": f"[{_SPACE}]",
+    "b": f"(?:(?<={_W})(?!{_W})|(?<!{_W})(?={_W}))",
+}
 
 
-def _pats(table: dict, lang: str):
-    key = (id(table), lang)
-    if key not in _compiled:
-        _compiled[key] = [re.compile(p, re.MULTILINE) for p in table.get(lang, [])]
-    return _compiled[key]
+def _no_strings():
+    return F.array().cast("array<string>")
 
 
-def _extract_code_one(content: str, lang: str) -> list[dict]:
-    """Per-row fault isolation: a failing row yields one `__error__`
-    mention instead of aborting the job (SURVEY.md §2.1 S6/T3)."""
-    try:
-        return _extract_code_unsafe(content, lang)
-    except Exception as e:  # noqa: BLE001 -- fault boundary by design
-        return [{"field": "__error__", "value": f"{type(e).__name__}: {e}", "span_start": -1}]
+def _jvm_regex(rx: str) -> str:
+    """A table pattern in java.util.regex syntax with Python semantics.
+    Rewrites only the escapes \\w \\s \\b (the tables hold no escaped
+    backslash and no \\b inside a class); \\w inside a class becomes a
+    nested class, which Java unions."""
+    return "(?md)" + re.sub(r"\\([wsb])", lambda m: _JVM_ESCAPE[m.group(1)], rx)
 
 
-def _extract_code_unsafe(content: str, lang: str) -> list[dict]:
-    if not content:
-        return []
-    out = []
-    for field, table in (
-        ("import", _IMPORT_PATTERNS),
-        ("def", _DEF_PATTERNS),
-        ("class", _CLASS_PATTERNS),
-        ("config", _CONFIG_PATTERNS),
-    ):
-        for rx in _pats(table, lang):
-            for m in rx.finditer(content):
-                out.append(
-                    {"field": field, "value": m.group(1), "span_start": m.start(1)}
-                )
-    # secondary modal signal (S3 analogue, extractorAvaluos.py:161-180):
-    # shebang line / PEP-263 encoding cookie as cheap per-blob metadata
-    m = re.match(r"#!([^\n]+)", content)
-    if m:
-        out.append({"field": "shebang", "value": m.group(1).strip(), "span_start": 0})
-    m = re.search(r"^#.*?coding[:=]\s*([-\w.]+)", content, re.MULTILINE)
-    if m:
-        out.append({"field": "encoding", "value": m.group(1), "span_start": m.start(1)})
-    # distinct identifiers, first-occurrence order, bounded
-    seen = set()
-    for m in _IDENT_RE.finditer(content):
-        v = m.group(0)
-        if v in _KEYWORDS or v in seen:
-            continue
-        seen.add(v)
-        out.append({"field": "ident", "value": v, "span_start": m.start()})
-        if len(seen) >= _MAX_IDENTS:
-            break
+def _pattern_values(table: dict):
+    """array<string> of every group-1 hit of the row's lang patterns,
+    pattern by pattern, each in match order; [] for other langs."""
+    out = _no_strings()
+    for lang, patterns in table.items():
+        hits = [F.regexp_extract_all("content", F.lit(_jvm_regex(rx)), 1) for rx in patterns]
+        out = F.when(F.col("lang") == lang, F.concat(*hits)).otherwise(out)
     return out
 
 
-@pandas_udf(CODE_MENTIONS_ARRAY)
-def extract_code_udf(content: pd.Series, lang: pd.Series) -> pd.Series:
-    return pd.Series(
-        [_extract_code_one(c, l) for c, l in zip(content, lang)], dtype=object
+def _mention_values():
+    """(field, array<string>) per mention field, in the order the Python
+    twin emits them."""
+    # secondary modal signal (S3 analogue, extractorAvaluos.py:161-180):
+    # shebang line / PEP-263 encoding cookie as cheap per-blob metadata.
+    # shebang: '#!' plus one non-newline char at string start; the value
+    # is the rest of that line stripped of \s on both ends (the greedy
+    # body backtracks only over trailing space, so this stays linear)
+    shebang = F.regexp_extract(
+        "content", rf"^#![[{_SPACE}]&&[^\n]]*+((?:[^\n]*[^{_SPACE}])?)", 1
+    )
+    # the cookie's group needs one char, so '' means no match
+    encoding = F.regexp_extract("content", _jvm_regex(_ENCODING_PATTERN), 1)
+    idents = F.filter(
+        F.regexp_extract_all("content", F.lit(_jvm_regex(_IDENT_PATTERN)), 0),
+        lambda v: ~v.isin(*sorted(_KEYWORDS)),
+    )
+    return [
+        ("import", _pattern_values(_IMPORT_PATTERNS)),
+        ("def", _pattern_values(_DEF_PATTERNS)),
+        ("class", _pattern_values(_CLASS_PATTERNS)),
+        ("config", _pattern_values(_CONFIG_PATTERNS)),
+        ("shebang", F.when(F.col("content").rlike(r"^#![^\n]"), F.array(shebang))),
+        ("encoding", F.when(encoding != "", F.array(encoding))),
+        # distinct identifiers, first-occurrence order, bounded
+        ("ident", F.slice(F.array_distinct(idents), 1, _MAX_IDENTS)),
+    ]
+
+
+def _tagged(field: str, values):
+    return F.transform(
+        F.coalesce(values, _no_strings()),
+        lambda v: F.struct(F.lit(field).alias("field"), v.alias("value")),
     )
 
 
@@ -135,11 +145,16 @@ def extract_code_udf(content: pd.Series, lang: pd.Series) -> pd.Series:
 
 
 def extract_code_mentions(repos_src: DataFrame, bucket_count: int = 64) -> DataFrame:
-    """repos_src -> mentions(doc_id, repo, repo_bucket, path, lang, field,
-    value, span_start, content_sha). doc_id and content_sha per
+    """repos_src -> mentions(doc_id, repo, repo_bucket, path, lang,
+    content_sha, field, value). doc_id and content_sha per
     BASELINE.json:input_hint; repo_bucket = pmod(xxhash64(repo), B) is the
-    output partition key AND the salting basis for skewed repos."""
-    withid = repos_src.select(
+    output partition key AND the salting basis for skewed repos.
+
+    One JVM projection: every field is a regexp_extract_all array over
+    the pinned patterns, tagged with its field name and exploded. No
+    Python worker runs and no row can raise, so there is no per-row
+    fault path; a doc without mentions yields no rows."""
+    return repos_src.select(
         F.sha2(
             F.concat_ws("\x00", F.col("repo"), F.col("path"), F.col("commit")), 256
         ).alias("doc_id"),
@@ -147,20 +162,17 @@ def extract_code_mentions(repos_src: DataFrame, bucket_count: int = 64) -> DataF
         F.pmod(F.xxhash64("repo"), F.lit(bucket_count)).cast("int").alias("repo_bucket"),
         "path",
         "lang",
-        F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("content_sha"),
-        "content",
-    )
-    return withid.select(
+        F.coalesce(F.col("content"), F.lit("")).alias("content"),
+    ).select(
         "doc_id",
         "repo",
         "repo_bucket",
         "path",
         "lang",
-        "content_sha",
-        F.explode(extract_code_udf("content", "lang")).alias("m"),
+        F.sha2("content", 256).alias("content_sha"),
+        F.explode(F.concat(*[_tagged(f, v) for f, v in _mention_values()])).alias("m"),
     ).select(
-        "doc_id", "repo", "repo_bucket", "path", "lang", "content_sha",
-        "m.field", "m.value", "m.span_start",
+        "doc_id", "repo", "repo_bucket", "path", "lang", "content_sha", "m.field", "m.value"
     )
 
 
@@ -419,7 +431,7 @@ def build_kg(
     """One-shot in-memory run of all four stages -> triples. The
     checkpointed path (pipeline.run_codekg_pipeline) materializes each
     stage instead; here intermediates that feed multiple consumers are
-    persisted so the extraction pUDF runs exactly once."""
+    persisted so extraction and linking run exactly once."""
     from .ops.cache import persist_tracked
 
     spark = repos_src.sparkSession
@@ -596,7 +608,6 @@ def build_triples(
         .when(F.col("field") == "config", F.lit("has_config_key"))
         .when(F.col("field") == "shebang", F.lit("has_shebang"))
         .when(F.col("field") == "encoding", F.lit("has_encoding"))
-        .when(F.col("field") == "__error__", F.lit("extract_error"))
         .otherwise(F.lit("mentions_identifier"))
     )
     doc_dim = candidates.groupBy("doc_id").agg(

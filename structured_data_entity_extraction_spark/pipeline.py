@@ -340,8 +340,8 @@ def append_repos_batch(
     commits = StageCommits(spark, store, metrics, new_pairs, n_new)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
     # the new-batch frames feed both the append write and the
-    # downstream link/invariant -- persist so the extraction pUDF runs
-    # once per batch
+    # downstream link/invariant -- persist so extraction runs once per
+    # batch
     mentions_new = codekg.extract_code_mentions(repos_src_new, bucket_count).persist()
     candidates_new = codekg.link_mentions(
         mentions_new, alias_dim, use_lsh=use_lsh
@@ -384,7 +384,7 @@ def run_codekg_pipeline_incremental(
 ) -> dict:
     """Append-only incremental ingest (the 10^12-file reality is an
     append-only crawl): extract + link ONLY the new documents -- the
-    Arrow-pUDF extraction is the dominant pipeline cost and is
+    regex extraction is a large share of pipeline cost and is
     per-document independent, as is dictionary/LSH linking (value-level
     against the dim, no cross-document dependencies) -- append them to
     the committed mentions/candidates stages, then rebuild the global

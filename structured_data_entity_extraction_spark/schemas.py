@@ -45,16 +45,6 @@ MUNI_COUNT = T.StructType(
 )
 MUNI_COUNTS_ARRAY = T.ArrayType(MUNI_COUNT)
 
-# code-corpus mention emitted by the code extraction pUDF
-CODE_MENTION = T.StructType(
-    [
-        T.StructField("field", T.StringType(), False),  # import|def|class|config|ident
-        T.StructField("value", T.StringType(), False),
-        T.StructField("span_start", T.IntegerType(), False),
-    ]
-)
-CODE_MENTIONS_ARRAY = T.ArrayType(CODE_MENTION)
-
 # the 13-field fidelity record (all strings -- SURVEY.md §1.2)
 RECORD_FIELDS = [
     "validez_del_formato",

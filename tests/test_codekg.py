@@ -607,6 +607,87 @@ def test_codekg_sql_oracle_matches_golden_parquet():
     assert not diff.any(axis=1).any(), m[diff.any(axis=1)].head()
 
 
+# (lang, content) rows where Python ``re`` and an unpinned
+# java.util.regex disagree: Unicode \w/\s/\b, line breaks other than
+# \n, CRLF, a combining mark, a superscript digit, empty content
+_NON_ASCII_ROWS = [
+    ("python", "import caf\u00e9_util\nfrom na\u00efve.pkg import x\n"
+               "def gr\u00f6\u00dfe(a):\n    pass\nclass \u00dcnicode:\n    caf\u00e9_id = 1\n"),
+    ("javascript", "const \u00f1ame = (a) => a\nconst z = require('m\u00f3dulo');\n"
+                   "import {x} from '\u00fcn\u00ef';\nfunction z\u00e9() {}\nclass \u03a9mega {}\n"),
+    ("rust", "use crate::m\u00f3dulo::x;\nfn gr\u00fc\u00df() {}\nstruct Stra\u00dfe;\n"
+             "enum \u03a9x {}\ntrait T\u00e9 {}\n"),
+    ("go", 'import "fmt/\u00fcn\u00ef"\nfunc Gr\u00f6\u00dfe() {}\ntype \u00d1ame struct {}\n'),
+    ("yaml", "cl\u00e9: 1\nna\u00efve.key: 2\n"),
+    ("ini", "schl\u00fcssel=1\n"),
+    # NFD: U+0301 is a combining mark, not a word char to Python
+    ("python", "cafe\u0301_id = 1\ndef cafe\u0301_fn():\n    pass\nclass Cafe\u0301x:\n    pass\n"),
+    ("python", "xyz\u00b2abc = 1\ndef xyz\u00b2():\n    pass\n"),
+    ("python", "\x1cimport sep_mod\n\u00a0import nbsp_mod\n\u3000import ideo_mod\n\x85import nel_mod\n"),
+    ("python", "x = 1\rimport cr_mod\nline\u2028import ls_mod\n"),
+    ("python", "#!/usr/bin/env python3 \r\n# -*- coding: utf-8 -*-\r\nimport os\r\n"),
+    ("python", "#!  \nimport a_mod\n"),
+    ("python", None),
+    ("python", ""),
+    ("python", " \t\n\u3000\n"),
+    (None, "def orphan_fn():\n    pass\n"),
+]
+
+
+def test_extract_matches_python_twin_non_ascii(spark):
+    """The JVM projection pins Python ``re`` semantics (Unicode \\w \\s
+    \\b, only \\n breaks lines): its (doc, field, value) multiset equals
+    the pure-Python twin's exactly, on the oracle fixture corpus and on
+    adversarial rows (non-ASCII names in every lang, NFD, superscripts,
+    exotic whitespace and line breaks, CRLF shebang + cookie, null /
+    empty / blank content, a >= 1 MB single-line blob)."""
+    from collections import Counter
+
+    from tools.make_goldens import _sha2_concat, extract_code
+
+    big = "".join(f"const v{i}_\u00e9=require('m{i}');" for i in range(40000))
+    adversarial = [
+        ("o/adv", f"f{i}", "c" * 40, lang, content)
+        for i, (lang, content) in enumerate(_NON_ASCII_ROWS + [("javascript", big)])
+    ]
+    assert len(big) >= 1 << 20
+    fixture = [
+        (r["repo"], r["path"], r["commit"], r["lang"], r["content"])
+        for r in repos_src_rows(400, seed=42)
+    ]
+    for rows in (adversarial, fixture):
+        got = Counter(
+            map(
+                tuple,
+                codekg.extract_code_mentions(spark.createDataFrame(rows, REPOS_SRC))
+                .select("doc_id", "field", "value")
+                .collect(),
+            )
+        )
+        want = Counter(
+            (_sha2_concat(repo, path, commit), field, value)
+            for repo, path, commit, lang, content in rows
+            for field, value in extract_code(content, lang)
+        )
+        assert got == want, (list((want - got).items())[:5], list((got - want).items())[:5])
+
+
+def test_make_codekg_golden_reproduces_committed(tmp_path, monkeypatch):
+    """The Python twin regenerates the committed codekg golden row for
+    row, so the golden the SQL oracle is checked against stays
+    reproducible from the twin the parity test above trusts."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from tools import make_goldens
+
+    monkeypatch.setattr(make_goldens, "GOLDEN_DIR", str(tmp_path))
+    make_goldens.make_codekg_golden()
+    name = "codekg_triples.parquet"
+    got = pq.read_table(tmp_path / name).to_pylist()
+    assert got == pq.read_table(os.path.join(entry._GOLDEN_DIR, name)).to_pylist()
+
+
 def test_lsh_recall_holds_across_alias_lengths(spark):
     """Property gate (VERDICT r3 #10): lsh_threshold=0.5 with r=1/b=16
     banding is tuned for short import strings; a future dim change must

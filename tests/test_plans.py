@@ -86,10 +86,10 @@ def test_repetition_signals_plan_has_zero_exchange(spark):
 
 
 def test_link_mentions_plan_has_no_pyspark_ml(spark):
-    """VERDICT r2 #1 'done' criterion: the LSH link stage is native --
-    the plan contains no pyspark.ml fit/transform artifacts (those
-    show up as extra Python UDF nodes beyond the single extraction
-    pUDF)."""
+    """VERDICT r2 #1 'done' criterion, tightened: extraction is one JVM
+    regex projection and the LSH link is native md5 banding, so the
+    extract -> link -> build_triples plans carry no Python evaluation
+    node at all (no pandas UDF, no pyspark.ml tokenizer/hash UDF)."""
     from structured_data_entity_extraction_spark import codekg
     from structured_data_entity_extraction_spark.fixtures import repos_src_rows
     from structured_data_entity_extraction_spark.schemas import REPOS_SRC
@@ -99,17 +99,12 @@ def test_link_mentions_plan_has_no_pyspark_ml(spark):
         [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows],
         REPOS_SRC,
     )
+    alias_dim = codekg.code_alias_dim(spark)
     mentions = codekg.extract_code_mentions(df)
-    cands = codekg.link_mentions(mentions, codekg.code_alias_dim(spark), use_lsh=True)
-    p = _plan(cands)
-    # the ONLY Python boundary is the extraction pUDF (it reprints once
-    # per consumer subtree at PLAN level; the pipeline persists it so it
-    # runs once). The md5/banding LSH itself adds ZERO Python nodes --
-    # the retired ml variant carried its own tokenizer/hash UDFs.
-    for line in p.splitlines():
-        if "EvalPython" in line:
-            assert "extract_code_udf" in line, line
-    assert "BatchEvalPython" not in p  # no row-at-a-time UDF ever
+    cands = codekg.link_mentions(mentions, alias_dim, use_lsh=True)
+    triples = codekg.build_triples(cands, codekg.canonicalize(cands, alias_dim))
+    for stage, frame in (("extract", mentions), ("link", cands), ("triples", triples)):
+        assert "EvalPython" not in _plan(frame), stage
 
 
 def test_pipeline_plans_have_no_python_rdd_scan(spark):

@@ -10,10 +10,11 @@ oracle hash-check the two flagship KG queries (VERDICT.md next-round #1).
 - ``codekg_triples.parquet`` -- the expected output of
   ``q_codekg_triples`` (repos_src_rows(400, seed=42), use_lsh=True),
   computed by a pure-Python single-process twin of the pipeline:
-  same extraction kernel, but dict linking / native-MinHash-LSH fuzzy
-  linking / union-find canonicalization / dedup re-implemented without
-  Spark, so the fixture validates the join + LSH + CC + dedup plumbing
-  end to end.
+  Python ``re`` extraction over codekg's pattern tables (``extract_code``,
+  the independent twin of the engine's JVM regex projection), dict
+  linking / native-MinHash-LSH fuzzy linking / union-find
+  canonicalization / dedup re-implemented without Spark, so the fixture
+  validates extraction + join + LSH + CC + dedup end to end.
 
 Run from the repo root (needs /root/reference present):
     python tools/make_goldens.py
@@ -26,6 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import sys
 
 import pyarrow as pa
@@ -124,8 +126,35 @@ _PRED = {
     "config": "has_config_key",
     "shebang": "has_shebang",
     "encoding": "has_encoding",
-    "__error__": "extract_error",
 }
+
+
+def extract_code(content: str | None, lang: str | None) -> list[tuple[str, str]]:
+    """Pure-Python twin of codekg.extract_code_mentions for one blob:
+    (field, value) mentions from Python ``re`` (Unicode \\w \\s \\b,
+    re.MULTILINE) over the same pattern tables the engine pins for the
+    JVM."""
+    if not content:
+        return []
+    out = []
+    for field, table in (
+        ("import", codekg._IMPORT_PATTERNS),
+        ("def", codekg._DEF_PATTERNS),
+        ("class", codekg._CLASS_PATTERNS),
+        ("config", codekg._CONFIG_PATTERNS),
+    ):
+        for rx in table.get(lang, []):
+            out += [(field, v) for v in re.findall(rx, content, re.MULTILINE)]
+    m = re.match(r"#!([^\n]+)", content)
+    if m:
+        out.append(("shebang", m.group(1).strip()))
+    m = re.search(codekg._ENCODING_PATTERN, content, re.MULTILINE)
+    if m:
+        out.append(("encoding", m.group(1)))
+    # distinct identifiers, first-occurrence order, bounded
+    idents = dict.fromkeys(re.findall(codekg._IDENT_PATTERN, content))
+    out += [("ident", v) for v in idents if v not in codekg._KEYWORDS][: codekg._MAX_IDENTS]
+    return out
 
 
 def _lsh_best_match(
@@ -183,11 +212,10 @@ def make_codekg_golden() -> None:
     extracted = []
     miss_values: set[str] = set()
     for r in src:
-        mentions = codekg._extract_code_one(r["content"], r["lang"])
+        mentions = extract_code(r["content"], r["lang"])
         extracted.append((r, mentions))
-        for m in mentions:
-            v = m["value"]
-            if m["field"] == "import" and v not in alias_map and len(v) >= 2:
+        for field, v in mentions:
+            if field == "import" and v not in alias_map and len(v) >= 2:
                 miss_values.add(v)
     lsh_best = _lsh_best_match(miss_values, alias_rows)
 
@@ -224,12 +252,11 @@ def make_codekg_golden() -> None:
         if not mentions:
             continue  # explode drops zero-mention docs
         seen_mention = set()
-        for m in mentions:
-            key = (doc_id, m["field"], m["value"])
+        for field, v in mentions:
+            key = (doc_id, field, v)
             if key in seen_mention:
                 continue  # dropDuplicates(doc_id, field, value)
             seen_mention.add(key)
-            v = m["value"]
             obj = node_canonical.get(v, v)
             # conf mirrors coalesce(score, lsh_score, 1.0): the lsh map
             # rejoins on VALUE alone, so ident mentions sharing a fuzzy-
@@ -240,7 +267,7 @@ def make_codekg_golden() -> None:
                 conf = lsh_best[v][1]
             else:
                 conf = 1.0
-            pred = _PRED.get(m["field"], "mentions_identifier")
+            pred = _PRED.get(field, "mentions_identifier")
             tkey = (doc_id, pred, obj)
             row = {
                 "subj": doc_id,
