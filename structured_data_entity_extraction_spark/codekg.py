@@ -665,9 +665,10 @@ def build_triples(
         # the partitionBy write then emitted a file per task per
         # (bucket, lang) value -- a small-files explosion at scale.
         # The key-derived _ws salt fixes the fold's own scale ceiling:
-        # bare (bucket, lang) has bucket_count x |langs| (~384 default)
-        # distinct values, capping the dedup at 384 reduce tasks no
-        # matter how many executors the cluster has, with ~1.6x
+        # bare (bucket, lang) has bucket_count x |langs| distinct values
+        # (384 at the large-input layout, pipeline.derive_layout),
+        # capping the dedup at 384 reduce tasks no matter how many
+        # executors the cluster has, with ~1.6x
         # balls-into-bins skew at 32 partitions. Salting multiplies the
         # key space by write_salt (unbounded parallelism again) while
         # the partitioned write still sees AT MOST write_salt part-files
@@ -717,7 +718,7 @@ def build_triples(
         # of a |docs|-sized frame (mentions already collapsed map-side).
         # Salted like the doc branch (rows are already unique per doc,
         # so any doc-derived hash keeps correctness; the salt only lifts
-        # the 384-task parallelism cap).
+        # the bucket x lang parallelism cap).
     ).repartition(
         F.col("repo_bucket"),
         F.col("lang"),

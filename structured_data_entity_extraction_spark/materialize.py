@@ -13,7 +13,8 @@ write: a ``pyspark.sql.Observation`` sits directly above the data write,
 so the write job itself yields the row count and the content_sha
 sum-fold of exactly the rows it wrote. The manifest then records those
 stage totals (appends add the batch's values; both are additive), the
-read schema, the input identity resume checks, and the lineage: one
+read schema, the input identity resume checks, the partition layout
+of a partitioned stage (``StageStore.layout``), and the lineage: one
 entry per data file (path under ``data/``, rows and bytes from the
 file's parquet footer, the run_id that wrote it), read on the driver
 with no Spark job. A commit whose new files' footer rows differ from
@@ -35,6 +36,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .ops.cache import persist_tracked
 from .schemas import LINEAGE
 from .session import local_frame
 
@@ -53,18 +55,28 @@ def doc_sha_pairs(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "content_sha").distinct()
 
 
-def doc_sha_identity(keyed: DataFrame) -> tuple[DataFrame, str, int]:
-    """(persisted distinct (doc_id, content_sha) pairs, digest, pair
-    count) of a keyed input. Digest and count come from ONE aggregate,
-    whose scan also fills the persisted pairs. The digest is the sum of
-    the pairs' 64-bit folds: order-independent and additive over
-    disjoint doc sets, so an append's combined digest is old + new. The
-    caller unpersists the pairs."""
-    pairs = doc_sha_pairs(keyed).persist()
-    row = pairs.agg(
-        F.sum(_sha_fold_col()).alias("digest"), F.count(F.lit(1)).alias("n")
-    ).collect()[0]
-    return pairs, str(row["digest"] or 0), int(row["n"])
+def doc_sha_identity(keyed: DataFrame) -> tuple[DataFrame, str, int, int | None]:
+    """(distinct (doc_id, content_sha) pairs, digest, pair count,
+    content bytes) of a keyed input. Digest and count come from ONE
+    aggregate, whose scan also fills the persisted pairs. The digest is
+    the sum of the pairs' 64-bit folds: order-independent and additive
+    over disjoint doc sets, so an append's combined digest is old + new.
+    When ``keyed`` carries each document's ``content_bytes`` (one value
+    per content_sha), the same aggregate sums it; otherwise the bytes
+    are None. The pairs persist through ``persist_tracked``: the
+    caller's ``cache_scope`` releases them."""
+    has_bytes = "content_bytes" in keyed.columns
+    distinct = persist_tracked(keyed.distinct())
+    aggs = [F.sum(_sha_fold_col()).alias("digest"), F.count(F.lit(1)).alias("n")]
+    if has_bytes:
+        aggs.append(F.sum("content_bytes").alias("bytes"))
+    row = distinct.agg(*aggs).collect()[0]
+    return (
+        distinct.select("doc_id", "content_sha"),
+        str(row["digest"] or 0),
+        int(row["n"]),
+        int(row["bytes"] or 0) if has_bytes else None,
+    )
 
 
 def sha_invariant_report(stage_df: DataFrame, input_pairs: DataFrame, n_input: int) -> dict:
@@ -122,6 +134,12 @@ class StageStore:
         # per-stage sha invariant alone cannot catch the append case)
         self.input_digest: str | None = None
         self.input_docs: int | None = None
+        # the input's content bytes (additive like the digest; the
+        # pipeline sizes the triples write salt from it) and the
+        # partition layout ({bucket_count, write_salt}) the pipeline
+        # writes under, stamped into every partitioned stage's manifest
+        self.input_bytes: int | None = None
+        self.layout: dict | None = None
         # per-stage record of whether run_stage() read the checkpoint
         # (True) or rebuilt (False) in THIS process -- run_id equality
         # can't tell (re-running with the same --run-id is a resume too)
@@ -346,9 +364,12 @@ class StageStore:
                 "iceberg_table": self.iceberg_ident(stage) if self.iceberg_catalog else None,
                 "input_sha_digest": self.input_digest,
                 "input_docs": self.input_docs,
+                "input_bytes": self.input_bytes,
                 "lineage": lineage,
             }
         )
+        if partition_by and self.layout:
+            manifest["layout"] = self.layout
         if base:
             manifest["appended_from_rows"] = base["rows"]
         self._publish(stage, manifest)

@@ -9,12 +9,29 @@ Stages commit in order (extract -> link -> canonize -> triples); a
 killed run re-invoked with the same --output resumes after the last
 committed stage (StageStore manifest gate). Skew from mega-repos is
 handled by AQE skew-join splitting (session.py) plus the repo_bucket
-partitioning of every materialized table.
+partitioning of the materialized tables.
+
+Stage layout: mentions, candidates and triples are written
+partitionBy(repo_bucket, lang), repo_bucket = pmod(xxhash64(repo),
+bucket_count), and the triples dedup is salted ``write_salt`` ways
+(codekg.build_triples). ``derive_layout`` sizes both from the input's
+content bytes: one (bucket, salt) key per 16 MiB, buckets first (up to
+64), then salt (up to 8). A 2000-doc input gets (1, 1), one part-file
+per (bucket, lang) directory; the 320k-doc pipeline_bench corpus (306
+MB) gets (19, 1); (64, 8), the r6 layout, starts above 7 GiB (BENCH.md
+"r6 fold" has the A/B behind the 16 MiB). The bucket count is fixed
+when mentions is built: resume, --append, streaming batches and the
+finalize run read it from the mentions manifest. The salt only shapes
+the triples build, which always reads the whole corpus, so it is
+re-derived from the corpus' content bytes, which the manifests add up
+over appends. The layout is recorded in the three stages' manifests. A
+manifest without one was written as (64, 8) and keeps 64 buckets.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import time
@@ -25,7 +42,58 @@ from pyspark.sql import functions as F
 from . import codekg
 from .link import avaluo_records, dim_frames
 from .materialize import StageStore, doc_sha_identity, sha_invariant_report
+from .ops.cache import cache_scope, persist_tracked
 from .triples import records_to_triples
+
+# content bytes per (repo_bucket, write salt) key (derive_layout): at
+# the fixture corpus' ~56 triples per KB of content and its six langs,
+# ~150k triples per dedup task, inside the 100-250k rows per reduce task
+# that session.py sizes shuffles to
+LAYOUT_TARGET_BYTES = 16 << 20
+# the r6 layout: the ceiling of the derived one, and the layout of a
+# warehouse whose manifests record none (written before layouts were
+# derived)
+LEGACY_LAYOUT = {"bucket_count": 64, "write_salt": 8}
+
+
+def derive_layout(content_bytes: int, bucket_count: int | None = None) -> dict:
+    """The partition layout for a corpus of ``content_bytes``: one
+    (repo_bucket, write salt) key per LAYOUT_TARGET_BYTES, at most the
+    64 x 8 of LEGACY_LAYOUT (dedup parallelism is buckets x langs x
+    salt, BENCH.md "r6 fold"). Buckets come first, up to 64, and the
+    salt makes up the rest. A warehouse passes its recorded
+    ``bucket_count``; the salt then sizes the triples build to the
+    whole corpus, however small the batch that fixed the buckets."""
+    keys = min(max(-(-content_bytes // LAYOUT_TARGET_BYTES), 1), 64 * 8)
+    if bucket_count is None:
+        bucket_count = min(keys, 64)
+    return {"bucket_count": bucket_count, "write_salt": -(-keys // bucket_count)}
+
+
+def _layout_for(store: StageStore, content_bytes: int | None) -> dict:
+    """The layout this run writes under. Building mentions derives it.
+    Otherwise the bucket count is the one mentions was written with (64
+    when unrecorded), and the salt is re-derived for ``content_bytes``,
+    the corpus the next triples build reads. ``None`` (a warehouse that
+    predates recorded input bytes) keeps the recorded salt."""
+    if not store.is_complete("mentions"):
+        return derive_layout(content_bytes)
+    recorded = store.manifest("mentions").get("layout", LEGACY_LAYOUT)
+    if content_bytes is None:
+        return recorded
+    return derive_layout(content_bytes, recorded["bucket_count"])
+
+
+def _cache_scoped(fn):
+    """Run ``fn`` inside one ``cache_scope``: every frame it persists
+    through ``persist_tracked`` is released on return and on error."""
+
+    @functools.wraps(fn)
+    def scoped(*args, **kwargs):
+        with cache_scope():
+            return fn(*args, **kwargs)
+
+    return scoped
 
 
 def length_gate(docs: DataFrame, min_chars: int = 50, text_col: str = "text") -> DataFrame:
@@ -40,7 +108,9 @@ class StageCommits:
     (``StageStore.run_stage``) or append one stage, record its manifest
     rows and wall time in ``metrics["stages"]``, and hold a stage that
     carries content_sha to the per-row sha256 invariant against the
-    input's (doc_id, content_sha) pairs (BASELINE.json:input_hint)."""
+    input's (doc_id, content_sha) pairs (BASELINE.json:input_hint). A
+    resumed partitioned stage must have been written with the store's
+    bucket count."""
 
     def __init__(self, spark: SparkSession, store: StageStore, metrics: dict, pairs=None, n_input: int = 0):
         self.spark, self.store, self.metrics = spark, store, metrics
@@ -54,6 +124,15 @@ class StageCommits:
             "wall_s": round(time.time() - t0, 3),
             "resumed": self.store.last_resumed[stage],
         }
+        if partition_by and self.store.last_resumed[stage]:
+            recorded = self.store.manifest(stage).get("layout", LEGACY_LAYOUT)
+            if recorded["bucket_count"] != self.store.layout["bucket_count"]:
+                raise RuntimeError(
+                    f"stage '{stage}' was written with {recorded['bucket_count']} "
+                    f"repo buckets but the warehouse's mentions stage uses "
+                    f"{self.store.layout['bucket_count']}: delete this stage "
+                    "and the stages after it to rebuild them"
+                )
         if check:
             self.check(stage, df)
         return df
@@ -83,12 +162,12 @@ class StageCommits:
             )
 
 
+@_cache_scoped
 def run_codekg_pipeline(
     spark: SparkSession,
     repos_src: DataFrame,
     out_root: str,
     run_id: str = "run0",
-    bucket_count: int = 64,
     use_lsh: bool = True,
     alias_rows=None,
     iceberg_catalog: str | None = None,
@@ -98,18 +177,25 @@ def run_codekg_pipeline(
     first-class stages per the north rule); returns stage row counts +
     timings."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
-    input_pairs, input_digest, n_input = input_identity(repos_src)
-    metrics: dict = {"run_id": run_id, "input_sha_digest": input_digest, "stages": {}}
+    input_pairs, input_digest, n_input, content_bytes = input_identity(repos_src)
     # stamp the input identity into every stage manifest: resume only
     # proceeds when the warehouse was built from THIS input (run_stage
     # raises otherwise -- the silent-stale-resume guard)
     store.input_digest, store.input_docs = input_digest, n_input
+    store.input_bytes = content_bytes
+    store.layout = _layout_for(store, content_bytes)
+    metrics: dict = {
+        "run_id": run_id,
+        "input_sha_digest": input_digest,
+        "layout": store.layout,
+        "stages": {},
+    }
     commits = StageCommits(spark, store, metrics, input_pairs, n_input)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
 
     mentions = commits.run(
         "mentions",
-        lambda: codekg.extract_code_mentions(repos_src, bucket_count),
+        lambda: codekg.extract_code_mentions(repos_src, store.layout["bucket_count"]),
         partition_by=["repo_bucket", "lang"],
     )
     # input-identity sidecar: the exact (doc_id, content_sha) set this
@@ -134,33 +220,35 @@ def run_codekg_pipeline(
     nodes = commits.run("nodes", lambda: codekg.canonicalize(candidates, alias_dim, edges))
     commits.run(
         "triples",
-        lambda: codekg.build_triples(candidates, nodes),
+        lambda: codekg.build_triples(candidates, nodes, store.layout["write_salt"]),
         partition_by=["repo_bucket", "lang"],
     )
     metrics["triples"] = metrics["stages"]["triples"]["rows"]
-    input_pairs.unpersist()
     return metrics
 
 
 def input_identity(repos_src: DataFrame):
-    """(persisted distinct (doc_id, content_sha) pairs, additive digest,
-    pair count) of a raw repos_src frame; doc_id =
-    sha256(repo\\0path\\0commit). Digest and count are one aggregate."""
+    """(distinct (doc_id, content_sha) pairs, additive digest, pair
+    count, content bytes) of a raw repos_src frame; doc_id =
+    sha256(repo\\0path\\0commit). Digest, count and bytes are one
+    aggregate (``doc_sha_identity``)."""
+    content = F.coalesce(F.col("content"), F.lit(""))
     return doc_sha_identity(
         repos_src.select(
             F.sha2(
                 F.concat_ws("\x00", F.col("repo"), F.col("path"), F.col("commit")), 256
             ).alias("doc_id"),
-            F.sha2(F.coalesce(F.col("content"), F.lit("")), 256).alias("content_sha"),
+            F.sha2(content, 256).alias("content_sha"),
+            F.octet_length(content).alias("content_bytes"),
         )
     )
 
 
+@_cache_scoped
 def ingest_repos_batch(
     spark: SparkSession,
     store: StageStore,
     repos_src_batch: DataFrame,
-    bucket_count: int = 64,
     use_lsh: bool = True,
     alias_rows=None,
 ) -> dict:
@@ -199,13 +287,14 @@ def ingest_repos_batch(
             spark,
             store,
             repos_src_batch,
-            bucket_count=bucket_count,
             use_lsh=use_lsh,
             alias_rows=alias_rows,
             replay_ok=True,
         )
-    pairs, digest, n_input = input_identity(repos_src_batch)
+    pairs, digest, n_input, content_bytes = input_identity(repos_src_batch)
     store.input_digest, store.input_docs = digest, n_input
+    store.input_bytes = content_bytes
+    store.layout = _layout_for(store, content_bytes)
     metrics: dict = {
         "run_id": store.run_id,
         "mode": "bootstrap",
@@ -217,7 +306,7 @@ def ingest_repos_batch(
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
     mentions = commits.run(
         "mentions",
-        lambda: codekg.extract_code_mentions(repos_src_batch, bucket_count),
+        lambda: codekg.extract_code_mentions(repos_src_batch, store.layout["bucket_count"]),
         ["repo_bucket", "lang"],
         check=False,
     )
@@ -241,15 +330,14 @@ def ingest_repos_batch(
     store.begin_append(["_input_pairs"])
     store.write_input_pairs(pairs)
     store.end_append()
-    pairs.unpersist()
     return metrics
 
 
+@_cache_scoped
 def append_repos_batch(
     spark: SparkSession,
     store: StageStore,
     repos_src_new: DataFrame,
-    bucket_count: int = 64,
     use_lsh: bool = True,
     alias_rows=None,
     replay_ok: bool = False,
@@ -269,7 +357,9 @@ def append_repos_batch(
     Overlap guard: new doc_ids are checked against the warehouse's
     input-identity sidecar (every doc ever ingested, including
     zero-mention docs); legacy warehouses without the sidecar fall
-    back to mentions-derived ids."""
+    back to mentions-derived ids. The batch is written with the bucket
+    count recorded in the mentions manifest; the write salt is
+    re-derived for the grown corpus (``_layout_for``)."""
     for st in ("mentions", "candidates"):
         if not store.is_complete(st):
             raise RuntimeError(
@@ -285,7 +375,7 @@ def append_repos_batch(
             "pipeline once to stamp them before appending"
         )
 
-    new_pairs, new_digest, n_new = input_identity(repos_src_new)
+    new_pairs, new_digest, n_new, new_bytes = input_identity(repos_src_new)
     if store.has_input_pairs():
         existing = store.read_input_pairs(spark).select("doc_id", "content_sha").distinct()
     else:
@@ -307,7 +397,6 @@ def append_repos_batch(
             # offset log) did not -- re-delivery must be a no-op, not a
             # crash loop. Partial overlap is never a replay and still
             # raises below.
-            new_pairs.unpersist()
             return {
                 "run_id": store.run_id,
                 "mode": "replay_noop",
@@ -329,12 +418,16 @@ def append_repos_batch(
         )
     store.input_digest = str(int(old_digest) + int(new_digest))
     store.input_docs = int(old_docs) + n_new
+    old_bytes = old_m.get("input_bytes")
+    store.input_bytes = None if old_bytes is None else old_bytes + new_bytes
+    store.layout = _layout_for(store, store.input_bytes)
 
     metrics: dict = {
         "run_id": store.run_id,
         "mode": "incremental",
         "new_docs": n_new,
         "input_sha_digest": store.input_digest,
+        "layout": store.layout,
         "stages": {},
     }
     commits = StageCommits(spark, store, metrics, new_pairs, n_new)
@@ -342,10 +435,12 @@ def append_repos_batch(
     # the new-batch frames feed both the append write and the
     # downstream link/invariant -- persist so extraction runs once per
     # batch
-    mentions_new = codekg.extract_code_mentions(repos_src_new, bucket_count).persist()
-    candidates_new = codekg.link_mentions(
-        mentions_new, alias_dim, use_lsh=use_lsh
-    ).persist()
+    mentions_new = persist_tracked(
+        codekg.extract_code_mentions(repos_src_new, store.layout["bucket_count"])
+    )
+    candidates_new = persist_tracked(
+        codekg.link_mentions(mentions_new, alias_dim, use_lsh=use_lsh)
+    )
     store.begin_append(["mentions", "candidates", "_input_pairs"])
     for stage, df in (("mentions", mentions_new), ("candidates", candidates_new)):
         commits.append(stage, df, ["repo_bucket", "lang"])
@@ -367,17 +462,15 @@ def append_repos_batch(
     for st in ("edges", "nodes", "triples"):
         store.invalidate(st)
     store.end_append()
-    for df in (mentions_new, candidates_new, new_pairs):
-        df.unpersist()
     return metrics
 
 
+@_cache_scoped
 def run_codekg_pipeline_incremental(
     spark: SparkSession,
     repos_src_new: DataFrame,
     out_root: str,
     run_id: str = "inc0",
-    bucket_count: int = 64,
     use_lsh: bool = True,
     alias_rows=None,
     iceberg_catalog: str | None = None,
@@ -406,7 +499,6 @@ def run_codekg_pipeline_incremental(
         spark,
         store,
         repos_src_new,
-        bucket_count=bucket_count,
         use_lsh=use_lsh,
         alias_rows=alias_rows,
     )
@@ -420,7 +512,7 @@ def run_codekg_pipeline_incremental(
     nodes = commits.run("nodes", lambda: codekg.canonicalize(candidates_all, alias_dim, edges))
     commits.run(
         "triples",
-        lambda: codekg.build_triples(candidates_all, nodes),
+        lambda: codekg.build_triples(candidates_all, nodes, store.layout["write_salt"]),
         partition_by=["repo_bucket", "lang"],
     )
     for stage in ("edges", "nodes", "triples"):
@@ -429,6 +521,7 @@ def run_codekg_pipeline_incremental(
     return metrics
 
 
+@_cache_scoped
 def run_avaluo_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -446,7 +539,7 @@ def run_avaluo_pipeline(
     dims = dim_frames(spark)
     if min_page_chars is not None:
         docs = length_gate(docs, min_page_chars)
-    input_pairs, input_digest, n_input = doc_sha_identity(
+    input_pairs, input_digest, n_input, _ = doc_sha_identity(
         docs.select(
             "doc_id",
             F.sha2(F.coalesce(F.col("text"), F.lit("")), 256).alias("content_sha"),
@@ -457,7 +550,6 @@ def run_avaluo_pipeline(
     commits = StageCommits(spark, store, out, input_pairs, n_input)
     records = commits.run("records", lambda: avaluo_records(docs, dims))
     commits.run("triples", lambda: records_to_triples(records))
-    input_pairs.unpersist()
     out["records"] = out["stages"]["records"]["rows"]
     out["triples"] = out["stages"]["triples"]["rows"]
     return out
@@ -466,14 +558,20 @@ def run_avaluo_pipeline(
 def main(argv=None) -> None:
     from .session import get_spark
 
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(
+        description="Resumable, checkpointed KG pipeline. codekg writes its "
+        "mentions, candidates and triples stages partitioned by "
+        "(repo_bucket, lang) under a layout sized to the input's content "
+        "bytes and recorded in the stage manifests: the bucket count is "
+        "fixed by the first build and reused by resume, --append and "
+        "--stream; the triples write salt follows the corpus size."
+    )
     ap.add_argument(
         "--input", default=None,
         help="input parquet path (required except with --compact)",
     )
     ap.add_argument("--output", required=True, help="warehouse root")
     ap.add_argument("--run-id", default="run0")
-    ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--no-lsh", action="store_true")
     ap.add_argument(
         "--append", action="store_true",
@@ -554,7 +652,7 @@ def main(argv=None) -> None:
         ckpt = args.checkpoint or os.path.join(args.output, "_stream_ckpt")
         q = stream_repos_src(
             spark, args.input, args.output, ckpt,
-            bucket_count=args.buckets, use_lsh=not args.no_lsh,
+            use_lsh=not args.no_lsh,
             run_id_prefix=args.run_id,
             iceberg_catalog=args.iceberg_catalog,
         )
@@ -587,7 +685,6 @@ def main(argv=None) -> None:
             repos_src,
             args.output,
             run_id=args.run_id,
-            bucket_count=args.buckets,
             use_lsh=not args.no_lsh,
             iceberg_catalog=args.iceberg_catalog,
         )

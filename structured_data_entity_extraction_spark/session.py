@@ -1,10 +1,17 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
 Tuned for the target execution model (SURVEY.md §4): AQE on (runtime
-re-plan + skew-join splitting for mega-repos), Arrow on (every UDF in
-this engine is a vectorized pandas UDF), explicit shuffle-partition
+re-plan + skew-join splitting for mega-repos), Arrow on (the Python
+crossings that remain -- pandas UDFs on the avaluo extract and a few
+ops, mapInPandas, applyInPandasWithState -- move Arrow batches; the
+codekg pipeline starts no Python worker), explicit shuffle-partition
 sizing. On a real cluster the same confs ship via spark-submit --conf;
 `local[N]` here is the sandbox stand-in for N executors.
+
+Local defaults fit the host: `local[<usable CPUs>]` and a driver heap of
+half the host's (or the cgroup's) memory, at most 20g.
+`SPARK_GRAFT_CPUS`, `SPARK_GRAFT_MASTER` and `SPARK_GRAFT_DRIVER_MEM`
+override them.
 
 Shuffle-partition sizing: size to DATA, not cores — target ~100-250k
 rows (or ~128 MB) per reduce task. An undersized count makes reduce
@@ -20,6 +27,33 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+
+def usable_cpus() -> int:
+    """CPUs this process may run on."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API off Linux
+        return os.cpu_count() or 1
+
+
+def default_driver_mem() -> str:
+    """Half of host memory, or of the cgroup limit when lower, at most
+    20g: the local JVM shares the machine with its Python workers."""
+    try:
+        with open("/proc/meminfo", encoding="utf-8") as fh:
+            total = int(next(l for l in fh if l.startswith("MemTotal:")).split()[1]) << 10
+    except (OSError, StopIteration):
+        return "20g"
+    try:
+        with open("/sys/fs/cgroup/memory.max", encoding="utf-8") as fh:
+            limit = fh.read().strip()
+        if limit.isdigit():
+            total = min(total, int(limit))
+    except OSError:
+        pass
+    return f"{min(20 << 10, max(1 << 10, total // 2 >> 20))}m"
+
 
 DEFAULT_CONF = {
     # AQE: runtime coalescing + skew-join handling (north_rule)
@@ -41,10 +75,12 @@ DEFAULT_CONF = {
     # default left ~256 MB/slot at local[32] and GC-thrashed the
     # larger-SF bench (measured: the 10x-corpus artifact total fell
     # 30.9 -> 26.1 s and its median-over-best 1.18 -> 1.07 from this
-    # alone; sf0.1 is unaffected). 20g is ~15% of the 128 GiB sandbox;
-    # still env-overridable. On a real cluster executor memory is per
-    # node and set via spark-submit, not this local default.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g"),
+    # alone on a 128 GiB host; sf0.1 is unaffected). The default takes
+    # half the host's memory up to that 20g, so a 15 GB host without
+    # swap is not promised more heap than it has; env-overridable. On a
+    # real cluster executor memory is per node and set via
+    # spark-submit, not this local default.
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
     # shuffle/spill scratch: tmpfs when available (local-mode shuffle
     # writes otherwise bottleneck on the VM's shared disk)
     "spark.local.dir": os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/tmp"),
@@ -57,7 +93,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or usable_cpus())
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)

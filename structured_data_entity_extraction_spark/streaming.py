@@ -24,7 +24,12 @@ At scale: one streaming query per corpus shard, checkpointLocation on
 durable storage gives exactly-once file-source progress; the
 foreachBatch append writes partitioned parquet keyed the same way as
 the batch pipeline ((repo_bucket, lang)), bracketed by the
-torn-append marker.
+torn-append marker. The first micro-batch bootstraps the warehouse and
+fixes its repo bucket count (derived from that batch's content bytes,
+``pipeline.derive_layout``); every later batch appends with the count
+recorded in the mentions manifest. The manifests add up the batches'
+content bytes, and the finalize run sizes the triples write salt to
+the whole corpus.
 """
 
 from __future__ import annotations
@@ -43,7 +48,6 @@ def stream_repos_src(
     input_path: str,
     warehouse_root: str,
     checkpoint_path: str,
-    bucket_count: int = 64,
     use_lsh: bool = True,
     alias_rows=None,
     available_now: bool = True,
@@ -75,7 +79,6 @@ def stream_repos_src(
             bspark,
             store,
             batch_df,
-            bucket_count=bucket_count,
             use_lsh=use_lsh,
             alias_rows=alias_rows,
         )

@@ -212,7 +212,7 @@ def test_sha_invariant_catches_foreign_pair(spark, rows, tmp_path, monkeypatch):
             F.when(F.col("doc_id") == victim, F.lit("f" * 64)).otherwise(F.col("content_sha")),
         )
 
-    pairs, _digest, n_input = pipeline.input_identity(df)
+    pairs, _digest, n_input, _bytes = pipeline.input_identity(df)
     rep = pipeline.sha_invariant_report(planted(df), pairs, n_input)
     assert rep["sha_invariant_ok"] is False and rep["bad_pairs"] == 1
     clean = pipeline.sha_invariant_report(real_extract(df), pairs, n_input)
@@ -520,6 +520,201 @@ def test_determinism(spark, repos_df, tmp_path):
     sa = sorted(map(tuple, ta.select("subj", "pred", "obj").collect()))
     sb = sorted(map(tuple, tb.select("subj", "pred", "obj").collect()))
     assert sa == sb
+
+
+def _stage_buckets(root, stage):
+    """The repo_bucket values of a stage's hive directories."""
+    data = os.path.join(root, stage, "data")
+    return {int(d.split("=", 1)[1]) for d in os.listdir(data) if d.startswith("repo_bucket=")}
+
+
+def _rows_of(stage_df, repos_src):
+    """The stage rows of the documents in ``repos_src``."""
+    ids = repos_src.select(
+        F.sha2(F.concat_ws("\x00", "repo", "path", "commit"), 256).alias("doc_id")
+    )
+    return stage_df.join(ids, "doc_id", "left_semi")
+
+
+def _strip_layout(root):
+    """Make a warehouse look like one written before layouts were
+    recorded: no manifest carries a layout or input_bytes key."""
+    store = StageStore(root)
+    for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
+        m = store.manifest(stage)
+        m.pop("layout", None)
+        del m["input_bytes"]
+        store._publish(stage, m)
+
+
+def test_pipeline_layout_derived_and_recorded(spark, repos_df, tmp_path, monkeypatch):
+    """The partitioned stages' layout comes from the input's content
+    bytes: a small input gets (1, 1), recorded in the mentions,
+    candidates and triples manifests, with all data under
+    repo_bucket=0. The derivation clamps to (64, 8); given a recorded
+    bucket count, the salt makes up the remaining keys."""
+    from structured_data_entity_extraction_spark import pipeline
+    from structured_data_entity_extraction_spark.ops.cache import cache_scope
+
+    out = str(tmp_path / "w")
+    m = run_codekg_pipeline(spark, repos_df, out, use_lsh=False)
+    small = {"bucket_count": 1, "write_salt": 1}
+    assert m["layout"] == small
+    store = StageStore(out)
+    for stage in ("mentions", "candidates", "triples"):
+        assert store.manifest(stage)["layout"] == small
+        assert _stage_buckets(out, stage) == {0}
+    for stage in ("edges", "nodes"):
+        assert "layout" not in store.manifest(stage)
+
+    with cache_scope():
+        _pairs, _digest, _n, content_bytes = pipeline.input_identity(repos_df)
+    assert content_bytes == sum(len((r or "").encode()) for (r,) in repos_df.select("content").collect())
+    assert store.manifest("triples")["input_bytes"] == content_bytes
+    monkeypatch.setattr(pipeline, "LAYOUT_TARGET_BYTES", 1)
+    assert pipeline.derive_layout(content_bytes) == pipeline.LEGACY_LAYOUT
+    assert pipeline.derive_layout(content_bytes, 2) == {"bucket_count": 2, "write_salt": 256}
+    monkeypatch.setattr(pipeline, "LAYOUT_TARGET_BYTES", content_bytes // 5)
+    assert 1 < pipeline.derive_layout(content_bytes)["bucket_count"] <= 64
+    assert pipeline.derive_layout(content_bytes, 1)["write_salt"] > 1
+
+
+def test_append_keeps_recorded_layout(spark, tmp_path, monkeypatch):
+    """A warehouse built at 8 buckets keeps them: an incremental append
+    (whose own small input would derive 1 bucket) writes its rows with
+    repo_bucket = pmod(xxhash64(repo), 8). The manifests add up the
+    input bytes, and the rebuilt triples take the write salt derived
+    for the grown corpus. The final triples still equal a full
+    rebuild's, which derives (1, 1)."""
+    from structured_data_entity_extraction_spark import pipeline
+
+    rows = repos_src_rows(120, seed=19)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    base_bytes = sum(len(r["content"].encode()) for r in rows[:100])
+    total_bytes = sum(len(r["content"].encode()) for r in rows)
+    inc_root, full_root = str(tmp_path / "inc"), str(tmp_path / "full")
+    monkeypatch.setattr(pipeline, "LAYOUT_TARGET_BYTES", base_bytes // 8 + 1)
+    base = run_codekg_pipeline(spark, mk(rows[:100]), inc_root, run_id="b", use_lsh=False)
+    assert base["layout"] == {"bucket_count": 8, "write_salt": 1}
+    assert len(_stage_buckets(inc_root, "mentions")) > 1
+
+    m_inc = pipeline.run_codekg_pipeline_incremental(
+        spark, mk(rows[100:]), inc_root, run_id="i", use_lsh=False
+    )
+    grown = pipeline.derive_layout(total_bytes, 8)
+    monkeypatch.undo()
+    assert grown["write_salt"] > 1
+    assert m_inc["layout"] == grown
+    store = StageStore(inc_root)
+    for stage in ("mentions", "candidates", "triples"):
+        assert store.manifest(stage)["layout"] == grown
+        assert store.manifest(stage)["input_bytes"] == total_bytes
+        assert _stage_buckets(inc_root, stage) <= set(range(8))
+    new = _rows_of(store.read(spark, "mentions"), mk(rows[100:]))
+    assert new.count() > 0
+    assert new.filter(
+        F.col("repo_bucket") != F.pmod(F.xxhash64("repo"), F.lit(8))
+    ).count() == 0
+
+    m_full = run_codekg_pipeline(spark, mk(rows), full_root, run_id="f", use_lsh=False)
+    assert m_full["layout"] == {"bucket_count": 1, "write_salt": 1}
+    cols = ["subj", "pred", "obj", "doc_id", "repo", "lang", "content_sha", "conf"]
+    got, want = (
+        sorted(map(tuple, spark.read.parquet(f"{r}/triples/data").select(*cols).collect()))
+        for r in (inc_root, full_root)
+    )
+    assert got == want
+
+
+def test_unrecorded_layout_resumes_and_appends_as_legacy(spark, tmp_path):
+    """Manifests without a layout were written as (64, 8): such a
+    warehouse resumes with 64 buckets, and an append, which cannot size
+    the grown corpus without recorded input bytes, writes with 64
+    buckets and records (64, 8)."""
+    from structured_data_entity_extraction_spark import pipeline
+
+    rows = repos_src_rows(30, seed=37)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    _strip_layout(root)
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r", use_lsh=False)
+    assert all(s["resumed"] for s in m["stages"].values())
+    assert m["layout"]["bucket_count"] == 64
+
+    m_inc = pipeline.run_codekg_pipeline_incremental(
+        spark, mk(rows[20:]), root, run_id="i", use_lsh=False
+    )
+    assert m_inc["layout"] == pipeline.LEGACY_LAYOUT
+    store = StageStore(root)
+    for stage in ("mentions", "candidates", "triples"):
+        assert store.manifest(stage)["layout"] == pipeline.LEGACY_LAYOUT
+    new = _rows_of(store.read(spark, "mentions"), mk(rows[20:]))
+    assert new.count() > 0
+    assert new.filter(
+        F.col("repo_bucket") != F.pmod(F.xxhash64("repo"), F.lit(64))
+    ).count() == 0
+
+
+def test_resumed_stage_must_match_layout(spark, rows, tmp_path):
+    """A resumed partitioned stage written with another bucket count
+    than the mentions stage refuses instead of mixing layouts."""
+    out = str(tmp_path / "w")
+    df = spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows[:20]],
+        REPOS_SRC,
+    )
+    run_codekg_pipeline(spark, df, out, use_lsh=False)
+    store = StageStore(out)
+    m = store.manifest("candidates")
+    m["layout"] = {"bucket_count": 64, "write_salt": 8}
+    store._publish("candidates", m)
+    with pytest.raises(RuntimeError, match="stage 'candidates' was written with 64 repo buckets"):
+        run_codekg_pipeline(spark, df, out, run_id="r", use_lsh=False)
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pipeline_releases_what_it_persists(spark, rows, tmp_path, monkeypatch):
+    """A run leaves the session's cache as it found it: a clean run
+    (LSH on), a run aborted by the sha invariant, and a refused
+    overlapping append."""
+    from structured_data_entity_extraction_spark.pipeline import (
+        run_codekg_pipeline_incremental,
+    )
+
+    df = spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows[:30]],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    spark.catalog.clearCache()
+    run_codekg_pipeline(spark, df, root, use_lsh=True)
+    assert _cache_empty(spark)
+
+    with pytest.raises(RuntimeError, match="append-only"):
+        run_codekg_pipeline_incremental(spark, df.limit(5), root, run_id="dup")
+    assert _cache_empty(spark)
+
+    real_extract = codekg.extract_code_mentions
+    monkeypatch.setattr(
+        codekg,
+        "extract_code_mentions",
+        lambda repos_src, bucket_count=64: real_extract(repos_src, bucket_count).withColumn(
+            "content_sha", F.lit("f" * 64)
+        ),
+    )
+    with pytest.raises(RuntimeError, match="invariant violated"):
+        run_codekg_pipeline(spark, df, str(tmp_path / "w2"), use_lsh=True)
+    assert _cache_empty(spark)
 
 
 def test_build_triples_non_hex_ids_roundtrip(spark):

@@ -186,9 +186,10 @@ def test_build_triples_dedup_reuses_write_clustering(spark):
     repartition columns in its key set, so HashPartitioning on the
     subset satisfies its clustered distribution and Catalyst must not
     plan a second ENSURE_REQUIREMENTS exchange on the full dedup key.
-    The salt lifts the bucket_count x |langs| (~384) parallelism cap a
-    bare (bucket, lang) key would impose at cluster scale, while the
-    write still sees at most write_salt files per hive partition."""
+    The salt lifts the bucket_count x |langs| parallelism cap a bare
+    (bucket, lang) key would impose at cluster scale (64 x 6 = 384 at
+    the large-input layout, pipeline.derive_layout), while the write
+    still sees at most write_salt files per hive partition."""
     from structured_data_entity_extraction_spark import codekg
 
     cand = spark.createDataFrame(
