@@ -1,15 +1,17 @@
-"""Stage A -- EXTRACT: vectorized mention detection.
+"""Stage A -- EXTRACT: one vectorized Python pass per corpus row.
 
-One Arrow-batched pandas UDF pass per corpus row computes every
-Python-side feature the pipeline needs (mention windows, estado keyword
-features, exact municipality vote counts); everything downstream is
-Spark built-ins (explode, broadcast joins, window votes). Presence-test
-fields (M1/M2 -- SURVEY.md §2.3) never leave the JVM: they compile to
-``regexp_replace`` + ``rlike`` inside whole-stage codegen.
+One Arrow-batched pandas UDF computes every Python-side field the
+record needs: the four window-parsed fields (colonia, calle, fecha,
+valor -- each refsem's own first-non-empty scan in reference order),
+the estado keyword features and the exact municipality vote counts.
+Everything downstream is Spark built-ins (broadcast joins, an array
+argmax). Presence-test fields (M1/M2 -- SURVEY.md §2.3) never leave
+the JVM: they compile to ``regexp_replace`` + ``rlike`` inside
+whole-stage codegen.
 
 Scale notes: regexes compile once per executor (module import), batches
 are Arrow-bounded (session.py caps maxRecordsPerBatch), and the UDF is
-a narrow map -- no shuffle until the link stage groups mentions.
+a narrow map -- the record is assembled without a shuffle.
 """
 
 from __future__ import annotations
@@ -23,13 +25,16 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from . import refsem
-from .schemas import MENTIONS_ARRAY, MUNI_COUNTS_ARRAY
+from .schemas import MUNI_COUNTS_ARRAY
 
 # ---------------------------------------------------------------- pUDFs
 
 _EXTRACT_SCHEMA = T.StructType(
     [
-        T.StructField("mentions", MENTIONS_ARRAY),
+        T.StructField("colonia", T.StringType()),
+        T.StructField("calle", T.StringType()),
+        T.StructField("fecha", T.StringType()),
+        T.StructField("valor", T.StringType()),
         T.StructField("estado_rank", T.IntegerType()),
         T.StructField("estado_digit", T.StringType()),
         T.StructField("muni_counts", MUNI_COUNTS_ARRAY),
@@ -38,7 +43,10 @@ _EXTRACT_SCHEMA = T.StructType(
 )
 
 _EMPTY_EXTRACT = {
-    "mentions": [],
+    "colonia": "",
+    "calle": "",
+    "fecha": "",
+    "valor": "",
     "estado_rank": -1,
     "estado_digit": "",
     "muni_counts": [],
@@ -54,10 +62,10 @@ def _extract_one(texto):
     try:
         rank, digit = refsem.estado_features(texto)
         return {
-            "mentions": [
-                {"field": f, "anchor_rank": r, "span_start": s, "window": w}
-                for f, r, s, w in refsem.avaluo_windows(texto)
-            ],
+            "colonia": refsem.colonia(texto),
+            "calle": refsem.calle(texto),
+            "fecha": refsem.fecha(texto),
+            "valor": refsem.valor(texto)[0],
             "estado_rank": rank,
             "estado_digit": digit,
             "muni_counts": [
@@ -73,13 +81,6 @@ def _extract_one(texto):
 @pandas_udf(_EXTRACT_SCHEMA)
 def extract_avaluo_udf(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame([_extract_one(t) for t in texts])
-
-
-@pandas_udf(T.StringType())
-def parse_window_udf(fields: pd.Series, windows: pd.Series) -> pd.Series:
-    return pd.Series(
-        [refsem.parse_window(f, w) for f, w in zip(fields, windows)], dtype=object
-    )
 
 
 # ------------------------------------------------- JVM-side presence tests

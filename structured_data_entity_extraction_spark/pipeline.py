@@ -531,7 +531,9 @@ def run_avaluo_pipeline(
     iceberg_catalog: str | None = None,
 ) -> dict:
     """docs(doc_id, text) -> 13-field records + triples, checkpointed.
-    ``min_page_chars`` wires the reference's S1 page gate (>50 chars,
+    The records stage is ``link.avaluo_records``: one narrow pass (the
+    extract pandas UDF, broadcast dim joins) that the stage's observed
+    write evaluates once, with nothing persisted. ``min_page_chars`` wires the reference's S1 page gate (>50 chars,
     extractorAvaluos.py:18-29); None preserves every row. Both stage
     checkpoints carry content_sha and are verified against the (gated)
     input's per-document sha set."""

@@ -104,21 +104,19 @@ def _windows(
     *,
     ignorecase: bool,
     from_start: bool,
-    escape: bool = True,
 ):
     """Keyword-anchored context windows -- the shared skeleton of every
     field extractor (extractorAvaluos.py:96-102 and siblings). Emits
-    (anchor_rank, span_start, window) in reference iteration order:
-    anchors outer, matches inner."""
+    the windows in reference iteration order: anchors outer, matches
+    inner."""
     flags = re.IGNORECASE if ignorecase else 0
     out = []
-    for rank, kw in enumerate(anchors):
-        pat = re.escape(kw) if escape else kw
-        for m in re.finditer(pat, parrafo, flags):
+    for kw in anchors:
+        for m in re.finditer(re.escape(kw), parrafo, flags):
             base = m.start() if from_start else m.end()
             lo = max(0, base - pre) if pre else base
             hi = min(clip_len, m.end() + post)
-            out.append((rank, m.start(), parrafo[lo:hi]))
+            out.append(parrafo[lo:hi])
     return out
 
 
@@ -246,7 +244,7 @@ def municipio(texto: str) -> str:
     wins = _windows(
         parrafo, len(texto), MUNICIPIO_ANCHORS, 0, 35, ignorecase=False, from_start=True
     )
-    ciudad = " ".join(w for _, _, w in wins)
+    ciudad = " ".join(wins)
     return pre_municipio(ciudad, estado(texto))
 
 
@@ -310,7 +308,7 @@ def colonia(texto: str) -> str:
     wins = _windows(
         parrafo, len(texto), COLONIA_ANCHORS, 0, 100, ignorecase=False, from_start=False
     )
-    for _, _, w in wins:
+    for w in wins:
         parsed = pre_colonia(w)
         if parsed and parsed.strip():
             return parsed
@@ -366,7 +364,7 @@ def calle(texto: str) -> str:
     wins = _windows(
         parrafo, len(texto), CALLE_ANCHORS, 0, 150, ignorecase=True, from_start=False
     )
-    for _, _, w in wins:
+    for w in wins:
         parsed = pre_calle(w)
         if parsed and parsed.strip():
             return parsed
@@ -426,7 +424,7 @@ def fecha(texto: str) -> str:
     wins = _windows(
         parrafo, len(texto), FECHA_ANCHORS, 0, 75, ignorecase=True, from_start=False
     )
-    for _, _, w in wins:
+    for w in wins:
         parsed = pre_fecha(w)
         if parsed and parsed.strip():
             return parsed
@@ -480,7 +478,7 @@ def valor(texto: str):
     )
     boleano = "NO"
     precios = []
-    for _, _, w in wins:
+    for w in wins:
         if "Geo" in w:
             continue
         parsed = extract_characters(w)
@@ -496,9 +494,9 @@ def valor(texto: str):
 #
 # The distributed pipeline (SURVEY.md §3 "new-engine lifecycle") splits
 # extraction into per-doc FEATURES (computed here, inside one Arrow
-# batch pass) and LINKING (broadcast dim joins + vote windows, done in
-# DataFrame ops). These kernels emit exactly the features the link
-# stage needs, preserving reference semantics bit-for-bit.
+# batch pass) and LINKING (broadcast dim joins + an array argmax vote,
+# done in DataFrame ops). These kernels emit exactly the features the
+# link stage needs, preserving reference semantics bit-for-bit.
 
 
 def estado_features(texto: str) -> tuple[int, str]:
@@ -535,7 +533,7 @@ def muni_windows_text(texto: str) -> str:
     wins = _windows(
         parrafo, len(texto), MUNICIPIO_ANCHORS, 0, 35, ignorecase=False, from_start=True
     )
-    joined = " ".join(w for _, _, w in wins)
+    joined = " ".join(wins)
     return re.sub(r"[\r\n]+", " ", norm_ws(joined)).strip().upper()
 
 
@@ -568,52 +566,6 @@ def muni_vote_counts(texto: str) -> list[tuple[int, int, int]]:
             if cnt:
                 out.append((bid, rank, cnt))
     return out
-
-
-def avaluo_windows(texto: str) -> list[tuple[str, int, int, str]]:
-    """(field, anchor_rank, span_start, window) mention rows for the
-    window-parsed fields (M5-M8) in reference iteration order."""
-    if texto is None:
-        return []
-    rows = []
-    p75 = norm_ws(texto[:7500])
-    for rank, start, w in _windows(
-        p75.replace("Asentamientos", ""), len(texto), COLONIA_ANCHORS, 0, 100,
-        ignorecase=False, from_start=False,
-    ):
-        rows.append(("colonia", rank, start, w))
-    for rank, start, w in _windows(
-        p75.replace(",", "."), len(texto), CALLE_ANCHORS, 0, 150,
-        ignorecase=True, from_start=False,
-    ):
-        rows.append(("calle", rank, start, w))
-    pfull = norm_ws(texto)
-    for rank, start, w in _windows(
-        pfull.replace(",", "."), len(texto), FECHA_ANCHORS, 0, 75,
-        ignorecase=True, from_start=False,
-    ):
-        rows.append(("fecha", rank, start, w))
-    pv = pfull.replace("|", "").replace("!", "").replace("]", "")
-    for rank, start, w in _windows(
-        pv, len(texto), VALOR_ANCHORS, 0, 25, ignorecase=False, from_start=True
-    ):
-        rows.append(("valor", rank, start, w))
-    return rows
-
-
-def parse_window(field: str, window: str) -> str:
-    """Dispatch the per-field normalizer over a mention window (N1-N8)."""
-    if window is None:
-        return ""
-    if field == "colonia":
-        return pre_colonia(window)
-    if field == "calle":
-        return pre_calle(window)
-    if field == "fecha":
-        return pre_fecha(window)
-    if field == "valor":
-        return extract_characters(window)
-    return ""
 
 
 @lru_cache(maxsize=1)

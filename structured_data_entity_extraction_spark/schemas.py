@@ -24,18 +24,7 @@ AVALUO_DOCS = T.StructType(
     ]
 )
 
-# mention window emitted by the extraction pUDF (M3-M8 skeleton)
-MENTION = T.StructType(
-    [
-        T.StructField("field", T.StringType(), False),
-        T.StructField("anchor_rank", T.IntegerType(), False),
-        T.StructField("span_start", T.IntegerType(), False),
-        T.StructField("window", T.StringType(), True),
-    ]
-)
-MENTIONS_ARRAY = T.ArrayType(MENTION)
-
-# municipality-vote count rows emitted by the muni pUDF (L3/L4)
+# municipality-vote count rows emitted by the extract pUDF (L3/L4)
 MUNI_COUNT = T.StructType(
     [
         T.StructField("branch_id", T.IntegerType(), False),

@@ -685,11 +685,18 @@ def _cache_empty(spark) -> bool:
 
 def test_pipeline_releases_what_it_persists(spark, rows, tmp_path, monkeypatch):
     """A run leaves the session's cache as it found it: a clean run
-    (LSH on), a run aborted by the sha invariant, and a refused
-    overlapping append."""
+    (LSH on), a run aborted by the sha invariant, a refused
+    overlapping append, an avaluo run, and a cache_scope around the
+    in-memory avaluo records -> triples chain."""
+    from structured_data_entity_extraction_spark.fixtures import avaluo_docs
+    from structured_data_entity_extraction_spark.link import avaluo_records
+    from structured_data_entity_extraction_spark.ops.cache import cache_scope
     from structured_data_entity_extraction_spark.pipeline import (
+        run_avaluo_pipeline,
         run_codekg_pipeline_incremental,
     )
+    from structured_data_entity_extraction_spark.schemas import AVALUO_DOCS
+    from structured_data_entity_extraction_spark.triples import records_to_triples
 
     df = spark.createDataFrame(
         [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows[:30]],
@@ -714,6 +721,15 @@ def test_pipeline_releases_what_it_persists(spark, rows, tmp_path, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="invariant violated"):
         run_codekg_pipeline(spark, df, str(tmp_path / "w2"), use_lsh=True)
+    assert _cache_empty(spark)
+
+    docs = spark.createDataFrame(
+        [(r["doc_id"], r["text"]) for r in avaluo_docs(20, seed=3)], AVALUO_DOCS
+    )
+    assert run_avaluo_pipeline(spark, docs, str(tmp_path / "w3"))["records"] == 20
+    assert _cache_empty(spark)
+    with cache_scope():
+        assert records_to_triples(avaluo_records(docs)).count() == 20 * 13
     assert _cache_empty(spark)
 
 

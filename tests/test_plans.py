@@ -134,12 +134,31 @@ def test_pipeline_plans_have_no_python_rdd_scan(spark):
         F.col("id").alias("doc_id"),
         F.struct(F.lit(0).alias("estado_rank"), F.lit("09").alias("estado_digit")).alias("ext"),
     )
-    estado = L.resolve_estado(extracted, L.dim_frames(spark))
+    estado = L.with_estado(extracted, L.dim_frames(spark))
     for name, frame in (("link_mentions", cands), ("link_edges", edges),
-                        ("canonicalize", nodes), ("resolve_estado", estado)):
+                        ("canonicalize", nodes), ("with_estado", estado)):
         p = _plan(frame)
         assert "Scan ExistingRDD" not in p, (name, p)
         assert "LocalTableScan" in p, name
+
+
+def test_avaluo_records_plan_is_one_python_pass_without_shuffle(spark):
+    """The avaluo record is one narrow chain: the extract pass's pandas
+    UDF evaluated once, broadcast dim joins, one projection. Exactly one
+    ArrowEvalPython, no hash exchange (no groupBy, pivot or doc_id
+    re-join) and no cached relation of its own."""
+    from structured_data_entity_extraction_spark.fixtures import avaluo_docs
+    from structured_data_entity_extraction_spark.link import avaluo_records
+    from structured_data_entity_extraction_spark.schemas import AVALUO_DOCS
+
+    docs = spark.createDataFrame(
+        [(r["doc_id"], r["text"]) for r in avaluo_docs(5, seed=7)], AVALUO_DOCS
+    )
+    p = _plan(avaluo_records(docs))
+    assert p.count("ArrowEvalPython") == 1, p
+    assert "Exchange hashpartitioning" not in p, p
+    assert "InMemoryRelation" not in p, p
+    assert "BroadcastHashJoin" in p
 
 
 def test_local_frame_with_zero_rows(spark):

@@ -113,90 +113,36 @@ def test_ngram_packed_and_struct_pair_paths_agree(spark):
     assert got_lo and got_lo == got_hi
 
 
-def test_first_parsed_struct_min_equals_window_form(spark):
-    """first_parsed's pivoted min(struct(anchor_rank, span_start,
-    parsed)) must pick exactly the old window's rn=1 row. It relies on
-    (anchor_rank, span_start) being unique per (doc, field), which the
-    reference guarantees; the extractor's real output is checked for
-    that uniqueness here, and a planted tie pins what a break would do
-    (the struct min falls through to the smallest parsed string), so a
-    break fails this test instead of silently changing the selection."""
-    from pyspark.sql import Window
-
-    from structured_data_entity_extraction_spark import link as L
-    from structured_data_entity_extraction_spark.extract import extract_stage
-    from structured_data_entity_extraction_spark.fixtures import avaluo_docs
-    from structured_data_entity_extraction_spark.schemas import AVALUO_DOCS
-
-    docs = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in avaluo_docs(60, seed=7)], AVALUO_DOCS
-    )
-    real = L.parse_mentions(extract_stage(docs))
-    key = ["doc_id", "field", "anchor_rank", "span_start"]
-    assert real.count() > 0
-    assert real.groupBy(*key).count().filter(F.col("count") > 1).count() == 0
-
-    rows = [
-        # doc 1: colonia picks rank 0 over rank 1; calle picks earlier span
-        (1, "colonia", 1, 5, "late"),
-        (1, "colonia", 0, 9, "win-rank"),
-        (1, "calle", 2, 30, "late-span"),
-        (1, "calle", 2, 10, "win-span"),
-        (2, "fecha", 3, 0, "only"),
-        # doc 3: no parsed fields at all never reaches first_parsed
-        (3, "valor", 1, 4, "v1"),
-        (3, "valor", 1, 2, "v0"),
-        # doc 4: a planted (anchor_rank, span_start) tie
-        (4, "fecha", 0, 7, "tie-b"),
-        (4, "fecha", 0, 7, "tie-a"),
-        (4, "fecha", 1, 0, "later-rank"),
-    ]
-    parsed = spark.createDataFrame(
-        rows, ["doc_id", "field", "anchor_rank", "span_start", "parsed"]
-    )
-    # the window form with parsed as the explicit last sort key: on
-    # tie-free data that key never decides, on the tie it matches the
-    # struct min's fall-through
-    w = Window.partitionBy("doc_id", "field").orderBy("anchor_rank", "span_start", "parsed")
-    old = (
-        parsed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("doc_id")
-        .pivot("field", L.PARSED_FIELDS)
-        .agg(F.first("parsed"))
-    )
-    new = L.first_parsed(parsed)
-    assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
-    assert new.filter(F.col("doc_id") == 4).collect()[0]["fecha"] == "tie-a"
-
-
 def test_resolve_municipio_agg_equals_window_form(spark):
-    """The muni argmax min(struct(-cnt, alias_rank)) must equal the old
-    desc(cnt), asc(alias_rank) window winner (alias_rank is unique
-    within a doc's single branch)."""
+    """The muni argmax array_min(struct(-cnt, alias_rank)) over the
+    state's branch must equal the old desc(cnt), asc(alias_rank) window
+    winner (alias_rank is unique within a doc's single branch). Counts
+    from a foreign branch only, and no counts at all, resolve to ''."""
     from structured_data_entity_extraction_spark import link as L
 
     dims = L.dim_frames(spark)
-    # synthetic extracted frame: doc 1 votes branch via estado lookup
-    state = dims["state_branch"].limit(1).collect()[0]
-    ext = spark.createDataFrame(
+    # synthetic frame: every doc votes in the branch of its estado
+    states = dims["state_branch"].collect()
+    state = states[0]
+    foreign = next(r for r in states if r["branch_id"] != state["branch_id"])
+    bid = state["branch_id"]
+    frame = spark.createDataFrame(
         [
-            (1, [(state["branch_id"], 0, 2), (state["branch_id"], 1, 5), (state["branch_id"], 2, 5)]),
+            (1, state["state"], [(bid, 0, 2), (bid, 3, 5), (bid, 2, 5)]),
+            (2, state["state"], [(foreign["branch_id"], 0, 9)]),
+            (3, state["state"], []),
         ],
-        "doc_id long, muni_counts array<struct<branch_id:int,alias_rank:int,cnt:int>>",
-    ).select("doc_id", F.struct(F.col("muni_counts").alias("muni_counts")).alias("ext"))
-    estado_df = spark.createDataFrame([(1, state["state"])], ["doc_id", "estado"])
-    got = L.resolve_municipio(ext, estado_df, dims).collect()
-    # desc cnt picks the cnt=5 pair; asc alias_rank breaks the tie -> rank 1
-    want = (
-        dims["muni_alias"]
-        .filter(
-            (F.col("branch_id") == state["branch_id"]) & (F.col("alias_rank") == 1)
-        )
-        .collect()
-    )
-    want_muni = want[0]["muni_canonical"] if want else ""
-    assert len(got) == 1 and got[0]["municipio"] == (want_muni or "")
+        "doc_id long, estado string, "
+        "muni_counts array<struct<branch_id:int,alias_rank:int,cnt:int>>",
+    ).select("doc_id", "estado", F.struct(F.col("muni_counts").alias("muni_counts")).alias("ext"))
+    got = {r["doc_id"]: r["municipio"] for r in L.with_municipio(frame, dims).collect()}
+    # desc cnt picks the cnt=5 pair; asc alias_rank breaks the tie -> rank 2
+    canon = {
+        r["alias_rank"]: r["muni_canonical"]
+        for r in dims["muni_alias"].filter(F.col("branch_id") == bid).collect()
+    }
+    assert canon[2] and canon[2] not in (canon[0], canon[3])
+    assert got == {1: canon[2], 2: "", 3: ""}
 
 
 def test_ngram_length_prefilter_on_off_paths_agree(spark):

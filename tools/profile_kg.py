@@ -42,7 +42,7 @@ def main():
     ).repartition(CPUS).cache()
     docs.count(), repos.count()
     # warmup (bench policy)
-    records_to_triples(avaluo_records(docs.limit(50), persist=False)).count()
+    records_to_triples(avaluo_records(docs.limit(50))).count()
     codekg.build_kg(repos.limit(100), use_lsh=True).count()
 
     def t(label, fn):

@@ -39,16 +39,8 @@ def run_phases(cores: int, mult: int, content_scale: int) -> dict:
     from pyspark.sql import functions as F
 
     from structured_data_entity_extraction_spark import codekg
-    from structured_data_entity_extraction_spark.extract import extract_stage
     from structured_data_entity_extraction_spark.fixtures import avaluo_docs, repos_src_rows
-    from structured_data_entity_extraction_spark.link import (
-        assemble_record,
-        dim_frames,
-        first_parsed,
-        parse_mentions,
-        resolve_estado,
-        resolve_municipio,
-    )
+    from structured_data_entity_extraction_spark.link import avaluo_records, dim_frames
     from structured_data_entity_extraction_spark.session import get_spark
     from structured_data_entity_extraction_spark.triples import records_to_triples
 
@@ -73,7 +65,7 @@ def run_phases(cores: int, mult: int, content_scale: int) -> dict:
     docs.count(), repos.count()
 
     # warmup (JIT, codegen, python worker pool) -- untimed
-    extract_stage(docs.limit(100)).count()
+    records_to_triples(avaluo_records(docs.limit(100))).count()
     codekg.extract_code_mentions(repos.limit(200)).count()
 
     phases: dict[str, float] = {}
@@ -84,16 +76,11 @@ def run_phases(cores: int, mult: int, content_scale: int) -> dict:
         phases[name] = round(time.time() - t0, 3)
         return out
 
-    dims = dim_frames(spark)
-    # A: avaluo extract -- one pUDF map pass, embarrassingly parallel
-    extracted = extract_stage(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    timed("avaluo_extract", lambda: extracted.count())
-    # B: avaluo link+assemble+triples -- joins/windows/pivot (shuffles)
-    estado = resolve_estado(extracted, dims)
-    muni = resolve_municipio(extracted, estado, dims)
-    firsts = first_parsed(parse_mentions(extracted))
-    rec = assemble_record(extracted, estado, muni, firsts)
-    n_av = timed("avaluo_link_triples", lambda: records_to_triples(rec).count())
+    # A+B: avaluo extract + link + triples -- one narrow chain (the
+    # extract pUDF, broadcast dim joins, one projection): no shuffle,
+    # so no barrier splits it into separate phases
+    rec = avaluo_records(docs, dim_frames(spark))
+    n_av = timed("avaluo_records_triples", lambda: records_to_triples(rec).count())
     # C: codekg extract -- pUDF map + explode
     mentions = codekg.extract_code_mentions(repos).persist(StorageLevel.MEMORY_AND_DISK)
     timed("codekg_extract", lambda: mentions.count())
