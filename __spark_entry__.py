@@ -530,11 +530,11 @@ def q_entity_pagerank(spark, sf_dir):
     """KG analytics: PageRank over the symmetrized imports-co-occurrence
     entity graph (r6, ops/graph.py). Edges come from the exact_tail
     co-occurrence (skew-safe plan, equals uncapped counts), symmetrized
-    so the graph has no dangling nodes -- redistribute and leak modes
-    coincide, and the oracle needs no dangling term. 5 power
-    iterations, damping 0.85; ranks rounded to 6 dp (the shared
-    cross-engine determinism contract). Oracle: the SAME iterations
-    UNROLLED as chained CTEs over the full codekg-pipeline SQL."""
+    so the graph has no dangling nodes and the oracle needs no
+    dangling term. 5 power iterations, damping 0.85; ranks rounded to
+    6 dp (the shared cross-engine determinism contract). Oracle: the
+    SAME iterations UNROLLED as chained CTEs over the full
+    codekg-pipeline SQL."""
     from pyspark.sql import functions as F
 
     from structured_data_entity_extraction_spark import codekg
@@ -1466,10 +1466,10 @@ def _entity_pagerank_sql(iterations: int = 5, damping: float = 0.85) -> str:
     recursive CTE may reference itself only once, but each step needs
     the previous ranks in BOTH the contribution join and the
     keep-every-node outer frame. The graph is symmetrized, so there
-    are no dangling nodes and no dangling-mass term (the engine query
-    runs dangling="redistribute", whose mass is identically zero
-    here). Ranks rounded to 6 dp -- the shared cross-engine
-    determinism contract (float sum order differs at ~1e-15)."""
+    are no dangling nodes and no dangling-mass term (the engine
+    query's redistributed dangling mass is identically zero here).
+    Ranks rounded to 6 dp -- the shared cross-engine determinism
+    contract (float sum order differs at ~1e-15)."""
     base = 1.0 - damping  # same float path as ops/graph.pagerank
     steps = []
     for k in range(1, iterations + 1):
@@ -2257,7 +2257,8 @@ def oracle_sql() -> dict[str, str]:
         # oracle independent of any Python the builder wrote
         "simhash_pairs": _simhash_pairs_sql(),
         # Manku pairs -> recursive-CTE transitive closure: the same
-        # min-label group verdict near_dup_groups gives the minhash path
+        # connected-components group verdict near_dup_groups gives the
+        # minhash path
         "simhash_dup_groups": "WITH RECURSIVE "
         + _simhash_pairs_ctes().lstrip().removeprefix("WITH")
         + """
@@ -2296,7 +2297,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         # connected components over the same pairs: recursive transitive
         # closure; group_id = numeric min node id, matching
-        # cc.connected_components' min-label over the native id type
+        # cc.connected_components' min label over the native id type
         "near_dup_groups": "WITH RECURSIVE "
         + _MINHASH_PAIRS_SQL.lstrip().removeprefix("WITH")
         + """

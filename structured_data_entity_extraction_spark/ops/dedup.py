@@ -649,8 +649,8 @@ def near_dup_groups(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") ->
     beats doc 10). The keep-decision is then ``doc_id == group_id``
     (keep the canonical representative, drop the rest) -- the piece
     that turns similarity pairs into an actual dedup verdict. Scales
-    like cc.connected_components (min-label propagation; near-dup
-    graphs are shallow)."""
+    like cc.connected_components (driver union-find up to 50 000
+    edges, large-star/small-star contraction above)."""
     from ..cc import connected_components
 
     edges = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))

@@ -26,11 +26,10 @@ Scale design (the pregel-shaped part):
   and driver heap for the plan trees -- grows linearly with
   iterations and blows up when the input plan is itself large
   (observed: OOM at 5 iterations over the composed build_kg plan).
-- Dangling nodes (no out-edges) either leak their mass (``dangling=
-  "leak"``) or redistribute it uniformly (``dangling="redistribute"``,
-  the textbook formulation). Redistribution costs one driver-side
-  scalar aggregate per iteration over the persisted |V|-sized rank
-  frame -- bounded, never over the edge stream.
+- Dangling nodes (no out-edges) redistribute their mass uniformly
+  (the textbook formulation). That costs one driver-side scalar
+  aggregate per iteration over the persisted |V|-sized rank frame --
+  bounded, never over the edge stream.
 - Ranks are float64 all the way; consumers that hash-compare across
   engines should round (the driver query rounds to 6 dp, the shared
   determinism contract the IVF-PQ ADC scan also uses).
@@ -55,18 +54,14 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    dangling: str = "redistribute",
 ) -> DataFrame:
     """Fixed-iteration power-method PageRank over a directed edge list.
 
-    Returns (node, rank) with sum(rank) == 1 (up to float noise) when
-    ``dangling="redistribute"``; with ``"leak"`` dangling mass decays
-    each round (sum < 1), matching implementations that skip the
-    dangling term. Duplicate edges are collapsed first (unweighted
-    semantics); self-loops count like any other edge.
+    Returns (node, rank) with sum(rank) == 1 (up to float noise): the
+    mass of dangling nodes is redistributed uniformly each round.
+    Duplicate edges are collapsed first (unweighted semantics);
+    self-loops count like any other edge.
     """
-    if dangling not in ("redistribute", "leak"):
-        raise ValueError(f"unknown dangling mode: {dangling!r}")
     spark = edges.sparkSession
     # eager localCheckpoint: materializes AND truncates lineage, so the
     # per-iteration plans reference a leaf, not the caller's upstream
@@ -92,26 +87,17 @@ def pagerank(
     # the dangling-node SET is loop-invariant -- materialize it once so
     # each round pays one semi-join + scalar agg, not a recomputed deg
     # aggregation plus an anti-join
-    dangling_nodes = (
-        nodes.join(deg.withColumnRenamed("src", "node"), "node", "left_anti")
-        .localCheckpoint()
-        if dangling == "redistribute"
-        else None
-    )
+    dangling_nodes = nodes.join(
+        deg.withColumnRenamed("src", "node"), "node", "left_anti"
+    ).localCheckpoint()
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
     base = (1.0 - damping) / n
     for _ in range(iterations):
-        dm = 0.0
-        if dangling_nodes is not None:
-            # mass parked on nodes with no out-edges, redistributed
-            # uniformly: a scalar agg on the checkpointed |V|-sized frame
-            row = (
-                ranks.join(dangling_nodes, "node", "left_semi")
-                .agg(F.sum("rank"))
-                .first()
-            )
-            dm = row[0] or 0.0
+        # mass parked on nodes with no out-edges, redistributed
+        # uniformly: a scalar agg on the checkpointed |V|-sized frame
+        row = ranks.join(dangling_nodes, "node", "left_semi").agg(F.sum("rank")).first()
+        dm = row[0] or 0.0
         contrib = (
             ee.join(ranks.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))

@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from structured_data_entity_extraction_spark import codekg
+from structured_data_entity_extraction_spark import cc, codekg
 from structured_data_entity_extraction_spark.cc import connected_components
 from structured_data_entity_extraction_spark.fixtures import repos_src_rows
 from structured_data_entity_extraction_spark.materialize import StageStore
@@ -79,10 +79,18 @@ def _union_find(edges):
     return {n: find(n) for n in parent}
 
 
+def _cc(df):
+    """(labels, stats) of one connected_components call."""
+    stats: dict = {}
+    got = {r["node"]: r["component"] for r in connected_components(df, stats=stats).collect()}
+    return got, stats
+
+
 def test_cc_matches_union_find(spark):
     """Property check: CC labels equal a driver-side union-find on a
-    random-ish alias graph with chains, stars and singleton pairs --
-    on ALL FOUR strategies (driver, min-label, star, auto-fallback)."""
+    random-ish alias graph with chains, stars and singleton pairs, and
+    on a graph with no edges -- through both the driver path and the
+    star path (a threshold of 0 forces it)."""
     import random
 
     rng = random.Random(3)
@@ -95,54 +103,39 @@ def test_cc_matches_union_find(spark):
     for i in range(20):
         edges.append((f"c{i:02d}", f"c{i+1:02d}"))
     edges.append(("loner", "loner"))
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    want = _union_find(edges)
-    # driver fast path (small graph)
-    got_fast = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    assert got_fast == want
-    # distributed min-label path (forced; 21-chain needs ~21 rounds)
-    got_ml = {
-        r["node"]: r["component"]
-        for r in connected_components(df, small_threshold=0, method="minlabel", max_iter=30).collect()
-    }
-    assert got_ml == want
-    # distributed two-phase star path (forced)
-    stats: dict = {}
-    got_star = {
-        r["node"]: r["component"]
-        for r in connected_components(df, small_threshold=0, method="star", stats=stats).collect()
-    }
-    assert got_star == want
-    assert stats["method"] == "star" and stats["rounds"] <= 8
-    # auto with a tiny min-label budget: must detect the deep chain and
-    # fall back to star, still exact
-    stats2: dict = {}
-    got_auto = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            df, small_threshold=0, method="auto", minlabel_rounds=3, stats=stats2
-        ).collect()
-    }
-    assert got_auto == want and stats2["method"] == "star"
+    for graph in (edges, []):
+        df = spark.createDataFrame(graph, "src string, dst string")
+        want = _union_find(graph)
+        got, stats = _cc(df)
+        assert got == want and stats["method"] == "driver"
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cc, "SMALL_THRESHOLD", 0)
+            got, stats = _cc(df)
+        assert got == want and stats["method"] == "star"
+        assert stats["rounds"] <= 8
+    # a failing size probe still releases the persisted edge set
+    spark.catalog.clearCache()
+    boom = F.when(F.col("src") == "loner", F.raise_error(F.lit("boom")))
+    bad = spark.createDataFrame(edges, "src string, dst string")
+    with pytest.raises(Exception, match="boom"):
+        connected_components(bad.withColumn("dst", boom.otherwise(F.col("dst"))))
+    assert _cache_empty(spark)
 
 
-def test_cc_star_beats_minlabel_on_deep_chain(spark):
-    """A planted 200-node chain: min-label needs O(diameter) rounds
-    (raises at max_iter=20); the star algorithm converges in O(log^2 n)
-    -- the 100-TB-scale argument for deep near-dup link chains."""
-    import pytest as _pytest
-
+def test_cc_star_converges_on_deep_chain(spark, monkeypatch):
+    """A planted 200-node chain: the star algorithm converges in
+    O(log^2 n) rounds, not O(diameter) -- the corpus-scale argument for
+    deep near-dup link chains -- and RAISES when the round cap is hit
+    rather than return unconverged labels."""
     edges = [(f"v{i:04d}", f"v{i+1:04d}") for i in range(200)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, small_threshold=0, method="minlabel", max_iter=20)
-    stats: dict = {}
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, small_threshold=0, method="star", stats=stats).collect()
-    }
+    monkeypatch.setattr(cc, "SMALL_THRESHOLD", 0)
+    got, stats = _cc(df)
     assert got == _union_find(edges)
-    assert stats["rounds"] <= 12  # vs 200 rounds for min-label
+    assert stats["method"] == "star" and stats["rounds"] <= 12
+    monkeypatch.setattr(cc, "MAX_ITER", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df)
 
 
 def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):

@@ -7,7 +7,7 @@ import pytest
 from structured_data_entity_extraction_spark.ops import graph
 
 
-def _pr_ref(edges, iters=5, d=0.85, dangling="redistribute"):
+def _pr_ref(edges, iters=5, d=0.85):
     """Pure-Python reference power iteration (independent mechanism:
     dict fan-out, not join+agg)."""
     eset = sorted(set(edges))
@@ -19,11 +19,7 @@ def _pr_ref(edges, iters=5, d=0.85, dangling="redistribute"):
     r = {v: 1.0 / n for v in nodes}
     base = (1.0 - d) / n
     for _ in range(iters):
-        dm = (
-            sum(r[v] for v in nodes if v not in out)
-            if dangling == "redistribute"
-            else 0.0
-        )
+        dm = sum(r[v] for v in nodes if v not in out)
         new = {v: base + d * dm / n for v in nodes}
         for s, ts in out.items():
             for t in ts:
@@ -48,15 +44,12 @@ def test_cycle_graph_stays_uniform(spark):
 def test_matches_reference_with_dangling_node(spark):
     # d is dangling (no out-edges); duplicate edge must collapse
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"), ("c", "d")]
-    for mode in ("redistribute", "leak"):
-        got = _run(spark, edges, dangling=mode)
-        want = _pr_ref(edges, dangling=mode)
-        assert set(got) == set(want)
-        for v in got:
-            assert got[v] == pytest.approx(want[v], abs=1e-9), (mode, v)
-    total = sum(_run(spark, edges, dangling="redistribute").values())
-    assert total == pytest.approx(1.0, abs=1e-9)
-    assert sum(_run(spark, edges, dangling="leak").values()) < 1.0 - 1e-6
+    got = _run(spark, edges)
+    want = _pr_ref(edges)
+    assert set(got) == set(want)
+    for v in got:
+        assert got[v] == pytest.approx(want[v], abs=1e-9), v
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
 def test_star_hub_ranks_highest(spark):
@@ -67,11 +60,9 @@ def test_star_hub_ranks_highest(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
-def test_empty_and_bad_mode(spark):
+def test_empty_graph(spark):
     df = spark.createDataFrame([], "src string, dst string")
     assert graph.pagerank(df).count() == 0
-    with pytest.raises(ValueError):
-        graph.pagerank(df, dangling="bogus")
 
 
 def _tri(spark, edges):

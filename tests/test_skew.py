@@ -118,12 +118,11 @@ def test_salted_agg_exact_under_planted_skew(spark):
     assert got == want
 
 
-def test_cc_hub_node_star_method(spark):
+def test_cc_hub_node_star_method(spark, monkeypatch):
     """A 5000-leaf hub star plus a 30-node chain: the large-star/
-    small-star method must converge (hub degree is exactly what
-    min-label propagation struggles with) and label every node with
-    the component minimum."""
-    from structured_data_entity_extraction_spark.cc import connected_components
+    small-star path must converge on the hub's degree and, like the
+    driver path, label every node with the component minimum."""
+    from structured_data_entity_extraction_spark import cc
 
     hub = spark.range(1, 5001).select(
         F.lit(0).cast("long").alias("src"), F.col("id").alias("dst")
@@ -132,14 +131,15 @@ def test_cc_hub_node_star_method(spark):
         F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
     )
     edges = hub.unionByName(chain)
-    stats: dict = {}
-    comp = connected_components(
-        edges, method="star", small_threshold=0, stats=stats
-    )
-    got = {r["node"]: r["component"] for r in comp.collect()}
-    assert stats["method"] == "star"
-    assert all(got[n] == 0 for n in range(0, 5001))
-    assert all(got[n] == 10000 for n in range(10000, 10031))
+    for threshold, method in ((cc.SMALL_THRESHOLD, "driver"), (0, "star")):
+        monkeypatch.setattr(cc, "SMALL_THRESHOLD", threshold)
+        stats: dict = {}
+        comp = cc.connected_components(edges, stats=stats)
+        got = {r["node"]: r["component"] for r in comp.collect()}
+        assert stats["method"] == method
+        assert len(got) == 5032
+        assert all(got[n] == 0 for n in range(0, 5001))
+        assert all(got[n] == 10000 for n in range(10000, 10031))
 
 
 def _hot_asof_frames(spark):
