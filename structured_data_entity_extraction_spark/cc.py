@@ -11,7 +11,8 @@ One function, two execution paths chosen by edge count:
   O(log^2 n) rounds regardless of component diameter, so deep chains
   (long near-dup link chains at corpus scale) and hubs both converge.
   Lineage is cut with ``localCheckpoint`` every round so the plan
-  doesn't grow with the round count (SURVEY.md §4).
+  doesn't grow with the round count (SURVEY.md §4); a round's
+  checkpoint is released once the next one is written.
 
 ``SMALL_THRESHOLD`` and the round cap ``MAX_ITER`` are module
 constants; a threshold of 0 sends every graph down the star path.
@@ -28,6 +29,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .ops.cache import release_checkpoint
 from .session import local_frame
 
 SMALL_THRESHOLD = 50_000
@@ -155,28 +157,33 @@ def _cc_two_phase(sym: DataFrame, stats: dict | None) -> DataFrame:
     # no signature of the input: it is oriented a < b and every round's
     # output a > b, so the two never match on a non-empty graph
     sig = None
-    for rnd in range(1, MAX_ITER + 1):
-        e, new_sig = checkpoint(small_star(large_star(e)))
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"two-phase CC did not converge in {MAX_ITER} rounds "
-            "(expected O(log^2 n)); raise cc.MAX_ITER"
+    try:
+        for rnd in range(1, MAX_ITER + 1):
+            nxt, new_sig = checkpoint(small_star(large_star(e)))
+            release_checkpoint(e)
+            e = nxt
+            if new_sig == sig:
+                break
+            sig = new_sig
+        else:
+            raise RuntimeError(
+                f"two-phase CC did not converge in {MAX_ITER} rounds "
+                "(expected O(log^2 n)); raise cc.MAX_ITER"
+            )
+        if stats is not None:
+            stats.update({"method": "star", "rounds": rnd})
+        # converged edges form a star forest pointing at component minima
+        # (small-star output orientation: a > b = root), so a node is a
+        # leaf (a) labelled with its root, or else its own label: roots,
+        # and self-loop-only nodes, which contraction dropped -- hence the
+        # node list from sym. The min-aggregate is belt and braces.
+        labels = e.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("component"))
+        return (
+            sym.select(F.col("a").alias("node"))
+            .distinct()
+            .join(labels, "node", "left")
+            .select("node", F.coalesce("component", F.col("node")).alias("component"))
+            .localCheckpoint(eager=True)
         )
-    if stats is not None:
-        stats.update({"method": "star", "rounds": rnd})
-    # converged edges form a star forest pointing at component minima
-    # (small-star output orientation: a > b = root), so a node is a
-    # leaf (a) labelled with its root, or else its own label: roots,
-    # and self-loop-only nodes, which contraction dropped -- hence the
-    # node list from sym. The min-aggregate is belt and braces.
-    labels = e.groupBy(F.col("a").alias("node")).agg(F.min("b").alias("component"))
-    return (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .join(labels, "node", "left")
-        .select("node", F.coalesce("component", F.col("node")).alias("component"))
-        .localCheckpoint(eager=True)
-    )
+    finally:
+        release_checkpoint(e)

@@ -71,3 +71,12 @@ def cache_scope():
         assert popped is frames, "cache_scope stack corrupted"
         for df in frames:
             df.unpersist()
+
+
+def release_checkpoint(*frames: DataFrame) -> None:
+    """Drop the blocks of ``localCheckpoint`` frames, which
+    ``df.unpersist()`` does not reach and a live reference keeps for the
+    session's life. Reading a frame afterwards fails: release it only
+    once every frame that reads it is materialized."""
+    for df in frames:
+        df._jdf.logicalPlan().rdd().unpersist(False)

@@ -279,14 +279,64 @@ def ngram_jaccard_pairs(
 # --------------------------------------------------------- MinHash-LSH
 
 
-def minhash_col(grams: F.Column, i: int) -> F.Column:
-    """i-th minhash of a shingle array: min over md5(f'{i}:{shingle}')
-    hex prefixes. md5-on-utf8 is bit-identical in the JVM, hashlib and
-    DuckDB, so the whole operator has an exact ANSI-SQL oracle twin --
-    no pyspark.ml black box."""
-    return F.array_min(
-        F.transform(grams, lambda g: F.substring(F.md5(F.concat(F.lit(f"{i}:"), g)), 1, 16))
+def minhash_bands(grams: F.Column, num_hashes: int, rows_per_band: int) -> F.Column:
+    """MinHash-LSH band entries of a NON-EMPTY shingle array, as
+    ``array<struct<band: int, key: binary>>``, for both LSH paths
+    (``minhash_lsh_pairs`` and codekg's fuzzy alias link). The i-th of
+    ``num_hashes`` minhashes is the least md5(f'{i}:{shingle}') 16-hex
+    prefix; a band's key is unhex(md5) of its ``rows_per_band``
+    minhashes joined by '|'. md5-on-utf8 is bit-identical in the JVM,
+    hashlib and DuckDB, so every hash has an exact SQL twin.
+
+    ONE traversal of the array yields all minhashes (per-hash
+    transform + array_min passes cost ~num_hashes x the iteration): an
+    aggregate over running minima seeded with U+FFFF, which sorts above
+    every hex char -- so an empty array would give every such row the
+    same keys."""
+    mins = F.aggregate(
+        grams,
+        F.array_repeat(F.lit("\uffff"), num_hashes),
+        lambda acc, g: F.zip_with(
+            acc,
+            F.array(
+                *[
+                    F.substring(F.md5(F.concat(F.lit(f"{i}:"), g)), 1, 16)
+                    for i in range(num_hashes)
+                ]
+            ),
+            lambda a, b: F.least(a, b),
+        ),
     )
+
+    def entries(m: F.Column) -> F.Column:
+        return F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    # unhex: the hex md5 is bijective with its 16 raw
+                    # bytes, so joining on the binary form keeps the
+                    # exact candidate set at half the key bytes
+                    F.unhex(
+                        F.md5(
+                            F.concat_ws(
+                                "|",
+                                *[
+                                    F.element_at(m, b * rows_per_band + r + 1)
+                                    for r in range(rows_per_band)
+                                ],
+                            )
+                        )
+                    ).alias("key"),
+                )
+                for b in range(num_hashes // rows_per_band)
+            ]
+        )
+
+    # let-binding trick: transform over a 1-element array evaluates the
+    # fused aggregate ONCE and hands it to the lambda as a variable --
+    # referencing it directly from every band entry would re-run the
+    # whole traversal per band
+    return F.element_at(F.transform(F.array(mins), entries), 1)
 
 
 def minhash_lsh_pairs(
@@ -303,10 +353,9 @@ def minhash_lsh_pairs(
     fixed fit/transform overhead per call and an unreproducible hash).
 
     Shingle array -> ``num_hashes`` md5 minhashes -> bands of
-    ``rows_per_band`` (band key = md5 of the concatenated band mins) ->
-    self-join per band generates candidates -> EXACT Jaccard on the
-    shingle arrays (array_intersect/array_union, JVM-side) filters to
-    >= threshold. With b=8 bands of r=2 the candidate-recall s-curve is
+    ``rows_per_band`` (``minhash_bands``) -> self-join per band
+    generates candidates -> EXACT Jaccard on the shingle arrays
+    (array_intersect/array_union, JVM-side) filters to >= threshold. With b=8 bands of r=2 the candidate-recall s-curve is
     1-(1-j^2)^8: j=0.5 -> 0.90, j=0.6 -> 0.97, j=0.8 -> 0.9998.
     Returned jaccard is exact (not the minhash estimate), so found
     pairs match ngram_jaccard_pairs exactly; only recall is approximate.
@@ -316,7 +365,6 @@ def minhash_lsh_pairs(
     real near-dup clusters, which any LSH must pay for; AQE skew-split
     handles residual imbalance. One shuffle for the signature agg, one
     for the band join, one narrow rejoin for the gram arrays."""
-    n_bands = num_hashes // rows_per_band
     # grams feed the signature branch AND both rerank join sides.
     # Null-text rows are dropped with a plain IsNotNull BEFORE the
     # shingle projection: the old filter(size(grams) > 0) was exactly
@@ -351,61 +399,9 @@ def minhash_lsh_pairs(
         ),
     )
     sh = persist_tracked(sh)
-    # ALL num_hashes minhashes in ONE traversal of the gram array: an
-    # aggregate whose accumulator is the running per-hash minimum (the
-    # '￿' sentinel byte-compares above every hex char, so the
-    # least-merge equals array_min over each per-hash transform for any
-    # non-empty gram array -- and grams is never empty after the
-    # IsNotNull filter). The old form ran num_hashes separate
-    # transform+array_min traversals per row; same md5 calls, ~16x the
-    # array-iteration and intermediate-allocation overhead. minhash_col
-    # stays as the exported per-hash form (dimension-sized callers).
-    fused_mins = F.aggregate(
-        F.col("grams"),
-        F.array_repeat(F.lit("￿"), num_hashes),
-        lambda acc, g: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.substring(F.md5(F.concat(F.lit(f"{i}:"), g)), 1, 16)
-                    for i in range(num_hashes)
-                ]
-            ),
-            lambda a, b: F.least(a, b),
-        ),
-    )
-
-    def _band_entries(mins: F.Column) -> F.Column:
-        return F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    # unhex: the oracle's hex band key md5 is bijective
-                    # with its 16 raw bytes, so joining on the binary
-                    # form keeps the exact candidate set at half the
-                    # shuffle key bytes
-                    F.unhex(
-                        F.md5(
-                            F.concat_ws(
-                                "|",
-                                *[
-                                    F.element_at(mins, b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        )
-                    ).alias("key"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-
-    # let-binding trick: transform over a 1-element array evaluates the
-    # fused aggregate ONCE and hands it to the lambda as a variable --
-    # referencing it directly from every band entry would re-run the
-    # whole traversal per band
-    band_entries = F.element_at(F.transform(F.array(fused_mins), _band_entries), 1)
-    banded = sh.select("doc_id", F.explode(band_entries).alias("bk")).select(
+    # shingles_col never yields an empty array, as minhash_bands needs
+    bands = minhash_bands(F.col("grams"), num_hashes, rows_per_band)
+    banded = sh.select("doc_id", F.explode(bands).alias("bk")).select(
         "doc_id", "bk.band", "bk.key"
     )
     # the band frame is BOTH self-join sides; persisting it (and

@@ -20,12 +20,13 @@ Scale design (the pregel-shaped part):
   for free.
 - Lineage is CUT (eager ``localCheckpoint``) on the edge/node frames
   at entry and on every iteration's rank frame -- the same discipline
-  cc.py uses. Persist alone is not enough: the logical plan of
-  iteration k still embeds the full upstream subtree (here: the whole
-  KG pipeline) once per join that references it, so analysis cost --
-  and driver heap for the plan trees -- grows linearly with
-  iterations and blows up when the input plan is itself large
-  (observed: OOM at 5 iterations over the composed build_kg plan).
+  cc.py uses, each released once nothing reads it. Persist alone is
+  not enough: the logical plan of iteration k still embeds the full
+  upstream subtree (here: the whole KG pipeline) once per join that
+  references it, so analysis cost -- and driver heap for the plan
+  trees -- grows linearly with iterations and blows up when the input
+  plan is itself large (observed: OOM at 5 iterations over the
+  composed build_kg plan).
 - Dangling nodes (no out-edges) redistribute their mass uniformly
   (the textbook formulation). That costs one driver-side scalar
   aggregate per iteration over the persisted |V|-sized rank frame --
@@ -44,6 +45,8 @@ sha keys.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from .cache import release_checkpoint
 
 __all__ = ["pagerank", "triangle_count"]
 
@@ -79,6 +82,7 @@ def pagerank(
     )
     n = nodes.count()
     if n == 0:
+        release_checkpoint(e, nodes)
         return spark.createDataFrame([], "node string, rank double")
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("_od"))
     # edges carry their source's out-degree and are partitioned on src
@@ -90,6 +94,7 @@ def pagerank(
     dangling_nodes = nodes.join(
         deg.withColumnRenamed("src", "node"), "node", "left_anti"
     ).localCheckpoint()
+    release_checkpoint(e)
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
     base = (1.0 - damping) / n
@@ -103,7 +108,7 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") / F.col("_od")).alias("_contrib"))
         )
-        ranks = (
+        nxt = (
             nodes.join(contrib, "node", "left")
             .select(
                 "node",
@@ -114,6 +119,9 @@ def pagerank(
             )
             .localCheckpoint()  # cut lineage: O(1)-deep plan per round
         )
+        release_checkpoint(ranks)
+        ranks = nxt
+    release_checkpoint(nodes, ee, dangling_nodes)
     return ranks
 
 

@@ -70,6 +70,10 @@ DEFAULT_CONF = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
+    # one codekg run generates ~137 distinct classes, a bench.py session
+    # ~283: at the default 100 entries every same-session re-run
+    # recompiled them (warm codekg re-run: 116 compilations -> 0)
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # local-mode sizing: this ONE JVM hosts the driver plus all N task
     # slots' execution memory plus every operator cache, so the old 8g
     # default left ~256 MB/slot at local[32] and GC-thrashed the

@@ -130,12 +130,18 @@ def test_cc_star_converges_on_deep_chain(spark, monkeypatch):
     edges = [(f"v{i:04d}", f"v{i+1:04d}") for i in range(200)]
     df = spark.createDataFrame(edges, ["src", "dst"])
     monkeypatch.setattr(cc, "SMALL_THRESHOLD", 0)
+    n0 = _persisted_rdds(spark)
     got, stats = _cc(df)
     assert got == _union_find(edges)
     assert stats["method"] == "star" and stats["rounds"] <= 12
+    # every superseded round checkpoint is released: at most the
+    # result's own stays persisted
+    assert _persisted_rdds(spark) - n0 <= 1
     monkeypatch.setattr(cc, "MAX_ITER", 1)
+    n0 = _persisted_rdds(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df)
+    assert _persisted_rdds(spark) <= n0
 
 
 def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
@@ -676,6 +682,11 @@ def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def _persisted_rdds(spark) -> int:
+    """RDDs the session holds persisted, local checkpoints included."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_pipeline_releases_what_it_persists(spark, rows, tmp_path, monkeypatch):
     """A run leaves the session's cache as it found it: a clean run
     (LSH on), a run aborted by the sha invariant, a refused
@@ -900,9 +911,16 @@ def test_lsh_recall_holds_across_alias_lengths(spark):
     recall (mutated -> canonical) at EVERY length. Single-char edit at
     length L gives char-3-gram jaccard ~ (L-3)/(L+3) > 0.5 for L >= 10,
     and 16 r=1 bands catch j >= 0.5 with P ~ 1-2^-16 -- so a miss here
-    means the machinery regressed, not the math."""
+    means the machinery regressed, not the math.
+
+    The whole map (canonical and score) must also equal the Python twin
+    ``_lsh_best_match``, including on planted ties: two aliases at equal
+    jaccard with different canonicals (the smaller canonical wins), and
+    one canonical reached through two aliases."""
     import random
     import string
+
+    from tools.make_goldens import _lsh_best_match
 
     rng = random.Random(5)
     dim_rows, probes = [], []
@@ -914,15 +932,25 @@ def test_lsh_recall_holds_across_alias_lengths(spark):
             pos = rng.randrange(2, length - 2)
             sub = rng.choice([c for c in string.ascii_lowercase if c != alias[pos]])
             probes.append((alias[:pos] + sub + alias[pos + 1 :], canonical, length))
+    ties = [
+        ("quuxlib1", "zeta"), ("quuxlib2", "alpha"), ("barmodx", "bar"), ("barmody", "bar")
+    ]
+    tie_probes = ["quuxlib3", "barmodz"]
+    dim_rows += ties
     dim = codekg.code_alias_dim(spark, dim_rows)
-    values = spark.createDataFrame([(v,) for v, _c, _l in probes], "value string")
+    values = spark.createDataFrame(
+        [(v,) for v in [v for v, _c, _l in probes] + tie_probes], "value string"
+    )
     got = {
-        r["value"]: r["lsh_canonical"]
+        r["value"]: (r["lsh_canonical"], r["lsh_score"])
         for r in codekg.lsh_alias_map(values, dim, threshold=0.5).collect()
     }
+    want = _lsh_best_match({v for v, _c, _l in probes} | set(tie_probes), dim_rows)
+    assert got == want
+    assert got["quuxlib3"] == ("alpha", 0.6) and got["barmodz"][0] == "bar"
     by_len: dict[int, list[bool]] = {}
     for v, c, length in probes:
-        by_len.setdefault(length, []).append(got.get(v) == c)
+        by_len.setdefault(length, []).append(got.get(v, (None,))[0] == c)
     for length, hits in sorted(by_len.items()):
         recall = sum(hits) / len(hits)
         assert recall >= 0.95, f"recall {recall:.2f} at alias length {length}"
@@ -964,7 +992,10 @@ def test_lsh_candidate_volume_linear_in_misses(spark):
         vg = spark.createDataFrame(
             [(v,) for v in probes[:m]], "value string"
         ).withColumn("grams", codekg.char_ngrams_col(F.col("value")))
-        n_cand = codekg._lsh_band_candidates(vg, dg).count()
+        # a candidate is a distinct (value, alias) pair: the band join
+        # emits a pair once per band the two agree on
+        cands = codekg._lsh_band_candidates(vg, dg)
+        n_cand = cands.select("value", "alias").distinct().count()
         per_miss[m] = n_cand / m
     # bounded per-miss fanout, and no super-linear growth across a 4x
     # miss-set scale-up (ratio of per-miss rates stays near 1)

@@ -44,7 +44,11 @@ def test_cycle_graph_stays_uniform(spark):
 def test_matches_reference_with_dangling_node(spark):
     # d is dangling (no out-edges); duplicate edge must collapse
     edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"), ("c", "d")]
+    n0 = spark.sparkContext._jsc.getPersistentRDDs().size()
     got = _run(spark, edges)
+    # the per-iteration checkpoints are released: at most the result's
+    # own stays persisted
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() - n0 <= 1
     want = _pr_ref(edges)
     assert set(got) == set(want)
     for v in got:
@@ -62,7 +66,9 @@ def test_star_hub_ranks_highest(spark):
 
 def test_empty_graph(spark):
     df = spark.createDataFrame([], "src string, dst string")
+    n0 = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert graph.pagerank(df).count() == 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= n0
 
 
 def _tri(spark, edges):

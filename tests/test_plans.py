@@ -89,7 +89,9 @@ def test_link_mentions_plan_has_no_pyspark_ml(spark):
     """VERDICT r2 #1 'done' criterion, tightened: extraction is one JVM
     regex projection and the LSH link is native md5 banding, so the
     extract -> link -> build_triples plans carry no Python evaluation
-    node at all (no pandas UDF, no pyspark.ml tokenizer/hash UDF)."""
+    node at all (no pandas UDF, no pyspark.ml tokenizer/hash UDF). The
+    fuzzy link is one band join and one aggregate: its plan holds no
+    Window (best match per value) and no cached relation."""
     from structured_data_entity_extraction_spark import codekg
     from structured_data_entity_extraction_spark.fixtures import repos_src_rows
     from structured_data_entity_extraction_spark.schemas import REPOS_SRC
@@ -105,6 +107,8 @@ def test_link_mentions_plan_has_no_pyspark_ml(spark):
     triples = codekg.build_triples(cands, codekg.canonicalize(cands, alias_dim))
     for stage, frame in (("extract", mentions), ("link", cands), ("triples", triples)):
         assert "EvalPython" not in _plan(frame), stage
+    p = _plan(cands)
+    assert "Window" not in p and "InMemoryRelation" not in p, p
 
 
 def test_pipeline_plans_have_no_python_rdd_scan(spark):

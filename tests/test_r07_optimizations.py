@@ -58,35 +58,39 @@ def test_shingles_zipwith_equals_old_form(spark, k):
     assert bad == 0
 
 
-def test_fused_minhash_equals_per_hash_minhash_col(spark):
-    """The fused single-traversal aggregate inside minhash_lsh_pairs
-    must produce exactly the per-hash minhash_col values (same md5
-    stream, sentinel strictly above every hex char)."""
+@pytest.mark.parametrize("rows_per_band", [1, 2])
+def test_minhash_bands_equal_hashlib_reference(spark, rows_per_band):
+    """The fused single-traversal band helper both LSH paths use equals
+    an independent hashlib computation: the i-th minhash is the least
+    md5(f"{i}:{g}")[:16] over the shingles, and a band's key is the raw
+    md5 of its minhashes joined by '|'."""
+    import hashlib
+
     num_hashes = 16
-    df = spark.createDataFrame(
-        [(i, t) for i, t in EDGE_TEXTS if t is not None], ["doc_id", "text"]
-    ).select("doc_id", shingles_col(F.col("text")).alias("grams"))
-    fused = F.aggregate(
-        F.col("grams"),
-        F.array_repeat(F.lit("￿"), num_hashes),
-        lambda acc, g: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.substring(F.md5(F.concat(F.lit(f"{i}:"), g)), 1, 16)
-                    for i in range(num_hashes)
-                ]
-            ),
-            lambda a, b: F.least(a, b),
-        ),
+
+    def ref(grams):
+        mins = [
+            min(hashlib.md5(f"{i}:{g}".encode()).hexdigest()[:16] for g in grams)
+            for i in range(num_hashes)
+        ]
+        r = rows_per_band
+        return [
+            (b, hashlib.md5("|".join(mins[b * r : b * r + r]).encode()).digest())
+            for b in range(num_hashes // r)
+        ]
+
+    grams = shingles_col(F.col("text"))
+    bands = dedup.minhash_bands(grams, num_hashes, rows_per_band)
+    texts = [(i, t) for i, t in EDGE_TEXTS if t is not None]
+    rows = (
+        spark.createDataFrame(texts, ["doc_id", "text"])
+        .select(grams.alias("grams"), bands.alias("bands"))
+        .collect()
     )
-    ref = F.array(*[dedup.minhash_col(F.col("grams"), i) for i in range(num_hashes)])
-    bad = (
-        df.select(fused.alias("f"), ref.alias("r"))
-        .filter(~F.col("f").eqNullSafe(F.col("r")))
-        .count()
-    )
-    assert bad == 0
+    assert len(rows) == len(texts)
+    for row in rows:
+        got = [(e["band"], bytes(e["key"])) for e in row["bands"]]
+        assert got == ref(row["grams"]), row["grams"]
 
 
 def test_ngram_packed_and_struct_pair_paths_agree(spark):
