@@ -799,19 +799,26 @@ def q_ivf_topk(spark, sf_dir):
     )
 
 
-def _ivf_codebook() -> list[list[float]]:
-    """The pinned trained coarse quantizer (production IVF path):
-    16x64 centroids from tools/train_codebook.py's deterministic
-    spherical k-means (256 lowest-id sf0.01 embeddings, 10 Lloyd
-    iterations). Regenerate: python tools/train_codebook.py
-    <embeddings.parquet> structured_data_entity_extraction_spark/data/ivf_codebook.json 16 10 256"""
+def _codebook(name: str):
+    """A pinned quantizer artifact from structured_data_entity_extraction_spark/data/.
+
+    - ``ivf_codebook``: the trained coarse quantizer (production IVF
+      path), 16x64 centroids from tools/train_codebook.py's
+      deterministic spherical k-means (256 lowest-id sf0.01 embeddings,
+      10 Lloyd iterations). Regenerate: python tools/train_codebook.py
+      <embeddings.parquet> structured_data_entity_extraction_spark/data/ivf_codebook.json 16 10 256
+    - ``ivf_pq_codebook``: the IVF-PQ artifact (coarse 16x64 + pq
+      8x16x8) from tools/train_codebook.py --pq (256 lowest-id sf0.01
+      embeddings, 10 iterations). Regenerate: python tools/train_codebook.py --pq
+      <embeddings.parquet> structured_data_entity_extraction_spark/data/ivf_pq_codebook.json
+      16 8 16 10 256"""
     import json as _json
 
     p = os.path.join(
         os.path.dirname(os.path.abspath(__file__)),
         "structured_data_entity_extraction_spark",
         "data",
-        "ivf_codebook.json",
+        f"{name}.json",
     )
     with open(p, encoding="utf-8") as fh:
         return _json.load(fh)
@@ -819,34 +826,16 @@ def _ivf_codebook() -> list[list[float]]:
 
 def q_ivf_codebook_topk(spark, sf_dir):
     """IVF with the TRAINED codebook -- the path a real deployment
-    runs (offline k-means, centroids broadcast as literals); the
-    codebook-less default quantizer is only the ad-hoc fallback."""
+    runs (offline k-means, centroids broadcast as one codebook row);
+    the codebook-less default quantizer is only the ad-hoc fallback."""
     emb = _emb(spark, sf_dir)
     return (
         similarity.ivf_topk(
-            emb, emb.filter(F.col("vec_id") < 3), k=10, codebook=_ivf_codebook()
+            emb, emb.filter(F.col("vec_id") < 3), k=10, codebook=_codebook("ivf_codebook")
         )
         .select("query_id", "rank", "vec_id", F.round("cos", 4).alias("cos_r"))
         .orderBy("query_id", "rank")
     )
-
-
-def _ivf_pq_codebook() -> dict:
-    """The pinned IVF-PQ artifact (coarse 16x64 + pq 8x16x8) from
-    tools/train_codebook.py --pq (256 lowest-id sf0.01 embeddings,
-    10 iterations). Regenerate: python tools/train_codebook.py --pq
-    <embeddings.parquet> structured_data_entity_extraction_spark/data/ivf_pq_codebook.json
-    16 8 16 10 256"""
-    import json as _json
-
-    p = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)),
-        "structured_data_entity_extraction_spark",
-        "data",
-        "ivf_pq_codebook.json",
-    )
-    with open(p, encoding="utf-8") as fh:
-        return _json.load(fh)
 
 
 def q_ivf_pq_topk(spark, sf_dir):
@@ -855,7 +844,7 @@ def q_ivf_pq_topk(spark, sf_dir):
     per query, exact-cosine rerank. Oracle: the full encode/probe/ADC/
     rerank program in pure SQL with both codebooks as VALUES literals."""
     emb = _emb(spark, sf_dir)
-    cb = _ivf_pq_codebook()
+    cb = _codebook("ivf_pq_codebook")
     return (
         similarity.ivf_pq_topk(
             emb, emb.filter(F.col("vec_id") < 3), cb["coarse"], cb["pq"], k=10
@@ -1443,9 +1432,9 @@ def _ann_ivf_codebook_sql(k: int = 10, n_probe: int = 4) -> str:
     PRODUCTION quantizer: the pinned trained codebook
     (data/ivf_codebook.json, from tools/train_codebook.py's
     deterministic spherical k-means) embedded as literal VALUES on the
-    oracle side, exactly as the engine embeds it as literal arrays.
+    oracle side; the engine holds the same values in a broadcast row.
     Same quantize/probe/rerank algorithm as the default-path oracle."""
-    cb = _ivf_codebook()
+    cb = _codebook("ivf_codebook")
     cents = ", ".join(
         f"({i}, [{', '.join(repr(float(x)) for x in cv)}]::DOUBLE[])"
         for i, cv in enumerate(cb)
@@ -1613,7 +1602,7 @@ def _ann_ivf_pq_sql(k: int = 10, n_probe: int = 4, rerank: int = 32) -> str:
     reconstruction) rounded to 6 dp before the rerank cutoff (the
     shared determinism contract -- see the operator docstring), exact
     rerank of the top ``rerank``. Both codebooks as VALUES literals."""
-    cb = _ivf_pq_codebook()
+    cb = _codebook("ivf_pq_codebook")
     m, dsub = len(cb["pq"]), len(cb["pq"][0][0])
     cents = ", ".join(
         f"({i}, [{', '.join(repr(float(x)) for x in cv)}]::DOUBLE[])"

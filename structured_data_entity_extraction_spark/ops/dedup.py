@@ -684,7 +684,7 @@ def embedding_cosine_pairs(
     """(id_a, id_b, cos) pairs with cosine >= threshold. exact=True does
     the O(n^2) self-join (small-n oracle); default blocks by sign-LSH
     bucket (all n_planes sign bits equal) then reranks exactly."""
-    from .similarity import cosine_expr, signature_col
+    from .similarity import cosine_expr, with_signature
 
     # a single-file embeddings table scans as 1-2 splits, serializing
     # both the sign-LSH signature pass and the exact-mode self-join's
@@ -698,7 +698,7 @@ def embedding_cosine_pairs(
         a, b = v.alias("a"), v.alias("b")
         joined = a.join(b, F.col("a.vid") < F.col("b.vid"))
     else:
-        sig = v.withColumn("bucket", signature_col(F.col("vec"), n_planes, seed=42))
+        sig = with_signature(v, "vec", n_planes, "bucket")
         a, b = sig.alias("a"), sig.alias("b")
         joined = a.join(
             b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vid") < F.col("b.vid"))

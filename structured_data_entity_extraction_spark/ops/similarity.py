@@ -8,6 +8,10 @@
   (seeded, deterministic) shrink the candidate set before exact rerank.
   At 100 TB the bucket join replaces the full cross product; multiprobe
   (hamming-1 neighbor buckets) keeps recall high.
+
+Centroids, PQ sub-codebooks and hyperplanes are data: one
+``codebook_frame`` row, cross-joined by broadcast and read by
+higher-order functions, so plan size does not grow with the codebook.
 """
 
 from __future__ import annotations
@@ -15,16 +19,32 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import local_frame
+
+_VECS = T.ArrayType(T.ArrayType(T.DoubleType()))
+_BOOK = T.StructType(
+    [
+        T.StructField("cents", _VECS),
+        T.StructField("pq", T.ArrayType(_VECS)),
+        T.StructField("pq_norms", _VECS),
+        T.StructField("planes", _VECS),
+    ]
+)
+
+
+def _dot(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
 
 
 def cosine_expr(a: Column, b: Column) -> Column:
     """Cosine similarity of two array<double> columns, JVM-side."""
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return F.when((na > 0) & (nb > 0), dot / (na * nb)).otherwise(F.lit(0.0))
+    return F.when((na > 0) & (nb > 0), _dot(a, b) / (na * nb)).otherwise(F.lit(0.0))
 
 
 def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -32,18 +52,63 @@ def _planes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.randn(n_planes, dim).tolist()
 
 
-def signature_col(vec: Column, n_planes: int, seed: int = 42, dim: int = 64) -> Column:
-    """Sign-LSH bucket id: bit i = sign(vec . plane_i). Hyperplanes are
-    literal arrays (seeded) -> constant-folded by Catalyst."""
-    planes = _planes(dim, n_planes, seed)
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        dot = F.aggregate(
-            F.zip_with(vec, plane, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-        sig = sig + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
+def codebook_frame(
+    spark, cents: list | None = None, pq: list | None = None, planes: list | None = None
+) -> DataFrame:
+    """One row holding the codebooks as data, for a broadcast cross
+    join: ``cents`` (coarse centroids), ``pq`` (PQ sub-codebooks, m x
+    ksub x dsub) with ``pq_norms`` (each codeword's squared norm,
+    summed in Python), ``planes`` (sign-LSH hyperplanes); null when
+    not given."""
+    norms = pq and [[float(sum(x * x for x in cv)) for cv in sub] for sub in pq]
+    return local_frame(spark, [(cents, pq, norms, planes)], _BOOK)
+
+
+def with_signature(df: DataFrame, vec_col: str, n_planes: int, out: str) -> DataFrame:
+    """``df`` plus ``out``, the sign-LSH bucket id of ``vec_col``: bit i
+    = sign(vec . plane_i) over the seeded ``_planes(64, n_planes, 42)``,
+    read from a broadcast ``codebook_frame`` row."""
+    book = codebook_frame(df.sparkSession, planes=_planes(64, n_planes, 42))
+    bits = F.transform(
+        F.col("planes"),
+        lambda p, i: F.when(
+            _dot(F.col(vec_col), p) >= 0, F.call_function("shiftleft", F.lit(1).cast("long"), i)
+        ).otherwise(F.lit(0).cast("long")),
+    )
+    sig = F.aggregate(bits, F.lit(0).cast("long"), lambda acc, b: acc + b)
+    return df.crossJoin(F.broadcast(book)).select(*df.columns, sig.alias(out))
+
+
+def best_cells(vec: Column, n: int) -> Column:
+    """Array of the ``n`` indices into the cross-joined ``cents`` with
+    the highest cosine to ``vec`` (cosine desc, index asc)."""
+    scored = F.transform(
+        F.col("cents"),
+        lambda cv, i: F.struct((-cosine_expr(vec, cv)).alias("neg"), i.alias("cell")),
+    )
+    return F.slice(F.array_sort(scored), 1, n).getField("cell")
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, ids: str, vecs: str) -> DataFrame:
+    return df.select(F.col(id_col).alias(ids), F.col(vec_col).cast("array<double>").alias(vecs))
+
+
+def _top(scored: DataFrame, k: int, by: str = "cos") -> DataFrame:
+    """The ``k`` best rows per query_id by ``by`` desc (ties -> vec_id
+    asc), numbered in ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(by), F.asc("vec_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _probes(
+    queries: DataFrame, book: DataFrame, n_probe: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """(query_id, qvec, cell) for each of a query's ``n_probe`` best cells."""
+    return (
+        _vectors(queries, id_col, vec_col, "query_id", "qvec")
+        .crossJoin(book)
+        .select("query_id", "qvec", F.explode(best_cells(F.col("qvec"), n_probe)).alias("cell"))
+    )
 
 
 def brute_force_topk(
@@ -60,23 +125,14 @@ def brute_force_topk(
 
     # single-split embeddings scan would run all |corpus| x |queries|
     # cosines on one core (the scoring is the whole query)
-    c = _ensure_parallelism(corpus).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("cvec")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qvec")
-    )
+    c = _vectors(_ensure_parallelism(corpus), id_col, vec_col, "vec_id", "cvec")
+    q = _vectors(queries, id_col, vec_col, "query_id", "qvec")
     scored = c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         "vec_id",
         cosine_expr(F.col("qvec"), F.col("cvec")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top(scored, k).select("query_id", "vec_id", "cos", "rank")
 
 
 def ivf_topk(
@@ -96,53 +152,36 @@ def ivf_topk(
 
     ``codebook``: a precomputed centroid table (the production path --
     train offline with tools/train_codebook.py's deterministic k-means
-    on a sample, then pass the centroids here; they are embedded as
-    literal arrays, i.e. broadcast). Without it, the centroids default
-    to the ``n_centroids`` lowest-id corpus rows -- deterministic but
+    on a sample, then pass the centroids here; they travel as the one
+    row of a broadcast ``codebook_frame``). Without it, the centroids
+    default to the ``n_centroids`` lowest-id corpus rows, gathered into
+    that row inside the plan (no driver collect) -- deterministic but
     unrepresentative on clustered data (an inline distributed k-means
     would be partition-order dependent, i.e. nondeterministic).
-    Assignment is a JVM-side argmax over the centroid cosine
-    expressions -- a narrow map over the corpus, no shuffle; the probe
-    join keys on centroid id, so per-query work is
-    |corpus| * n_probe / n_centroids."""
-    if codebook is not None:
-        cents = [(i, [float(x) for x in c]) for i, c in enumerate(codebook)]
-        n_probe = min(n_probe, len(cents))
-    else:
-        rows = (
-            corpus.select(
-                F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
-            )
-            .orderBy("vid")
-            .limit(n_centroids)
-            .collect()
-        )
-        cents = [(i, list(r["v"])) for i, r in enumerate(rows)]
-
-    def best_cells(vec: Column, n: int) -> Column:
-        """Array of the n centroid ids with highest cosine (desc, id asc)."""
-        scored = F.array(
-            *[
-                F.struct(
-                    (-cosine_expr(vec, F.array(*[F.lit(float(x)) for x in cv]))).alias("neg"),
-                    F.lit(ci).alias("cell"),
-                )
-                for ci, cv in cents
-            ]
-        )
-        return F.slice(F.array_sort(scored), 1, n).getField("cell")
-
+    Assignment is a JVM-side argmax over the centroid cosines -- a
+    narrow map over the corpus, no shuffle; the probe join keys on
+    centroid id, so per-query work is |corpus| * n_probe / n_centroids."""
     from .dedup import _ensure_parallelism
 
+    if codebook is not None:
+        book = codebook_frame(corpus.sparkSession, cents=codebook)
+    else:
+        book = (
+            _vectors(corpus, id_col, vec_col, "vid", "v")
+            .orderBy("vid")
+            .limit(n_centroids)
+            .agg(F.sort_array(F.collect_list(F.struct("vid", "v"))).getField("v").alias("cents"))
+        )
+    book = F.broadcast(book)
     # spread the scan before the per-row coarse-cell assignment (the
-    # literal-centroid l2 argmin is the CPU-heavy part; one split
-    # would serialize it)
-    c = _ensure_parallelism(corpus).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).cast("array<double>").alias("cvec")
-    ).withColumn("cell", best_cells(F.col("cvec"), 1)[0])
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qvec")
-    ).withColumn("cell", F.explode(best_cells(F.col("qvec"), n_probe)))
+    # centroid cosine argmax is the CPU-heavy part; one split would
+    # serialize it)
+    c = (
+        _vectors(_ensure_parallelism(corpus), id_col, vec_col, "vec_id", "cvec")
+        .crossJoin(book)
+        .select("vec_id", "cvec", best_cells(F.col("cvec"), 1)[0].alias("cell"))
+    )
+    q = _probes(queries, book, n_probe, id_col, vec_col)
     # no distinct needed: each corpus vector sits in exactly one cell
     # and a query's probe cells are distinct, so (query_id, vec_id)
     # pairs are already unique -- a distinct here would be a pure
@@ -151,12 +190,7 @@ def ivf_topk(
     scored = cand.select(
         "query_id", "vec_id", cosine_expr(F.col("qvec"), F.col("cvec")).alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top(scored, k).select("query_id", "vec_id", "cos", "rank")
 
 
 def ivf_pq_topk(
@@ -181,9 +215,9 @@ def ivf_pq_topk(
     exact-cosine rerank.
 
     Both codebooks are pinned offline artifacts
-    (tools/train_codebook.py --pq -> data/ivf_pq_codebook.json),
-    embedded as literal arrays so Catalyst constant-folds them --
-    encoding, probing, and ADC are all JVM expressions, zero Python.
+    (tools/train_codebook.py --pq -> data/ivf_pq_codebook.json) held
+    in one broadcast ``codebook_frame`` row; encoding, probing, and
+    ADC are higher-order JVM expressions over its columns, zero Python.
     No residual encoding (FAISS by_residual=false flavor): codes
     quantize the raw vector, which keeps the ADC score a pure
     query-independent table lookup AND keeps the whole operator
@@ -195,109 +229,61 @@ def ivf_pq_topk(
     cutoff (ties -> vec_id asc) so bit-level float fold differences
     between engines cannot flip the cutoff set; final ranking by exact
     cosine (ties -> vec_id asc)."""
-    m = len(pq)
-    ksub = len(pq[0])
-    dsub = len(pq[0][0])
-    cents = [(i, [float(x) for x in c]) for i, c in enumerate(coarse)]
-    n_probe = min(n_probe, len(cents))
+    from .dedup import _ensure_parallelism
 
-    def best_cells(vec: Column, n: int) -> Column:
-        scored = F.array(
-            *[
-                F.struct(
-                    (-cosine_expr(vec, F.array(*[F.lit(float(x)) for x in cv]))).alias(
-                        "neg"
-                    ),
-                    F.lit(ci).alias("cell"),
-                )
-                for ci, cv in cents
-            ]
-        )
-        return F.slice(F.array_sort(scored), 1, n).getField("cell")
+    m, dsub = len(pq), len(pq[0][0])
+    book = F.broadcast(codebook_frame(corpus.sparkSession, cents=coarse, pq=pq))
 
-    def sub(vec: Column, mi: int) -> Column:
+    def sub(vec: Column, mi: Column) -> Column:
         return F.slice(vec, mi * dsub + 1, dsub)
 
-    def l2sq(a: Column, cv: list[float]) -> Column:
-        lit = F.array(*[F.lit(float(x)) for x in cv])
+    def codeword(table: str, mi: Column) -> Column:
+        return F.element_at(F.element_at(F.col(table), mi + 1), F.element_at("codes", mi + 1) + 1)
+
+    def over_subspaces(term) -> Column:
+        """0.0 + term(0) + ... + term(m - 1), left to right."""
         return F.aggregate(
-            F.zip_with(a, lit, lambda x, y: (x - y) * (x - y)),
+            F.sequence(F.lit(0), F.lit(m - 1)), F.lit(0.0), lambda acc, mi: acc + term(mi)
+        )
+
+    def l2sq(a: Column, b: Column) -> Column:
+        return F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
 
-    def encode(vec: Column) -> Column:
-        """array<int> of m PQ codes: per subspace, argmin L2^2 (ties ->
-        lowest code, via array_sort on (dist, code) structs)."""
-        parts = []
-        for mi in range(m):
-            scored = F.array(
-                *[
-                    F.struct(
-                        l2sq(sub(vec, mi), pq[mi][ci]).alias("d"),
-                        F.lit(ci).alias("code"),
-                    )
-                    for ci in range(ksub)
-                ]
+    # array<int> of m PQ codes: per subspace, argmin L2^2 (ties ->
+    # lowest code, via array_sort on (dist, code) structs)
+    encode = F.transform(
+        F.col("pq"),
+        lambda words, mi: F.array_sort(
+            F.transform(
+                words,
+                lambda cv, ci: F.struct(
+                    l2sq(sub(F.col("cvec"), mi), cv).alias("d"), ci.alias("code")
+                ),
             )
-            parts.append(F.array_sort(scored)[0]["code"])
-        return F.array(*parts)
-
-    # per-subspace centroid tables as literal array-of-arrays (indexed
-    # by code via element_at) + precomputed squared norms for |x_hat|
-    pq_lits = [
-        F.array(*[F.array(*[F.lit(float(x)) for x in cv]) for cv in pq[mi]])
-        for mi in range(m)
-    ]
-    norm_lits = [
-        F.array(*[F.lit(float(sum(x * x for x in cv))) for cv in pq[mi]])
-        for mi in range(m)
-    ]
-
-    from .dedup import _ensure_parallelism
-
+        )[0]["code"],
+    )
     # the embeddings table scans as a single split, which would run the
     # CPU-heavy encode/ADC projection below on one core (measured: a
     # 2.5 s one-task stage at sf0.1); round-robin spread first
-    c = _ensure_parallelism(corpus).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    )
+    c = _vectors(_ensure_parallelism(corpus), id_col, vec_col, "vec_id", "cvec")
     # the inverted list: (cell, vec_id, codes) -- this is ALL the probe
     # join ever touches; raw vectors stay in c and are fetched only for
     # the reranked few
-    c_codes = c.select(
-        "vec_id",
-        best_cells(F.col("cvec"), 1)[0].alias("cell"),
-        encode(F.col("cvec")).alias("codes"),
+    c_codes = c.crossJoin(book).select(
+        "vec_id", best_cells(F.col("cvec"), 1)[0].alias("cell"), encode.alias("codes")
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    ).withColumn("cell", F.explode(best_cells(F.col("qvec"), n_probe)))
-
-    cand = c_codes.join(F.broadcast(q), "cell").filter(
-        F.col("vec_id") != F.col("query_id")
+    q = _probes(queries, book, n_probe, id_col, vec_col)
+    cand = (
+        c_codes.join(F.broadcast(q), "cell")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .crossJoin(book)
     )
-    code_at = lambda mi: F.element_at(F.col("codes"), mi + 1)
-    adc_dot = sum(
-        (
-            F.aggregate(
-                F.zip_with(
-                    sub(F.col("qvec"), mi),
-                    F.element_at(pq_lits[mi], code_at(mi) + 1),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for mi in range(m)
-        ),
-        F.lit(0.0),
-    )
-    xhat_norm = F.sqrt(
-        sum((F.element_at(norm_lits[mi], code_at(mi) + 1) for mi in range(m)), F.lit(0.0))
-    )
+    adc_dot = over_subspaces(lambda mi: _dot(sub(F.col("qvec"), mi), codeword("pq", mi)))
+    xhat_norm = F.sqrt(over_subspaces(lambda mi: codeword("pq_norms", mi)))
     qnorm = F.sqrt(
         F.aggregate(F.col("qvec"), F.lit(0.0), lambda acc, x: acc + x * x)
     )
@@ -312,24 +298,14 @@ def ivf_pq_topk(
             6,
         ).alias("adc"),
     )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("vec_id"))
-    shortlist = (
-        scored.withColumn("arank", F.row_number().over(w_adc))
-        .filter(F.col("arank") <= rerank)
-        .select("query_id", "vec_id", "qvec")
-    )
+    shortlist = _top(scored, rerank, by="adc").select("query_id", "vec_id", "qvec")
     # exact rerank: only |queries| * rerank rows fetch a raw vector
     exact = F.broadcast(shortlist).join(c, "vec_id").select(
         "query_id",
         "vec_id",
         cosine_expr(F.col("qvec"), F.col("cvec")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top(exact, k).select("query_id", "vec_id", "cos", "rank")
 
 
 def lsh_topk(
@@ -345,15 +321,15 @@ def lsh_topk(
     hamming-1 neighbor bucket when multiprobe), exact cosine rerank."""
     from .dedup import _ensure_parallelism
 
-    corpus = _ensure_parallelism(corpus)
-    c = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
-    ).withColumn("cbucket", signature_col(F.col("cvec"), n_planes))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
-    ).withColumn("qbucket", signature_col(F.col("qvec"), n_planes))
+    c = with_signature(
+        _vectors(_ensure_parallelism(corpus), id_col, vec_col, "vec_id", "cvec"),
+        "cvec",
+        n_planes,
+        "cbucket",
+    )
+    q = with_signature(
+        _vectors(queries, id_col, vec_col, "query_id", "qvec"), "qvec", n_planes, "qbucket"
+    )
     if multiprobe:
         probes = F.array(
             F.col("qbucket"),
@@ -375,9 +351,4 @@ def lsh_topk(
         "vec_id",
         cosine_expr(F.col("qvec"), F.col("cvec")).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cos", "rank")
-    )
+    return _top(cand, k).select("query_id", "vec_id", "cos", "rank")

@@ -994,6 +994,29 @@ def test_minhash_pairs_subset_of_exact_with_equal_jaccard(spark, docs_df):
         assert v == exact[k], (k, v, exact[k])
 
 
+def test_ann_queries_match_oracles_sf01(spark):
+    """The four ANN registry queries equal their DuckDB oracle twins at
+    sf0.01, compared as tools/check_oracles.py compares them (its
+    ``normalize``)."""
+    import os
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from tools.check_oracles import normalize
+    from tools.make_goldens import SF001
+
+    if not os.path.exists(f"{SF001}/embeddings.parquet"):
+        pytest.skip("sf0.01 testdata not present")
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{SF001}/embeddings.parquet'")
+    qs, oracles = entry.queries(), entry.oracle_sql()
+    for name in ("ann_lsh_topk", "ann_ivf_topk", "ann_ivf_codebook_topk", "ann_ivf_pq_topk"):
+        got = normalize(qs[name](spark, SF001).toPandas())
+        want = normalize(con.sql(oracles[name]).df())
+        assert len(got) and got.equals(want), (name, got, want)
+
+
 def test_driver_contract_key_parity():
     """Every queries() entry has an oracle_sql() twin and vice versa --
     the driver's correctness gate covers the full registered surface

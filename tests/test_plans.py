@@ -282,3 +282,16 @@ def test_percentile_contract_plan_is_single_aggregate(spark):
     p = _plan(stats.percentile_contract_check(df, "event_type", "value"))
     assert "Join" not in p and "Window" not in p
     assert p.count("Exchange") <= 2  # partial agg + final agg exchange
+
+
+def test_ann_plans_hold_codebooks_as_data(spark):
+    """Centroids, PQ sub-codebooks and sign-LSH hyperplanes ride in one
+    broadcast codebook row, never as literal expression trees: each ANN
+    query's optimized plan stays small whatever the codebook size
+    (inlined as literals they read 22-361 KB)."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    for name in ("ann_lsh_topk", "ann_ivf_topk", "ann_ivf_codebook_topk", "ann_ivf_pq_topk"):
+        plan = qs[name](spark, SF)._jdf.queryExecution().optimizedPlan().toString()
+        assert len(plan) < 16 * 1024, (name, len(plan))

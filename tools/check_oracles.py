@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -45,7 +46,7 @@ def main():
 
     from structured_data_entity_extraction_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
@@ -73,14 +74,18 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL  {name}: spark error {str(e)[:200]}")
+            print(f"FAIL  {name} [spark {time.perf_counter() - t0:.1f}s]: spark error {str(e)[:200]}")
             continue
+        # Spark seconds (plan build + execution), so a query that
+        # overruns the oracle window shows in the log
+        secs = f"[spark {time.perf_counter() - t0:.1f}s]"
         if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows (rows-only check)")
+            print(f"rows  {name} {secs}: {len(sdf)} rows (rows-only check)")
             if len(sdf) == 0 and name != "exact_dup_groups":
                 failures.append((name, "0 rows"))
             continue
@@ -88,27 +93,27 @@ def main():
             ddf = con.sql(oracles[name]).df()
         except Exception as e:
             failures.append((name, f"DUCKDB ERROR: {e}"))
-            print(f"FAIL  {name}: duckdb error {str(e)[:200]}")
+            print(f"FAIL  {name} {secs}: duckdb error {str(e)[:200]}")
             continue
         a, b = normalize(sdf), normalize(ddf)
         if list(a.columns) != list(b.columns):
             failures.append((name, f"columns {list(a.columns)} vs {list(b.columns)}"))
-            print(f"FAIL  {name}: column mismatch {list(a.columns)} vs {list(b.columns)}")
+            print(f"FAIL  {name} {secs}: column mismatch {list(a.columns)} vs {list(b.columns)}")
             continue
         if len(a) != len(b):
             failures.append((name, f"rows {len(a)} vs {len(b)}"))
-            print(f"FAIL  {name}: row count {len(a)} vs {len(b)}")
+            print(f"FAIL  {name} {secs}: row count {len(a)} vs {len(b)}")
             continue
         if not a.equals(b):
             diff = (a != b)
             ndiff = int(diff.any(axis=1).sum())
             failures.append((name, f"{ndiff} differing rows"))
             idx = diff.any(axis=1)
-            print(f"FAIL  {name}: {ndiff}/{len(a)} differing rows")
+            print(f"FAIL  {name} {secs}: {ndiff}/{len(a)} differing rows")
             print("  spark:", a[idx].head(3).to_dict("records"))
             print("  duck :", b[idx].head(3).to_dict("records"))
             continue
-        print(f"OK    {name}: {len(a)} rows")
+        print(f"OK    {name} {secs}: {len(a)} rows")
     print()
     if failures:
         print(f"{len(failures)} FAILURES:", [f[0] for f in failures])
