@@ -1395,9 +1395,11 @@ def _codekg_triples_sql() -> str:
     """
 
 
-def _ivf_body_sql(k: int, n_probe: int) -> str:
-    """The quantize/probe/rerank tail shared by both IVF oracles --
-    expects preceding CTEs ``emb(vec_id, v)`` and ``cents(cell, cv)``."""
+def _ivf_cells_sql(n_probe: int) -> str:
+    """The quantize and probe CTEs of every IVF oracle: ``corpus_cell``
+    (each corpus vector's argmax-cosine cell, ties: cell asc) and
+    ``qcells`` (each query's ``n_probe`` best cells). Expects preceding
+    CTEs ``emb(vec_id, v)`` and ``cents(cell, cv)``."""
     return f"""
         corpus_cell AS (
           SELECT vec_id, v, cell FROM (
@@ -1415,6 +1417,14 @@ def _ivf_body_sql(k: int, n_probe: int) -> str:
             FROM emb e CROSS JOIN cents c WHERE e.vec_id < 3
           ) WHERE rn <= {n_probe}
         ),
+    """
+
+
+def _ivf_body_sql(k: int, n_probe: int) -> str:
+    """The quantize/probe/exact-rerank tail of both full-vector IVF
+    oracles (``_ivf_cells_sql`` plus a (cos desc, vec_id asc) rerank of
+    the probed cells)."""
+    return _ivf_cells_sql(n_probe) + f"""
         ranked AS (
           SELECT query_id, vec_id, list_cosine_similarity(qv, v) AS cos,
                  row_number() OVER (PARTITION BY query_id
@@ -1613,26 +1623,14 @@ def _ann_ivf_pq_sql(k: int = 10, n_probe: int = 4, rerank: int = 32) -> str:
         for mi, sub in enumerate(cb["pq"])
         for ci, cv in enumerate(sub)
     )
-    return f"""
+    return (
+        f"""
         WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         cents(cell, cv) AS (VALUES {cents}),
         pqc(m, code, cv) AS (VALUES {pqc}),
-        corpus_cell AS (
-          SELECT vec_id, v, cell FROM (
-            SELECT e.vec_id, e.v, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell ASC) AS rn
-            FROM emb e CROSS JOIN cents c
-          ) WHERE rn = 1
-        ),
-        qcells AS (
-          SELECT vec_id AS query_id, v AS qv, cell FROM (
-            SELECT e.vec_id, e.v, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell ASC) AS rn
-            FROM emb e CROSS JOIN cents c WHERE e.vec_id < 3
-          ) WHERE rn <= {n_probe}
-        ),
+        """
+        + _ivf_cells_sql(n_probe)
+        + f"""
         enc AS (
           SELECT cc.vec_id, p.m, p.code,
                  list_transform(
@@ -1685,6 +1683,7 @@ def _ann_ivf_pq_sql(k: int = 10, n_probe: int = 4, rerank: int = 32) -> str:
         SELECT query_id, rank, vec_id, round(cos, 4) AS cos_r
         FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
     """
+    )
 
 
 def _ann_ivf_sql(k: int = 10, n_centroids: int = 16, n_probe: int = 4) -> str:
@@ -1694,38 +1693,16 @@ def _ann_ivf_sql(k: int = 10, n_centroids: int = 16, n_probe: int = 4) -> str:
     asc), queries probe their n_probe best cells, exact-cosine rerank
     with (cos desc, vec_id asc) ranking. No constants, no golden --
     everything derives from the shared embeddings table."""
-    return f"""
+    return (
+        f"""
         WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         cents AS (
           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, v AS cv
           FROM emb ORDER BY vec_id LIMIT {n_centroids}
         ),
-        corpus_cell AS (
-          SELECT vec_id, v, cell FROM (
-            SELECT e.vec_id, e.v, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell ASC) AS rn
-            FROM emb e CROSS JOIN cents c
-          ) WHERE rn = 1
-        ),
-        qcells AS (
-          SELECT vec_id AS query_id, v AS qv, cell FROM (
-            SELECT e.vec_id, e.v, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                                      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.cell ASC) AS rn
-            FROM emb e CROSS JOIN cents c WHERE e.vec_id < 3
-          ) WHERE rn <= {n_probe}
-        ),
-        ranked AS (
-          SELECT query_id, vec_id, list_cosine_similarity(qv, v) AS cos,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY list_cosine_similarity(qv, v) DESC, vec_id ASC) AS rank
-          FROM corpus_cell cc JOIN qcells qc USING (cell)
-          WHERE cc.vec_id != qc.query_id
-        )
-        SELECT query_id, rank, vec_id, round(cos, 4) AS cos_r
-        FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
-    """
+        """
+        + _ivf_body_sql(k, n_probe)
+    )
 
 
 def _ann_lsh_sql(k: int = 10, n_planes: int = 6) -> str:

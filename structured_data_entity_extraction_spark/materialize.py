@@ -213,12 +213,13 @@ class StageStore:
     # ------------------------------------------- input-identity sidecar
     #
     # The warehouse's exact input identity SET: distinct
-    # (doc_id, content_sha) pairs of every document ever ingested
-    # (full run writes it, appends extend it). The append-only overlap
-    # guard joins against THIS, not against extracted mentions -- a
-    # zero-mention doc (empty/comment-only content) has no mentions row
-    # but is still part of the input identity, and re-appending it must
-    # be refused or the additive digest double-counts.
+    # (doc_id, content_sha) pairs of every document ever ingested (the
+    # bootstrap writes it, appends extend it, an append refuses a
+    # warehouse without it). The append-only overlap guard joins
+    # against THIS, not against extracted mentions -- a zero-mention
+    # doc (empty/comment-only content) has no mentions row but is still
+    # part of the input identity, and re-appending it must be refused
+    # or the additive digest double-counts.
 
     def input_pairs_dir(self) -> str:
         return os.path.join(self.root, "_input_pairs")
@@ -237,7 +238,10 @@ class StageStore:
         )
 
     def read_input_pairs(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.input_pairs_dir())
+        # the fixed schema spares the read a footer-sampling job
+        return spark.read.schema("doc_id string, content_sha string").parquet(
+            self.input_pairs_dir()
+        )
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         if self.iceberg_catalog:

@@ -54,6 +54,8 @@ LAYOUT_TARGET_BYTES = 16 << 20
 # warehouse whose manifests record none (written before layouts were
 # derived)
 LEGACY_LAYOUT = {"bucket_count": 64, "write_salt": 8}
+# the hive partitioning of the mentions, candidates and triples stages
+PARTITION_BY = ["repo_bucket", "lang"]
 
 
 def derive_layout(content_bytes: int, bucket_count: int | None = None) -> dict:
@@ -162,6 +164,80 @@ class StageCommits:
             )
 
 
+def _bootstrap(
+    spark: SparkSession,
+    store: StageStore,
+    repos_src: DataFrame,
+    alias_dim: DataFrame,
+    use_lsh: bool,
+) -> tuple[StageCommits, DataFrame]:
+    """Build or resume mentions and candidates from ``repos_src`` and
+    write the warehouse's input-identity sidecar: the first half of a
+    full run and the first batch of a stream. Returns the commits
+    (holding the metrics) and the candidates.
+
+    The input identity is stamped on the store first: run_stage resumes
+    a stage only when the warehouse was built from THIS input. Both
+    stages face the sha invariant once both are committed.
+
+    The sidecar (``_input_pairs``) is the exact (doc_id, content_sha)
+    set the warehouse holds; the append-only overlap guard joins new
+    batches against it, since a zero-mention doc has no mentions row
+    but is input. It is written last and only when missing. By then
+    run_stage has built both stages from this input or resumed them
+    under the identity guard, so a run refused over a different input
+    never writes it. A crash anywhere before it (between the commits
+    or in the invariant jobs) leaves a warehouse without a sidecar:
+    ``append_repos_batch`` refuses it, the stream dispatch re-enters
+    this bootstrap, and a run over the same input resumes both stages
+    and writes the sidecar. The marker around the write makes a crash
+    mid-write a refusing torn append."""
+    pairs, digest, n_input, content_bytes = input_identity(repos_src)
+    store.input_digest, store.input_docs = digest, n_input
+    store.input_bytes = content_bytes
+    store.layout = _layout_for(store, content_bytes)
+    metrics = {
+        "run_id": store.run_id,
+        "input_sha_digest": digest,
+        "layout": store.layout,
+        "stages": {},
+    }
+    commits = StageCommits(spark, store, metrics, pairs, n_input)
+    mentions = commits.run(
+        "mentions",
+        lambda: codekg.extract_code_mentions(repos_src, store.layout["bucket_count"]),
+        PARTITION_BY,
+        check=False,
+    )
+    candidates = commits.run(
+        "candidates",
+        lambda: codekg.link_mentions(mentions, alias_dim, use_lsh=use_lsh),
+        PARTITION_BY,
+        check=False,
+    )
+    for stage, df in (("mentions", mentions), ("candidates", candidates)):
+        commits.check(stage, df)
+    if not store.has_input_pairs():
+        store.begin_append(["_input_pairs"])
+        store.write_input_pairs(pairs)
+        store.end_append()
+    return commits, candidates
+
+
+def _global_stages(commits: StageCommits, candidates: DataFrame, alias_dim: DataFrame) -> None:
+    """Build or resume the corpus-global stages (edges, nodes, triples)
+    from the whole corpus' ``candidates``; the triples face the
+    invariant against ``commits``' input pairs."""
+    edges = commits.run("edges", lambda: codekg.link_edges(candidates, alias_dim))
+    nodes = commits.run("nodes", lambda: codekg.canonicalize(candidates, alias_dim, edges))
+    commits.run(
+        "triples",
+        lambda: codekg.build_triples(candidates, nodes, commits.store.layout["write_salt"]),
+        PARTITION_BY,
+    )
+    commits.metrics["triples"] = commits.metrics["stages"]["triples"]["rows"]
+
+
 @_cache_scoped
 def run_codekg_pipeline(
     spark: SparkSession,
@@ -177,54 +253,10 @@ def run_codekg_pipeline(
     first-class stages per the north rule); returns stage row counts +
     timings."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
-    input_pairs, input_digest, n_input, content_bytes = input_identity(repos_src)
-    # stamp the input identity into every stage manifest: resume only
-    # proceeds when the warehouse was built from THIS input (run_stage
-    # raises otherwise -- the silent-stale-resume guard)
-    store.input_digest, store.input_docs = input_digest, n_input
-    store.input_bytes = content_bytes
-    store.layout = _layout_for(store, content_bytes)
-    metrics: dict = {
-        "run_id": run_id,
-        "input_sha_digest": input_digest,
-        "layout": store.layout,
-        "stages": {},
-    }
-    commits = StageCommits(spark, store, metrics, input_pairs, n_input)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
-
-    mentions = commits.run(
-        "mentions",
-        lambda: codekg.extract_code_mentions(repos_src, store.layout["bucket_count"]),
-        partition_by=["repo_bucket", "lang"],
-    )
-    # input-identity sidecar: the exact (doc_id, content_sha) set this
-    # warehouse was built from -- append-only ingest joins new batches
-    # against it (a zero-mention doc has no mentions row but IS input).
-    # Written only AFTER run_stage has built-or-identity-validated the
-    # first stage: writing earlier would let a refused run over a
-    # DIFFERENT input poison a legacy (sidecar-less) warehouse's
-    # identity set. Write-if-missing thereafter. Marker-bracketed so a
-    # crash mid-sidecar surfaces as a refusing torn append instead of a
-    # silent fallback to the weaker mentions-derived guard.
-    if not store.has_input_pairs():
-        store.begin_append(["_input_pairs"])
-        store.write_input_pairs(input_pairs)
-        store.end_append()
-    candidates = commits.run(
-        "candidates",
-        lambda: codekg.link_mentions(mentions, alias_dim, use_lsh=use_lsh),
-        partition_by=["repo_bucket", "lang"],
-    )
-    edges = commits.run("edges", lambda: codekg.link_edges(candidates, alias_dim))
-    nodes = commits.run("nodes", lambda: codekg.canonicalize(candidates, alias_dim, edges))
-    commits.run(
-        "triples",
-        lambda: codekg.build_triples(candidates, nodes, store.layout["write_salt"]),
-        partition_by=["repo_bucket", "lang"],
-    )
-    metrics["triples"] = metrics["stages"]["triples"]["rows"]
-    return metrics
+    commits, candidates = _bootstrap(spark, store, repos_src, alias_dim, use_lsh)
+    _global_stages(commits, candidates, alias_dim)
+    return commits.metrics
 
 
 def input_identity(repos_src: DataFrame):
@@ -253,31 +285,20 @@ def ingest_repos_batch(
     alias_rows=None,
 ) -> dict:
     """Land ONE batch of documents in a warehouse -- the streaming
-    foreachBatch sink. An empty warehouse bootstraps the extract/link
-    stages (mentions, candidates) plus the input-identity sidecar;
-    a committed one takes the append-only path (``append_repos_batch``:
-    overlap guard, additive digest, torn-append marker). Corpus-global
-    stages (edges/nodes/triples) are NOT built per batch --
-    canonicalization is corpus-global, so a batch "finalize"
-    ``run_codekg_pipeline`` over the full input resumes
-    mentions/candidates from these checkpoints and builds only the
-    global stages.
+    foreachBatch sink. Until mentions, candidates and the
+    input-identity sidecar are all committed, a batch takes the
+    bootstrap (``_bootstrap``: build or resume both stages, then the
+    sidecar); after that, the append-only path
+    (``append_repos_batch``). Corpus-global stages
+    (edges/nodes/triples) are NOT built per batch -- canonicalization
+    is corpus-global, so a batch "finalize" ``run_codekg_pipeline``
+    over the full input resumes mentions/candidates from these
+    checkpoints and builds only the global stages.
 
-    Idempotent under at-least-once delivery (``replay_ok``): a
-    redelivered batch whose docs ALL already sit in the warehouse is a
-    no-op, and a bootstrap crash ANYWHERE before the sidecar _SUCCESS
-    self-heals: dispatch keys on the LAST bootstrap artifact (the
-    input-identity sidecar), so a replay after a crash between the
-    stage commits -- or in the invariant-report/sidecar window after
-    the candidates commit, where several Spark jobs run outside any
-    marker -- re-enters the bootstrap path, resumes the committed
-    stages under the identity guard, and rebuilds the sidecar. Without
-    the sidecar condition that window dispatched to the APPEND path,
-    whose mentions-derived fallback guard drops zero-mention docs from
-    the identity set (the crash-loop / digest-double-count ADVICE r5
-    flagged). A legacy batch warehouse (no sidecar) streamed into with
-    a DIFFERENT batch now refuses via the input-identity guard instead
-    of silently degrading -- refusal is the guard working."""
+    Idempotent under at-least-once delivery: a redelivered batch whose
+    docs ALL already sit in the warehouse is a no-op (``replay_ok``),
+    and a bootstrap that crashed before the sidecar re-enters the
+    bootstrap on redelivery and completes it."""
     if (
         store.is_complete("mentions")
         and store.is_complete("candidates")
@@ -291,46 +312,11 @@ def ingest_repos_batch(
             alias_rows=alias_rows,
             replay_ok=True,
         )
-    pairs, digest, n_input, content_bytes = input_identity(repos_src_batch)
-    store.input_digest, store.input_docs = digest, n_input
-    store.input_bytes = content_bytes
-    store.layout = _layout_for(store, content_bytes)
-    metrics: dict = {
-        "run_id": store.run_id,
-        "mode": "bootstrap",
-        "new_docs": n_input,
-        "input_sha_digest": digest,
-        "stages": {},
-    }
-    commits = StageCommits(spark, store, metrics, pairs, n_input)
-    alias_dim = codekg.code_alias_dim(spark, alias_rows)
-    mentions = commits.run(
-        "mentions",
-        lambda: codekg.extract_code_mentions(repos_src_batch, store.layout["bucket_count"]),
-        ["repo_bucket", "lang"],
-        check=False,
+    commits, _candidates = _bootstrap(
+        spark, store, repos_src_batch, codekg.code_alias_dim(spark, alias_rows), use_lsh
     )
-    candidates = commits.run(
-        "candidates",
-        lambda: codekg.link_mentions(mentions, alias_dim, use_lsh=use_lsh),
-        ["repo_bucket", "lang"],
-        check=False,
-    )
-    for stage, df in (("mentions", mentions), ("candidates", candidates)):
-        commits.check(stage, df)
-    # sidecar LAST: run_stage has now either built the stages from this
-    # batch or resumed them under the identity guard, so the sidecar
-    # can never describe an input the warehouse does not hold. The
-    # whole post-candidates window (invariant-report jobs + this
-    # write) is crash-safe WITHOUT a wider marker because the stream
-    # dispatch keys on the sidecar itself: no _SUCCESS -> the
-    # redelivered batch re-enters bootstrap and self-heals. The marker
-    # around the write additionally catches a torn multi-file sidecar
-    # on the batch (run_codekg_pipeline) path, which has no redelivery.
-    store.begin_append(["_input_pairs"])
-    store.write_input_pairs(pairs)
-    store.end_append()
-    return metrics
+    commits.metrics.update(mode="bootstrap", new_docs=commits.n_input)
+    return commits.metrics
 
 
 @_cache_scoped
@@ -355,10 +341,9 @@ def append_repos_batch(
     mentions/candidates and rebuilds only the global stages.
 
     Overlap guard: new doc_ids are checked against the warehouse's
-    input-identity sidecar (every doc ever ingested, including
-    zero-mention docs); legacy warehouses without the sidecar fall
-    back to mentions-derived ids. The batch is written with the bucket
-    count recorded in the mentions manifest; the write salt is
+    input-identity sidecar (``_bootstrap``); a warehouse without one
+    refuses before writing anything. The batch is written with the
+    bucket count recorded in the mentions manifest; the write salt is
     re-derived for the grown corpus (``_layout_for``)."""
     for st in ("mentions", "candidates"):
         if not store.is_complete(st):
@@ -367,6 +352,13 @@ def append_repos_batch(
                 "run the full pipeline first"
             )
     store.check_no_pending()
+    if not store.has_input_pairs():
+        raise RuntimeError(
+            f"warehouse {store.root} has no input-identity sidecar "
+            "(_input_pairs) to guard the append: re-run the full pipeline "
+            "over its input, which resumes the committed stages and writes "
+            "the sidecar, then append"
+        )
     old_m = store.manifest("mentions")
     old_digest, old_docs = old_m.get("input_sha_digest"), old_m.get("input_docs")
     if old_digest is None:
@@ -376,13 +368,8 @@ def append_repos_batch(
         )
 
     new_pairs, new_digest, n_new, new_bytes = input_identity(repos_src_new)
-    if store.has_input_pairs():
-        existing = store.read_input_pairs(spark).select("doc_id", "content_sha").distinct()
-    else:
-        existing = store.read(spark, "mentions").select("doc_id", "content_sha").distinct()
-    n_overlap = new_pairs.join(
-        existing.select("doc_id").distinct(), "doc_id", "left_semi"
-    ).count()
+    existing = store.read_input_pairs(spark)
+    n_overlap = new_pairs.join(existing.select("doc_id"), "doc_id", "left_semi").count()
     if n_overlap:
         # replay-noop requires the EXACT (doc_id, content_sha) pair set:
         # a redelivered batch with the same ids but different content is
@@ -443,19 +430,8 @@ def append_repos_batch(
     )
     store.begin_append(["mentions", "candidates", "_input_pairs"])
     for stage, df in (("mentions", mentions_new), ("candidates", candidates_new)):
-        commits.append(stage, df, ["repo_bucket", "lang"])
-    if store.has_input_pairs():
-        store.append_input_pairs(new_pairs)
-    else:
-        # legacy warehouse: seed the sidecar with old (from mentions,
-        # best available) + new, so the NEXT append gets the exact guard
-        store.write_input_pairs(
-            store.read(spark, "mentions")
-            .select("doc_id", "content_sha")
-            .distinct()
-            .unionByName(new_pairs)
-            .distinct()
-        )
+        commits.append(stage, df, PARTITION_BY)
+    store.append_input_pairs(new_pairs)
     # the global stages describe the pre-append corpus; drop their
     # checkpoints inside the marker window so a crash here still
     # surfaces as a torn append rather than stale globals
@@ -480,20 +456,20 @@ def run_codekg_pipeline_incremental(
     regex extraction is a large share of pipeline cost and is
     per-document independent, as is dictionary/LSH linking (value-level
     against the dim, no cross-document dependencies) -- append them to
-    the committed mentions/candidates stages, then rebuild the global
-    stages (edges/nodes/triples) from the union: canonicalization is
+    the committed mentions/candidates stages (``append_repos_batch``),
+    then rebuild the global stages from the union: canonicalization is
     corpus-global by definition (a new surface can re-canonicalize old
     triples through a new alias chain), so exact semantics require the
     downstream rebuild; it is the cheap part next to re-extracting.
+    The rebuilt triples face the sha invariant against the grown
+    sidecar, as in a full run.
 
     Input-identity bookkeeping is EXACT, not recomputed: the sha
     sum-fold digest is additive over disjoint doc sets, so the
     combined identity = old manifest digest + new batch digest. A
     subsequent FULL run over old+new input therefore resumes every
     stage cleanly, and the run_stage guard keeps refusing any other
-    input. New docs must be genuinely new (doc_id overlap with the
-    warehouse's input-identity sidecar raises -- update-in-place is
-    not append)."""
+    input."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
     metrics = append_repos_batch(
         spark,
@@ -502,22 +478,12 @@ def run_codekg_pipeline_incremental(
         use_lsh=use_lsh,
         alias_rows=alias_rows,
     )
-
-    # global stages rebuild from the union (their old manifests carry
-    # the pre-append input identity, which run_stage would refuse)
-    commits = StageCommits(spark, store, metrics)
+    pairs = store.read_input_pairs(spark)
+    commits = StageCommits(spark, store, metrics, pairs, store.input_docs)
     alias_dim = codekg.code_alias_dim(spark, alias_rows)
-    candidates_all = store.read(spark, "candidates")
-    edges = commits.run("edges", lambda: codekg.link_edges(candidates_all, alias_dim))
-    nodes = commits.run("nodes", lambda: codekg.canonicalize(candidates_all, alias_dim, edges))
-    commits.run(
-        "triples",
-        lambda: codekg.build_triples(candidates_all, nodes, store.layout["write_salt"]),
-        partition_by=["repo_bucket", "lang"],
-    )
+    _global_stages(commits, store.read(spark, "candidates"), alias_dim)
     for stage in ("edges", "nodes", "triples"):
         metrics["stages"][stage]["rebuilt"] = True
-    metrics["triples"] = metrics["stages"]["triples"]["rows"]
     return metrics
 
 

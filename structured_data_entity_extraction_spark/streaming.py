@@ -3,15 +3,14 @@ SURVEY.md §2.9 notes the stage-checkpoint design is micro-batch-shaped;
 this is that natural extension, built).
 
 ``stream_repos_src`` ingests new repos_src parquet files as they land
-(the "new commits" feed) and runs the extract+link stages per
-micro-batch via ``foreachBatch`` INTO THE STAGESTORE WAREHOUSE -- the
-same checkpoints, lineage rows, input-identity sidecar, and additive
-input digest as the batch incremental path (``pipeline.
-ingest_repos_batch``), so streamed documents fully participate in
-resume, the sha invariant, and the append-only overlap guard. Batch
-and streaming share the exact same extraction code path, so
-correctness carries over; ``availableNow`` triggers make it testable
-(and backfill-able) without a long-running query.
+(the "new commits" feed) and lands each micro-batch in the StageStore
+warehouse through ``foreachBatch`` and ``pipeline.ingest_repos_batch``:
+the first batch takes the codekg bootstrap (mentions, candidates, then
+the input-identity sidecar), every later one the append path of
+``--append``. Streamed documents get the same checkpoints, sha
+invariant, additive input digest and append-only overlap guard as
+batch ones; ``availableNow`` triggers make it testable (and
+backfill-able) without a long-running query.
 
 Corpus-global stages (edges/nodes/triples) are not rebuilt per
 micro-batch -- canonicalization is corpus-global, so each append
@@ -21,15 +20,10 @@ rebuilds only the global stages (bit-for-bit equal to a from-scratch
 build; pytest-gated).
 
 At scale: one streaming query per corpus shard, checkpointLocation on
-durable storage gives exactly-once file-source progress; the
-foreachBatch append writes partitioned parquet keyed the same way as
-the batch pipeline ((repo_bucket, lang)), bracketed by the
-torn-append marker. The first micro-batch bootstraps the warehouse and
-fixes its repo bucket count (derived from that batch's content bytes,
-``pipeline.derive_layout``); every later batch appends with the count
-recorded in the mentions manifest. The manifests add up the batches'
-content bytes, and the finalize run sizes the triples write salt to
-the whole corpus.
+durable storage gives exactly-once file-source progress. The first
+batch fixes the warehouse's repo bucket count (``pipeline.derive_layout``
+over its content bytes); later batches append with it, and the
+finalize run sizes the triples write salt to the whole corpus.
 """
 
 from __future__ import annotations

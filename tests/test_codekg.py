@@ -406,6 +406,70 @@ def test_full_run_refusal_does_not_poison_legacy_sidecar(spark, tmp_path):
     assert StageStore(root).has_input_pairs()
 
 
+def test_incremental_rebuild_checks_triples_invariant(spark, tmp_path, monkeypatch):
+    """The triples an incremental run rebuilds face the sha invariant
+    against the grown sidecar, as a full run's do: a (doc_id,
+    content_sha) pair planted in build_triples aborts the run."""
+    from structured_data_entity_extraction_spark.pipeline import (
+        run_codekg_pipeline_incremental,
+    )
+
+    rows = repos_src_rows(30, seed=47)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    real_build = codekg.build_triples
+    monkeypatch.setattr(
+        codekg,
+        "build_triples",
+        lambda *a: real_build(*a).withColumn("content_sha", F.lit("f" * 64)),
+    )
+    with pytest.raises(RuntimeError, match="invariant violated at stage triples"):
+        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i", use_lsh=False)
+
+
+def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
+    """An append guards new doc_ids with the input-identity sidecar: a
+    warehouse without one refuses, naming the sidecar, before writing
+    anything. A full run over the warehouse's input resumes every
+    stage and writes the sidecar, and the append then goes through."""
+    import shutil
+
+    from structured_data_entity_extraction_spark.pipeline import (
+        run_codekg_pipeline_incremental,
+    )
+
+    rows = repos_src_rows(30, seed=49)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    shutil.rmtree(f"{root}/_input_pairs")
+    store = StageStore(root)
+    stages = ("mentions", "candidates", "edges", "nodes", "triples")
+
+    def manifests():
+        return {st: open(store.manifest_path(st), encoding="utf-8").read() for st in stages}
+
+    before = manifests()
+    with pytest.raises(RuntimeError, match="sidecar"):
+        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i", use_lsh=False)
+    assert not os.path.exists(store.pending_path())
+    assert manifests() == before
+    assert not store.has_input_pairs()
+
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r", use_lsh=False)
+    assert all(s["resumed"] for s in m["stages"].values())
+    assert store.has_input_pairs()
+    m_inc = run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i2", use_lsh=False)
+    assert m_inc["new_docs"] == 10
+
+
 def test_torn_append_marker_blocks_resume(spark, tmp_path):
     """A crash between data append and manifest swap leaves the
     warehouse pending marker; every later resume/append must refuse
