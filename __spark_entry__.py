@@ -506,7 +506,7 @@ def q_entity_cooccurrence(spark, sf_dir):
     from structured_data_entity_extraction_spark import codekg
 
     df = spark.read.parquet(_REPOS_FIXTURE)
-    triples = codekg.build_kg(df, use_lsh=True)
+    triples = codekg.build_kg(df)
     return codekg.entity_cooccurrence(triples, pred="imports").orderBy("src", "dst")
 
 
@@ -520,7 +520,7 @@ def q_entity_cooccurrence_exact(spark, sf_dir):
     from structured_data_entity_extraction_spark import codekg
 
     df = spark.read.parquet(_REPOS_FIXTURE)
-    triples = codekg.build_kg(df, use_lsh=True)
+    triples = codekg.build_kg(df)
     return codekg.entity_cooccurrence(
         triples, pred="imports", max_per_doc=4, exact_tail=True
     ).orderBy("src", "dst")
@@ -541,7 +541,7 @@ def q_entity_pagerank(spark, sf_dir):
     from structured_data_entity_extraction_spark.ops import graph
 
     df = spark.read.parquet(_REPOS_FIXTURE)
-    triples = codekg.build_kg(df, use_lsh=True)
+    triples = codekg.build_kg(df)
     cooc = codekg.entity_cooccurrence(
         triples, pred="imports", max_per_doc=4, exact_tail=True
     )
@@ -564,7 +564,7 @@ def q_entity_triangles(spark, sf_dir):
     from structured_data_entity_extraction_spark.ops import graph
 
     df = spark.read.parquet(_REPOS_FIXTURE)
-    triples = codekg.build_kg(df, use_lsh=True)
+    triples = codekg.build_kg(df)
     cooc = codekg.entity_cooccurrence(
         triples, pred="imports", max_per_doc=4, exact_tail=True
     )
@@ -596,7 +596,7 @@ def q_codekg_lsh_alias_map(spark, sf_dir):
     from structured_data_entity_extraction_spark import codekg
 
     values = spark.createDataFrame([(v,) for v in _LSH_PROBE_VALUES], "value string")
-    out = codekg.lsh_alias_map(values, codekg.code_alias_dim(spark), threshold=0.5)
+    out = codekg.lsh_alias_map(values, codekg.code_alias_dim(spark))
     return out.select(
         "value", "lsh_canonical", F.round("lsh_score", 6).alias("lsh_score_r")
     ).orderBy("value")
@@ -877,8 +877,8 @@ def q_avaluo_triples(spark, sf_dir):
 
 def q_codekg_triples(spark, sf_dir):
     """North-rule code-KG pipeline with the native MinHash-LSH
-    fuzzy-link stage IN-PLAN (use_lsh=True), over the committed input
-    fixture parquet (= repos_src_rows(400, seed=42), parity-tested in
+    fuzzy-link stage IN-PLAN, over the committed input fixture
+    parquet (= repos_src_rows(400, seed=42), parity-tested in
     tests/test_codekg.py). The fixture plants near-miss imports
     (pandas2, reactjs, tokios, net/https) whose links the oracle
     checks. Oracle: since r4 the ENTIRE pipeline -- extraction
@@ -888,7 +888,7 @@ def q_codekg_triples(spark, sf_dir):
 
     df = spark.read.parquet(_REPOS_FIXTURE)
     return (
-        codekg.build_kg(df, use_lsh=True)
+        codekg.build_kg(df)
         .select("subj", "pred", "obj", "doc_id", "repo", "lang", "content_sha", "conf")
         .orderBy("subj", "pred", "obj")
     )
@@ -1141,15 +1141,18 @@ def _sq(s: str) -> str:
     return s.replace("'", "''")
 
 
-def _lsh_sql_ctes(source: str, threshold: float, num_hashes: int = 16) -> str:
+def _lsh_sql_ctes(source: str) -> str:
     """The engine's MinHash-LSH machinery as a reusable CTE block
     (ONE definition shared by _lsh_alias_map_sql and
     _codekg_triples_sql so the two oracles can never drift apart):
-    char-3-grams of '^'+s+'$', ``num_hashes`` md5-prefix minhashes,
-    r=1 banding (band key = the minhash itself -- md5(h) equality is
-    h equality), exact distinct-gram jaccard rerank at ``threshold``.
-    Expects ``{source}(value)`` and ``dim(alias, canonical)`` CTEs in
-    scope; ends with ``lsh_scored(value, canonical, alias, jac)``."""
+    char-3-grams of '^'+s+'$', ``codekg.LSH_HASHES`` md5-prefix
+    minhashes, r=1 banding (band key = the minhash itself -- md5(h)
+    equality is h equality), exact distinct-gram jaccard rerank at
+    ``codekg.LSH_THRESHOLD``. Expects ``{source}(value)`` and
+    ``dim(alias, canonical)`` CTEs in scope; ends with
+    ``lsh_scored(value, canonical, alias, jac)``."""
+    from structured_data_entity_extraction_spark.codekg import LSH_HASHES, LSH_THRESHOLD
+
     return f"""
         vg AS (
           SELECT value, substring('^' || value || '$', i, 3) AS g
@@ -1167,12 +1170,12 @@ def _lsh_sql_ctes(source: str, threshold: float, num_hashes: int = 16) -> str:
         ),
         vh AS (
           SELECT value, i, min(substring(md5(i::VARCHAR || ':' || g), 1, 16)) AS h
-          FROM vg CROSS JOIN (SELECT unnest(range(0, {num_hashes})) AS i)
+          FROM vg CROSS JOIN (SELECT unnest(range(0, {LSH_HASHES})) AS i)
           GROUP BY 1, 2
         ),
         dh AS (
           SELECT alias, canonical, i, min(substring(md5(i::VARCHAR || ':' || g), 1, 16)) AS h
-          FROM dg CROSS JOIN (SELECT unnest(range(0, {num_hashes})) AS i)
+          FROM dg CROSS JOIN (SELECT unnest(range(0, {LSH_HASHES})) AS i)
           GROUP BY 1, 2, 3
         ),
         lsh_cand AS (
@@ -1194,11 +1197,11 @@ def _lsh_sql_ctes(source: str, threshold: float, num_hashes: int = 16) -> str:
           FROM lsh_common c
           JOIN vsz ON vsz.value = c.value
           JOIN dsz ON dsz.alias = c.alias
-          WHERE c.n_common / (vsz.n + dsz.n - c.n_common) >= {threshold}
+          WHERE c.n_common / (vsz.n + dsz.n - c.n_common) >= {LSH_THRESHOLD}
         )"""
 
 
-def _lsh_alias_map_sql(threshold: float = 0.5, num_hashes: int = 16) -> str:
+def _lsh_alias_map_sql() -> str:
     """Pure-DuckDB twin of codekg.lsh_alias_map over the literal probe
     values + the default alias dim: the shared ``_lsh_sql_ctes`` block
     plus top-1 per value with (jac desc, canonical asc, alias asc)
@@ -1210,7 +1213,7 @@ def _lsh_alias_map_sql(threshold: float = 0.5, num_hashes: int = 16) -> str:
     return f"""
         WITH vals(value) AS (VALUES {vals}),
         dim(alias, canonical) AS (VALUES {dim}),
-        {_lsh_sql_ctes('vals', threshold, num_hashes)},
+        {_lsh_sql_ctes('vals')},
         ranked AS (
           SELECT value, canonical, jac,
                  row_number() OVER (PARTITION BY value
@@ -1231,7 +1234,7 @@ _REPOS_FIXTURE = os.path.join(_FIXTURE_DIR, "repos_src_400.parquet")
 
 def _codekg_triples_sql() -> str:
     """Pure-DuckDB twin of the ENTIRE flagship pipeline
-    (codekg.build_kg with use_lsh=True) over the shared input fixture
+    (codekg.build_kg) over the shared input fixture
     parquet: per-lang anchored extraction regexes, first-occurrence
     capped identifier mentions, broadcast-dict linking, the
     MinHash-LSH fuzzy link, recursive-CTE connected-components
@@ -1328,7 +1331,7 @@ def _codekg_triples_sql() -> str:
           SELECT DISTINCT value FROM linked
           WHERE canonical IS NULL AND field = 'import' AND length(value) >= 2
         ),
-        {_lsh_sql_ctes('misses', 0.5)},
+        {_lsh_sql_ctes('misses')},
         lsh AS (
           SELECT value, canonical AS lsh_canonical, jac AS lsh_score FROM (
             SELECT value, canonical, jac,

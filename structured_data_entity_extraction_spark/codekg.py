@@ -226,9 +226,16 @@ def char_ngrams_col(value, n: int = 3):
     )
 
 
-def _lsh_band_candidates(
-    vg: DataFrame, dg: DataFrame, num_hashes: int = 16
-) -> DataFrame:
+# the fuzzy link's MinHash-LSH: a surface value links to a dim alias
+# whose char-3-gram jaccard is at least LSH_THRESHOLD, among the aliases
+# sharing one of LSH_HASHES r=1 bands with it. The DuckDB oracle
+# (__spark_entry__._lsh_sql_ctes) and the Python twin
+# (tools/make_goldens._lsh_best_match) read these same constants.
+LSH_THRESHOLD = 0.5
+LSH_HASHES = 16
+
+
+def _lsh_band_candidates(vg: DataFrame, dg: DataFrame) -> DataFrame:
     """The band join of ``lsh_alias_map`` (the dim-growth property test
     counts it): ``vg(value, grams)`` x broadcast ``dg(alias, canonical,
     grams)`` -> one (value, grams, alias, canonical, dgrams) row per
@@ -238,19 +245,14 @@ def _lsh_band_candidates(
 
     def banded(df: DataFrame) -> DataFrame:
         return df.select(
-            "*", F.explode(minhash_bands(F.col("grams"), num_hashes, 1)).alias("bk")
+            "*", F.explode(minhash_bands(F.col("grams"), LSH_HASHES, 1)).alias("bk")
         ).select(*df.columns, "bk.band", "bk.key")
 
     dim_bands = banded(dg).withColumnRenamed("grams", "dgrams")
     return banded(vg).join(F.broadcast(dim_bands), ["band", "key"]).drop("band", "key")
 
 
-def lsh_alias_map(
-    values: DataFrame,
-    alias_dim: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 16,
-) -> DataFrame:
+def lsh_alias_map(values: DataFrame, alias_dim: DataFrame) -> DataFrame:
     """Distinct surface values -> best fuzzy dim match via NATIVE
     MinHash-LSH banding (``ops.dedup.minhash_bands`` -- no pyspark.ml,
     every hash reproducible in DuckDB/Python, so the flagship LSH path
@@ -258,10 +260,10 @@ def lsh_alias_map(
 
     Bands of r=1: for short strings recall is what matters -- candidate
     probability at jaccard j is 1-(1-j)^16 (j=0.5 -> 1-2^-16) -- and
-    false candidates die in the exact-jaccard filter. The dim is
-    broadcast into the band join with its gram arrays, and the best
-    match is one min(-jaccard, canonical, alias) aggregate per value.
-    Returns (value, lsh_canonical, lsh_score), score = EXACT
+    false candidates die in the exact-jaccard filter at LSH_THRESHOLD.
+    The dim is broadcast into the band join with its gram arrays, and
+    the best match is one min(-jaccard, canonical, alias) aggregate per
+    value. Returns (value, lsh_canonical, lsh_score), score = EXACT
     char-3-gram jaccard."""
     vg = values.select("value", char_ngrams_col(F.col("value")).alias("grams"))
     dg = alias_dim.select(
@@ -272,9 +274,9 @@ def lsh_alias_map(
     )
     best = F.min(F.struct((-F.col("jac")).alias("neg_jac"), "canonical", "alias"))
     return (
-        _lsh_band_candidates(vg, dg, num_hashes)
+        _lsh_band_candidates(vg, dg)
         .select("value", "canonical", "alias", jac.alias("jac"))
-        .filter(F.col("jac") >= threshold)
+        .filter(F.col("jac") >= LSH_THRESHOLD)
         .groupBy("value")
         .agg(best.alias("best"))
         .select(
@@ -285,12 +287,7 @@ def lsh_alias_map(
     )
 
 
-def link_mentions(
-    mentions: DataFrame,
-    alias_dim: DataFrame,
-    lsh_threshold: float = 0.5,
-    use_lsh: bool = True,
-) -> DataFrame:
+def link_mentions(mentions: DataFrame, alias_dim: DataFrame) -> DataFrame:
     """mentions + alias dim -> candidates(doc_id, field, value, canonical,
     score, method). Exact alias hits via broadcast equi-join (method=
     'dict', score=1.0); misses among import mentions go through native
@@ -312,9 +309,6 @@ def link_mentions(
         F.when(F.col("canonical").isNotNull(), F.lit(1.0)).alias("score"),
         F.when(F.col("canonical").isNotNull(), F.lit("dict")).alias("method"),
     )
-    if not use_lsh:
-        return dict_hits
-
     # no isEmpty() fast-path probe: it cost a full extra action over the
     # mention stream per call, while the LSH subtree on an empty miss
     # set is just empty joins (near-free) and the left rejoin is a no-op
@@ -324,7 +318,7 @@ def link_mentions(
         .distinct()
         .filter(F.length("value") >= 2)
     )
-    lsh_map = lsh_alias_map(misses, alias_dim, threshold=lsh_threshold)
+    lsh_map = lsh_alias_map(misses, alias_dim)
     return (
         dict_hits.join(F.broadcast(lsh_map), "value", "left")
         .select(
@@ -393,22 +387,25 @@ def canonicalize(
 # ------------------------------------------------------------- stage D
 
 
-def build_kg(
-    repos_src: DataFrame,
-    alias_dim: DataFrame | None = None,
-    use_lsh: bool = True,
-    bucket_count: int = 64,
-) -> DataFrame:
-    """One-shot in-memory run of all four stages -> triples. The
-    checkpointed path (pipeline.run_codekg_pipeline) materializes each
-    stage instead; here intermediates that feed multiple consumers are
-    persisted so extraction and linking run exactly once."""
+def build_kg(repos_src: DataFrame, use_lsh: bool = True) -> DataFrame:
+    """One-shot in-memory run of all four stages over the default alias
+    dim and 64 repo buckets -> triples. The checkpointed path
+    (pipeline.run_codekg_pipeline) materializes each stage instead;
+    here intermediates that feed multiple consumers are persisted so
+    extraction and linking run exactly once.
+
+    Linking always includes the MinHash-LSH fuzzy link. ``use_lsh``
+    stays only because the frozen ``bench.py`` passes ``use_lsh=True``;
+    ``False`` raises ``ValueError``."""
     from .ops.cache import persist_tracked
 
-    spark = repos_src.sparkSession
-    alias_dim = alias_dim or code_alias_dim(spark)
-    mentions = persist_tracked(extract_code_mentions(repos_src, bucket_count))
-    candidates = persist_tracked(link_mentions(mentions, alias_dim, use_lsh=use_lsh))
+    if not use_lsh:
+        raise ValueError(
+            "build_kg always runs the MinHash-LSH link: use_lsh=False is not supported"
+        )
+    alias_dim = code_alias_dim(repos_src.sparkSession)
+    mentions = persist_tracked(extract_code_mentions(repos_src))
+    candidates = persist_tracked(link_mentions(mentions, alias_dim))
     nodes = canonicalize(candidates, alias_dim)
     return build_triples(candidates, nodes)
 

@@ -117,11 +117,6 @@ def firma_col(text: Column) -> Column:
     )
 
 
-def fold_tildes_col(col: Column) -> Column:
-    """P1 -- exact accent fold via translate (extractorAvaluos.py:78-86)."""
-    return F.translate(col, "ÁÉÍÓÚ", "AEIOU")
-
-
 # ------------------------------------------------------------ stage entry
 
 

@@ -48,17 +48,6 @@ _FILLER = (
 )
 
 
-def _states_with_branches():
-    """Canonical states (as `estado` emits them, tilde-folded) paired
-    with an alias usable in a 'Municipio <alias>' phrase."""
-    dims = geo_dims()
-    picks = []
-    for prefix, canonical in dims["state_prefix_map"].items():
-        # text that makes `estado` yield this canonical: 'ENTIDAD FEDERATIVA <prefix>…'
-        picks.append((prefix, canonical))
-    return picks
-
-
 def avaluo_docs(n: int = 200, seed: int = 42, content_scale: int = 1) -> list[dict]:
     """Rows: (doc_id, text). Golden values are NOT stored here -- tests
     derive them by running the reference (or refsem) on `text`."""

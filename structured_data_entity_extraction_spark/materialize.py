@@ -40,6 +40,9 @@ from .ops.cache import persist_tracked
 from .schemas import LINEAGE
 from .session import local_frame
 
+# the namespace of the stage tables on the ``iceberg_catalog`` route
+ICEBERG_NAMESPACE = "structured_data_entity_extraction"
+
 
 def _sha_fold_col():
     """64-bit numeric fold of content_sha (hex prefix -> decimal). The
@@ -115,17 +118,10 @@ class StageStore:
     records the table identifier, and its lineage comes from the
     table's files metadata. north_rule: "checkpoints to Iceberg"."""
 
-    def __init__(
-        self,
-        root: str,
-        run_id: str = "run0",
-        iceberg_catalog: str | None = None,
-        iceberg_namespace: str = "structured_data_entity_extraction",
-    ):
+    def __init__(self, root: str, run_id: str = "run0", iceberg_catalog: str | None = None):
         self.root = root
         self.run_id = run_id
         self.iceberg_catalog = iceberg_catalog
-        self.iceberg_namespace = iceberg_namespace
         # input identity for resume safety: the pipeline sets these to
         # the RAW input's distinct-(doc_id, sha) digest + count before
         # running stages; write() stamps them into every manifest and
@@ -149,7 +145,7 @@ class StageStore:
         self._holding_pending = False
 
     def iceberg_ident(self, stage: str) -> str:
-        return f"{self.iceberg_catalog}.{self.iceberg_namespace}.{stage}"
+        return f"{self.iceberg_catalog}.{ICEBERG_NAMESPACE}.{stage}"
 
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
@@ -460,7 +456,7 @@ class StageStore:
         if self.iceberg_catalog:
             spark.sql(
                 f"CALL {self.iceberg_catalog}.system.rewrite_data_files"
-                f"(table => '{self.iceberg_namespace}.{stage}', "
+                f"(table => '{ICEBERG_NAMESPACE}.{stage}', "
                 f"options => map('target-file-size-bytes', "
                 f"'{int(target_file_mb) * (1 << 20)}'))"
             )

@@ -89,6 +89,15 @@ def best_cells(vec: Column, n: int) -> Column:
     return F.slice(F.array_sort(scored), 1, n).getField("cell")
 
 
+def _nearest_cell(vec: Column) -> Column:
+    """``best_cells(vec, 1)[0]`` as a NON-NULL join key (-1 stands for
+    "no centroids" and matches no probe cell). On a nullable key
+    Catalyst infers an isnotnull filter on the join side and pushes it
+    below the projection, so the centroid argmax would run twice per
+    corpus row."""
+    return F.coalesce(best_cells(vec, 1)[0], F.lit(-1))
+
+
 def _vectors(df: DataFrame, id_col: str, vec_col: str, ids: str, vecs: str) -> DataFrame:
     return df.select(F.col(id_col).alias(ids), F.col(vec_col).cast("array<double>").alias(vecs))
 
@@ -179,7 +188,7 @@ def ivf_topk(
     c = (
         _vectors(_ensure_parallelism(corpus), id_col, vec_col, "vec_id", "cvec")
         .crossJoin(book)
-        .select("vec_id", "cvec", best_cells(F.col("cvec"), 1)[0].alias("cell"))
+        .select("vec_id", "cvec", _nearest_cell(F.col("cvec")).alias("cell"))
     )
     q = _probes(queries, book, n_probe, id_col, vec_col)
     # no distinct needed: each corpus vector sits in exactly one cell
@@ -274,7 +283,7 @@ def ivf_pq_topk(
     # join ever touches; raw vectors stay in c and are fetched only for
     # the reranked few
     c_codes = c.crossJoin(book).select(
-        "vec_id", best_cells(F.col("cvec"), 1)[0].alias("cell"), encode.alias("codes")
+        "vec_id", _nearest_cell(F.col("cvec")).alias("cell"), encode.alias("codes")
     )
     q = _probes(queries, book, n_probe, id_col, vec_col)
     cand = (

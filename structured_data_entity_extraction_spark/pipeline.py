@@ -169,7 +169,6 @@ def _bootstrap(
     store: StageStore,
     repos_src: DataFrame,
     alias_dim: DataFrame,
-    use_lsh: bool,
 ) -> tuple[StageCommits, DataFrame]:
     """Build or resume mentions and candidates from ``repos_src`` and
     write the warehouse's input-identity sidecar: the first half of a
@@ -211,7 +210,7 @@ def _bootstrap(
     )
     candidates = commits.run(
         "candidates",
-        lambda: codekg.link_mentions(mentions, alias_dim, use_lsh=use_lsh),
+        lambda: codekg.link_mentions(mentions, alias_dim),
         PARTITION_BY,
         check=False,
     )
@@ -244,17 +243,16 @@ def run_codekg_pipeline(
     repos_src: DataFrame,
     out_root: str,
     run_id: str = "run0",
-    use_lsh: bool = True,
-    alias_rows=None,
     iceberg_catalog: str | None = None,
 ) -> dict:
     """repos_src -> {mentions, candidates, edges, nodes, triples}
     checkpointed under out_root (the node/edge KG tables are
     first-class stages per the north rule); returns stage row counts +
-    timings."""
+    timings. Linking is the dictionary join plus the MinHash-LSH fuzzy
+    link (``codekg.link_mentions``) against the default alias dim."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
-    alias_dim = codekg.code_alias_dim(spark, alias_rows)
-    commits, candidates = _bootstrap(spark, store, repos_src, alias_dim, use_lsh)
+    alias_dim = codekg.code_alias_dim(spark)
+    commits, candidates = _bootstrap(spark, store, repos_src, alias_dim)
     _global_stages(commits, candidates, alias_dim)
     return commits.metrics
 
@@ -281,8 +279,6 @@ def ingest_repos_batch(
     spark: SparkSession,
     store: StageStore,
     repos_src_batch: DataFrame,
-    use_lsh: bool = True,
-    alias_rows=None,
 ) -> dict:
     """Land ONE batch of documents in a warehouse -- the streaming
     foreachBatch sink. Until mentions, candidates and the
@@ -304,17 +300,8 @@ def ingest_repos_batch(
         and store.is_complete("candidates")
         and store.has_input_pairs()
     ):
-        return append_repos_batch(
-            spark,
-            store,
-            repos_src_batch,
-            use_lsh=use_lsh,
-            alias_rows=alias_rows,
-            replay_ok=True,
-        )
-    commits, _candidates = _bootstrap(
-        spark, store, repos_src_batch, codekg.code_alias_dim(spark, alias_rows), use_lsh
-    )
+        return append_repos_batch(spark, store, repos_src_batch, replay_ok=True)
+    commits, _candidates = _bootstrap(spark, store, repos_src_batch, codekg.code_alias_dim(spark))
     commits.metrics.update(mode="bootstrap", new_docs=commits.n_input)
     return commits.metrics
 
@@ -324,8 +311,6 @@ def append_repos_batch(
     spark: SparkSession,
     store: StageStore,
     repos_src_new: DataFrame,
-    use_lsh: bool = True,
-    alias_rows=None,
     replay_ok: bool = False,
 ) -> dict:
     """Append ONE batch of new documents to a committed warehouse --
@@ -418,16 +403,14 @@ def append_repos_batch(
         "stages": {},
     }
     commits = StageCommits(spark, store, metrics, new_pairs, n_new)
-    alias_dim = codekg.code_alias_dim(spark, alias_rows)
+    alias_dim = codekg.code_alias_dim(spark)
     # the new-batch frames feed both the append write and the
     # downstream link/invariant -- persist so extraction runs once per
     # batch
     mentions_new = persist_tracked(
         codekg.extract_code_mentions(repos_src_new, store.layout["bucket_count"])
     )
-    candidates_new = persist_tracked(
-        codekg.link_mentions(mentions_new, alias_dim, use_lsh=use_lsh)
-    )
+    candidates_new = persist_tracked(codekg.link_mentions(mentions_new, alias_dim))
     store.begin_append(["mentions", "candidates", "_input_pairs"])
     for stage, df in (("mentions", mentions_new), ("candidates", candidates_new)):
         commits.append(stage, df, PARTITION_BY)
@@ -447,8 +430,6 @@ def run_codekg_pipeline_incremental(
     repos_src_new: DataFrame,
     out_root: str,
     run_id: str = "inc0",
-    use_lsh: bool = True,
-    alias_rows=None,
     iceberg_catalog: str | None = None,
 ) -> dict:
     """Append-only incremental ingest (the 10^12-file reality is an
@@ -471,17 +452,10 @@ def run_codekg_pipeline_incremental(
     stage cleanly, and the run_stage guard keeps refusing any other
     input."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
-    metrics = append_repos_batch(
-        spark,
-        store,
-        repos_src_new,
-        use_lsh=use_lsh,
-        alias_rows=alias_rows,
-    )
+    metrics = append_repos_batch(spark, store, repos_src_new)
     pairs = store.read_input_pairs(spark)
     commits = StageCommits(spark, store, metrics, pairs, store.input_docs)
-    alias_dim = codekg.code_alias_dim(spark, alias_rows)
-    _global_stages(commits, store.read(spark, "candidates"), alias_dim)
+    _global_stages(commits, store.read(spark, "candidates"), codekg.code_alias_dim(spark))
     for stage in ("edges", "nodes", "triples"):
         metrics["stages"][stage]["rebuilt"] = True
     return metrics
@@ -540,7 +514,6 @@ def main(argv=None) -> None:
     )
     ap.add_argument("--output", required=True, help="warehouse root")
     ap.add_argument("--run-id", default="run0")
-    ap.add_argument("--no-lsh", action="store_true")
     ap.add_argument(
         "--append", action="store_true",
         help="codekg: treat --input as NEW docs to append to an existing "
@@ -620,7 +593,6 @@ def main(argv=None) -> None:
         ckpt = args.checkpoint or os.path.join(args.output, "_stream_ckpt")
         q = stream_repos_src(
             spark, args.input, args.output, ckpt,
-            use_lsh=not args.no_lsh,
             run_id_prefix=args.run_id,
             iceberg_catalog=args.iceberg_catalog,
         )
@@ -653,7 +625,6 @@ def main(argv=None) -> None:
             repos_src,
             args.output,
             run_id=args.run_id,
-            use_lsh=not args.no_lsh,
             iceberg_catalog=args.iceberg_catalog,
         )
     metrics["total_wall_s"] = round(time.time() - t0, 3)

@@ -42,16 +42,14 @@ def stream_repos_src(
     input_path: str,
     warehouse_root: str,
     checkpoint_path: str,
-    use_lsh: bool = True,
-    alias_rows=None,
-    available_now: bool = True,
     run_id_prefix: str = "stream",
     iceberg_catalog: str | None = None,
 ):
     """File-source stream of repos_src parquet -> per-micro-batch
     warehouse ingest (bootstrap on the first batch, append-only after;
     a replayed micro-batch -- at-least-once delivery -- is a no-op).
-    Returns the StreamingQuery."""
+    The query drains the files present at start (``availableNow``) and
+    stops. Returns the StreamingQuery."""
     from .pipeline import ingest_repos_batch
 
     stream = (
@@ -69,20 +67,14 @@ def stream_repos_src(
             run_id=f"{run_id_prefix}-{batch_id}",
             iceberg_catalog=iceberg_catalog,
         )
-        ingest_repos_batch(
-            bspark,
-            store,
-            batch_df,
-            use_lsh=use_lsh,
-            alias_rows=alias_rows,
-        )
+        ingest_repos_batch(bspark, store, batch_df)
 
-    writer = stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_path
+    return (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ----------------------------------------- watermarked windowed agg

@@ -146,7 +146,7 @@ def test_cc_star_converges_on_deep_chain(spark, monkeypatch):
 
 def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
     out = str(tmp_path / "warehouse")
-    m1 = run_codekg_pipeline(spark, repos_df, out, run_id="r1", use_lsh=False)
+    m1 = run_codekg_pipeline(spark, repos_df, out, run_id="r1")
     assert m1["triples"] > 0
     # lineage row counts reconcile with manifest totals per stage, and
     # the manifest's observed rows and sha fold match a fresh scan
@@ -181,7 +181,7 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
         (r["subj"], r["pred"], r["obj"]) for r in t1.select("subj", "pred", "obj").collect()
     )
     os.remove(os.path.join(out, "triples", "_MANIFEST.json"))
-    m2 = run_codekg_pipeline(spark, repos_df, out, run_id="r2", use_lsh=False)
+    m2 = run_codekg_pipeline(spark, repos_df, out, run_id="r2")
     assert m2["stages"]["mentions"]["resumed"] is True
     assert m2["stages"]["triples"]["resumed"] is False
     t2 = spark.read.parquet(os.path.join(out, "triples", "data"))
@@ -220,7 +220,7 @@ def test_sha_invariant_catches_foreign_pair(spark, rows, tmp_path, monkeypatch):
 
     monkeypatch.setattr(codekg, "extract_code_mentions", planted)
     with pytest.raises(RuntimeError, match="invariant violated at stage mentions: 1 "):
-        run_codekg_pipeline(spark, df, str(tmp_path / "w"), use_lsh=False)
+        run_codekg_pipeline(spark, df, str(tmp_path / "w"))
 
 
 def test_resume_refuses_changed_input(spark, repos_df, tmp_path):
@@ -231,10 +231,10 @@ def test_resume_refuses_changed_input(spark, repos_df, tmp_path):
     checkpoints that silently miss every new document. Identical input
     keeps resuming cleanly."""
     out = str(tmp_path / "w")
-    m1 = run_codekg_pipeline(spark, repos_df, out, run_id="r1", use_lsh=False)
+    m1 = run_codekg_pipeline(spark, repos_df, out, run_id="r1")
     assert m1["triples"] > 0
     # same input -> clean resume
-    m2 = run_codekg_pipeline(spark, repos_df, out, run_id="r2", use_lsh=False)
+    m2 = run_codekg_pipeline(spark, repos_df, out, run_id="r2")
     assert all(s["resumed"] for s in m2["stages"].values())
     # appended input -> refuse
     extra = spark.createDataFrame(
@@ -242,7 +242,7 @@ def test_resume_refuses_changed_input(spark, repos_df, tmp_path):
     )
     grown = repos_df.unionByName(extra)
     with pytest.raises(RuntimeError, match="different input"):
-        run_codekg_pipeline(spark, grown, out, run_id="r3", use_lsh=False)
+        run_codekg_pipeline(spark, grown, out, run_id="r3")
 
 
 def test_incremental_append_matches_full_rebuild(spark, tmp_path):
@@ -265,15 +265,15 @@ def test_incremental_append_matches_full_rebuild(spark, tmp_path):
     df_a, df_b, df_ab = mk(rows[:160]), mk(rows[160:]), mk(rows)
     inc_root, full_root = str(tmp_path / "inc"), str(tmp_path / "full")
 
-    run_codekg_pipeline(spark, df_a, inc_root, run_id="base", use_lsh=True)
+    run_codekg_pipeline(spark, df_a, inc_root, run_id="base")
     m_inc = run_codekg_pipeline_incremental(
-        spark, df_b, inc_root, run_id="inc", use_lsh=True
+        spark, df_b, inc_root, run_id="inc"
     )
     assert m_inc["new_docs"] == 40
     assert m_inc["stages"]["mentions"]["appended_rows"] > 0
     assert m_inc["stages"]["triples"]["rebuilt"] is True
 
-    m_full = run_codekg_pipeline(spark, df_ab, full_root, run_id="f", use_lsh=True)
+    m_full = run_codekg_pipeline(spark, df_ab, full_root, run_id="f")
     cols = ["subj", "pred", "obj", "doc_id", "repo", "lang", "content_sha", "conf"]
     got = sorted(
         map(tuple, spark.read.parquet(f"{inc_root}/triples/data").select(*cols).collect())
@@ -284,7 +284,7 @@ def test_incremental_append_matches_full_rebuild(spark, tmp_path):
     assert got == want and m_inc["triples"] == m_full["triples"]
 
     # additive digest: a FULL run over old+new now resumes everything
-    m_resume = run_codekg_pipeline(spark, df_ab, inc_root, run_id="r", use_lsh=True)
+    m_resume = run_codekg_pipeline(spark, df_ab, inc_root, run_id="r")
     assert all(s["resumed"] for s in m_resume["stages"].values())
 
     # append-only: re-sending already-ingested docs raises
@@ -312,7 +312,7 @@ def test_append_guard_catches_zero_mention_docs(spark, tmp_path):
     ghost_df = spark.createDataFrame([ghost], REPOS_SRC)
     root = str(tmp_path / "w")
     run_codekg_pipeline(
-        spark, base.unionByName(ghost_df), root, run_id="b", use_lsh=False
+        spark, base.unionByName(ghost_df), root, run_id="b"
     )
     mentions = spark.read.parquet(f"{root}/mentions/data")
     from pyspark.sql import functions as F
@@ -393,15 +393,15 @@ def test_full_run_refusal_does_not_poison_legacy_sidecar(spark, tmp_path):
         REPOS_SRC,
     )
     root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     shutil.rmtree(f"{root}/_input_pairs")  # legacy warehouse
     from structured_data_entity_extraction_spark.materialize import StageStore
 
     with pytest.raises(RuntimeError, match="different input"):
-        run_codekg_pipeline(spark, mk(rows[20:]), root, run_id="x", use_lsh=False)
+        run_codekg_pipeline(spark, mk(rows[20:]), root, run_id="x")
     assert not StageStore(root).has_input_pairs()  # NOT poisoned
     # the matching input re-seeds the sidecar on resume
-    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r", use_lsh=False)
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
     assert all(s["resumed"] for s in m["stages"].values())
     assert StageStore(root).has_input_pairs()
 
@@ -420,7 +420,7 @@ def test_incremental_rebuild_checks_triples_invariant(spark, tmp_path, monkeypat
         REPOS_SRC,
     )
     root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     real_build = codekg.build_triples
     monkeypatch.setattr(
         codekg,
@@ -428,7 +428,7 @@ def test_incremental_rebuild_checks_triples_invariant(spark, tmp_path, monkeypat
         lambda *a: real_build(*a).withColumn("content_sha", F.lit("f" * 64)),
     )
     with pytest.raises(RuntimeError, match="invariant violated at stage triples"):
-        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i", use_lsh=False)
+        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
 
 
 def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
@@ -448,7 +448,7 @@ def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
         REPOS_SRC,
     )
     root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     shutil.rmtree(f"{root}/_input_pairs")
     store = StageStore(root)
     stages = ("mentions", "candidates", "edges", "nodes", "triples")
@@ -458,15 +458,15 @@ def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
 
     before = manifests()
     with pytest.raises(RuntimeError, match="sidecar"):
-        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i", use_lsh=False)
+        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
     assert not os.path.exists(store.pending_path())
     assert manifests() == before
     assert not store.has_input_pairs()
 
-    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r", use_lsh=False)
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
     assert all(s["resumed"] for s in m["stages"].values())
     assert store.has_input_pairs()
-    m_inc = run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i2", use_lsh=False)
+    m_inc = run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i2")
     assert m_inc["new_docs"] == 10
 
 
@@ -489,7 +489,7 @@ def test_torn_append_marker_blocks_resume(spark, tmp_path):
         REPOS_SRC,
     )
     root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     # simulate the torn state: marker present, no committed batch
     store = StageStore(root)
     with open(store.pending_path(), "w", encoding="utf-8") as fh:
@@ -502,7 +502,7 @@ def test_torn_append_marker_blocks_resume(spark, tmp_path):
         run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
     _os.remove(store.pending_path())
     # clean again: resume works
-    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r2", use_lsh=False)
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r2")
     assert all(s["resumed"] for s in m["stages"].values())
 
 
@@ -526,9 +526,9 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
         REPOS_SRC,
     )
     root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:60]), root, run_id="b", use_lsh=False)
-    run_codekg_pipeline_incremental(spark, mk(rows[60:90]), root, run_id="i1", use_lsh=False)
-    run_codekg_pipeline_incremental(spark, mk(rows[90:]), root, run_id="i2", use_lsh=False)
+    run_codekg_pipeline(spark, mk(rows[:60]), root, run_id="b")
+    run_codekg_pipeline_incremental(spark, mk(rows[60:90]), root, run_id="i1")
+    run_codekg_pipeline_incremental(spark, mk(rows[90:]), root, run_id="i2")
 
     def nfiles(stage):
         out = 0
@@ -547,7 +547,7 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
     assert before == after
     # manifest keeps rows + input identity: full run over the true union
     # still resumes, a grown input still refuses
-    m = run_codekg_pipeline(spark, mk(rows), root, run_id="r", use_lsh=False)
+    m = run_codekg_pipeline(spark, mk(rows), root, run_id="r")
     assert all(s["resumed"] for s in m["stages"].values())
     extra = spark.createDataFrame(
         [("orgx/zzz", "a.py", "e" * 40, "python", "import os")], REPOS_SRC
@@ -571,13 +571,13 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
         StageStore(root, run_id="c2").compact(spark, "candidates")
     monkeypatch.setattr(_os, "rename", real_rename)
     with pytest.raises(RuntimeError, match="TORN APPEND"):
-        run_codekg_pipeline(spark, mk(rows), root, run_id="r3", use_lsh=False)
+        run_codekg_pipeline(spark, mk(rows), root, run_id="r3")
 
 
 def test_determinism(spark, repos_df, tmp_path):
     """Same input twice -> identical triples (SURVEY.md §5 item 4)."""
-    a = run_codekg_pipeline(spark, repos_df, str(tmp_path / "w1"), use_lsh=False)
-    b = run_codekg_pipeline(spark, repos_df, str(tmp_path / "w2"), use_lsh=False)
+    a = run_codekg_pipeline(spark, repos_df, str(tmp_path / "w1"))
+    b = run_codekg_pipeline(spark, repos_df, str(tmp_path / "w2"))
     ta = spark.read.parquet(str(tmp_path / "w1" / "triples" / "data"))
     tb = spark.read.parquet(str(tmp_path / "w2" / "triples" / "data"))
     sa = sorted(map(tuple, ta.select("subj", "pred", "obj").collect()))
@@ -620,7 +620,7 @@ def test_pipeline_layout_derived_and_recorded(spark, repos_df, tmp_path, monkeyp
     from structured_data_entity_extraction_spark.ops.cache import cache_scope
 
     out = str(tmp_path / "w")
-    m = run_codekg_pipeline(spark, repos_df, out, use_lsh=False)
+    m = run_codekg_pipeline(spark, repos_df, out)
     small = {"bucket_count": 1, "write_salt": 1}
     assert m["layout"] == small
     store = StageStore(out)
@@ -660,12 +660,12 @@ def test_append_keeps_recorded_layout(spark, tmp_path, monkeypatch):
     total_bytes = sum(len(r["content"].encode()) for r in rows)
     inc_root, full_root = str(tmp_path / "inc"), str(tmp_path / "full")
     monkeypatch.setattr(pipeline, "LAYOUT_TARGET_BYTES", base_bytes // 8 + 1)
-    base = run_codekg_pipeline(spark, mk(rows[:100]), inc_root, run_id="b", use_lsh=False)
+    base = run_codekg_pipeline(spark, mk(rows[:100]), inc_root, run_id="b")
     assert base["layout"] == {"bucket_count": 8, "write_salt": 1}
     assert len(_stage_buckets(inc_root, "mentions")) > 1
 
     m_inc = pipeline.run_codekg_pipeline_incremental(
-        spark, mk(rows[100:]), inc_root, run_id="i", use_lsh=False
+        spark, mk(rows[100:]), inc_root, run_id="i"
     )
     grown = pipeline.derive_layout(total_bytes, 8)
     monkeypatch.undo()
@@ -682,7 +682,7 @@ def test_append_keeps_recorded_layout(spark, tmp_path, monkeypatch):
         F.col("repo_bucket") != F.pmod(F.xxhash64("repo"), F.lit(8))
     ).count() == 0
 
-    m_full = run_codekg_pipeline(spark, mk(rows), full_root, run_id="f", use_lsh=False)
+    m_full = run_codekg_pipeline(spark, mk(rows), full_root, run_id="f")
     assert m_full["layout"] == {"bucket_count": 1, "write_salt": 1}
     cols = ["subj", "pred", "obj", "doc_id", "repo", "lang", "content_sha", "conf"]
     got, want = (
@@ -705,14 +705,14 @@ def test_unrecorded_layout_resumes_and_appends_as_legacy(spark, tmp_path):
         REPOS_SRC,
     )
     root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b", use_lsh=False)
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     _strip_layout(root)
-    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r", use_lsh=False)
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
     assert all(s["resumed"] for s in m["stages"].values())
     assert m["layout"]["bucket_count"] == 64
 
     m_inc = pipeline.run_codekg_pipeline_incremental(
-        spark, mk(rows[20:]), root, run_id="i", use_lsh=False
+        spark, mk(rows[20:]), root, run_id="i"
     )
     assert m_inc["layout"] == pipeline.LEGACY_LAYOUT
     store = StageStore(root)
@@ -733,13 +733,13 @@ def test_resumed_stage_must_match_layout(spark, rows, tmp_path):
         [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows[:20]],
         REPOS_SRC,
     )
-    run_codekg_pipeline(spark, df, out, use_lsh=False)
+    run_codekg_pipeline(spark, df, out)
     store = StageStore(out)
     m = store.manifest("candidates")
     m["layout"] = {"bucket_count": 64, "write_salt": 8}
     store._publish("candidates", m)
     with pytest.raises(RuntimeError, match="stage 'candidates' was written with 64 repo buckets"):
-        run_codekg_pipeline(spark, df, out, run_id="r", use_lsh=False)
+        run_codekg_pipeline(spark, df, out, run_id="r")
 
 
 def _cache_empty(spark) -> bool:
@@ -752,10 +752,10 @@ def _persisted_rdds(spark) -> int:
 
 
 def test_pipeline_releases_what_it_persists(spark, rows, tmp_path, monkeypatch):
-    """A run leaves the session's cache as it found it: a clean run
-    (LSH on), a run aborted by the sha invariant, a refused
-    overlapping append, an avaluo run, and a cache_scope around the
-    in-memory avaluo records -> triples chain."""
+    """A run leaves the session's cache as it found it: a clean run, a
+    run aborted by the sha invariant, a refused overlapping append, an
+    avaluo run, and a cache_scope around the in-memory avaluo records
+    -> triples chain."""
     from structured_data_entity_extraction_spark.fixtures import avaluo_docs
     from structured_data_entity_extraction_spark.link import avaluo_records
     from structured_data_entity_extraction_spark.ops.cache import cache_scope
@@ -772,7 +772,7 @@ def test_pipeline_releases_what_it_persists(spark, rows, tmp_path, monkeypatch):
     )
     root = str(tmp_path / "w")
     spark.catalog.clearCache()
-    run_codekg_pipeline(spark, df, root, use_lsh=True)
+    run_codekg_pipeline(spark, df, root)
     assert _cache_empty(spark)
 
     with pytest.raises(RuntimeError, match="append-only"):
@@ -788,7 +788,7 @@ def test_pipeline_releases_what_it_persists(spark, rows, tmp_path, monkeypatch):
         ),
     )
     with pytest.raises(RuntimeError, match="invariant violated"):
-        run_codekg_pipeline(spark, df, str(tmp_path / "w2"), use_lsh=True)
+        run_codekg_pipeline(spark, df, str(tmp_path / "w2"))
     assert _cache_empty(spark)
 
     docs = spark.createDataFrame(
@@ -835,9 +835,7 @@ def test_lsh_links_near_aliases(spark):
     ]
     df = spark.createDataFrame(rows, REPOS_SRC)
     mentions = codekg.extract_code_mentions(df)
-    cands = codekg.link_mentions(
-        mentions, codekg.code_alias_dim(spark), lsh_threshold=0.4
-    )
+    cands = codekg.link_mentions(mentions, codekg.code_alias_dim(spark))
     got = {
         r["value"]: (r["canonical"], r["method"])
         for r in cands.filter(F.col("field") == "import").collect()
@@ -845,6 +843,15 @@ def test_lsh_links_near_aliases(spark):
     assert got["numpyy"][0] == "numpy"
     assert got["numpyy"][1] == "lsh"
     assert got["totallyunknownmod"][0] is None
+
+
+def test_build_kg_refuses_dictionary_only_linking(spark):
+    """codekg has one linking configuration, the dictionary join plus
+    the MinHash-LSH fuzzy link: build_kg refuses use_lsh=False instead
+    of silently running the LSH link anyway."""
+    df = spark.createDataFrame([], REPOS_SRC)
+    with pytest.raises(ValueError, match="use_lsh=False"):
+        codekg.build_kg(df, use_lsh=False)
 
 
 def test_repos_fixture_parquet_matches_generator():
@@ -968,7 +975,7 @@ def test_make_codekg_golden_reproduces_committed(tmp_path, monkeypatch):
 
 
 def test_lsh_recall_holds_across_alias_lengths(spark):
-    """Property gate (VERDICT r3 #10): lsh_threshold=0.5 with r=1/b=16
+    """Property gate (VERDICT r3 #10): LSH_THRESHOLD 0.5 with r=1/b=16
     banding is tuned for short import strings; a future dim change must
     not silently gut fuzzy recall as aliases grow. Plant 8 aliases per
     length 10..40, mutate one interior char each, and require >= 0.95
@@ -1007,7 +1014,7 @@ def test_lsh_recall_holds_across_alias_lengths(spark):
     )
     got = {
         r["value"]: (r["lsh_canonical"], r["lsh_score"])
-        for r in codekg.lsh_alias_map(values, dim, threshold=0.5).collect()
+        for r in codekg.lsh_alias_map(values, dim).collect()
     }
     want = _lsh_best_match({v for v, _c, _l in probes} | set(tie_probes), dim_rows)
     assert got == want
@@ -1140,7 +1147,7 @@ def test_empty_content_doc_does_not_abort(spark, tmp_path):
         ("o/r", "real.py", "e" * 40, "python", "import numpy\ndef load_data(x):\n    return x"),
     ]
     df = spark.createDataFrame(rows, REPOS_SRC)
-    m = run_codekg_pipeline(spark, df, str(tmp_path / "w"), use_lsh=False)
+    m = run_codekg_pipeline(spark, df, str(tmp_path / "w"))
     assert m["triples"] > 0
     assert m["stages"]["mentions"]["sha_invariant_ok"] is True
     assert m["stages"]["mentions"]["docs_dropped"] == 2

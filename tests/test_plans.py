@@ -103,7 +103,7 @@ def test_link_mentions_plan_has_no_pyspark_ml(spark):
     )
     alias_dim = codekg.code_alias_dim(spark)
     mentions = codekg.extract_code_mentions(df)
-    cands = codekg.link_mentions(mentions, alias_dim, use_lsh=True)
+    cands = codekg.link_mentions(mentions, alias_dim)
     triples = codekg.build_triples(cands, codekg.canonicalize(cands, alias_dim))
     for stage, frame in (("extract", mentions), ("link", cands), ("triples", triples)):
         assert "EvalPython" not in _plan(frame), stage
@@ -131,7 +131,7 @@ def test_pipeline_plans_have_no_python_rdd_scan(spark):
         REPOS_SRC,
     )
     alias_dim = codekg.code_alias_dim(spark)
-    cands = codekg.link_mentions(codekg.extract_code_mentions(df), alias_dim, use_lsh=True)
+    cands = codekg.link_mentions(codekg.extract_code_mentions(df), alias_dim)
     edges = codekg.link_edges(cands, alias_dim)
     nodes = codekg.canonicalize(cands, alias_dim, edges)
     extracted = spark.range(1).select(
@@ -295,3 +295,16 @@ def test_ann_plans_hold_codebooks_as_data(spark):
     for name in ("ann_lsh_topk", "ann_ivf_topk", "ann_ivf_codebook_topk", "ann_ivf_pq_topk"):
         plan = qs[name](spark, SF)._jdf.queryExecution().optimizedPlan().toString()
         assert len(plan) < 16 * 1024, (name, len(plan))
+
+
+def test_ivf_plans_assign_each_corpus_cell_once(spark):
+    """The corpus-side centroid argmax of ivf_topk and ivf_pq_topk runs
+    once per row: Catalyst must not infer an isnotnull filter on the
+    ``cell`` join key, which it would push below the projection as a
+    second copy of the argmax."""
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    for name in ("ann_ivf_topk", "ann_ivf_codebook_topk", "ann_ivf_pq_topk"):
+        plan = qs[name](spark, SF)._jdf.queryExecution().optimizedPlan().toString()
+        assert "isnotnull(slice(array_sort(" not in plan, name

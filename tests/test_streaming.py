@@ -355,8 +355,8 @@ def test_stream_post_commit_pre_sidecar_abort_self_heals(spark, tmp_path, monkey
     outside any marker. The fix keys the stream dispatch on the sidecar
     itself: a redelivered batch that finds both stages committed but NO
     sidecar must re-enter the BOOTSTRAP path (resume under the identity
-    guard, rebuild the sidecar), not the append path whose
-    mentions-derived fallback drops zero-mention docs."""
+    guard, rebuild the sidecar), not the append path, which refuses a
+    warehouse without the sidecar."""
     import pyspark.errors
 
     from structured_data_entity_extraction_spark import pipeline as pl

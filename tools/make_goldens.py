@@ -8,7 +8,7 @@ oracle hash-check the two flagship KG queries (VERDICT.md next-round #1).
   Independent of every Spark code path.
 
 - ``codekg_triples.parquet`` -- the expected output of
-  ``q_codekg_triples`` (repos_src_rows(400, seed=42), use_lsh=True),
+  ``q_codekg_triples`` (repos_src_rows(400, seed=42)),
   computed by a pure-Python single-process twin of the pipeline:
   Python ``re`` extraction over codekg's pattern tables (``extract_code``,
   the independent twin of the engine's JVM regex projection), dict
@@ -158,17 +158,14 @@ def extract_code(content: str | None, lang: str | None) -> list[tuple[str, str]]
 
 
 def _lsh_best_match(
-    miss_values: set[str],
-    alias_rows: list[tuple[str, str]],
-    threshold: float = 0.5,
-    num_hashes: int = 16,
+    miss_values: set[str], dim_rows: list[tuple[str, str]]
 ) -> dict[str, tuple[str, float]]:
     """Pure-Python twin of codekg.lsh_alias_map: md5 minhash signatures
-    (r=1 banding: candidate iff ANY of the 16 minhashes agrees), exact
-    char-3-gram-SET jaccard rerank >= threshold, best per value with
-    (jaccard desc, canonical asc, alias asc) tiebreak. Bit-identical to
-    the Spark path: same md5-on-utf8 hashing, same int/int IEEE
-    division."""
+    (r=1 banding: candidate iff ANY of the codekg.LSH_HASHES minhashes
+    agrees), exact char-3-gram-SET jaccard rerank >= codekg.LSH_THRESHOLD,
+    best per value with (jaccard desc, canonical asc, alias asc)
+    tiebreak. Bit-identical to the Spark path: same md5-on-utf8 hashing,
+    same int/int IEEE division."""
 
     def grams(s: str) -> list[str]:
         return codekg._char_ngrams(s)
@@ -178,20 +175,20 @@ def _lsh_best_match(
             min(
                 hashlib.md5(f"{i}:{g}".encode()).hexdigest()[:16] for g in gs
             )
-            for i in range(num_hashes)
+            for i in range(codekg.LSH_HASHES)
         ]
 
-    dim = [(a, c, set(grams(a)), sig(grams(a))) for a, c in alias_rows]
+    dim = [(a, c, set(grams(a)), sig(grams(a))) for a, c in dim_rows]
     best: dict[str, tuple[str, float]] = {}
     for v in miss_values:
         vg = grams(v)
         vset, vsig = set(vg), sig(vg)
         cands = []
         for alias, canonical, aset, asig in dim:
-            if not any(vsig[i] == asig[i] for i in range(num_hashes)):
+            if not any(vsig[i] == asig[i] for i in range(codekg.LSH_HASHES)):
                 continue  # no band collision -> never a candidate
             jac = len(vset & aset) / len(vset | aset)
-            if jac >= threshold:
+            if jac >= codekg.LSH_THRESHOLD:
                 cands.append((-jac, canonical, alias))
         if cands:
             neg_jac, canonical, _alias = min(cands)
@@ -200,12 +197,12 @@ def _lsh_best_match(
 
 
 def make_codekg_golden() -> None:
-    """Twin of q_codekg_triples with use_lsh=True: dict linking +
-    native-MinHash-LSH fuzzy linking + union-find canonicalization +
-    (doc, pred, obj) max-conf dedup, all without Spark."""
+    """Twin of q_codekg_triples: dict linking + native-MinHash-LSH
+    fuzzy linking + union-find canonicalization + (doc, pred, obj)
+    max-conf dedup, all without Spark."""
     src = repos_src_rows(400, seed=42)
-    alias_rows = codekg.default_code_alias_rows()
-    alias_map = dict(alias_rows)
+    dim_rows = codekg.default_code_alias_rows()
+    alias_map = dict(dim_rows)
 
     # pass 1: extract all mentions, collect the LSH input = distinct
     # import-field values missing from the dict with len >= 2
@@ -217,7 +214,7 @@ def make_codekg_golden() -> None:
         for field, v in mentions:
             if field == "import" and v not in alias_map and len(v) >= 2:
                 miss_values.add(v)
-    lsh_best = _lsh_best_match(miss_values, alias_rows)
+    lsh_best = _lsh_best_match(miss_values, dim_rows)
 
     # union-find over dim edges + lsh edges (value -> matched canonical);
     # mirrors canonicalize(): candidates with canonical NOT NULL are
@@ -233,13 +230,13 @@ def make_codekg_golden() -> None:
             parent[x], x = root, parent[x]
         return root
 
-    for a, c in list(alias_rows) + [(v, c) for v, (c, _j) in lsh_best.items()]:
+    for a, c in list(dim_rows) + [(v, c) for v, (c, _j) in lsh_best.items()]:
         ra, rc = find(a), find(c)
         if ra != rc:
             parent[max(ra, rc)] = min(ra, rc)
     # canonical per component: min dim canonical present, else component id
     comp_canon: dict = {}
-    for _, c in alias_rows:
+    for _, c in dim_rows:
         root = find(c)
         comp_canon[root] = min(comp_canon.get(root, c), c)
     node_canonical = {n: comp_canon.get(find(n), find(n)) for n in parent}

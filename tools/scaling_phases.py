@@ -89,9 +89,7 @@ def run_phases(cores: int, mult: int, content_scale: int) -> dict:
     # canonicalize's eager CC actions would otherwise force this work
     # OUTSIDE any timer)
     alias = codekg.code_alias_dim(spark)
-    cands = codekg.link_mentions(mentions, alias, use_lsh=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    cands = codekg.link_mentions(mentions, alias).persist(StorageLevel.MEMORY_AND_DISK)
     timed("codekg_link", lambda: cands.count())
 
     # E: codekg canonicalize + triples -- CC (driver fast path) + the
