@@ -22,6 +22,11 @@ its observed count fails before the manifest is written.
 
 A stage directory without _MANIFEST.json is an aborted write and is
 re-run; with it, the stage is skipped and its data re-read.
+
+The warehouse's input-identity sidecar (``INPUT_PAIRS``, the exact
+(doc_id, content_sha) set of every ingested document) is one more such
+stage: written, appended, read, compacted and resumed through the same
+manifest commit and input-identity guard as the data stages.
 """
 
 from __future__ import annotations
@@ -42,6 +47,10 @@ from .session import local_frame
 
 # the namespace of the stage tables on the ``iceberg_catalog`` route
 ICEBERG_NAMESPACE = "structured_data_entity_extraction"
+# the stage holding the warehouse's input (doc_id, content_sha) pairs
+INPUT_PAIRS = "_input_pairs"
+# the file size ``StageStore.compact`` rewrites a stage into (MiB)
+COMPACT_TARGET_FILE_MB = 128
 
 
 def _sha_fold_col():
@@ -164,8 +173,8 @@ class StageStore:
     # and every later run_stage/append REFUSES with the recovery path
     # (the stage data no longer matches its manifest identity, so the
     # only safe recovery is rebuilding the appended stages). The Iceberg
-    # route commits snapshots atomically but shares the marker so the
-    # input-pairs sidecar stays transactionally consistent with it.
+    # route commits snapshots atomically but shares the marker so one
+    # batch's stages (the INPUT_PAIRS stage among them) commit together.
 
     def pending_path(self) -> str:
         return os.path.join(self.root, "_PENDING_APPEND.json")
@@ -206,38 +215,15 @@ class StageStore:
         if os.path.exists(self.pending_path()):
             os.remove(self.pending_path())
 
-    # ------------------------------------------- input-identity sidecar
-    #
-    # The warehouse's exact input identity SET: distinct
-    # (doc_id, content_sha) pairs of every document ever ingested (the
-    # bootstrap writes it, appends extend it, an append refuses a
-    # warehouse without it). The append-only overlap guard joins
-    # against THIS, not against extracted mentions -- a zero-mention
-    # doc (empty/comment-only content) has no mentions row but is still
-    # part of the input identity, and re-appending it must be refused
-    # or the additive digest double-counts.
-
-    def input_pairs_dir(self) -> str:
-        return os.path.join(self.root, "_input_pairs")
-
-    def has_input_pairs(self) -> bool:
-        return os.path.exists(os.path.join(self.input_pairs_dir(), "_SUCCESS"))
-
-    def write_input_pairs(self, pairs: DataFrame) -> None:
-        pairs.select("doc_id", "content_sha").write.mode("overwrite").parquet(
-            self.input_pairs_dir()
-        )
-
-    def append_input_pairs(self, pairs: DataFrame) -> None:
-        pairs.select("doc_id", "content_sha").write.mode("append").parquet(
-            self.input_pairs_dir()
-        )
-
-    def read_input_pairs(self, spark: SparkSession) -> DataFrame:
-        # the fixed schema spares the read a footer-sampling job
-        return spark.read.schema("doc_id string, content_sha string").parquet(
-            self.input_pairs_dir()
-        )
+    def write_input_pairs(self, pairs: DataFrame) -> DataFrame:
+        """Build or resume the ``INPUT_PAIRS`` stage from the input's
+        (doc_id, content_sha) pairs, under the identity guard of
+        ``run_stage``. The append-only overlap guard joins new batches
+        against this stage, not against the extracted mentions: a
+        zero-mention doc (empty/comment-only content) has no mentions
+        row but is still input, and re-appending it must be refused or
+        the additive digest double-counts."""
+        return self.run_stage(pairs.sparkSession, INPUT_PAIRS, lambda: pairs)
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         if self.iceberg_catalog:
@@ -421,14 +407,10 @@ class StageStore:
             self.end_append()
         return persisted
 
-    def compact(
-        self,
-        spark: SparkSession,
-        stage: str,
-        target_file_mb: int = 128,
-    ) -> dict:
+    def compact(self, spark: SparkSession, stage: str) -> dict:
         """Warehouse maintenance: rewrite a stage's accumulated
-        append/micro-batch files into sized files (a long-lived streamed
+        append/micro-batch files into files of about
+        ``COMPACT_TARGET_FILE_MB`` (a long-lived streamed
         corpus otherwise ends as thousands of tiny parquet files per
         stage -- VERDICT r5 'What's missing' #3). Read-equivalent by
         construction and VERIFIED before the swap: the rewrite's observed
@@ -458,7 +440,7 @@ class StageStore:
                 f"CALL {self.iceberg_catalog}.system.rewrite_data_files"
                 f"(table => '{ICEBERG_NAMESPACE}.{stage}', "
                 f"options => map('target-file-size-bytes', "
-                f"'{int(target_file_mb) * (1 << 20)}'))"
+                f"'{COMPACT_TARGET_FILE_MB << 20}'))"
             )
             return {"stage": stage, "route": "iceberg_rewrite_data_files"}
         old = self.manifest(stage)
@@ -474,7 +456,7 @@ class StageStore:
         # size the rewrite from the stage's own bytes-per-row: N output
         # tasks bounded by total size, plus maxRecordsPerFile so one hot
         # (bucket, lang) value cannot become a single giant file
-        target_bytes = target_file_mb * (1 << 20)
+        target_bytes = COMPACT_TARGET_FILE_MB << 20
         n_files = max(1, -(-total_bytes // target_bytes))
         max_records = max(1, int(target_bytes / max(total_bytes / max(rows, 1), 1)))
         df = self.read(spark, stage)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from . import codekg
 from .link import avaluo_records, dim_frames
-from .materialize import StageStore, doc_sha_identity, sha_invariant_report
+from .materialize import INPUT_PAIRS, StageStore, doc_sha_identity, sha_invariant_report
 from .ops.cache import cache_scope, persist_tracked
 from .triples import records_to_triples
 
@@ -118,7 +118,7 @@ class StageCommits:
         self.spark, self.store, self.metrics = spark, store, metrics
         self.pairs, self.n_input = pairs, n_input
 
-    def run(self, stage: str, build, partition_by=None, check: bool = True) -> DataFrame:
+    def run(self, stage: str, build, partition_by=None) -> DataFrame:
         t0 = time.time()
         df = self.store.run_stage(self.spark, stage, build, partition_by)
         self.metrics["stages"][stage] = {
@@ -135,8 +135,7 @@ class StageCommits:
                     f"{self.store.layout['bucket_count']}: delete this stage "
                     "and the stages after it to rebuild them"
                 )
-        if check:
-            self.check(stage, df)
+        self.check(stage, df)
         return df
 
     def append(self, stage: str, df: DataFrame, partition_by=None) -> None:
@@ -170,27 +169,24 @@ def _bootstrap(
     repos_src: DataFrame,
     alias_dim: DataFrame,
 ) -> tuple[StageCommits, DataFrame]:
-    """Build or resume mentions and candidates from ``repos_src`` and
-    write the warehouse's input-identity sidecar: the first half of a
-    full run and the first batch of a stream. Returns the commits
-    (holding the metrics) and the candidates.
+    """Build or resume mentions, candidates and the warehouse's
+    input-identity sidecar from ``repos_src``: the first half of a full
+    run and the first batch of a stream. Returns the commits (holding
+    the metrics) and the candidates.
 
     The input identity is stamped on the store first: run_stage resumes
-    a stage only when the warehouse was built from THIS input. Both
-    stages face the sha invariant once both are committed.
+    a stage only when the warehouse was built from THIS input. Each
+    stage faces the sha invariant right after its commit.
 
-    The sidecar (``_input_pairs``) is the exact (doc_id, content_sha)
-    set the warehouse holds; the append-only overlap guard joins new
-    batches against it, since a zero-mention doc has no mentions row
-    but is input. It is written last and only when missing. By then
-    run_stage has built both stages from this input or resumed them
-    under the identity guard, so a run refused over a different input
-    never writes it. A crash anywhere before it (between the commits
-    or in the invariant jobs) leaves a warehouse without a sidecar:
-    ``append_repos_batch`` refuses it, the stream dispatch re-enters
-    this bootstrap, and a run over the same input resumes both stages
-    and writes the sidecar. The marker around the write makes a crash
-    mid-write a refusing torn append."""
+    The sidecar (the ``INPUT_PAIRS`` stage) is the exact
+    (doc_id, content_sha) set the warehouse holds; the append-only
+    overlap guard joins new batches against it, since a zero-mention
+    doc has no mentions row but is input. It is committed last, like
+    any stage: built, or resumed under the identity guard, so a sidecar
+    built from another input refuses. A crash anywhere before its
+    commit leaves a warehouse without a sidecar: ``append_repos_batch``
+    refuses it, the stream dispatch re-enters this bootstrap, and a run
+    over the same input resumes both stages and writes the sidecar."""
     pairs, digest, n_input, content_bytes = input_identity(repos_src)
     store.input_digest, store.input_docs = digest, n_input
     store.input_bytes = content_bytes
@@ -206,20 +202,13 @@ def _bootstrap(
         "mentions",
         lambda: codekg.extract_code_mentions(repos_src, store.layout["bucket_count"]),
         PARTITION_BY,
-        check=False,
     )
     candidates = commits.run(
         "candidates",
         lambda: codekg.link_mentions(mentions, alias_dim),
         PARTITION_BY,
-        check=False,
     )
-    for stage, df in (("mentions", mentions), ("candidates", candidates)):
-        commits.check(stage, df)
-    if not store.has_input_pairs():
-        store.begin_append(["_input_pairs"])
-        store.write_input_pairs(pairs)
-        store.end_append()
+    store.write_input_pairs(pairs)
     return commits, candidates
 
 
@@ -283,8 +272,8 @@ def ingest_repos_batch(
     """Land ONE batch of documents in a warehouse -- the streaming
     foreachBatch sink. Until mentions, candidates and the
     input-identity sidecar are all committed, a batch takes the
-    bootstrap (``_bootstrap``: build or resume both stages, then the
-    sidecar); after that, the append-only path
+    bootstrap (``_bootstrap``: build or resume the three stages); after
+    that, the append-only path
     (``append_repos_batch``). Corpus-global stages
     (edges/nodes/triples) are NOT built per batch -- canonicalization
     is corpus-global, so a batch "finalize" ``run_codekg_pipeline``
@@ -293,13 +282,9 @@ def ingest_repos_batch(
 
     Idempotent under at-least-once delivery: a redelivered batch whose
     docs ALL already sit in the warehouse is a no-op (``replay_ok``),
-    and a bootstrap that crashed before the sidecar re-enters the
-    bootstrap on redelivery and completes it."""
-    if (
-        store.is_complete("mentions")
-        and store.is_complete("candidates")
-        and store.has_input_pairs()
-    ):
+    and a bootstrap that crashed before the sidecar's commit re-enters
+    the bootstrap on redelivery and completes it."""
+    if all(store.is_complete(st) for st in ("mentions", "candidates", INPUT_PAIRS)):
         return append_repos_batch(spark, store, repos_src_batch, replay_ok=True)
     commits, _candidates = _bootstrap(spark, store, repos_src_batch, codekg.code_alias_dim(spark))
     commits.metrics.update(mode="bootstrap", new_docs=commits.n_input)
@@ -315,10 +300,10 @@ def append_repos_batch(
 ) -> dict:
     """Append ONE batch of new documents to a committed warehouse --
     the shared core of incremental batch ingest and the streaming
-    foreachBatch sink. Extracts + links ONLY the batch, appends to the
-    mentions/candidates stages inside one torn-append marker window,
-    extends the input-identity sidecar, folds the additive digest into
-    the manifests, and invalidates the corpus-global stages
+    foreachBatch sink. Extracts + links ONLY the batch, appends it to
+    the mentions, candidates and input-identity sidecar stages inside
+    one torn-append marker window, folds the additive digest into their
+    manifests, and invalidates the corpus-global stages
     (edges/nodes/triples) whose old checkpoints describe the
     pre-append corpus. Rebuilding them is the caller's choice: the
     incremental CLI rebuilds immediately; the streaming sink leaves
@@ -326,10 +311,12 @@ def append_repos_batch(
     mentions/candidates and rebuilds only the global stages.
 
     Overlap guard: new doc_ids are checked against the warehouse's
-    input-identity sidecar (``_bootstrap``); a warehouse without one
-    refuses before writing anything. The batch is written with the
-    bucket count recorded in the mentions manifest; the write salt is
-    re-derived for the grown corpus (``_layout_for``)."""
+    input-identity sidecar (``_bootstrap``). A warehouse without a
+    committed sidecar, or whose candidates or sidecar manifest records
+    another input than mentions', refuses before writing anything. The
+    batch is written with the bucket count recorded in the mentions
+    manifest; the write salt is re-derived for the grown corpus
+    (``_layout_for``)."""
     for st in ("mentions", "candidates"):
         if not store.is_complete(st):
             raise RuntimeError(
@@ -337,7 +324,7 @@ def append_repos_batch(
                 "run the full pipeline first"
             )
     store.check_no_pending()
-    if not store.has_input_pairs():
+    if not store.is_complete(INPUT_PAIRS):
         raise RuntimeError(
             f"warehouse {store.root} has no input-identity sidecar "
             "(_input_pairs) to guard the append: re-run the full pipeline "
@@ -351,9 +338,21 @@ def append_repos_batch(
             "warehouse predates input-identity manifests; re-run the full "
             "pipeline once to stamp them before appending"
         )
+    for st in ("candidates", INPUT_PAIRS):
+        m = store.manifest(st)
+        if (m.get("input_sha_digest"), m.get("input_docs")) != (old_digest, old_docs):
+            raise RuntimeError(
+                f"stage '{st}' of warehouse {store.root} was built from a "
+                f"different input (manifest digest {m.get('input_sha_digest')}/"
+                f"{m.get('input_docs')} docs) than its mentions stage "
+                f"({old_digest}/{old_docs} docs): the append guard cannot "
+                "trust it. Use a fresh --output warehouse, or delete the "
+                "stage directories and re-run the full pipeline over the "
+                "warehouse's input."
+            )
 
     new_pairs, new_digest, n_new, new_bytes = input_identity(repos_src_new)
-    existing = store.read_input_pairs(spark)
+    existing = store.read(spark, INPUT_PAIRS)
     n_overlap = new_pairs.join(existing.select("doc_id"), "doc_id", "left_semi").count()
     if n_overlap:
         # replay-noop requires the EXACT (doc_id, content_sha) pair set:
@@ -411,10 +410,10 @@ def append_repos_batch(
         codekg.extract_code_mentions(repos_src_new, store.layout["bucket_count"])
     )
     candidates_new = persist_tracked(codekg.link_mentions(mentions_new, alias_dim))
-    store.begin_append(["mentions", "candidates", "_input_pairs"])
+    store.begin_append(["mentions", "candidates", INPUT_PAIRS])
     for stage, df in (("mentions", mentions_new), ("candidates", candidates_new)):
         commits.append(stage, df, PARTITION_BY)
-    store.append_input_pairs(new_pairs)
+    store.append(new_pairs, INPUT_PAIRS)
     # the global stages describe the pre-append corpus; drop their
     # checkpoints inside the marker window so a crash here still
     # surfaces as a torn append rather than stale globals
@@ -453,7 +452,7 @@ def run_codekg_pipeline_incremental(
     input."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
     metrics = append_repos_batch(spark, store, repos_src_new)
-    pairs = store.read_input_pairs(spark)
+    pairs = store.read(spark, INPUT_PAIRS)
     commits = StageCommits(spark, store, metrics, pairs, store.input_docs)
     _global_stages(commits, store.read(spark, "candidates"), codekg.code_alias_dim(spark))
     for stage in ("edges", "nodes", "triples"):
@@ -546,13 +545,10 @@ def main(argv=None) -> None:
     )
     ap.add_argument(
         "--compact", default=None, metavar="STAGES",
-        help="maintenance: compact the comma-separated stages (or 'all') "
-        "of an existing --output warehouse into sized files and exit "
-        "(verified read-equivalent; torn-compact marker on crash)",
-    )
-    ap.add_argument(
-        "--target-file-mb", type=int, default=128,
-        help="compaction target file size (MiB)",
+        help="maintenance: compact the comma-separated stages (or 'all': "
+        "every committed stage, the _input_pairs sidecar included) of an "
+        "existing --output warehouse into sized files and exit (verified "
+        "read-equivalent; torn-compact marker on crash)",
     )
     args = ap.parse_args(argv)
     if args.input is None and not args.compact:
@@ -561,33 +557,22 @@ def main(argv=None) -> None:
     spark = get_spark(f"structured-data-entity-extraction-{args.pipeline}")
     t0 = time.time()
     if args.compact:
-        from .materialize import StageStore
-
         store = StageStore(
             args.output, run_id=args.run_id, iceberg_catalog=args.iceberg_catalog
         )
         stages = (
-            [
-                st
-                for st in ("mentions", "candidates", "edges", "nodes",
-                           "triples", "records")
-                if store.is_complete(st)
-            ]
+            sorted(st for st in os.listdir(args.output) if store.is_complete(st))
             if args.compact == "all"
             else args.compact.split(",")
         )
         metrics = {
             "mode": "compact",
-            "stages": {
-                st: store.compact(spark, st, target_file_mb=args.target_file_mb)
-                for st in stages
-            },
+            "stages": {st: store.compact(spark, st) for st in stages},
             "total_wall_s": round(time.time() - t0, 3),
         }
         print(json.dumps(metrics))
         return
     if args.stream:
-        from .materialize import StageStore
         from .streaming import stream_repos_src
 
         ckpt = args.checkpoint or os.path.join(args.output, "_stream_ckpt")

@@ -5,12 +5,12 @@ this is that natural extension, built).
 ``stream_repos_src`` ingests new repos_src parquet files as they land
 (the "new commits" feed) and lands each micro-batch in the StageStore
 warehouse through ``foreachBatch`` and ``pipeline.ingest_repos_batch``:
-the first batch takes the codekg bootstrap (mentions, candidates, then
-the input-identity sidecar), every later one the append path of
-``--append``. Streamed documents get the same checkpoints, sha
-invariant, additive input digest and append-only overlap guard as
-batch ones; ``availableNow`` triggers make it testable (and
-backfill-able) without a long-running query.
+the first batch takes the codekg bootstrap (the mentions, candidates
+and input-identity sidecar stages, each committed by its manifest),
+every later one the append path of ``--append``. Streamed documents
+get the same checkpoints, sha invariant, additive input digest and
+append-only overlap guard as batch ones; ``availableNow`` triggers
+make it testable (and backfill-able) without a long-running query.
 
 Corpus-global stages (edges/nodes/triples) are not rebuilt per
 micro-batch -- canonicalization is corpus-global, so each append

@@ -152,7 +152,7 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
     # the manifest's observed rows and sha fold match a fresh scan
     store = StageStore(out, run_id="r1")
     fold = F.conv(F.substring("content_sha", 1, 16), 16, 10).cast("decimal(20,0)")
-    for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
+    for stage in ("mentions", "candidates", "edges", "nodes", "triples", "_input_pairs"):
         m = store.manifest(stage)
         lin = store.lineage(spark, stage)
         total = lin.agg(F.sum("rows")).collect()[0][0]
@@ -173,6 +173,9 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
             assert (m["rows"], m["content_sha_sum"]) == (rows, str(sha))
         else:
             assert (m["rows"], m["content_sha_sum"]) == (scan.count(), None)
+    # the sidecar holds exactly the input identity the stages record
+    pm, mm = store.manifest("_input_pairs"), store.manifest("mentions")
+    assert (pm["rows"], pm["content_sha_sum"]) == (mm["input_docs"], mm["input_sha_digest"])
 
     # kill-after-stage simulation: drop 'triples' commit, resume under a
     # new run_id -> earlier stages are skipped (resumed), output identical
@@ -221,6 +224,8 @@ def test_sha_invariant_catches_foreign_pair(spark, rows, tmp_path, monkeypatch):
     monkeypatch.setattr(codekg, "extract_code_mentions", planted)
     with pytest.raises(RuntimeError, match="invariant violated at stage mentions: 1 "):
         run_codekg_pipeline(spark, df, str(tmp_path / "w"))
+    # the check runs right after the mentions commit, before candidates
+    assert not StageStore(str(tmp_path / "w")).is_complete("candidates")
 
 
 def test_resume_refuses_changed_input(spark, repos_df, tmp_path):
@@ -375,7 +380,7 @@ def test_ingest_batch_replay_and_partial_bootstrap(spark, tmp_path):
     m_heal = ingest_repos_batch(spark, StageStore(root2, run_id="c1"), mk(rows[:40]))
     assert m_heal["mode"] == "bootstrap"
     st2 = StageStore(root2)
-    assert st2.is_complete("candidates") and st2.has_input_pairs()
+    assert st2.is_complete("candidates") and st2.is_complete("_input_pairs")
     # and the healed warehouse accepts a fresh append
     m2 = ingest_repos_batch(spark, StageStore(root2, run_id="c2"), mk(rows[40:]))
     assert m2["mode"] == "incremental"
@@ -399,11 +404,11 @@ def test_full_run_refusal_does_not_poison_legacy_sidecar(spark, tmp_path):
 
     with pytest.raises(RuntimeError, match="different input"):
         run_codekg_pipeline(spark, mk(rows[20:]), root, run_id="x")
-    assert not StageStore(root).has_input_pairs()  # NOT poisoned
+    assert not StageStore(root).is_complete("_input_pairs")  # NOT poisoned
     # the matching input re-seeds the sidecar on resume
     m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
     assert all(s["resumed"] for s in m["stages"].values())
-    assert StageStore(root).has_input_pairs()
+    assert StageStore(root).is_complete("_input_pairs")
 
 
 def test_incremental_rebuild_checks_triples_invariant(spark, tmp_path, monkeypatch):
@@ -461,13 +466,80 @@ def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
         run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
     assert not os.path.exists(store.pending_path())
     assert manifests() == before
-    assert not store.has_input_pairs()
+    assert not store.is_complete("_input_pairs")
 
     m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
     assert all(s["resumed"] for s in m["stages"].values())
-    assert store.has_input_pairs()
+    assert store.is_complete("_input_pairs")
     m_inc = run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i2")
     assert m_inc["new_docs"] == 10
+
+
+def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
+    """The sidecar resumes under the identity guard like any stage: a
+    warehouse built over docs 0-19 whose data-stage manifests are
+    deleted refuses a rebuild over docs 20-39 at the sidecar, and the
+    append guard then refuses a batch overlapping the sidecar's docs
+    because the sidecar and mentions record different inputs, leaving
+    every manifest as it was."""
+    from structured_data_entity_extraction_spark.pipeline import ingest_repos_batch
+
+    rows = repos_src_rows(60, seed=3)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="a")
+    with pytest.raises(RuntimeError, match="different input"):
+        run_codekg_pipeline(spark, mk(rows[20:40]), root, run_id="b")
+    store = StageStore(root)
+    for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
+        os.remove(store.manifest_path(stage))
+    with pytest.raises(RuntimeError, match="stage '_input_pairs' .* different input"):
+        run_codekg_pipeline(spark, mk(rows[20:40]), root, run_id="b2")
+
+    def manifests():
+        return {
+            os.path.join(r, f): open(os.path.join(r, f), encoding="utf-8").read()
+            for r, _d, fs in os.walk(root)
+            for f in fs
+            if f == "_MANIFEST.json"
+        }
+
+    before = manifests()
+    with pytest.raises(RuntimeError, match="'_input_pairs' .* different input"):
+        ingest_repos_batch(spark, StageStore(root, run_id="c"), mk(rows[30:50]))
+    assert manifests() == before
+    assert not os.path.exists(store.pending_path())
+
+
+def test_manifestless_sidecar_reads_as_aborted(spark, tmp_path):
+    """A sidecar directory without a manifest (an aborted write, or one
+    written before the sidecar was a committed stage) is no sidecar: an
+    append refuses it, and a full run over the warehouse's input
+    resumes every stage and rewrites it."""
+    from structured_data_entity_extraction_spark.pipeline import (
+        run_codekg_pipeline_incremental,
+    )
+
+    rows = repos_src_rows(30, seed=51)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
+    store = StageStore(root)
+    os.remove(store.manifest_path("_input_pairs"))
+    with pytest.raises(RuntimeError, match="no input-identity sidecar"):
+        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
+    assert not store.is_complete("_input_pairs")
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
+    assert all(s["resumed"] for s in m["stages"].values())
+    pm = store.manifest("_input_pairs")
+    assert (pm["rows"], pm["run_id"]) == (20, "r")
+    assert store.read(spark, "_input_pairs").count() == 20
 
 
 def test_torn_append_marker_blocks_resume(spark, tmp_path):
@@ -545,6 +617,13 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
     assert nfiles("mentions") == rep["files_after"]
     after = sorted(map(tuple, store.read(spark, "mentions").select(*cols).collect()))
     assert before == after
+    # the sidecar compacts like any stage
+    pairs_before = sorted(map(tuple, store.read(spark, "_input_pairs").collect()))
+    files_before = nfiles("_input_pairs")
+    rep = store.compact(spark, "_input_pairs")
+    assert rep["files_after"] < files_before
+    assert nfiles("_input_pairs") == rep["files_after"]
+    assert sorted(map(tuple, store.read(spark, "_input_pairs").collect())) == pairs_before
     # manifest keeps rows + input identity: full run over the true union
     # still resumes, a grown input still refuses
     m = run_codekg_pipeline(spark, mk(rows), root, run_id="r")

@@ -52,8 +52,8 @@ def test_stream_matches_batch(spark, tmp_path):
         map(tuple, want1.select(*key).collect())
     )
     assert store.is_complete("candidates")
-    assert store.has_input_pairs()
-    assert store.read_input_pairs(spark).count() == 50
+    assert store.is_complete("_input_pairs")
+    assert store.read(spark, "_input_pairs").count() == 50
 
     # late-arriving files: restart picks up ONLY the new ones
     # (file-source checkpoint) and takes the append-only path
@@ -63,7 +63,7 @@ def test_stream_matches_batch(spark, tmp_path):
     got2 = store.read(spark, "mentions")
     want2 = codekg.extract_code_mentions(_df(spark, rows))
     assert got2.count() == want2.count()  # no duplicates from reprocessing
-    assert store.read_input_pairs(spark).count() == 80
+    assert store.read(spark, "_input_pairs").count() == 80
 
     # batch finalize over the union: streamed stages RESUME (identity
     # matches via the additive digest), only global stages build
@@ -322,7 +322,7 @@ def test_stream_mid_batch_abort_restart_self_heals(spark, tmp_path, monkeypatch)
     store = StageStore(wh)
     assert store.is_complete("mentions")  # data landed...
     assert not store.is_complete("candidates")  # ...batch never finished
-    assert not store.has_input_pairs()  # died before the sidecar
+    assert not store.is_complete("_input_pairs")  # died before the sidecar
 
     # restart from the same checkpoint: the offset log never committed
     # batch 0, so it is REDELIVERED; bootstrap dispatch keys on the LAST
@@ -331,8 +331,8 @@ def test_stream_mid_batch_abort_restart_self_heals(spark, tmp_path, monkeypatch)
     q2 = stream_repos_src(spark, inp, wh, ckpt)
     q2.awaitTermination(120)
     assert store.is_complete("mentions") and store.is_complete("candidates")
-    assert store.has_input_pairs()
-    assert store.read_input_pairs(spark).count() == 60
+    assert store.is_complete("_input_pairs")
+    assert store.read(spark, "_input_pairs").count() == 60
 
     # finalize over the full input resumes the streamed stages and the
     # triples match a from-scratch warehouse bit-for-bit
@@ -351,7 +351,7 @@ def test_stream_mid_batch_abort_restart_self_heals(spark, tmp_path, monkeypatch)
 
 def test_stream_post_commit_pre_sidecar_abort_self_heals(spark, tmp_path, monkeypatch):
     """Code-review r6 finding: the window AFTER the candidates commit
-    but BEFORE the sidecar _SUCCESS (the invariant-report jobs) is
+    but BEFORE the sidecar commit (the invariant-report jobs) is
     outside any marker. The fix keys the stream dispatch on the sidecar
     itself: a redelivered batch that finds both stages committed but NO
     sidecar must re-enter the BOOTSTRAP path (resume under the identity
@@ -370,11 +370,12 @@ def test_stream_post_commit_pre_sidecar_abort_self_heals(spark, tmp_path, monkey
     _write_input(spark, rows, inp)
 
     real_rep = pl.sha_invariant_report
-    state = {"boom": True}
+    state = {"calls": 0}
 
     def dying_report(df, pairs, digest):
-        if state["boom"]:
-            state["boom"] = False
+        # the second report is the candidates check, after its commit
+        state["calls"] += 1
+        if state["calls"] == 2:
             raise RuntimeError("injected post-commit pre-sidecar death")
         return real_rep(df, pairs, digest)
 
@@ -385,14 +386,14 @@ def test_stream_post_commit_pre_sidecar_abort_self_heals(spark, tmp_path, monkey
     store = StageStore(wh)
     # the poisoned window: both stages committed, sidecar absent
     assert store.is_complete("mentions") and store.is_complete("candidates")
-    assert not store.has_input_pairs()
+    assert not store.is_complete("_input_pairs")
 
     # restart: batch 0 redelivered (offset never committed); dispatch
     # sees the missing sidecar and self-heals via bootstrap resume
     q2 = stream_repos_src(spark, inp, wh, ckpt)
     q2.awaitTermination(120)
-    assert store.has_input_pairs()
-    assert store.read_input_pairs(spark).count() == 50
+    assert store.is_complete("_input_pairs")
+    assert store.read(spark, "_input_pairs").count() == 50
 
     m = run_codekg_pipeline(spark, _df(spark, rows), wh, run_id="fin")
     assert m["stages"]["mentions"]["resumed"] is True

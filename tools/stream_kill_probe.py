@@ -162,7 +162,7 @@ def main() -> None:
         "at_kill": {
             "mentions": stA.is_complete("mentions"),
             "candidates": stA.is_complete("candidates"),
-            "sidecar": stA.has_input_pairs(),
+            "sidecar": stA.is_complete("_input_pairs"),
         },
     }
     # restart from the same checkpoint: batch 0 redelivered, self-heals
@@ -184,10 +184,9 @@ def main() -> None:
     marker = os.path.join(whB, "_PENDING_APPEND.json")
 
     def append_window() -> bool:
-        # bootstrap holds the marker around its sidecar write too (its
-        # stages list is just ["_input_pairs"] -- killing THERE is the
-        # ADVICE-r5 bracket scenario, probed in an earlier run); the
-        # append batch's marker lists the appended data stages
+        # only an append batch holds the marker (listing the appended
+        # stages); the bootstrap commits its three stages, the
+        # _input_pairs sidecar included, by their manifests alone
         if not os.path.exists(marker):
             return False
         try:
@@ -209,9 +208,8 @@ def main() -> None:
     with open(marker, encoding="utf-8") as fh:
         torn_stages = json.load(fh)["stages"]
     report["B"]["torn_stages"] = torn_stages
-    for st in set(torn_stages) | {"mentions", "candidates"}:
+    for st in set(torn_stages) | {"mentions", "candidates", "_input_pairs"}:
         shutil.rmtree(os.path.join(whB, st), ignore_errors=True)
-    shutil.rmtree(os.path.join(whB, "_input_pairs"), ignore_errors=True)
     os.remove(marker)
     shutil.rmtree(os.path.join(whB, "_stream_ckpt"), ignore_errors=True)
     pB3 = _spawn_stream(inp, whB, "kB3")
