@@ -20,6 +20,11 @@ file's parquet footer, the run_id that wrote it), read on the driver
 with no Spark job. A commit whose new files' footer rows differ from
 its observed count fails before the manifest is written.
 
+The same write checks the per-row sha256 invariant
+(BASELINE.json:input_hint) against the input's (doc_id, content_sha)
+pairs: a stage with a foreign pair raises before its manifest is
+written, so it never commits, and a passing manifest records the verdict.
+
 A stage directory without _MANIFEST.json is an aborted write and is
 re-run; with it, the stage is skipped and its data re-read.
 
@@ -61,12 +66,6 @@ def _sha_fold_col():
     return F.conv(F.substring("content_sha", 1, 16), 16, 10).cast("decimal(20,0)")
 
 
-def doc_sha_pairs(df: DataFrame) -> DataFrame:
-    """Distinct (doc_id, content_sha) pairs -- the per-document invariant
-    set a stage must stay a SUBSET of."""
-    return df.select("doc_id", "content_sha").distinct()
-
-
 def doc_sha_identity(keyed: DataFrame) -> tuple[DataFrame, str, int, int | None]:
     """(distinct (doc_id, content_sha) pairs, digest, pair count,
     content bytes) of a keyed input. Digest and count come from ONE
@@ -91,29 +90,18 @@ def doc_sha_identity(keyed: DataFrame) -> tuple[DataFrame, str, int, int | None]
     )
 
 
-def sha_invariant_report(stage_df: DataFrame, input_pairs: DataFrame, n_input: int) -> dict:
-    """Exact check of the per-row sha256 invariant for one stage, in one
-    action: the stage's distinct (doc_id, content_sha) pairs left-joined
-    to the input's, counting pairs and misses. A stage may legitimately
-    DROP documents (explode on an empty mention array drops
-    zero-mention docs), but it must never carry a pair absent from the
-    input -- that would mean a corrupted sha or a foreign row.
-    ``n_input`` is the input's pair count, already taken."""
-    row = (
-        doc_sha_pairs(stage_df)
-        .join(input_pairs.withColumn("_in", F.lit(True)), ["doc_id", "content_sha"], "left")
-        .agg(
-            F.count(F.lit(1)).alias("pairs"),
-            F.count_if(F.col("_in").isNull()).alias("bad"),
+def sha_invariant_report(stage: str, misses: int) -> dict:
+    """The sha256 invariant's verdict on one commit whose write observed
+    ``misses`` rows with a (doc_id, content_sha) pair not in the input.
+    A stage may DROP documents (explode on an empty mention array drops
+    zero-mention docs), but a foreign pair means a corrupted sha or a
+    foreign row, so any miss raises before the manifest is written."""
+    if misses:
+        raise RuntimeError(
+            f"content sha256 invariant violated at stage {stage}: {misses} "
+            "rows whose (doc_id, content_sha) pair is not in the input"
         )
-        .collect()[0]
-    )
-    bad = int(row["bad"])
-    return {
-        "sha_invariant_ok": bad == 0,
-        "bad_pairs": bad,
-        "docs_dropped": n_input - (int(row["pairs"]) - bad),
-    }
+    return {"sha_invariant_ok": True}
 
 
 class StageStore:
@@ -131,12 +119,11 @@ class StageStore:
         self.root = root
         self.run_id = run_id
         self.iceberg_catalog = iceberg_catalog
-        # input identity for resume safety: the pipeline sets these to
-        # the RAW input's distinct-(doc_id, sha) digest + count before
-        # running stages; write() stamps them into every manifest and
-        # run_stage() refuses to resume a checkpoint built from a
-        # DIFFERENT input (see run_stage docstring for why the
-        # per-stage sha invariant alone cannot catch the append case)
+        # input identity for resume safety (``stamp_input``): the RAW
+        # input's distinct (doc_id, sha) pairs, which every content_sha
+        # commit is checked against, and their digest + count, which
+        # write() stamps into every manifest (see run_stage docstring)
+        self.input_pairs: DataFrame | None = None
         self.input_digest: str | None = None
         self.input_docs: int | None = None
         # the input's content bytes (additive like the digest; the
@@ -164,6 +151,35 @@ class StageStore:
 
     def is_complete(self, stage: str) -> bool:
         return os.path.exists(self.manifest_path(stage))
+
+    def stamp_input(
+        self, pairs: DataFrame, digest: str, docs: int, content_bytes: int | None
+    ) -> None:
+        """Set the input identity this run writes under
+        (``doc_sha_identity``'s tuple) and refuse, before any work, a
+        root holding a stage committed from another input."""
+        self.input_pairs, self.input_digest, self.input_docs = pairs, digest, docs
+        self.input_bytes = content_bytes
+        for stage in sorted(os.listdir(self.root)) if os.path.isdir(self.root) else ():
+            if self.is_complete(stage):
+                self._check_input(stage)
+
+    def _check_input(self, stage: str) -> None:
+        m = self.manifest(stage)
+        recorded = m.get("input_sha_digest")
+        if (
+            self.input_digest is not None
+            and recorded is not None
+            and (recorded, m.get("input_docs")) != (self.input_digest, self.input_docs)
+        ):
+            raise RuntimeError(
+                f"stage '{stage}' checkpoint at {self._dir(stage)} was built "
+                f"from a different input (manifest digest {recorded}/"
+                f"{m.get('input_docs')} docs vs current {self.input_digest}/"
+                f"{self.input_docs}): resuming would silently miss changed "
+                "or appended documents. Use a fresh --output warehouse for "
+                "the new input, or delete the stage manifests to rebuild."
+            )
 
     # ------------------------------------------ torn-append detection
     #
@@ -281,13 +297,24 @@ class StageStore:
         """Write ``df`` with an Observation riding the write job; return
         the observed rows and content_sha sum-fold plus the lineage of
         the files the write added. Raises when the new files' footer
-        rows differ from the observed count."""
+        rows differ from the observed count, or when a content_sha row's
+        pair is not in the store's ``input_pairs`` (the ``INPUT_PAIRS``
+        stage is that set itself): the rows are left-joined to the pairs
+        by broadcast, a narrow join that keeps ``df``'s partitioning and
+        files, so the pairs must fit the broadcast limit and the driver
+        heap (~150 bytes per pair, 0.3 MB for 2000 docs)."""
         has_sha = "content_sha" in df.columns
+        checked = has_sha and self.input_pairs is not None and stage != INPUT_PAIRS
         obs = Observation(f"commit_{stage}")
         metrics = [F.count(F.lit(1)).alias("rows")]
         if has_sha:
             metrics.append(F.sum(_sha_fold_col()).alias("sha"))
-        observed = df.observe(obs, *metrics)
+        observed = df
+        if checked:
+            ref = self.input_pairs.select("doc_id", "content_sha", F.lit(True).alias("_in_input"))
+            observed = df.join(F.broadcast(ref), ["doc_id", "content_sha"], "left")
+            metrics.append(F.count_if(F.col("_in_input").isNull()).alias("misses"))
+        observed = observed.observe(obs, *metrics).select(*df.columns)
         if self.iceberg_catalog:
             w = observed.writeTo(self.iceberg_ident(stage))
             if append:
@@ -305,6 +332,7 @@ class StageStore:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(path)
         got = obs.get
+        verdict = sha_invariant_report(stage, got["misses"]) if checked else None
         lineage = self._new_files(df.sparkSession, stage, path, set(known))
         footer_rows = sum(f["rows"] for f in lineage)
         if footer_rows != got["rows"]:
@@ -315,6 +343,7 @@ class StageStore:
         return {
             "rows": got["rows"],
             "content_sha_sum": str(got["sha"] or 0) if has_sha else None,
+            "sha_invariant": verdict,
             "lineage": lineage,
         }
 
@@ -341,6 +370,7 @@ class StageStore:
                 "run_id": self.run_id,
                 "rows": manifest["rows"] + batch["rows"],
                 "content_sha_sum": sha,
+                "sha_invariant": batch["sha_invariant"],
                 "files": len(lineage),
                 "bytes": sum(f["bytes"] for f in lineage),
                 "partition_by": partition_by or [],
@@ -535,22 +565,7 @@ class StageStore:
         under a marked warehouse may not match any manifest."""
         self.check_no_pending()
         if self.is_complete(stage):
-            m = self.manifest(stage)
-            recorded = m.get("input_sha_digest")
-            if (
-                self.input_digest is not None
-                and recorded is not None
-                and (recorded, m.get("input_docs"))
-                != (self.input_digest, self.input_docs)
-            ):
-                raise RuntimeError(
-                    f"stage '{stage}' checkpoint at {self._dir(stage)} was built "
-                    f"from a different input (manifest digest {recorded}/"
-                    f"{m.get('input_docs')} docs vs current {self.input_digest}/"
-                    f"{self.input_docs}): resuming would silently miss changed "
-                    "or appended documents. Use a fresh --output warehouse for "
-                    "the new input, or delete the stage manifests to rebuild."
-                )
+            self._check_input(stage)
             self.last_resumed[stage] = True
             return self.read(spark, stage)
         self.last_resumed[stage] = False

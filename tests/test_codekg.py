@@ -196,36 +196,37 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
 
 def test_sha_invariant_catches_foreign_pair(spark, rows, tmp_path, monkeypatch):
     """A stage row whose (doc_id, content_sha) pair is not in the input
-    -- a corrupted sha or a foreign row -- is counted by the exact
-    report and aborts the pipeline with 'invariant violated'."""
-    from structured_data_entity_extraction_spark import pipeline
-
+    -- a corrupted sha or a foreign row -- is counted by the stage's own
+    commit and aborts the pipeline with 'invariant violated' before that
+    stage commits: planted at mentions, and planted at candidates."""
     df = spark.createDataFrame(
         [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows[:30]],
         REPOS_SRC,
     )
-    real_extract = codekg.extract_code_mentions
+    real_extract, real_link = codekg.extract_code_mentions, codekg.link_mentions
 
-    def planted(repos_src, bucket_count=64):
-        m = real_extract(repos_src, bucket_count)
-        victim = m.select("doc_id").orderBy("doc_id").first()["doc_id"]
-        return m.withColumn(
+    def plant(frame):
+        victim = frame.select("doc_id").orderBy("doc_id").first()["doc_id"]
+        return frame.withColumn(
             "content_sha",
             F.when(F.col("doc_id") == victim, F.lit("f" * 64)).otherwise(F.col("content_sha")),
         )
 
-    pairs, _digest, n_input, _bytes = pipeline.input_identity(df)
-    rep = pipeline.sha_invariant_report(planted(df), pairs, n_input)
-    assert rep["sha_invariant_ok"] is False and rep["bad_pairs"] == 1
-    clean = pipeline.sha_invariant_report(real_extract(df), pairs, n_input)
-    assert clean["sha_invariant_ok"] is True and clean["bad_pairs"] == 0
-    pairs.unpersist()
-
-    monkeypatch.setattr(codekg, "extract_code_mentions", planted)
-    with pytest.raises(RuntimeError, match="invariant violated at stage mentions: 1 "):
+    clean = real_extract(df)
+    victim = clean.select("doc_id").orderBy("doc_id").first()["doc_id"]
+    n_victim = clean.filter(F.col("doc_id") == victim).count()
+    monkeypatch.setattr(codekg, "extract_code_mentions", lambda *a: plant(real_extract(*a)))
+    with pytest.raises(RuntimeError, match=f"invariant violated at stage mentions: {n_victim} "):
         run_codekg_pipeline(spark, df, str(tmp_path / "w"))
-    # the check runs right after the mentions commit, before candidates
-    assert not StageStore(str(tmp_path / "w")).is_complete("candidates")
+    store = StageStore(str(tmp_path / "w"))
+    assert not store.is_complete("mentions") and not store.is_complete("candidates")
+
+    monkeypatch.setattr(codekg, "extract_code_mentions", real_extract)
+    monkeypatch.setattr(codekg, "link_mentions", lambda *a: plant(real_link(*a)))
+    with pytest.raises(RuntimeError, match="invariant violated at stage candidates: "):
+        run_codekg_pipeline(spark, df, str(tmp_path / "w2"))
+    store = StageStore(str(tmp_path / "w2"))
+    assert store.is_complete("mentions") and not store.is_complete("candidates")
 
 
 def test_resume_refuses_changed_input(spark, repos_df, tmp_path):
@@ -476,12 +477,12 @@ def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
 
 
 def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
-    """The sidecar resumes under the identity guard like any stage: a
+    """The sidecar refuses another input like any committed stage: a
     warehouse built over docs 0-19 whose data-stage manifests are
-    deleted refuses a rebuild over docs 20-39 at the sidecar, and the
-    append guard then refuses a batch overlapping the sidecar's docs
-    because the sidecar and mentions record different inputs, leaving
-    every manifest as it was."""
+    deleted refuses a rebuild over docs 20-39 at the sidecar before any
+    work, leaving every file under the root as it was, and a batch
+    overlapping the sidecar's docs refuses the same way, leaving every
+    manifest as it was."""
     from structured_data_entity_extraction_spark.pipeline import ingest_repos_batch
 
     rows = repos_src_rows(60, seed=3)
@@ -496,8 +497,19 @@ def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
     store = StageStore(root)
     for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
         os.remove(store.manifest_path(stage))
+
+    def files():
+        out = {}
+        for r, _d, fs in os.walk(root):
+            for f in fs:
+                with open(os.path.join(r, f), "rb") as fh:
+                    out[os.path.join(r, f)] = fh.read()
+        return out
+
+    files_before = files()
     with pytest.raises(RuntimeError, match="stage '_input_pairs' .* different input"):
         run_codekg_pipeline(spark, mk(rows[20:40]), root, run_id="b2")
+    assert files() == files_before
 
     def manifests():
         return {
@@ -651,6 +663,81 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(_os, "rename", real_rename)
     with pytest.raises(RuntimeError, match="TORN APPEND"):
         run_codekg_pipeline(spark, mk(rows), root, run_id="r3")
+
+
+def test_append_writes_one_file_per_partition_per_batch(spark, tmp_path):
+    """Each appended batch adds at most one file per (repo_bucket, lang)
+    it touches to mentions and candidates, and one file to the
+    _input_pairs sidecar, however the batch frames are partitioned."""
+    import collections
+
+    from structured_data_entity_extraction_spark.pipeline import ingest_repos_batch
+
+    rows = repos_src_rows(100, seed=5)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    for i in range(4):
+        ingest_repos_batch(spark, StageStore(root, run_id=f"b{i}"), mk(rows[25 * i : 25 * i + 25]))
+    store = StageStore(root)
+    appended = {"b1", "b2", "b3"}
+    for stage in ("mentions", "candidates", "_input_pairs"):
+        per_dir = collections.Counter(
+            (f["run_id"], os.path.dirname(f["file"]))
+            for f in store.manifest(stage)["lineage"]
+            if f["run_id"] in appended
+        )
+        assert {run for run, _dir in per_dir} == appended, stage
+        assert set(per_dir.values()) == {1}, (stage, per_dir)
+    assert store.manifest("_input_pairs")["rows"] == 100
+
+
+def test_checked_commit_keeps_layout_and_refuses_foreign_row(spark, tmp_path):
+    """The sha check rides the commit without changing what it writes:
+    one content_sha frame committed by a store without input pairs and
+    by one with them lands as the same files with the same rows each,
+    under the frame's own columns. The checked store refuses a planted
+    foreign row before the stage's manifest is written."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from structured_data_entity_extraction_spark.session import local_frame
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("value", T.StringType()),
+            T.StructField("content_sha", T.StringType()),
+            T.StructField("repo_bucket", T.IntegerType()),
+            T.StructField("lang", T.StringType()),
+        ]
+    )
+    frame = lambda rs: local_frame(spark, rs, schema).repartition(4, "value")
+    rows = [(f"d{i % 7}", f"v{i}", f"{i % 7:064x}", i % 3, ("py", "js")[i % 2]) for i in range(60)]
+    pair_schema = T.StructType(schema.fields[:1] + schema.fields[2:3])
+    pairs = local_frame(spark, [(f"d{k}", f"{k:064x}") for k in range(7)], pair_schema)
+    plain, checked = StageStore(str(tmp_path / "plain")), StageStore(str(tmp_path / "checked"))
+    checked.input_pairs = pairs
+
+    def files(store):
+        store.write(frame(rows), "s", ["repo_bucket", "lang"])
+        lineage = store.manifest("s")["lineage"]
+        return sorted((os.path.dirname(f["file"]), f["rows"]) for f in lineage)
+
+    layout = files(plain)
+    assert files(checked) == layout and len(layout) > 6
+    data = os.path.join(checked.root, "s", "data")
+    for f in checked.manifest("s")["lineage"]:
+        names = pq.read_schema(os.path.join(data, f["file"])).names
+        assert names == ["doc_id", "value", "content_sha"]
+    assert plain.manifest("s")["sha_invariant"] is None
+    assert checked.manifest("s")["sha_invariant"] == {"sha_invariant_ok": True}
+    foreign = frame(rows + [("d0", "x", "f" * 64, 0, "py")])
+    with pytest.raises(RuntimeError, match="invariant violated at stage bad: 1 "):
+        checked.write(foreign, "bad", ["repo_bucket", "lang"])
+    assert not os.path.exists(checked.manifest_path("bad"))
 
 
 def test_determinism(spark, repos_df, tmp_path):
@@ -1229,7 +1316,9 @@ def test_empty_content_doc_does_not_abort(spark, tmp_path):
     m = run_codekg_pipeline(spark, df, str(tmp_path / "w"))
     assert m["triples"] > 0
     assert m["stages"]["mentions"]["sha_invariant_ok"] is True
-    assert m["stages"]["mentions"]["docs_dropped"] == 2
+    store = StageStore(str(tmp_path / "w"))
+    assert store.read(spark, "mentions").select("doc_id").distinct().count() == 1
+    assert store.manifest("mentions")["input_docs"] == 3
 
 
 def test_avaluo_pipeline_gate_and_invariant(spark, tmp_path):

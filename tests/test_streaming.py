@@ -351,7 +351,7 @@ def test_stream_mid_batch_abort_restart_self_heals(spark, tmp_path, monkeypatch)
 
 def test_stream_post_commit_pre_sidecar_abort_self_heals(spark, tmp_path, monkeypatch):
     """Code-review r6 finding: the window AFTER the candidates commit
-    but BEFORE the sidecar commit (the invariant-report jobs) is
+    but BEFORE the sidecar commit (the sidecar's own write) is
     outside any marker. The fix keys the stream dispatch on the sidecar
     itself: a redelivered batch that finds both stages committed but NO
     sidecar must re-enter the BOOTSTRAP path (resume under the identity
@@ -359,7 +359,6 @@ def test_stream_post_commit_pre_sidecar_abort_self_heals(spark, tmp_path, monkey
     warehouse without the sidecar."""
     import pyspark.errors
 
-    from structured_data_entity_extraction_spark import pipeline as pl
     from structured_data_entity_extraction_spark.materialize import StageStore
     from structured_data_entity_extraction_spark.pipeline import run_codekg_pipeline
 
@@ -369,17 +368,17 @@ def test_stream_post_commit_pre_sidecar_abort_self_heals(spark, tmp_path, monkey
     ckpt = str(tmp_path / "ckpt")
     _write_input(spark, rows, inp)
 
-    real_rep = pl.sha_invariant_report
+    real_write_pairs = StageStore.write_input_pairs
     state = {"calls": 0}
 
-    def dying_report(df, pairs, digest):
-        # the second report is the candidates check, after its commit
+    def dying_write_pairs(store, pairs):
+        # the first sidecar write: candidates committed, sidecar not
         state["calls"] += 1
-        if state["calls"] == 2:
+        if state["calls"] == 1:
             raise RuntimeError("injected post-commit pre-sidecar death")
-        return real_rep(df, pairs, digest)
+        return real_write_pairs(store, pairs)
 
-    monkeypatch.setattr(pl, "sha_invariant_report", dying_report)
+    monkeypatch.setattr(StageStore, "write_input_pairs", dying_write_pairs)
     q = stream_repos_src(spark, inp, wh, ckpt)
     with pytest.raises(pyspark.errors.StreamingQueryException):
         q.awaitTermination(120)
