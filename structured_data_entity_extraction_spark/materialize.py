@@ -13,8 +13,8 @@ write: a ``pyspark.sql.Observation`` sits directly above the data write,
 so the write job itself yields the row count and the content_sha
 sum-fold of exactly the rows it wrote. The manifest then records those
 stage totals (appends add the batch's values; both are additive), the
-read schema, the input identity resume checks, the partition layout
-of a partitioned stage (``StageStore.layout``), and the lineage: one
+read schema, the input identity, the partition layout of a
+partitioned stage (``StageStore.layout``), and the lineage: one
 entry per data file (path under ``data/``, rows and bytes from the
 file's parquet footer, the run_id that wrote it), read on the driver
 with no Spark job. A commit whose new files' footer rows differ from
@@ -26,7 +26,9 @@ pairs: a stage with a foreign pair raises before its manifest is
 written, so it never commits, and a passing manifest records the verdict.
 
 A stage directory without _MANIFEST.json is an aborted write and is
-re-run; with it, the stage is skipped and its data re-read.
+re-run; with it, the stage is skipped and its data re-read. Before any
+work, ``StageStore.stamp_input`` refuses a root whose committed stages
+record another input identity, none, or (partitioned) another layout.
 
 The warehouse's input-identity sidecar (``INPUT_PAIRS``, the exact
 (doc_id, content_sha) set of every ingested document) is one more such
@@ -153,33 +155,53 @@ class StageStore:
         return os.path.exists(self.manifest_path(stage))
 
     def stamp_input(
-        self, pairs: DataFrame, digest: str, docs: int, content_bytes: int | None
+        self,
+        pairs: DataFrame,
+        digest: str,
+        docs: int,
+        content_bytes: int | None,
+        layout: dict | None = None,
     ) -> None:
-        """Set the input identity this run writes under
-        (``doc_sha_identity``'s tuple) and refuse, before any work, a
-        root holding a stage committed from another input."""
+        """Set the input identity (``doc_sha_identity``'s tuple) and the
+        partition layout this run writes under, and refuse, before any
+        work, a root holding a committed stage this run must not resume
+        or extend (``_check_input``). This is the warehouse's one guard:
+        nothing later re-checks a resumed or appended stage."""
         self.input_pairs, self.input_digest, self.input_docs = pairs, digest, docs
-        self.input_bytes = content_bytes
+        self.input_bytes, self.layout = content_bytes, layout
         for stage in sorted(os.listdir(self.root)) if os.path.isdir(self.root) else ():
             if self.is_complete(stage):
                 self._check_input(stage)
 
     def _check_input(self, stage: str) -> None:
+        """Refuse a committed stage built from another input, or one
+        that records no input identity; and a partitioned stage that
+        records no layout, or another bucket count than this run's."""
         m = self.manifest(stage)
-        recorded = m.get("input_sha_digest")
-        if (
-            self.input_digest is not None
-            and recorded is not None
-            and (recorded, m.get("input_docs")) != (self.input_digest, self.input_docs)
-        ):
-            raise RuntimeError(
-                f"stage '{stage}' checkpoint at {self._dir(stage)} was built "
-                f"from a different input (manifest digest {recorded}/"
-                f"{m.get('input_docs')} docs vs current {self.input_digest}/"
-                f"{self.input_docs}): resuming would silently miss changed "
-                "or appended documents. Use a fresh --output warehouse for "
-                "the new input, or delete the stage manifests to rebuild."
+        recorded = (m.get("input_sha_digest"), m.get("input_docs"))
+        partitioned = bool(m.get("partition_by"))
+        buckets = (self.layout or {}).get("bucket_count")
+        if recorded[0] is None:
+            why = "records no input identity"
+        elif recorded != (self.input_digest, self.input_docs):
+            why = (
+                f"was built from a different input (manifest digest {recorded[0]}/"
+                f"{recorded[1]} docs vs current {self.input_digest}/{self.input_docs}): "
+                "resuming would silently miss changed or appended documents"
             )
+        elif partitioned and "layout" not in m:
+            why = "records no partition layout (written before layouts were recorded)"
+        elif partitioned and m["layout"]["bucket_count"] != buckets:
+            why = (
+                f"was written with {m['layout']['bucket_count']} repo buckets "
+                f"but this run writes with {buckets}"
+            )
+        else:
+            return
+        raise RuntimeError(
+            f"stage '{stage}' {why} (checkpoint at {self._dir(stage)}). Use a "
+            "fresh --output warehouse, or delete the stage manifests to rebuild."
+        )
 
     # ------------------------------------------ torn-append detection
     #
@@ -233,13 +255,13 @@ class StageStore:
 
     def write_input_pairs(self, pairs: DataFrame) -> DataFrame:
         """Build or resume the ``INPUT_PAIRS`` stage from the input's
-        (doc_id, content_sha) pairs, under the identity guard of
-        ``run_stage``. The append-only overlap guard joins new batches
-        against this stage, not against the extracted mentions: a
-        zero-mention doc (empty/comment-only content) has no mentions
-        row but is still input, and re-appending it must be refused or
-        the additive digest double-counts."""
-        return self.run_stage(pairs.sparkSession, INPUT_PAIRS, lambda: pairs)
+        (doc_id, content_sha) pairs, as one file. The append-only
+        overlap guard joins new batches against this stage, not against
+        the extracted mentions: a zero-mention doc (empty/comment-only
+        content) has no mentions row but is still input, and
+        re-appending it must be refused or the additive digest
+        double-counts."""
+        return self.run_stage(pairs.sparkSession, INPUT_PAIRS, lambda: pairs.coalesce(1))
 
     def read(self, spark: SparkSession, stage: str) -> DataFrame:
         if self.iceberg_catalog:
@@ -539,7 +561,7 @@ class StageStore:
         """Drop a stage checkpoint so the next run_stage rebuilds it
         (the incremental path invalidates every stage DOWNSTREAM of an
         append -- their manifests carry the pre-append input identity,
-        which run_stage would rightly refuse)."""
+        which ``stamp_input`` would rightly refuse)."""
         d = self._dir(stage)
         if os.path.exists(d):
             shutil.rmtree(d)
@@ -553,19 +575,17 @@ class StageStore:
     ) -> DataFrame:
         """Resume-aware: skip + re-read if committed, else build + write.
 
-        Resume refuses a checkpoint whose manifest records a DIFFERENT
-        input identity than this run's (digest + doc count of the raw
-        input's distinct (doc_id, content_sha) pairs). The per-stage
-        sha invariant cannot catch every such case on its own: it is a
+        A resumed checkpoint was already held to this run's input
+        identity (digest + doc count of the raw input's distinct
+        (doc_id, content_sha) pairs) and layout by ``stamp_input``. The
+        per-stage sha invariant cannot do that on its own: it is a
         subset check (stages may legitimately drop zero-mention docs),
         so re-running an old warehouse over an APPENDED input would
-        resume stale stages that silently miss every new document.
-        Old manifests without the field skip the check. A torn append
-        (pending marker present) refuses BOTH branches -- the data
-        under a marked warehouse may not match any manifest."""
+        resume stale stages that silently miss every new document. A
+        torn append (pending marker present) refuses BOTH branches --
+        the data under a marked warehouse may not match any manifest."""
         self.check_no_pending()
         if self.is_complete(stage):
-            self._check_input(stage)
             self.last_resumed[stage] = True
             return self.read(spark, stage)
         self.last_resumed[stage] = False

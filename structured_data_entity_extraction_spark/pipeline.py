@@ -16,16 +16,19 @@ partitionBy(repo_bucket, lang), repo_bucket = pmod(xxhash64(repo),
 bucket_count), and the triples dedup is salted ``write_salt`` ways
 (codekg.build_triples). ``derive_layout`` sizes both from the input's
 content bytes: one (bucket, salt) key per 16 MiB, buckets first (up to
-64), then salt (up to 8). A 2000-doc input gets (1, 1), one part-file
-per (bucket, lang) directory; the 320k-doc pipeline_bench corpus (306
-MB) gets (19, 1); (64, 8), the r6 layout, starts above 7 GiB (BENCH.md
-"r6 fold" has the A/B behind the 16 MiB). The bucket count is fixed
-when mentions is built: resume, --append, streaming batches and the
-finalize run read it from the mentions manifest. The salt only shapes
-the triples build, which always reads the whole corpus, so it is
+64), then salt (up to 8). A 2000-doc input gets (1, 1): all rows under
+repo_bucket=0, one directory per lang, with as many part-files per
+directory as write tasks touch it; the 320k-doc pipeline_bench corpus
+(306 MB) gets (19, 1); (64, 8), the r6 layout, starts above 7 GiB
+(BENCH.md "r6 fold" has the A/B behind the 16 MiB). The bucket count is
+fixed when mentions is built: resume, --append, streaming batches and
+the finalize run read it from the mentions manifest. The salt only
+shapes the triples build, which always reads the whole corpus, so it is
 re-derived from the corpus' content bytes, which the manifests add up
-over appends. The layout is recorded in the three stages' manifests. A
-manifest without one was written as (64, 8) and keeps 64 buckets.
+over appends. The layout is recorded in the three stages' manifests;
+``StageStore.stamp_input`` refuses a warehouse whose partitioned stages
+record none (written before layouts were recorded) or another bucket
+count.
 """
 
 from __future__ import annotations
@@ -51,10 +54,6 @@ from .triples import records_to_triples
 # ~150k triples per dedup task, inside the 100-250k rows per reduce task
 # that session.py sizes shuffles to
 LAYOUT_TARGET_BYTES = 16 << 20
-# the r6 layout: the ceiling of the derived one, and the layout of a
-# warehouse whose manifests record none (written before layouts were
-# derived)
-LEGACY_LAYOUT = {"bucket_count": 64, "write_salt": 8}
 # the hive partitioning of the mentions, candidates and triples stages
 PARTITION_BY = ["repo_bucket", "lang"]
 
@@ -62,7 +61,7 @@ PARTITION_BY = ["repo_bucket", "lang"]
 def derive_layout(content_bytes: int, bucket_count: int | None = None) -> dict:
     """The partition layout for a corpus of ``content_bytes``: one
     (repo_bucket, write salt) key per LAYOUT_TARGET_BYTES, at most the
-    64 x 8 of LEGACY_LAYOUT (dedup parallelism is buckets x langs x
+    64 x 8 of the r6 layout (dedup parallelism is buckets x langs x
     salt, BENCH.md "r6 fold"). Buckets come first, up to 64, and the
     salt makes up the rest. A warehouse passes its recorded
     ``bucket_count``; the salt then sizes the triples build to the
@@ -73,18 +72,13 @@ def derive_layout(content_bytes: int, bucket_count: int | None = None) -> dict:
     return {"bucket_count": bucket_count, "write_salt": -(-keys // bucket_count)}
 
 
-def _layout_for(store: StageStore, content_bytes: int | None) -> dict:
-    """The layout this run writes under. Building mentions derives it.
-    Otherwise the bucket count is the one mentions was written with (64
-    when unrecorded), and the salt is re-derived for ``content_bytes``,
-    the corpus the next triples build reads. ``None`` (a warehouse that
-    predates recorded input bytes) keeps the recorded salt."""
-    if not store.is_complete("mentions"):
-        return derive_layout(content_bytes)
-    recorded = store.manifest("mentions").get("layout", LEGACY_LAYOUT)
-    if content_bytes is None:
-        return recorded
-    return derive_layout(content_bytes, recorded["bucket_count"])
+def _layout_for(store: StageStore, content_bytes: int) -> dict:
+    """The layout this run writes under: the bucket count mentions was
+    written with (derived when mentions is not built, or records none,
+    which ``stamp_input`` then refuses), and the salt derived for
+    ``content_bytes``, the corpus the next triples build reads."""
+    recorded = store.manifest("mentions").get("layout", {}) if store.is_complete("mentions") else {}
+    return derive_layout(content_bytes, recorded.get("bucket_count"))
 
 
 def _cache_scoped(fn):
@@ -111,9 +105,8 @@ class StageCommits:
     (``StageStore.run_stage``) or append one stage, and record its
     manifest rows, wall time and the sha-invariant verdict of its commit
     (``StageStore._observed_write``; a resumed stage passed it under the
-    same input identity) in ``metrics["stages"]``. A resumed
-    partitioned stage must have been written with the store's bucket
-    count."""
+    same input identity and layout, which ``StageStore.stamp_input``
+    held it to) in ``metrics["stages"]``."""
 
     def __init__(self, spark: SparkSession, store: StageStore, metrics: dict):
         self.spark, self.store, self.metrics = spark, store, metrics
@@ -128,15 +121,6 @@ class StageCommits:
             "resumed": self.store.last_resumed[stage],
             **(m.get("sha_invariant") or {}),
         }
-        if partition_by and self.store.last_resumed[stage]:
-            recorded = m.get("layout", LEGACY_LAYOUT)
-            if recorded["bucket_count"] != self.store.layout["bucket_count"]:
-                raise RuntimeError(
-                    f"stage '{stage}' was written with {recorded['bucket_count']} "
-                    f"repo buckets but the warehouse's mentions stage uses "
-                    f"{self.store.layout['bucket_count']}: delete this stage "
-                    "and the stages after it to rebuild them"
-                )
         return df
 
     def append(self, stage: str, df: DataFrame, partition_by=None) -> None:
@@ -162,9 +146,10 @@ def _bootstrap(
     run and the first batch of a stream. Returns the commits (holding
     the metrics) and the candidates.
 
-    The input identity is stamped on the store first, refusing a
-    warehouse with a stage built from another input before any work.
-    Each stage faces the sha invariant inside its own commit.
+    The input identity and the layout are stamped on the store first,
+    refusing a warehouse with a stage built from another input or
+    under another layout before any work. Each stage faces the sha
+    invariant inside its own commit.
 
     The sidecar (the ``INPUT_PAIRS`` stage) is the exact
     (doc_id, content_sha) set the warehouse holds; the append-only
@@ -175,8 +160,8 @@ def _bootstrap(
     commit leaves a warehouse without a sidecar: ``append_repos_batch``
     refuses it, the stream dispatch re-enters this bootstrap, and a run
     over the same input resumes both stages and writes the sidecar."""
-    store.stamp_input(*input_identity(repos_src))
-    store.layout = _layout_for(store, store.input_bytes)
+    pairs, digest, docs, content_bytes = input_identity(repos_src)
+    store.stamp_input(pairs, digest, docs, content_bytes, _layout_for(store, content_bytes))
     metrics = {
         "run_id": store.run_id,
         "input_sha_digest": store.input_digest,
@@ -298,11 +283,12 @@ def append_repos_batch(
 
     Overlap guard: new doc_ids are checked against the warehouse's
     input-identity sidecar (``_bootstrap``). A warehouse without a
-    committed sidecar, or whose candidates or sidecar manifest records
-    another input than mentions', refuses before writing anything. The
-    batch is written with the bucket count recorded in the mentions
-    manifest; the write salt is re-derived for the grown corpus
-    (``_layout_for``)."""
+    committed sidecar refuses before writing anything, and so does one
+    with any committed stage whose manifest records another input or
+    layout than mentions': the store is stamped with mentions' recorded
+    identity and layout first (``StageStore.stamp_input``). The batch is
+    written with the bucket count recorded in the mentions manifest; the
+    write salt is re-derived for the grown corpus (``_layout_for``)."""
     for st in ("mentions", "candidates"):
         if not store.is_complete(st):
             raise RuntimeError(
@@ -317,28 +303,17 @@ def append_repos_batch(
             "over its input, which resumes the committed stages and writes "
             "the sidecar, then append"
         )
-    old_m = store.manifest("mentions")
-    old_digest, old_docs = old_m.get("input_sha_digest"), old_m.get("input_docs")
-    if old_digest is None:
-        raise RuntimeError(
-            "warehouse predates input-identity manifests; re-run the full "
-            "pipeline once to stamp them before appending"
-        )
-    for st in ("candidates", INPUT_PAIRS):
-        m = store.manifest(st)
-        if (m.get("input_sha_digest"), m.get("input_docs")) != (old_digest, old_docs):
-            raise RuntimeError(
-                f"stage '{st}' of warehouse {store.root} was built from a "
-                f"different input (manifest digest {m.get('input_sha_digest')}/"
-                f"{m.get('input_docs')} docs) than its mentions stage "
-                f"({old_digest}/{old_docs} docs): the append guard cannot "
-                "trust it. Use a fresh --output warehouse, or delete the "
-                "stage directories and re-run the full pipeline over the "
-                "warehouse's input."
-            )
+    existing = store.read(spark, INPUT_PAIRS)
+    m = store.manifest("mentions")
+    store.stamp_input(
+        existing,
+        m.get("input_sha_digest"),
+        m.get("input_docs"),
+        m.get("input_bytes"),
+        m.get("layout"),
+    )
 
     new_pairs, new_digest, n_new, new_bytes = input_identity(repos_src_new)
-    existing = store.read(spark, INPUT_PAIRS)
     n_overlap = new_pairs.join(existing.select("doc_id"), "doc_id", "left_semi").count()
     if n_overlap:
         # replay-noop requires the EXACT (doc_id, content_sha) pair set:
@@ -374,10 +349,9 @@ def append_repos_batch(
             "changed documents needs a fresh warehouse (or delete + full run)"
         )
     store.input_pairs = new_pairs
-    store.input_digest = str(int(old_digest) + int(new_digest))
-    store.input_docs = int(old_docs) + n_new
-    old_bytes = old_m.get("input_bytes")
-    store.input_bytes = None if old_bytes is None else old_bytes + new_bytes
+    store.input_digest = str(int(store.input_digest) + int(new_digest))
+    store.input_docs += n_new
+    store.input_bytes += new_bytes
     store.layout = _layout_for(store, store.input_bytes)
 
     metrics: dict = {
@@ -435,8 +409,8 @@ def run_codekg_pipeline_incremental(
     sum-fold digest is additive over disjoint doc sets, so the
     combined identity = old manifest digest + new batch digest. A
     subsequent FULL run over old+new input therefore resumes every
-    stage cleanly, and the run_stage guard keeps refusing any other
-    input."""
+    stage cleanly, and ``StageStore.stamp_input`` keeps refusing any
+    other input."""
     store = StageStore(out_root, run_id=run_id, iceberg_catalog=iceberg_catalog)
     metrics = append_repos_batch(spark, store, repos_src_new)
     store.input_pairs = store.read(spark, INPUT_PAIRS)

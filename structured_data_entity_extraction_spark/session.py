@@ -112,10 +112,11 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
     """A driver-side table (tuples in ``schema`` order) as a local
     relation. The rows travel as a pyarrow Table carrying the declared
     schema, so the plan holds them in a ``LocalTableScan`` (with Arrow
-    on or off): queries and broadcasts over it run no Python worker and
-    no Spark job. ``createDataFrame`` over a Python list instead plans
-    ``Scan ExistingRDD`` over a PythonRDD, which re-pickles the rows in
-    Python workers on every evaluation."""
+    on or off): queries and broadcasts over it run no Python worker. A
+    broadcast of it still runs one Spark job: ``BroadcastExchange``
+    collects its child through a job. ``createDataFrame`` over a Python
+    list instead plans ``Scan ExistingRDD`` over a PythonRDD, which
+    re-pickles the rows in Python workers on every evaluation."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

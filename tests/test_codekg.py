@@ -476,6 +476,16 @@ def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
     assert m_inc["new_docs"] == 10
 
 
+def _files(root):
+    """Every file under ``root``, path -> bytes."""
+    out = {}
+    for r, _d, fs in os.walk(root):
+        for f in fs:
+            with open(os.path.join(r, f), "rb") as fh:
+                out[os.path.join(r, f)] = fh.read()
+    return out
+
+
 def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
     """The sidecar refuses another input like any committed stage: a
     warehouse built over docs 0-19 whose data-stage manifests are
@@ -498,18 +508,10 @@ def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
     for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
         os.remove(store.manifest_path(stage))
 
-    def files():
-        out = {}
-        for r, _d, fs in os.walk(root):
-            for f in fs:
-                with open(os.path.join(r, f), "rb") as fh:
-                    out[os.path.join(r, f)] = fh.read()
-        return out
-
-    files_before = files()
+    files_before = _files(root)
     with pytest.raises(RuntimeError, match="stage '_input_pairs' .* different input"):
         run_codekg_pipeline(spark, mk(rows[20:40]), root, run_id="b2")
-    assert files() == files_before
+    assert _files(root) == files_before
 
     def manifests():
         return {
@@ -668,7 +670,8 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
 def test_append_writes_one_file_per_partition_per_batch(spark, tmp_path):
     """Each appended batch adds at most one file per (repo_bucket, lang)
     it touches to mentions and candidates, and one file to the
-    _input_pairs sidecar, however the batch frames are partitioned."""
+    _input_pairs sidecar, however the batch frames are partitioned; the
+    bootstrap batch writes the sidecar as one file too."""
     import collections
 
     from structured_data_entity_extraction_spark.pipeline import ingest_repos_batch
@@ -691,7 +694,9 @@ def test_append_writes_one_file_per_partition_per_batch(spark, tmp_path):
         )
         assert {run for run, _dir in per_dir} == appended, stage
         assert set(per_dir.values()) == {1}, (stage, per_dir)
-    assert store.manifest("_input_pairs")["rows"] == 100
+    pairs = store.manifest("_input_pairs")
+    assert [f["run_id"] for f in pairs["lineage"]].count("b0") == 1
+    assert pairs["rows"] == 100
 
 
 def test_checked_commit_keeps_layout_and_refuses_foreign_row(spark, tmp_path):
@@ -801,7 +806,7 @@ def test_pipeline_layout_derived_and_recorded(spark, repos_df, tmp_path, monkeyp
     assert content_bytes == sum(len((r or "").encode()) for (r,) in repos_df.select("content").collect())
     assert store.manifest("triples")["input_bytes"] == content_bytes
     monkeypatch.setattr(pipeline, "LAYOUT_TARGET_BYTES", 1)
-    assert pipeline.derive_layout(content_bytes) == pipeline.LEGACY_LAYOUT
+    assert pipeline.derive_layout(content_bytes) == {"bucket_count": 64, "write_salt": 8}
     assert pipeline.derive_layout(content_bytes, 2) == {"bucket_count": 2, "write_salt": 256}
     monkeypatch.setattr(pipeline, "LAYOUT_TARGET_BYTES", content_bytes // 5)
     assert 1 < pipeline.derive_layout(content_bytes)["bucket_count"] <= 64
@@ -858,11 +863,10 @@ def test_append_keeps_recorded_layout(spark, tmp_path, monkeypatch):
     assert got == want
 
 
-def test_unrecorded_layout_resumes_and_appends_as_legacy(spark, tmp_path):
-    """Manifests without a layout were written as (64, 8): such a
-    warehouse resumes with 64 buckets, and an append, which cannot size
-    the grown corpus without recorded input bytes, writes with 64
-    buckets and records (64, 8)."""
+def test_unrecorded_layout_refuses_resume_and_append(spark, tmp_path):
+    """A warehouse whose manifests record no layout (written before
+    layouts were recorded) refuses both a resume over its own input and
+    an append, before writing anything."""
     from structured_data_entity_extraction_spark import pipeline
 
     rows = repos_src_rows(30, seed=37)
@@ -873,22 +877,44 @@ def test_unrecorded_layout_resumes_and_appends_as_legacy(spark, tmp_path):
     root = str(tmp_path / "w")
     run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     _strip_layout(root)
-    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
-    assert all(s["resumed"] for s in m["stages"].values())
-    assert m["layout"]["bucket_count"] == 64
+    before = _files(root)
+    with pytest.raises(RuntimeError, match="stage 'candidates' records no partition layout"):
+        run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
+    assert _files(root) == before
+    with pytest.raises(RuntimeError, match="stage 'candidates' records no partition layout"):
+        pipeline.run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
+    assert _files(root) == before
 
-    m_inc = pipeline.run_codekg_pipeline_incremental(
-        spark, mk(rows[20:]), root, run_id="i"
+
+def test_append_refuses_stale_global_stage(spark, tmp_path):
+    """An append holds every committed stage to mentions' recorded
+    input, the corpus-global ones included: a triples manifest that
+    records another input digest refuses the append before it writes
+    anything or sets the pending marker."""
+    from structured_data_entity_extraction_spark.pipeline import (
+        run_codekg_pipeline_incremental,
     )
-    assert m_inc["layout"] == pipeline.LEGACY_LAYOUT
+
+    rows = repos_src_rows(30, seed=53)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     store = StageStore(root)
-    for stage in ("mentions", "candidates", "triples"):
-        assert store.manifest(stage)["layout"] == pipeline.LEGACY_LAYOUT
-    new = _rows_of(store.read(spark, "mentions"), mk(rows[20:]))
-    assert new.count() > 0
-    assert new.filter(
-        F.col("repo_bucket") != F.pmod(F.xxhash64("repo"), F.lit(64))
-    ).count() == 0
+    m = store.manifest("triples")
+    m["input_sha_digest"] = str(int(m["input_sha_digest"]) + 1)
+    store._publish("triples", m)
+
+    def manifests():
+        return {p: b for p, b in _files(root).items() if p.endswith("_MANIFEST.json")}
+
+    before = manifests()
+    with pytest.raises(RuntimeError, match="stage 'triples' .* different input"):
+        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
+    assert manifests() == before
+    assert not os.path.exists(store.pending_path())
 
 
 def test_resumed_stage_must_match_layout(spark, rows, tmp_path):
