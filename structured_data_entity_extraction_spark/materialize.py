@@ -25,10 +25,21 @@ The same write checks the per-row sha256 invariant
 pairs: a stage with a foreign pair raises before its manifest is
 written, so it never commits, and a passing manifest records the verdict.
 
-A stage directory without _MANIFEST.json is an aborted write and is
-re-run; with it, the stage is skipped and its data re-read. Before any
-work, ``StageStore.stamp_input`` refuses a root whose committed stages
-record another input identity, none, or (partitioned) another layout.
+A stage is exactly the files its manifest's lineage lists (the rule
+Delta Lake and Iceberg keep: a table is the file set its log lists).
+Anything else under a stage's ``data/`` -- the files of a write,
+append or compaction killed before its manifest swap, their checksum
+siblings, a killed job's ``_temporary/`` -- is uncommitted, and the
+rollback (``StageStore._rollback``) drops it before the stage is read
+or committed again; a stage directory without _MANIFEST.json is an
+aborted write and is dropped whole and re-run. With a manifest, the
+stage is skipped and its data re-read. Before any work,
+``StageStore.stamp_input`` refuses a root whose committed stages record
+another input identity, none, or (partitioned) another layout, and
+then rolls every committed stage back to its lineage. A kill inside
+one stage's commit therefore heals on the next run, and a kill between
+two stages' manifest swaps leaves stages recording different inputs,
+which the same guard refuses.
 
 The warehouse's input-identity sidecar (``INPUT_PAIRS``, the exact
 (doc_id, content_sha) set of every ingested document) is one more such
@@ -138,9 +149,6 @@ class StageStore:
         # (True) or rebuilt (False) in THIS process -- run_id equality
         # can't tell (re-running with the same --run-id is a resume too)
         self.last_resumed: dict[str, bool] = {}
-        # True while THIS store instance holds the warehouse-level
-        # pending-append marker (append() then skips re-marking)
-        self._holding_pending = False
 
     def iceberg_ident(self, stage: str) -> str:
         return f"{self.iceberg_catalog}.{ICEBERG_NAMESPACE}.{stage}"
@@ -156,7 +164,7 @@ class StageStore:
 
     def stamp_input(
         self,
-        pairs: DataFrame,
+        pairs: DataFrame | None,
         digest: str,
         docs: int,
         content_bytes: int | None,
@@ -166,12 +174,18 @@ class StageStore:
         partition layout this run writes under, and refuse, before any
         work, a root holding a committed stage this run must not resume
         or extend (``_check_input``). This is the warehouse's one guard:
-        nothing later re-checks a resumed or appended stage."""
+        nothing later re-checks a resumed or appended stage. Once every
+        committed stage passes, each is rolled back to its lineage
+        (``_rollback``), so a refused run changes no file and an
+        accepted one reads and extends only committed files."""
         self.input_pairs, self.input_digest, self.input_docs = pairs, digest, docs
         self.input_bytes, self.layout = content_bytes, layout
-        for stage in sorted(os.listdir(self.root)) if os.path.isdir(self.root) else ():
-            if self.is_complete(stage):
-                self._check_input(stage)
+        stages = sorted(os.listdir(self.root)) if os.path.isdir(self.root) else []
+        committed = [st for st in stages if self.is_complete(st)]
+        for stage in committed:
+            self._check_input(stage)
+        for stage in committed:
+            self._rollback(stage)
 
     def _check_input(self, stage: str) -> None:
         """Refuse a committed stage built from another input, or one
@@ -203,55 +217,29 @@ class StageStore:
             "fresh --output warehouse, or delete the stage manifests to rebuild."
         )
 
-    # ------------------------------------------ torn-append detection
-    #
-    # The plain-parquet append path is not atomic: data files land
-    # before the manifest swap. A warehouse-level pending marker brackets
-    # every append batch; a crash in between leaves the marker behind,
-    # and every later run_stage/append REFUSES with the recovery path
-    # (the stage data no longer matches its manifest identity, so the
-    # only safe recovery is rebuilding the appended stages). The Iceberg
-    # route commits snapshots atomically but shares the marker so one
-    # batch's stages (the INPUT_PAIRS stage among them) commit together.
-
-    def pending_path(self) -> str:
-        return os.path.join(self.root, "_PENDING_APPEND.json")
-
-    def check_no_pending(self) -> None:
-        p = self.pending_path()
-        if os.path.exists(p):
-            with open(p, encoding="utf-8") as fh:
-                meta = json.load(fh)
-            raise RuntimeError(
-                f"warehouse {self.root} has a TORN APPEND (marker "
-                f"{p}: batch run_id={meta.get('run_id')} over stages "
-                f"{meta.get('stages')} started {meta.get('started_at')} and "
-                "never committed). Stage data may not match its manifest. "
-                "Recovery: delete the affected stage dirs (and the marker) "
-                "and re-run the full pipeline into this warehouse, or use a "
-                "fresh --output."
-            )
-
-    def begin_append(self, stages: list[str]) -> None:
-        self.check_no_pending()
-        os.makedirs(self.root, exist_ok=True)
-        with open(self.pending_path(), "w", encoding="utf-8") as fh:
-            json.dump(
-                {
-                    "stages": stages,
-                    "run_id": self.run_id,
-                    "started_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                },
-                fh,
-            )
-        self._holding_pending = True
-
-    def end_append(self) -> None:
-        self._holding_pending = False
-        if os.path.exists(self.pending_path()):
-            os.remove(self.pending_path())
+    def _rollback(self, stage: str) -> None:
+        """Make the stage exactly what its manifest commits: drop a stage
+        directory without a manifest whole, and under a committed
+        stage's ``data/`` every file its lineage does not list (a
+        listed file keeps its ``.<name>.crc`` checksum sibling) and the
+        directories that leaves empty. A killed job's ``data/_temporary``
+        must go too: Spark's next partitioned append into ``data/``
+        merges the committed task directories it finds there."""
+        d = self._dir(stage)
+        if not self.is_complete(stage):
+            if os.path.exists(d):
+                shutil.rmtree(d)
+            return
+        data = os.path.join(d, "data")
+        listed = {f["file"] for f in self.manifest(stage)["lineage"]}
+        for parent, _dirs, names in os.walk(data, topdown=False):
+            rel = os.path.relpath(parent, data)
+            for n in names:
+                own = n[1:-4] if n.startswith(".") and n.endswith(".crc") else n
+                if os.path.normpath(os.path.join(rel, own)) not in listed:
+                    os.remove(os.path.join(parent, n))
+            if parent != data and not os.listdir(parent):
+                os.rmdir(parent)
 
     def write_input_pairs(self, pairs: DataFrame) -> DataFrame:
         """Build or resume the ``INPUT_PAIRS`` stage from the input's
@@ -419,12 +407,10 @@ class StageStore:
         stage: str,
         partition_by: list[str] | None = None,
     ) -> DataFrame:
-        """Commit a stage from scratch (clearing an aborted earlier
+        """Commit a stage from scratch (rolling back an aborted earlier
         attempt). Returns the committed data re-read, so downstream
         stages consume the checkpoint, not the upstream plan."""
-        d = self._dir(stage)
-        if os.path.exists(d) and not self.is_complete(stage):
-            shutil.rmtree(d)  # aborted previous attempt
+        self._rollback(stage)
         return self._commit(df, stage, partition_by, base=None)
 
     def append(
@@ -440,53 +426,45 @@ class StageStore:
         input_digest/input_docs to the COMBINED old+new input before
         calling -- the sha sum-fold is additive over disjoint doc sets,
         so combined digests are exact, not recomputed). Returns the
-        re-read full stage."""
+        re-read full stage. The batch's files land before the manifest
+        swap; a kill in between leaves them unlisted, and the next
+        ``stamp_input`` rolls them back. The caller stamps the store
+        first, so the stage holds only its lineage files: any other
+        file would count as written by this batch and fail the footer
+        check."""
         if not self.is_complete(stage):
             raise RuntimeError(
                 f"append requires a committed '{stage}' stage; run the full "
                 "pipeline first"
             )
-        # torn-append safety: data files land before the manifest swap,
-        # so bracket the append with the warehouse pending marker (a
-        # crash in between leaves the marker; every later resume/append
-        # refuses with the recovery path). A caller batching several
-        # stage appends holds one marker via begin_append/end_append.
-        own_marker = not self._holding_pending
-        if own_marker:
-            self.begin_append([stage])
-        persisted = self._commit(df, stage, partition_by, base=self.manifest(stage))
-        if own_marker:
-            self.end_append()
-        return persisted
+        return self._commit(df, stage, partition_by, base=self.manifest(stage))
 
     def compact(self, spark: SparkSession, stage: str) -> dict:
         """Warehouse maintenance: rewrite a stage's accumulated
         append/micro-batch files into files of about
         ``COMPACT_TARGET_FILE_MB`` (a long-lived streamed
         corpus otherwise ends as thousands of tiny parquet files per
-        stage -- VERDICT r5 'What's missing' #3). Read-equivalent by
-        construction and VERIFIED before the swap: the rewrite's observed
-        row count and content_sha sum-fold must equal the manifest's, or
-        compact aborts with the original intact.
+        stage -- VERDICT r5 'What's missing' #3).
 
-        Crash safety follows the torn-append pattern: the compacted
-        copy is written to a sibling temp dir first (original untouched
-        -- a crash there costs only scratch space), then the directory
-        swap + manifest rewrite happen inside a _PENDING_APPEND marker
-        window, so a kill mid-swap surfaces as a refusing torn append
-        with the recovery text instead of a half-swapped stage. The
-        manifest keeps the stage's input identity untouched -- resume
-        keeps refusing changed/appended input after compaction exactly
-        as before.
+        One commit like any other: the stage is rolled back to its
+        lineage, the rewrite is appended into ``data/`` beside the old
+        files, and its observed row count and content_sha sum-fold must
+        equal the manifest's. The new manifest then lists only the new
+        files, and the old ones, now unlisted, are dropped. A failed
+        verification drops the new files instead. A kill before the
+        manifest swap leaves the new files unlisted, a kill after it the
+        old ones; either way the next run's rollback drops them, and
+        reads never change. The manifest keeps the stage's input
+        identity untouched -- resume keeps refusing changed/appended
+        input after compaction exactly as before.
 
         On the Iceberg route this delegates to the catalog's own
-        ``rewrite_data_files`` maintenance procedure (snapshot-atomic;
-        no marker needed)."""
+        ``rewrite_data_files`` maintenance procedure (snapshot-atomic)."""
         if not self.is_complete(stage):
             raise RuntimeError(
                 f"compact requires a committed '{stage}' stage"
             )
-        self.check_no_pending()
+        self._rollback(stage)
         if self.iceberg_catalog:
             spark.sql(
                 f"CALL {self.iceberg_catalog}.system.rewrite_data_files"
@@ -496,13 +474,6 @@ class StageStore:
             )
             return {"stage": stage, "route": "iceberg_rewrite_data_files"}
         old = self.manifest(stage)
-        d = self._dir(stage)
-        data_path = os.path.join(d, "data")
-        tmp_path = os.path.join(d, "data.compacting")
-        old_dir = os.path.join(d, "data.precompact")
-        for p in (tmp_path, old_dir):  # scratch from an earlier crash
-            if os.path.exists(p):
-                shutil.rmtree(p)
         partition_by = old["partition_by"]
         total_bytes, rows = old["bytes"], old["rows"]
         # size the rewrite from the stage's own bytes-per-row: N output
@@ -511,30 +482,22 @@ class StageStore:
         target_bytes = COMPACT_TARGET_FILE_MB << 20
         n_files = max(1, -(-total_bytes // target_bytes))
         max_records = max(1, int(target_bytes / max(total_bytes / max(rows, 1), 1)))
-        df = self.read(spark, stage)
-        # the verification gate runs BEFORE any destructive step. The
-        # lineage paths are relative to the data dir, so the temp
-        # dir's lineage is valid verbatim after the rename below.
         new = self._observed_write(
-            df.repartition(int(n_files), *partition_by),
+            self.read(spark, stage).repartition(int(n_files), *partition_by),
             stage,
-            tmp_path,
+            os.path.join(self._dir(stage), "data"),
             partition_by,
+            append=True,
+            known=[f["file"] for f in old["lineage"]],
             max_records=max_records,
         )
         if (new["rows"], new["content_sha_sum"]) != (rows, old["content_sha_sum"]):
-            shutil.rmtree(tmp_path)
+            self._rollback(stage)
             raise RuntimeError(
                 f"compact verification failed for stage '{stage}': "
                 f"rows/sha {new['rows']}/{new['content_sha_sum']} vs committed "
                 f"{rows}/{old['content_sha_sum']} -- original left intact"
             )
-
-        # marker-bracketed swap: a kill anywhere in here leaves the
-        # marker and every later run refuses with the recovery path
-        self.begin_append([stage])
-        os.rename(data_path, old_dir)
-        os.rename(tmp_path, data_path)
         manifest = dict(old)
         manifest.update(
             {
@@ -547,8 +510,7 @@ class StageStore:
             }
         )
         self._publish(stage, manifest)
-        shutil.rmtree(old_dir)
-        self.end_append()
+        self._rollback(stage)
         return {
             "stage": stage,
             "rows": new["rows"],
@@ -560,8 +522,10 @@ class StageStore:
     def invalidate(self, stage: str) -> None:
         """Drop a stage checkpoint so the next run_stage rebuilds it
         (the incremental path invalidates every stage DOWNSTREAM of an
-        append -- their manifests carry the pre-append input identity,
-        which ``stamp_input`` would rightly refuse)."""
+        append before it appends -- their manifests carry the
+        pre-append input identity, which ``stamp_input`` would rightly
+        refuse, and a kill mid-append must not leave them beside the
+        appended stages)."""
         d = self._dir(stage)
         if os.path.exists(d):
             shutil.rmtree(d)
@@ -581,10 +545,10 @@ class StageStore:
         per-stage sha invariant cannot do that on its own: it is a
         subset check (stages may legitimately drop zero-mention docs),
         so re-running an old warehouse over an APPENDED input would
-        resume stale stages that silently miss every new document. A
-        torn append (pending marker present) refuses BOTH branches --
-        the data under a marked warehouse may not match any manifest."""
-        self.check_no_pending()
+        resume stale stages that silently miss every new document. The
+        same stamp rolled each committed stage back to its lineage, so a
+        resumed stage reads exactly its committed files, and ``write``
+        drops an aborted attempt's directory before rebuilding it."""
         if self.is_complete(stage):
             self.last_resumed[stage] = True
             return self.read(spark, stage)

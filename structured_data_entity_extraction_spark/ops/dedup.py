@@ -138,9 +138,10 @@ def ngram_jaccard_pairs(
         F.max(F.array_max("docs")).alias("hi"),
         F.sum(_sz * (_sz - 1) / 2).cast("long").alias("n_pairs"),
     ).first()
-    _packable = (
-        _stats["lo"] is not None and _stats["lo"] >= 0 and _stats["hi"] < (1 << 31)
-    )
+    # the id range only means something for integer ids (string ids
+    # have neither a packing nor a dimension-sized range)
+    _int_ids = isinstance(_stats["lo"], int) and isinstance(_stats["hi"], int)
+    _packable = _int_ids and _stats["lo"] >= 0 and _stats["hi"] < (1 << 31)
     sizes = (
         lists.select(F.explode("docs").alias("doc_id"))
         .groupBy("doc_id")
@@ -173,12 +174,7 @@ def ngram_jaccard_pairs(
     # unguarded join could degrade to a sort-merge that re-shuffles
     # the pair stream by id (guide §8: the attach-back join must not
     # sneak the big shuffle back in).
-    _prefilter = (
-        threshold > 0
-        and isinstance(_stats["lo"], int)
-        and isinstance(_stats["hi"], int)
-        and (_stats["hi"] - _stats["lo"]) <= 1_000_000
-    )
+    _prefilter = threshold > 0 and _int_ids and (_stats["hi"] - _stats["lo"]) <= 1_000_000
     # docs is sorted ascending, so the nested i<j expansion emits each
     # unordered pair once with id_a < id_b -- exactly the rows of the
     # old a.hkey = b.hkey AND a.doc_id < b.doc_id self-join. Lambdas

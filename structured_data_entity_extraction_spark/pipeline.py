@@ -18,8 +18,8 @@ bucket_count), and the triples dedup is salted ``write_salt`` ways
 content bytes: one (bucket, salt) key per 16 MiB, buckets first (up to
 64), then salt (up to 8). A 2000-doc input gets (1, 1): all rows under
 repo_bucket=0, one directory per lang, with as many part-files per
-directory as write tasks touch it; the 320k-doc pipeline_bench corpus
-(306 MB) gets (19, 1); (64, 8), the r6 layout, starts above 7 GiB
+directory as write tasks touch it; BENCH.md's 320k-doc checkpointed
+corpus (306 MB) gets (19, 1); (64, 8), the r6 layout, starts above 7 GiB
 (BENCH.md "r6 fold" has the A/B behind the 16 MiB). The bucket count is
 fixed when mentions is built: resume, --append, streaming batches and
 the finalize run read it from the mentions manifest. The salt only
@@ -271,15 +271,20 @@ def append_repos_batch(
 ) -> dict:
     """Append ONE batch of new documents to a committed warehouse --
     the shared core of incremental batch ingest and the streaming
-    foreachBatch sink. Extracts + links ONLY the batch, appends it to
-    the mentions, candidates and input-identity sidecar stages inside
-    one torn-append marker window, folds the additive digest into their
-    manifests, and invalidates the corpus-global stages
-    (edges/nodes/triples) whose old checkpoints describe the
-    pre-append corpus. Rebuilding them is the caller's choice: the
-    incremental CLI rebuilds immediately; the streaming sink leaves
-    them invalidated so a batch "finalize" run over the union resumes
-    mentions/candidates and rebuilds only the global stages.
+    foreachBatch sink. Extracts + links ONLY the batch, invalidates the
+    corpus-global stages (edges/nodes/triples) whose old checkpoints
+    describe the pre-append corpus, then appends the batch to the
+    mentions, candidates and input-identity sidecar stages, folding the
+    additive digest into their manifests. Rebuilding the global stages
+    is the caller's choice: the incremental CLI rebuilds immediately;
+    the streaming sink leaves them invalidated so a batch "finalize" run
+    over the union resumes mentions/candidates and rebuilds only the
+    global stages.
+
+    A kill inside one stage's append leaves only unlisted files, which
+    the stamp of the redelivered (or next) batch rolls back; a kill
+    between two stages' manifest swaps leaves stages recording different
+    inputs, which the stamp refuses.
 
     Overlap guard: new doc_ids are checked against the warehouse's
     input-identity sidecar (``_bootstrap``). A warehouse without a
@@ -295,7 +300,6 @@ def append_repos_batch(
                 f"incremental append requires a committed '{st}' stage; "
                 "run the full pipeline first"
             )
-    store.check_no_pending()
     if not store.is_complete(INPUT_PAIRS):
         raise RuntimeError(
             f"warehouse {store.root} has no input-identity sidecar "
@@ -303,15 +307,16 @@ def append_repos_batch(
             "over its input, which resumes the committed stages and writes "
             "the sidecar, then append"
         )
-    existing = store.read(spark, INPUT_PAIRS)
     m = store.manifest("mentions")
     store.stamp_input(
-        existing,
+        None,
         m.get("input_sha_digest"),
         m.get("input_docs"),
         m.get("input_bytes"),
         m.get("layout"),
     )
+    # read after the stamp's rollback: Spark lists the files here
+    existing = store.read(spark, INPUT_PAIRS)
 
     new_pairs, new_digest, n_new, new_bytes = input_identity(repos_src_new)
     n_overlap = new_pairs.join(existing.select("doc_id"), "doc_id", "left_semi").count()
@@ -370,17 +375,14 @@ def append_repos_batch(
         codekg.extract_code_mentions(repos_src_new, store.layout["bucket_count"])
     )
     candidates_new = codekg.link_mentions(mentions_new, alias_dim)
-    store.begin_append(["mentions", "candidates", INPUT_PAIRS])
+    # the global stages describe the pre-append corpus; drop them first,
+    # so no kill leaves them beside appended stages
+    for st in ("edges", "nodes", "triples"):
+        store.invalidate(st)
     # one file per touched (repo_bucket, lang) and one sidecar file per batch
     for stage, df in (("mentions", mentions_new), ("candidates", candidates_new)):
         commits.append(stage, df.repartition(*PARTITION_BY), PARTITION_BY)
     store.append(new_pairs.coalesce(1), INPUT_PAIRS)
-    # the global stages describe the pre-append corpus; drop their
-    # checkpoints inside the marker window so a crash here still
-    # surfaces as a torn append rather than stale globals
-    for st in ("edges", "nodes", "triples"):
-        store.invalidate(st)
-    store.end_append()
     return metrics
 
 
@@ -504,7 +506,7 @@ def main(argv=None) -> None:
         help="maintenance: compact the comma-separated stages (or 'all': "
         "every committed stage, the _input_pairs sidecar included) of an "
         "existing --output warehouse into sized files and exit (verified "
-        "read-equivalent; torn-compact marker on crash)",
+        "read-equivalent; a crash leaves the last committed files)",
     )
     args = ap.parse_args(argv)
     if args.input is None and not args.compact:

@@ -465,7 +465,6 @@ def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
     before = manifests()
     with pytest.raises(RuntimeError, match="sidecar"):
         run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
-    assert not os.path.exists(store.pending_path())
     assert manifests() == before
     assert not store.is_complete("_input_pairs")
 
@@ -525,7 +524,6 @@ def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
     with pytest.raises(RuntimeError, match="'_input_pairs' .* different input"):
         ingest_repos_batch(spark, StageStore(root, run_id="c"), mk(rows[30:50]))
     assert manifests() == before
-    assert not os.path.exists(store.pending_path())
 
 
 def test_manifestless_sidecar_reads_as_aborted(spark, tmp_path):
@@ -556,49 +554,160 @@ def test_manifestless_sidecar_reads_as_aborted(spark, tmp_path):
     assert store.read(spark, "_input_pairs").count() == 20
 
 
-def test_torn_append_marker_blocks_resume(spark, tmp_path):
-    """A crash between data append and manifest swap leaves the
-    warehouse pending marker; every later resume/append must refuse
-    with the recovery path instead of reading data that no longer
-    matches its manifest."""
-    import json as _json
-    import os as _os
+def _committed_files_only(store, stage):
+    """True when the stage's data/ holds exactly its lineage files
+    (checksum siblings and a commit's _SUCCESS marker aside)."""
+    data = os.path.join(store.root, stage, "data")
+    found = {
+        os.path.relpath(os.path.join(r, f), data)
+        for r, _d, fs in os.walk(data)
+        for f in fs
+        if not f.endswith(".crc") and f != "_SUCCESS"
+    }
+    return found == {f["file"] for f in store.manifest(stage)["lineage"]}
 
-    from structured_data_entity_extraction_spark.materialize import StageStore
+
+def _plant_uncommitted(store, stage):
+    """Plant what a killed write leaves in a committed stage: an
+    unlisted parquet file (with its checksum sibling) beside a listed
+    one, and a committed task directory under data/_temporary holding
+    a copy of it."""
+    import shutil
+
+    data = os.path.join(store.root, stage, "data")
+    listed = store.manifest(stage)["lineage"][0]["file"]
+    part_dir, name = os.path.split(listed)
+    src, orphan = os.path.join(data, listed), "part-99999-orphan.c000.snappy.parquet"
+    shutil.copy(src, os.path.join(data, part_dir, orphan))
+    shutil.copy(os.path.join(data, part_dir, f".{name}.crc"), os.path.join(data, part_dir, f".{orphan}.crc"))
+    task = os.path.join(data, "_temporary", "0", "task_202601010000_0000_m_000000", part_dir)
+    os.makedirs(task)
+    shutil.copy(src, os.path.join(task, orphan))
+    assert not _committed_files_only(store, stage)
+
+
+def test_uncommitted_files_roll_back_on_resume(spark, tmp_path):
+    """Crash point inside one stage's commit: files a killed write left
+    under a committed stage's data/ (an unlisted parquet file, a
+    data/_temporary task directory) are not the stage. A resume over
+    the same input reads exactly the committed rows and leaves data/
+    holding exactly the lineage files; an append over the same debris
+    in candidates passes the footer check, and its rebuilt triples
+    equal a from-scratch run's."""
     from structured_data_entity_extraction_spark.pipeline import (
         run_codekg_pipeline_incremental,
     )
 
-    rows = repos_src_rows(30, seed=32)
+    rows = repos_src_rows(40, seed=32)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root, full_root = str(tmp_path / "w"), str(tmp_path / "full")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
+    store = StageStore(root)
+    cols = ["doc_id", "field", "value", "content_sha"]
+    committed = sorted(map(tuple, store.read(spark, "mentions").select(*cols).collect()))
+
+    _plant_uncommitted(store, "mentions")
+    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
+    assert all(s["resumed"] for s in m["stages"].values())
+    assert sorted(map(tuple, store.read(spark, "mentions").select(*cols).collect())) == committed
+    assert _committed_files_only(store, "mentions")
+
+    _plant_uncommitted(store, "candidates")
+    run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
+    for stage in ("mentions", "candidates"):
+        assert _committed_files_only(store, stage), stage
+    run_codekg_pipeline(spark, mk(rows), full_root, run_id="f")
+    tcols = ["subj", "pred", "obj", "doc_id", "repo", "lang", "content_sha", "conf"]
+    got, want = (
+        sorted(map(tuple, StageStore(r).read(spark, "triples").select(*tcols).collect()))
+        for r in (root, full_root)
+    )
+    assert got == want
+
+
+def test_tear_between_stage_commits_refuses(spark, tmp_path):
+    """Crash point between two stages' manifest swaps: after an append,
+    candidates' pre-append manifest is restored (mentions and the
+    sidecar committed the batch, candidates did not). The next append
+    and the next full run each refuse, naming the stage, and leave
+    every file byte-identical."""
+    from structured_data_entity_extraction_spark.pipeline import ingest_repos_batch
+
+    rows = repos_src_rows(40, seed=34)
     mk = lambda rs: spark.createDataFrame(
         [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
         REPOS_SRC,
     )
     root = str(tmp_path / "w")
     run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
-    # simulate the torn state: marker present, no committed batch
     store = StageStore(root)
-    with open(store.pending_path(), "w", encoding="utf-8") as fh:
-        _json.dump(
-            {"stages": ["mentions"], "run_id": "crashed", "started_at": "x"}, fh
-        )
-    with pytest.raises(RuntimeError, match="TORN APPEND"):
-        run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
-    with pytest.raises(RuntimeError, match="TORN APPEND"):
-        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
-    _os.remove(store.pending_path())
-    # clean again: resume works
-    m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r2")
-    assert all(s["resumed"] for s in m["stages"].values())
+    with open(store.manifest_path("candidates"), "rb") as fh:
+        pre_append = fh.read()
+    assert ingest_repos_batch(spark, StageStore(root, run_id="i1"), mk(rows[20:30]))["mode"] == "incremental"
+    with open(store.manifest_path("candidates"), "wb") as fh:
+        fh.write(pre_append)
+
+    before = _files(root)
+    with pytest.raises(RuntimeError, match="stage 'candidates' .* different input"):
+        ingest_repos_batch(spark, StageStore(root, run_id="i2"), mk(rows[30:]))
+    assert _files(root) == before
+    with pytest.raises(RuntimeError, match="stage 'candidates' .* different input"):
+        run_codekg_pipeline(spark, mk(rows[:30]), root, run_id="r")
+    assert _files(root) == before
 
 
-def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
+def test_compact_killed_midway_heals(spark, tmp_path, monkeypatch):
+    """Crash points inside ``StageStore.compact``: killed before its
+    manifest swap (the rewrite is unlisted) and after it (the old files
+    are). Either way the next run resumes every stage with reads
+    unchanged, and leaves data/ holding exactly the lineage files."""
+    from structured_data_entity_extraction_spark.pipeline import (
+        run_codekg_pipeline_incremental,
+    )
+
+    rows = repos_src_rows(40, seed=36)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
+    run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
+    store = StageStore(root)
+    cols = ["doc_id", "field", "value", "content_sha"]
+    committed = sorted(map(tuple, store.read(spark, "mentions").select(*cols).collect()))
+    real_publish = StageStore._publish
+
+    def killed_before_swap(self, stage, manifest):
+        raise OSError("killed before the manifest swap")
+
+    def killed_after_swap(self, stage, manifest):
+        real_publish(self, stage, manifest)
+        raise OSError("killed after the manifest swap")
+
+    for kill, swapped in ((killed_before_swap, False), (killed_after_swap, True)):
+        lineage = store.manifest("mentions")["lineage"]
+        monkeypatch.setattr(StageStore, "_publish", kill)
+        with pytest.raises(OSError, match="killed"):
+            StageStore(root, run_id="c").compact(spark, "mentions")
+        monkeypatch.setattr(StageStore, "_publish", real_publish)
+        assert (store.manifest("mentions")["lineage"] != lineage) == swapped
+        assert not _committed_files_only(store, "mentions")
+        m = run_codekg_pipeline(spark, mk(rows), root, run_id="r")
+        assert all(s["resumed"] for s in m["stages"].values())
+        assert sorted(map(tuple, store.read(spark, "mentions").select(*cols).collect())) == committed
+        assert _committed_files_only(store, "mentions")
+
+
+def test_compact_preserves_reads_and_guards(spark, tmp_path):
     """StageStore.compact (r5 verdict #5): after N appends the stage
     holds many small batch files; compact must (a) drop the file count,
-    (b) keep reads bit-identical, (c) keep the resume identity guard
-    refusing changed input, and (d) surface a crash mid-swap as a
-    refusing TORN APPEND (the kill -9 twin, simulated by failing the
-    second directory rename)."""
+    (b) keep reads bit-identical, and (c) keep the resume identity guard
+    refusing changed input (its crash points:
+    ``test_compact_killed_midway_heals``)."""
     import os as _os
 
     from structured_data_entity_extraction_spark.materialize import StageStore
@@ -647,24 +756,6 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="different input"):
         run_codekg_pipeline(spark, mk(rows).unionByName(extra), root, run_id="r2")
-
-    # crash mid-swap: data dir renamed away, marker still present ->
-    # every later run refuses with the recovery text
-    real_rename = _os.rename
-    calls = {"n": 0}
-
-    def failing_rename(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("simulated kill -9 mid-swap")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(_os, "rename", failing_rename)
-    with pytest.raises(OSError, match="mid-swap"):
-        StageStore(root, run_id="c2").compact(spark, "candidates")
-    monkeypatch.setattr(_os, "rename", real_rename)
-    with pytest.raises(RuntimeError, match="TORN APPEND"):
-        run_codekg_pipeline(spark, mk(rows), root, run_id="r3")
 
 
 def test_append_writes_one_file_per_partition_per_batch(spark, tmp_path):
@@ -890,7 +981,7 @@ def test_append_refuses_stale_global_stage(spark, tmp_path):
     """An append holds every committed stage to mentions' recorded
     input, the corpus-global ones included: a triples manifest that
     records another input digest refuses the append before it writes
-    anything or sets the pending marker."""
+    anything."""
     from structured_data_entity_extraction_spark.pipeline import (
         run_codekg_pipeline_incremental,
     )
@@ -914,7 +1005,6 @@ def test_append_refuses_stale_global_stage(spark, tmp_path):
     with pytest.raises(RuntimeError, match="stage 'triples' .* different input"):
         run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
     assert manifests() == before
-    assert not os.path.exists(store.pending_path())
 
 
 def test_resumed_stage_must_match_layout(spark, rows, tmp_path):

@@ -90,6 +90,22 @@ def test_ngram_jaccard_pairs(spark, docs_df):
     assert got == want
 
 
+def test_ngram_jaccard_pairs_string_ids(spark, docs_df):
+    """String doc ids (no packing, no id-range prune) give the int-id
+    run's pairs and jaccards; the id range must not be compared as
+    integers."""
+    str_df = spark.createDataFrame([(f"d{i}", t) for i, t in DOCS], ["doc_id", "text"])
+    got = {
+        (int(r["id_a"][1:]), int(r["id_b"][1:])): r["jaccard"]
+        for r in dedup.ngram_jaccard_pairs(str_df, threshold=0.3).collect()
+    }
+    want = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in dedup.ngram_jaccard_pairs(docs_df, threshold=0.3).collect()
+    }
+    assert want and got == want
+
+
 def test_minhash_lsh_finds_near_dups(spark, docs_df):
     pairs = {
         (r["id_a"], r["id_b"])

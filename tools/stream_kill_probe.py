@@ -1,5 +1,5 @@
 """Live kill -9 probes for the STREAMING ingest itself (VERDICT r5 #7;
-the batch-path kill probes live in tools/pipeline_bench.py --kill).
+BENCH.md records the batch-path kill probes).
 
 Two scenarios, each against a real `run_pipeline.py --stream` child
 process over a multi-file input (maxFilesPerTrigger=8 -> multiple
@@ -14,12 +14,13 @@ A) SIGKILL mid-BOOTSTRAP foreachBatch: poll for the mentions manifest
    run must match a from-scratch warehouse bit-for-bit.
 
 B) SIGKILL mid-APPEND foreachBatch: wait for the bootstrap to commit,
-   then poll for the _PENDING_APPEND.json marker of a later batch and
-   kill inside the marker window. The restarted stream must REFUSE with
-   the TORN APPEND recovery text (the designed behavior: appended data
-   files may not match the manifest), and following that text's
-   recovery path (drop the affected stage dirs + marker, re-ingest)
-   must converge to the same from-scratch triples.
+   then kill while a later batch's mentions write is in flight (its
+   `mentions/data/_temporary` exists while the mentions manifest still
+   carries an earlier batch's run_id). The batch's files are
+   uncommitted: restarting from the same checkpoint redelivers the
+   batch, whose stamp rolls mentions back to its lineage, so the
+   stream must drain with exit 0 and a finalize run must match the
+   from-scratch triples.
 
 The pytest twin (simulated mid-batch fault, same cut point as A) is
 tests/test_streaming.py::test_stream_mid_batch_abort_restart_self_heals.
@@ -178,42 +179,29 @@ def main() -> None:
     }
     report["A"]["triples_match_scratch"] = triples_sorted(whA) == want
 
-    # ---------------- scenario B: kill mid-append (torn-append window)
+    # ---------------- scenario B: kill mid-append (inside mentions' write)
     whB = os.path.join(base, "whB")
     pB = _spawn_stream(inp, whB, "kB")
-    marker = os.path.join(whB, "_PENDING_APPEND.json")
+    stB = StageStore(whB)
+    temporary = os.path.join(whB, "mentions", "data", "_temporary")
 
     def append_window() -> bool:
-        # only an append batch holds the marker (listing the appended
-        # stages); the bootstrap commits its three stages, the
-        # _input_pairs sidecar included, by their manifests alone
-        if not os.path.exists(marker):
-            return False
-        try:
-            with open(marker, encoding="utf-8") as fh:
-                return "mentions" in json.load(fh).get("stages", [])
-        except (OSError, ValueError):
-            return False  # marker mid-write: retry next poll
+        # only an append writes into a committed mentions stage
+        return stB.is_complete("mentions") and os.path.exists(temporary)
 
     t_killB = _poll_kill(pB, append_window, "B")
-    report["B"] = {"killed_after_s": t_killB, "marker_present": os.path.exists(marker)}
-    # restart: the designed behavior is REFUSAL with the recovery text
+    report["B"] = {
+        "killed_after_s": t_killB,
+        "mentions_run_id_at_kill": stB.manifest("mentions")["run_id"],
+        "temporary_present": os.path.exists(temporary),
+    }
+    # restart from the same checkpoint: the batch is redelivered and its
+    # stamp rolls the uncommitted files back
     pB2 = _spawn_stream(inp, whB, "kB2")
-    pB2.wait(timeout=900)
-    errB = _log_of(pB2)
-    report["B"]["restart_refused"] = pB2.returncode != 0 and "TORN APPEND" in errB
-    # recovery per the error text: drop the affected stage dirs + marker
-    # and re-ingest into the cleaned warehouse (fresh checkpoint -- the
-    # old offset log describes batches the warehouse no longer holds)
-    with open(marker, encoding="utf-8") as fh:
-        torn_stages = json.load(fh)["stages"]
-    report["B"]["torn_stages"] = torn_stages
-    for st in set(torn_stages) | {"mentions", "candidates", "_input_pairs"}:
-        shutil.rmtree(os.path.join(whB, st), ignore_errors=True)
-    os.remove(marker)
-    shutil.rmtree(os.path.join(whB, "_stream_ckpt"), ignore_errors=True)
-    pB3 = _spawn_stream(inp, whB, "kB3")
-    _wait_stream(pB3, "B-recovery")
+    outB = _wait_stream(pB2, "B-restart")
+    report["B"]["restart_drained"] = json.loads(
+        [l for l in outB.splitlines() if l.startswith('{"mode": "stream"')][-1]
+    )["stages"]
     _run(["--input", inp, "--output", whB, "--run-id", "finB"])
     report["B"]["triples_match_scratch"] = triples_sorted(whB) == want
 
