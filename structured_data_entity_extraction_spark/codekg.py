@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cc import connected_components
+from .schemas import content_sha_col, doc_id_col
 from .session import local_frame
 
 # ------------------------------------------------------- extraction spec
@@ -146,22 +147,22 @@ def _tagged(field: str, values):
 
 def extract_code_mentions(repos_src: DataFrame, bucket_count: int = 64) -> DataFrame:
     """repos_src -> mentions(doc_id, repo, repo_bucket, path, lang,
-    content_sha, field, value). doc_id and content_sha per
-    BASELINE.json:input_hint; repo_bucket = pmod(xxhash64(repo), B) is the
-    output partition key AND the salting basis for skewed repos.
+    content_sha, field, value). doc_id and content_sha are the
+    document keys of ``schemas`` (BASELINE.json:input_hint); repo_bucket
+    = pmod(xxhash64(repo), B) is the output partition key AND the
+    salting basis for skewed repos.
 
     One JVM projection: every field is a regexp_extract_all array over
     the pinned patterns, tagged with its field name and exploded. No
     Python worker runs and no row can raise, so there is no per-row
     fault path; a doc without mentions yields no rows."""
     return repos_src.select(
-        F.sha2(
-            F.concat_ws("\x00", F.col("repo"), F.col("path"), F.col("commit")), 256
-        ).alias("doc_id"),
+        doc_id_col(),
         "repo",
         F.pmod(F.xxhash64("repo"), F.lit(bucket_count)).cast("int").alias("repo_bucket"),
         "path",
         "lang",
+        content_sha_col("content"),
         F.coalesce(F.col("content"), F.lit("")).alias("content"),
     ).select(
         "doc_id",
@@ -169,7 +170,7 @@ def extract_code_mentions(repos_src: DataFrame, bucket_count: int = 64) -> DataF
         "repo_bucket",
         "path",
         "lang",
-        F.sha2("content", 256).alias("content_sha"),
+        "content_sha",
         F.explode(F.concat(*[_tagged(f, v) for f, v in _mention_values()])).alias("m"),
     ).select(
         "doc_id", "repo", "repo_bucket", "path", "lang", "content_sha", "m.field", "m.value"

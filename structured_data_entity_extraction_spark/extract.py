@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from . import refsem
-from .schemas import MUNI_COUNTS_ARRAY
+from .schemas import MUNI_COUNTS_ARRAY, content_sha_col
 
 # ---------------------------------------------------------------- pUDFs
 
@@ -123,12 +123,12 @@ def firma_col(text: Column) -> Column:
 def extract_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """docs(id, text, ...) -> extracted features frame.
 
-    Output: id, content_sha (the per-row invariant, F.sha2 --
-    BASELINE.json:input_hint), validez, firma, ext struct.
+    Output: id, content_sha (the per-row invariant key,
+    ``schemas.content_sha_col``), validez, firma, ext struct.
     """
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.sha2(F.coalesce(F.col(text_col), F.lit("")), 256).alias("content_sha"),
+        content_sha_col(text_col),
         validez_col(F.col(text_col)).alias("validez"),
         firma_col(F.col(text_col)).alias("firma"),
         extract_avaluo_udf(F.col(text_col)).alias("ext"),

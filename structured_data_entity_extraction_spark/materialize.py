@@ -5,46 +5,45 @@ granularity").
 
 Iceberg-style layout on plain parquet (the sandbox has no catalog):
 
+    <root>/_MANIFEST.json              the warehouse's one manifest
     <root>/<stage>/data/...            partitioned parquet
-    <root>/<stage>/_MANIFEST.json      written LAST -> commit marker
 
-Every commit (a full write, an append, a compaction) is ONE observed
-write: a ``pyspark.sql.Observation`` sits directly above the data write,
-so the write job itself yields the row count and the content_sha
-sum-fold of exactly the rows it wrote. The manifest then records those
-stage totals (appends add the batch's values; both are additive), the
-read schema, the input identity, the partition layout of a
-partitioned stage (``StageStore.layout``), and the lineage: one
-entry per data file (path under ``data/``, rows and bytes from the
-file's parquet footer, the run_id that wrote it), read on the driver
-with no Spark job. A commit whose new files' footer rows differ from
-its observed count fails before the manifest is written.
+The manifest records the warehouse's input identity (``input_sha_digest``,
+``input_docs``, ``input_bytes``) and partition layout once, and under
+``stages`` each committed stage's entry. Its atomic swap
+(``StageStore.publish``) is the one commit: a full run swaps after each
+stage, an append once for all the stages it grows.
+
+Every stage write (a full write, an append, a compaction) is ONE
+observed write: a ``pyspark.sql.Observation`` sits directly above the
+data write, so the write job itself yields the row count and the
+content_sha sum-fold of exactly the rows it wrote. The stage's entry
+then records those totals (appends add the batch's values; both are
+additive), the read schema and the lineage: one entry per data file
+(path under ``data/``, rows and bytes from the file's parquet footer,
+the run_id that wrote it), read on the driver with no Spark job. A
+write whose new files' footer rows differ from its observed count fails
+before anything is published.
 
 The same write checks the per-row sha256 invariant
 (BASELINE.json:input_hint) against the input's (doc_id, content_sha)
-pairs: a stage with a foreign pair raises before its manifest is
-written, so it never commits, and a passing manifest records the verdict.
+pairs: a stage with a foreign pair raises before it is published, so it
+never commits, and a passing entry records the verdict.
 
-A stage is exactly the files its manifest's lineage lists (the rule
-Delta Lake and Iceberg keep: a table is the file set its log lists).
-Anything else under a stage's ``data/`` -- the files of a write,
-append or compaction killed before its manifest swap, their checksum
-siblings, a killed job's ``_temporary/`` -- is uncommitted, and the
-rollback (``StageStore._rollback``) drops it before the stage is read
-or committed again; a stage directory without _MANIFEST.json is an
-aborted write and is dropped whole and re-run. With a manifest, the
-stage is skipped and its data re-read. Before any work,
-``StageStore.stamp_input`` refuses a root whose committed stages record
-another input identity, none, or (partitioned) another layout, and
-then rolls every committed stage back to its lineage. A kill inside
-one stage's commit therefore heals on the next run, and a kill between
-two stages' manifest swaps leaves stages recording different inputs,
-which the same guard refuses.
+A stage is exactly the files its entry's lineage lists (the rule Delta
+Lake and Iceberg keep: a table is the file set its log lists). Anything
+else under a listed stage's ``data/`` -- what a write, append or
+compaction killed before its swap left, a killed job's ``_temporary/``
+included -- is uncommitted. Before any work, ``StageStore.stamp_input``
+refuses a warehouse built from another input, then rolls every listed
+stage back to its lineage (``_rollback``); ``write`` drops an unlisted
+stage's directory before rebuilding it. A kill anywhere before a swap
+therefore heals on the next run.
 
 The warehouse's input-identity sidecar (``INPUT_PAIRS``, the exact
 (doc_id, content_sha) set of every ingested document) is one more such
 stage: written, appended, read, compacted and resumed through the same
-manifest commit and input-identity guard as the data stages.
+manifest and input-identity guard as the data stages.
 """
 
 from __future__ import annotations
@@ -108,7 +107,7 @@ def sha_invariant_report(stage: str, misses: int) -> dict:
     ``misses`` rows with a (doc_id, content_sha) pair not in the input.
     A stage may DROP documents (explode on an empty mention array drops
     zero-mention docs), but a foreign pair means a corrupted sha or a
-    foreign row, so any miss raises before the manifest is written."""
+    foreign row, so any miss raises before the stage is published."""
     if misses:
         raise RuntimeError(
             f"content sha256 invariant violated at stage {stage}: {misses} "
@@ -130,19 +129,20 @@ class StageStore:
 
     def __init__(self, root: str, run_id: str = "run0", iceberg_catalog: str | None = None):
         self.root = root
+        self.manifest_path = os.path.join(root, "_MANIFEST.json")
         self.run_id = run_id
         self.iceberg_catalog = iceberg_catalog
         # input identity for resume safety (``stamp_input``): the RAW
         # input's distinct (doc_id, sha) pairs, which every content_sha
         # commit is checked against, and their digest + count, which
-        # write() stamps into every manifest (see run_stage docstring)
+        # publish() records in the warehouse's manifest (see run_stage)
         self.input_pairs: DataFrame | None = None
         self.input_digest: str | None = None
         self.input_docs: int | None = None
         # the input's content bytes (additive like the digest; the
         # pipeline sizes the triples write salt from it) and the
         # partition layout ({bucket_count, write_salt}) the pipeline
-        # writes under, stamped into every partitioned stage's manifest
+        # writes under, recorded beside the identity
         self.input_bytes: int | None = None
         self.layout: dict | None = None
         # per-stage record of whether run_stage() read the checkpoint
@@ -156,11 +156,17 @@ class StageStore:
     def _dir(self, stage: str) -> str:
         return os.path.join(self.root, stage)
 
-    def manifest_path(self, stage: str) -> str:
-        return os.path.join(self._dir(stage), "_MANIFEST.json")
+    def record(self) -> dict:
+        """The warehouse's manifest: the input identity and layout it was
+        built from and, under ``stages``, each committed stage's entry.
+        A root without one is empty."""
+        if not os.path.exists(self.manifest_path):
+            return {"stages": {}}
+        with open(self.manifest_path, encoding="utf-8") as fh:
+            return json.load(fh)
 
     def is_complete(self, stage: str) -> bool:
-        return os.path.exists(self.manifest_path(stage))
+        return stage in self.record()["stages"]
 
     def stamp_input(
         self,
@@ -172,56 +178,33 @@ class StageStore:
     ) -> None:
         """Set the input identity (``doc_sha_identity``'s tuple) and the
         partition layout this run writes under, and refuse, before any
-        work, a root holding a committed stage this run must not resume
-        or extend (``_check_input``). This is the warehouse's one guard:
-        nothing later re-checks a resumed or appended stage. Once every
-        committed stage passes, each is rolled back to its lineage
-        (``_rollback``), so a refused run changes no file and an
-        accepted one reads and extends only committed files."""
+        work, a warehouse with committed stages built from another input.
+        This is the warehouse's one guard: nothing later re-checks a
+        resumed or appended stage. Once the identity passes, every
+        listed stage (and nothing else under the root) is rolled back to
+        its lineage (``_rollback``), so a refused run changes no file and
+        an accepted one reads and extends only committed files."""
         self.input_pairs, self.input_digest, self.input_docs = pairs, digest, docs
         self.input_bytes, self.layout = content_bytes, layout
-        stages = sorted(os.listdir(self.root)) if os.path.isdir(self.root) else []
-        committed = [st for st in stages if self.is_complete(st)]
-        for stage in committed:
-            self._check_input(stage)
-        for stage in committed:
+        record = self.record()
+        recorded = (record.get("input_sha_digest"), record.get("input_docs"))
+        if record["stages"] and recorded != (digest, docs):
+            names = ", ".join(f"'{st}'" for st in sorted(record["stages"]))
+            raise RuntimeError(
+                f"stages {names} of {self.root} were built from a different input "
+                f"(manifest digest {recorded[0]}/{recorded[1]} docs vs current "
+                f"{digest}/{docs}): resuming would silently miss changed or "
+                "appended documents. Use a fresh --output warehouse, or delete "
+                f"{self.manifest_path} to rebuild."
+            )
+        for stage in record["stages"]:
             self._rollback(stage)
 
-    def _check_input(self, stage: str) -> None:
-        """Refuse a committed stage built from another input, or one
-        that records no input identity; and a partitioned stage that
-        records no layout, or another bucket count than this run's."""
-        m = self.manifest(stage)
-        recorded = (m.get("input_sha_digest"), m.get("input_docs"))
-        partitioned = bool(m.get("partition_by"))
-        buckets = (self.layout or {}).get("bucket_count")
-        if recorded[0] is None:
-            why = "records no input identity"
-        elif recorded != (self.input_digest, self.input_docs):
-            why = (
-                f"was built from a different input (manifest digest {recorded[0]}/"
-                f"{recorded[1]} docs vs current {self.input_digest}/{self.input_docs}): "
-                "resuming would silently miss changed or appended documents"
-            )
-        elif partitioned and "layout" not in m:
-            why = "records no partition layout (written before layouts were recorded)"
-        elif partitioned and m["layout"]["bucket_count"] != buckets:
-            why = (
-                f"was written with {m['layout']['bucket_count']} repo buckets "
-                f"but this run writes with {buckets}"
-            )
-        else:
-            return
-        raise RuntimeError(
-            f"stage '{stage}' {why} (checkpoint at {self._dir(stage)}). Use a "
-            "fresh --output warehouse, or delete the stage manifests to rebuild."
-        )
-
     def _rollback(self, stage: str) -> None:
-        """Make the stage exactly what its manifest commits: drop a stage
-        directory without a manifest whole, and under a committed
-        stage's ``data/`` every file its lineage does not list (a
-        listed file keeps its ``.<name>.crc`` checksum sibling) and the
+        """Make the stage exactly what the manifest commits: drop the
+        directory of a stage it does not list whole, and under a listed
+        stage's ``data/`` every file its lineage does not list (a listed
+        file keeps its ``.<name>.crc`` checksum sibling) and the
         directories that leaves empty. A killed job's ``data/_temporary``
         must go too: Spark's next partitioned append into ``data/``
         merges the committed task directories it finds there."""
@@ -259,14 +242,33 @@ class StageStore:
         return spark.read.schema(schema).parquet(os.path.join(self._dir(stage), "data"))
 
     def manifest(self, stage: str) -> dict:
-        with open(self.manifest_path(stage), encoding="utf-8") as fh:
-            return json.load(fh)
+        """The committed stage's entry in the warehouse's manifest."""
+        return self.record()["stages"][stage]
 
-    def _publish(self, stage: str, manifest: dict) -> None:
-        tmp = self.manifest_path(stage) + ".tmp"
+    def publish(self, entries: dict, drop=()) -> None:
+        """The one commit: swap in the manifest with this store's input
+        identity and layout, ``entries`` (stage -> entry) and every other
+        listed stage but ``drop``; then remove the dropped stages'
+        directories (after a kill first, ``write`` drops each)."""
+        stages = {st: e for st, e in self.record()["stages"].items() if st not in drop}
+        self._swap(
+            {
+                "input_sha_digest": self.input_digest,
+                "input_docs": self.input_docs,
+                "input_bytes": self.input_bytes,
+                "layout": self.layout,
+                "stages": {**stages, **entries},
+            }
+        )
+        for stage in drop:
+            self._rollback(stage)
+
+    def _swap(self, record: dict) -> None:
+        os.makedirs(self.root, exist_ok=True)
+        tmp = self.manifest_path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(manifest, fh, indent=1)
-        os.replace(tmp, self.manifest_path(stage))  # atomic commit
+            json.dump(record, fh, indent=1)
+        os.replace(tmp, self.manifest_path)  # atomic commit
 
     def _new_files(self, spark: SparkSession, stage: str, path: str, known) -> list[dict]:
         """Lineage of the stage's data files not in ``known``: parquet
@@ -357,9 +359,9 @@ class StageStore:
             "lineage": lineage,
         }
 
-    def _commit(self, df: DataFrame, stage: str, partition_by, base: dict | None) -> DataFrame:
-        """The one stage commit: observed write, then the manifest
-        swap. ``base`` is the committed manifest an append extends."""
+    def _entry(self, df: DataFrame, stage: str, partition_by, base: dict | None) -> dict:
+        """One stage's observed write and the manifest entry that
+        commits it. ``base`` is the committed entry an append extends."""
         t0 = time.time()
         batch = self._observed_write(
             df,
@@ -369,16 +371,15 @@ class StageStore:
             append=base is not None,
             known=[f["file"] for f in base["lineage"]] if base else (),
         )
-        manifest = dict(base or {"rows": 0, "lineage": []})
+        entry = dict(base or {"rows": 0, "lineage": []})
         sha = batch["content_sha_sum"]
         if base and sha is not None:
             sha = str(int(base["content_sha_sum"]) + int(sha))
-        lineage = manifest["lineage"] + batch["lineage"]
-        manifest.update(
+        lineage = entry["lineage"] + batch["lineage"]
+        entry.update(
             {
-                "stage": stage,
                 "run_id": self.run_id,
-                "rows": manifest["rows"] + batch["rows"],
+                "rows": entry["rows"] + batch["rows"],
                 "content_sha_sum": sha,
                 "sha_invariant": batch["sha_invariant"],
                 "files": len(lineage),
@@ -388,18 +389,12 @@ class StageStore:
                 "wall_ms": int((time.time() - t0) * 1000),
                 "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
                 "iceberg_table": self.iceberg_ident(stage) if self.iceberg_catalog else None,
-                "input_sha_digest": self.input_digest,
-                "input_docs": self.input_docs,
-                "input_bytes": self.input_bytes,
                 "lineage": lineage,
             }
         )
-        if partition_by and self.layout:
-            manifest["layout"] = self.layout
         if base:
-            manifest["appended_from_rows"] = base["rows"]
-        self._publish(stage, manifest)
-        return self.read(df.sparkSession, stage)
+            entry["appended_from_rows"] = base["rows"]
+        return entry
 
     def write(
         self,
@@ -408,36 +403,36 @@ class StageStore:
         partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Commit a stage from scratch (rolling back an aborted earlier
-        attempt). Returns the committed data re-read, so downstream
-        stages consume the checkpoint, not the upstream plan."""
+        attempt) in its own manifest swap. Returns the committed data
+        re-read, so downstream stages consume the checkpoint, not the
+        upstream plan."""
         self._rollback(stage)
-        return self._commit(df, stage, partition_by, base=None)
+        self.publish({stage: self._entry(df, stage, partition_by, base=None)})
+        return self.read(df.sparkSession, stage)
 
     def append(
         self,
         df: DataFrame,
         stage: str,
         partition_by: list[str] | None = None,
-    ) -> DataFrame:
-        """Append a batch to a COMMITTED stage (the incremental-ingest
-        path): data files and their lineage append under this run_id,
-        and the manifest is atomically rewritten with the summed rows
-        and sha fold and THIS store's input identity (the caller sets
-        input_digest/input_docs to the COMBINED old+new input before
-        calling -- the sha sum-fold is additive over disjoint doc sets,
-        so combined digests are exact, not recomputed). Returns the
-        re-read full stage. The batch's files land before the manifest
-        swap; a kill in between leaves them unlisted, and the next
+    ) -> dict:
+        """Write a batch into a COMMITTED stage (the incremental-ingest
+        path) and return the stage's grown entry: data files and their
+        lineage under this run_id, summed rows and sha fold. Nothing is
+        committed until the caller's ``publish`` lists the entry, under
+        the COMBINED old+new input identity the caller sets first (the
+        sha sum-fold is additive over disjoint doc sets, so combined
+        digests are exact, not recomputed). The batch's files land before
+        that swap; a kill in between leaves them unlisted, and the next
         ``stamp_input`` rolls them back. The caller stamps the store
-        first, so the stage holds only its lineage files: any other
-        file would count as written by this batch and fail the footer
-        check."""
+        first, so the stage holds only its lineage files: any other file
+        would count as written by this batch and fail the footer check."""
         if not self.is_complete(stage):
             raise RuntimeError(
                 f"append requires a committed '{stage}' stage; run the full "
                 "pipeline first"
             )
-        return self._commit(df, stage, partition_by, base=self.manifest(stage))
+        return self._entry(df, stage, partition_by, base=self.manifest(stage))
 
     def compact(self, spark: SparkSession, stage: str) -> dict:
         """Warehouse maintenance: rewrite a stage's accumulated
@@ -449,14 +444,15 @@ class StageStore:
         One commit like any other: the stage is rolled back to its
         lineage, the rewrite is appended into ``data/`` beside the old
         files, and its observed row count and content_sha sum-fold must
-        equal the manifest's. The new manifest then lists only the new
-        files, and the old ones, now unlisted, are dropped. A failed
+        equal the stage's entry. The manifest swap then lists only the
+        new files, and the old ones, now unlisted, are dropped. A failed
         verification drops the new files instead. A kill before the
         manifest swap leaves the new files unlisted, a kill after it the
         old ones; either way the next run's rollback drops them, and
-        reads never change. The manifest keeps the stage's input
-        identity untouched -- resume keeps refusing changed/appended
-        input after compaction exactly as before.
+        reads never change. The swap keeps the warehouse's input
+        identity and every other stage untouched -- resume keeps
+        refusing changed/appended input after compaction exactly as
+        before.
 
         On the Iceberg route this delegates to the catalog's own
         ``rewrite_data_files`` maintenance procedure (snapshot-atomic)."""
@@ -509,7 +505,9 @@ class StageStore:
                 "compacted_from_files": old["files"],
             }
         )
-        self._publish(stage, manifest)
+        record = self.record()
+        record["stages"][stage] = manifest
+        self._swap(record)
         self._rollback(stage)
         return {
             "stage": stage,
@@ -519,17 +517,6 @@ class StageStore:
             "bytes": total_bytes,
         }
 
-    def invalidate(self, stage: str) -> None:
-        """Drop a stage checkpoint so the next run_stage rebuilds it
-        (the incremental path invalidates every stage DOWNSTREAM of an
-        append before it appends -- their manifests carry the
-        pre-append input identity, which ``stamp_input`` would rightly
-        refuse, and a kill mid-append must not leave them beside the
-        appended stages)."""
-        d = self._dir(stage)
-        if os.path.exists(d):
-            shutil.rmtree(d)
-
     def run_stage(
         self,
         spark: SparkSession,
@@ -537,18 +524,19 @@ class StageStore:
         build,
         partition_by: list[str] | None = None,
     ) -> DataFrame:
-        """Resume-aware: skip + re-read if committed, else build + write.
+        """Resume-aware: skip + re-read if the manifest lists the stage,
+        else build + write (one manifest swap per stage).
 
         A resumed checkpoint was already held to this run's input
         identity (digest + doc count of the raw input's distinct
-        (doc_id, content_sha) pairs) and layout by ``stamp_input``. The
-        per-stage sha invariant cannot do that on its own: it is a
-        subset check (stages may legitimately drop zero-mention docs),
-        so re-running an old warehouse over an APPENDED input would
-        resume stale stages that silently miss every new document. The
-        same stamp rolled each committed stage back to its lineage, so a
-        resumed stage reads exactly its committed files, and ``write``
-        drops an aborted attempt's directory before rebuilding it."""
+        (doc_id, content_sha) pairs) by ``stamp_input``. The per-stage
+        sha invariant cannot do that on its own: it is a subset check
+        (stages may legitimately drop zero-mention docs), so re-running
+        an old warehouse over an APPENDED input would resume stale
+        stages that silently miss every new document. The same stamp
+        rolled each listed stage back to its lineage, so a resumed stage
+        reads exactly its committed files, and ``write`` drops an
+        unlisted stage's directory before rebuilding it."""
         if self.is_complete(stage):
             self.last_resumed[stage] = True
             return self.read(spark, stage)

@@ -20,15 +20,13 @@ content bytes: one (bucket, salt) key per 16 MiB, buckets first (up to
 repo_bucket=0, one directory per lang, with as many part-files per
 directory as write tasks touch it; BENCH.md's 320k-doc checkpointed
 corpus (306 MB) gets (19, 1); (64, 8), the r6 layout, starts above 7 GiB
-(BENCH.md "r6 fold" has the A/B behind the 16 MiB). The bucket count is
-fixed when mentions is built: resume, --append, streaming batches and
-the finalize run read it from the mentions manifest. The salt only
-shapes the triples build, which always reads the whole corpus, so it is
-re-derived from the corpus' content bytes, which the manifests add up
-over appends. The layout is recorded in the three stages' manifests;
-``StageStore.stamp_input`` refuses a warehouse whose partitioned stages
-record none (written before layouts were recorded) or another bucket
-count.
+(BENCH.md "r6 fold" has the A/B behind the 16 MiB). The layout is
+recorded once, beside the input identity, in the warehouse's manifest
+(``StageStore.record``). The bucket count is fixed when the warehouse
+is first built: resume, --append, streaming batches and the finalize
+run read it from that record. The salt only shapes the triples build,
+which always reads the whole corpus, so it is re-derived from the
+corpus' content bytes, which the record adds up over appends.
 """
 
 from __future__ import annotations
@@ -47,6 +45,7 @@ from .link import avaluo_records, dim_frames
 # sha_invariant_report stays importable here: perfbench's layer trace wraps it by name
 from .materialize import INPUT_PAIRS, StageStore, doc_sha_identity, sha_invariant_report  # noqa: F401
 from .ops.cache import cache_scope, persist_tracked
+from .schemas import content_sha_col, doc_id_col
 from .triples import records_to_triples
 
 # content bytes per (repo_bucket, write salt) key (derive_layout): at
@@ -56,6 +55,8 @@ from .triples import records_to_triples
 LAYOUT_TARGET_BYTES = 16 << 20
 # the hive partitioning of the mentions, candidates and triples stages
 PARTITION_BY = ["repo_bucket", "lang"]
+# the corpus-global stages, built from the whole corpus' candidates
+GLOBAL_STAGES = ("edges", "nodes", "triples")
 
 
 def derive_layout(content_bytes: int, bucket_count: int | None = None) -> dict:
@@ -73,11 +74,11 @@ def derive_layout(content_bytes: int, bucket_count: int | None = None) -> dict:
 
 
 def _layout_for(store: StageStore, content_bytes: int) -> dict:
-    """The layout this run writes under: the bucket count mentions was
-    written with (derived when mentions is not built, or records none,
-    which ``stamp_input`` then refuses), and the salt derived for
-    ``content_bytes``, the corpus the next triples build reads."""
-    recorded = store.manifest("mentions").get("layout", {}) if store.is_complete("mentions") else {}
+    """The layout this run writes under: the bucket count the warehouse
+    records (derived for a warehouse that records none), and the salt
+    derived for ``content_bytes``, the corpus the next triples build
+    reads."""
+    recorded = store.record().get("layout") or {}
     return derive_layout(content_bytes, recorded.get("bucket_count"))
 
 
@@ -103,10 +104,10 @@ def length_gate(docs: DataFrame, min_chars: int = 50, text_col: str = "text") ->
 class StageCommits:
     """The commit path every pipeline mode shares: build-or-resume
     (``StageStore.run_stage``) or append one stage, and record its
-    manifest rows, wall time and the sha-invariant verdict of its commit
+    entry's rows, wall time and the sha-invariant verdict of its write
     (``StageStore._observed_write``; a resumed stage passed it under the
-    same input identity and layout, which ``StageStore.stamp_input``
-    held it to) in ``metrics["stages"]``."""
+    same input identity, which ``StageStore.stamp_input`` held it to)
+    in ``metrics["stages"]``."""
 
     def __init__(self, spark: SparkSession, store: StageStore, metrics: dict):
         self.spark, self.store, self.metrics = spark, store, metrics
@@ -123,16 +124,18 @@ class StageCommits:
         }
         return df
 
-    def append(self, stage: str, df: DataFrame, partition_by=None) -> None:
+    def append(self, stage: str, df: DataFrame, partition_by=None) -> dict:
+        """Write a batch into ``stage``; return its grown entry for the
+        caller's ``StageStore.publish``."""
         t0 = time.time()
-        self.store.append(df, stage, partition_by)
-        m = self.store.manifest(stage)
+        m = self.store.append(df, stage, partition_by)
         self.metrics["stages"][stage] = {
             "appended_rows": m["rows"] - m["appended_from_rows"],
             "total_rows": m["rows"],
             "wall_s": round(time.time() - t0, 3),
             **(m.get("sha_invariant") or {}),
         }
+        return m
 
 
 def _bootstrap(
@@ -147,9 +150,8 @@ def _bootstrap(
     the metrics) and the candidates.
 
     The input identity and the layout are stamped on the store first,
-    refusing a warehouse with a stage built from another input or
-    under another layout before any work. Each stage faces the sha
-    invariant inside its own commit.
+    refusing a warehouse built from another input before any work. Each
+    stage faces the sha invariant inside its own commit.
 
     The sidecar (the ``INPUT_PAIRS`` stage) is the exact
     (doc_id, content_sha) set the warehouse holds; the append-only
@@ -219,17 +221,14 @@ def run_codekg_pipeline(
 
 def input_identity(repos_src: DataFrame):
     """(distinct (doc_id, content_sha) pairs, additive digest, pair
-    count, content bytes) of a raw repos_src frame; doc_id =
-    sha256(repo\\0path\\0commit). Digest, count and bytes are one
-    aggregate (``doc_sha_identity``)."""
-    content = F.coalesce(F.col("content"), F.lit(""))
+    count, content bytes) of a raw repos_src frame, keyed as the stages
+    are (``schemas.doc_id_col``, ``schemas.content_sha_col``). Digest,
+    count and bytes are one aggregate (``doc_sha_identity``)."""
     return doc_sha_identity(
         repos_src.select(
-            F.sha2(
-                F.concat_ws("\x00", F.col("repo"), F.col("path"), F.col("commit")), 256
-            ).alias("doc_id"),
-            F.sha2(content, 256).alias("content_sha"),
-            F.octet_length(content).alias("content_bytes"),
+            doc_id_col(),
+            content_sha_col("content"),
+            F.octet_length(F.coalesce(F.col("content"), F.lit(""))).alias("content_bytes"),
         )
     )
 
@@ -271,29 +270,27 @@ def append_repos_batch(
 ) -> dict:
     """Append ONE batch of new documents to a committed warehouse --
     the shared core of incremental batch ingest and the streaming
-    foreachBatch sink. Extracts + links ONLY the batch, invalidates the
-    corpus-global stages (edges/nodes/triples) whose old checkpoints
-    describe the pre-append corpus, then appends the batch to the
-    mentions, candidates and input-identity sidecar stages, folding the
-    additive digest into their manifests. Rebuilding the global stages
-    is the caller's choice: the incremental CLI rebuilds immediately;
-    the streaming sink leaves them invalidated so a batch "finalize" run
-    over the union resumes mentions/candidates and rebuilds only the
-    global stages.
+    foreachBatch sink. Extracts + links ONLY the batch and writes its
+    files into the mentions, candidates and input-identity sidecar
+    stages; then ONE manifest swap lists the three grown stages under
+    the combined (additive) input identity and drops the corpus-global
+    stages (``GLOBAL_STAGES``), whose checkpoints describe the
+    pre-append corpus. Rebuilding the global stages is the caller's
+    choice: the incremental CLI rebuilds immediately; the streaming
+    sink leaves them dropped so a batch "finalize" run over the union
+    resumes mentions/candidates and rebuilds only the global stages.
 
-    A kill inside one stage's append leaves only unlisted files, which
-    the stamp of the redelivered (or next) batch rolls back; a kill
-    between two stages' manifest swaps leaves stages recording different
-    inputs, which the stamp refuses.
+    A kill anywhere before the swap leaves only unlisted files, which
+    the stamp of the redelivered (or next) batch rolls back, so the
+    batch drains on redelivery.
 
     Overlap guard: new doc_ids are checked against the warehouse's
     input-identity sidecar (``_bootstrap``). A warehouse without a
-    committed sidecar refuses before writing anything, and so does one
-    with any committed stage whose manifest records another input or
-    layout than mentions': the store is stamped with mentions' recorded
-    identity and layout first (``StageStore.stamp_input``). The batch is
-    written with the bucket count recorded in the mentions manifest; the
-    write salt is re-derived for the grown corpus (``_layout_for``)."""
+    committed sidecar refuses before writing anything. The store is
+    stamped with the warehouse's recorded identity and layout first
+    (``StageStore.stamp_input``), which rolls every listed stage back to
+    its lineage. The batch is written with the recorded bucket count;
+    the write salt is re-derived for the grown corpus (``_layout_for``)."""
     for st in ("mentions", "candidates"):
         if not store.is_complete(st):
             raise RuntimeError(
@@ -307,14 +304,9 @@ def append_repos_batch(
             "over its input, which resumes the committed stages and writes "
             "the sidecar, then append"
         )
-    m = store.manifest("mentions")
-    store.stamp_input(
-        None,
-        m.get("input_sha_digest"),
-        m.get("input_docs"),
-        m.get("input_bytes"),
-        m.get("layout"),
-    )
+    recorded = store.record()
+    keys = ("input_sha_digest", "input_docs", "input_bytes", "layout")
+    store.stamp_input(None, *(recorded[k] for k in keys))
     # read after the stamp's rollback: Spark lists the files here
     existing = store.read(spark, INPUT_PAIRS)
 
@@ -375,14 +367,13 @@ def append_repos_batch(
         codekg.extract_code_mentions(repos_src_new, store.layout["bucket_count"])
     )
     candidates_new = codekg.link_mentions(mentions_new, alias_dim)
-    # the global stages describe the pre-append corpus; drop them first,
-    # so no kill leaves them beside appended stages
-    for st in ("edges", "nodes", "triples"):
-        store.invalidate(st)
     # one file per touched (repo_bucket, lang) and one sidecar file per batch
-    for stage, df in (("mentions", mentions_new), ("candidates", candidates_new)):
-        commits.append(stage, df.repartition(*PARTITION_BY), PARTITION_BY)
-    store.append(new_pairs.coalesce(1), INPUT_PAIRS)
+    grown = {
+        stage: commits.append(stage, df.repartition(*PARTITION_BY), PARTITION_BY)
+        for stage, df in (("mentions", mentions_new), ("candidates", candidates_new))
+    }
+    grown[INPUT_PAIRS] = store.append(new_pairs.coalesce(1), INPUT_PAIRS)
+    store.publish(grown, drop=GLOBAL_STAGES)
     return metrics
 
 
@@ -418,7 +409,7 @@ def run_codekg_pipeline_incremental(
     store.input_pairs = store.read(spark, INPUT_PAIRS)
     commits = StageCommits(spark, store, metrics)
     _global_stages(commits, store.read(spark, "candidates"), codekg.code_alias_dim(spark))
-    for stage in ("edges", "nodes", "triples"):
+    for stage in GLOBAL_STAGES:
         metrics["stages"][stage]["rebuilt"] = True
     return metrics
 
@@ -443,8 +434,7 @@ def run_avaluo_pipeline(
     dims = dim_frames(spark)
     if min_page_chars is not None:
         docs = length_gate(docs, min_page_chars)
-    content_sha = F.sha2(F.coalesce(F.col("text"), F.lit("")), 256).alias("content_sha")
-    store.stamp_input(*doc_sha_identity(docs.select("doc_id", content_sha)))
+    store.stamp_input(*doc_sha_identity(docs.select("doc_id", content_sha_col("text"))))
     out: dict = {"input_sha_digest": store.input_digest, "stages": {}}
     commits = StageCommits(spark, store, out)
     records = commits.run("records", lambda: avaluo_records(docs, dims))
@@ -461,7 +451,7 @@ def main(argv=None) -> None:
         description="Resumable, checkpointed KG pipeline. codekg writes its "
         "mentions, candidates and triples stages partitioned by "
         "(repo_bucket, lang) under a layout sized to the input's content "
-        "bytes and recorded in the stage manifests: the bucket count is "
+        "bytes and recorded in the warehouse's manifest: the bucket count is "
         "fixed by the first build and reused by resume, --append and "
         "--stream; the triples write salt follows the corpus size."
     )
@@ -519,9 +509,7 @@ def main(argv=None) -> None:
             args.output, run_id=args.run_id, iceberg_catalog=args.iceberg_catalog
         )
         stages = (
-            sorted(st for st in os.listdir(args.output) if store.is_complete(st))
-            if args.compact == "all"
-            else args.compact.split(",")
+            sorted(store.record()["stages"]) if args.compact == "all" else args.compact.split(",")
         )
         metrics = {
             "mode": "compact",

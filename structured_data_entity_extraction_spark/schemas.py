@@ -1,9 +1,27 @@
 """Explicit StructTypes for every table in the engine (FIXTURES.md §4;
-no ``inferSchema`` anywhere -- SURVEY.md §1.3)."""
+no ``inferSchema`` anywhere -- SURVEY.md §1.3), and the document keys
+the tables carry."""
 
 from __future__ import annotations
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+# the document keys of BASELINE.json:input_hint, each defined once: the
+# stages carry them and the input identity their commits are checked
+# against counts them, so the two must never drift apart
+def doc_id_col() -> Column:
+    """A repos_src document's id: sha256(repo \\0 path \\0 commit)."""
+    key = F.concat_ws("\x00", F.col("repo"), F.col("path"), F.col("commit"))
+    return F.sha2(key, 256).alias("doc_id")
+
+
+def content_sha_col(text_col: str) -> Column:
+    """A document's content_sha: sha256 of its text, null read as empty."""
+    return F.sha2(F.coalesce(F.col(text_col), F.lit("")), 256).alias("content_sha")
+
 
 # north-rule input (BASELINE.json:input_hint)
 REPOS_SRC = T.StructType(
@@ -64,7 +82,7 @@ TRIPLES = T.StructType(
     ]
 )
 
-# per-file lineage of a committed stage, as its manifest records it
+# per-file lineage of a committed stage, as the warehouse manifest records it
 # (StageStore.lineage): file is the path under <stage>/data, rows and
 # bytes come from the file's parquet footer and size, run_id is the
 # run whose commit wrote it (appends add files under their own run_id)

@@ -6,15 +6,16 @@ this is that natural extension, built).
 (the "new commits" feed) and lands each micro-batch in the StageStore
 warehouse through ``foreachBatch`` and ``pipeline.ingest_repos_batch``:
 the first batch takes the codekg bootstrap (the mentions, candidates
-and input-identity sidecar stages, each committed by its manifest),
-every later one the append path of ``--append``. Streamed documents
+and input-identity sidecar stages, each committed by a swap of the
+warehouse's manifest), every later one the append path of
+``--append``, which grows all three in one swap. Streamed documents
 get the same checkpoints, sha invariant, additive input digest and
 append-only overlap guard as batch ones; ``availableNow`` triggers
 make it testable (and backfill-able) without a long-running query.
 
 Corpus-global stages (edges/nodes/triples) are not rebuilt per
 micro-batch -- canonicalization is corpus-global, so each append
-invalidates them and a periodic batch "finalize" run over the full
+drops them and a periodic batch "finalize" run over the full
 input resumes mentions/candidates from the streamed checkpoints and
 rebuilds only the global stages (bit-for-bit equal to a from-scratch
 build; pytest-gated).

@@ -173,9 +173,12 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
             assert (m["rows"], m["content_sha_sum"]) == (rows, str(sha))
         else:
             assert (m["rows"], m["content_sha_sum"]) == (scan.count(), None)
-    # the sidecar holds exactly the input identity the stages record
-    pm, mm = store.manifest("_input_pairs"), store.manifest("mentions")
-    assert (pm["rows"], pm["content_sha_sum"]) == (mm["input_docs"], mm["input_sha_digest"])
+    # the sidecar holds exactly the input identity the warehouse records,
+    # in the warehouse's one manifest
+    pm, record = store.manifest("_input_pairs"), store.record()
+    assert (pm["rows"], pm["content_sha_sum"]) == (record["input_docs"], record["input_sha_digest"])
+    manifests = [os.path.join(r, f) for r, _d, fs in os.walk(out) for f in fs if f == "_MANIFEST.json"]
+    assert manifests == [os.path.join(out, "_MANIFEST.json")]
 
     # kill-after-stage simulation: drop 'triples' commit, resume under a
     # new run_id -> earlier stages are skipped (resumed), output identical
@@ -183,7 +186,7 @@ def test_pipeline_resume_and_lineage(spark, repos_df, tmp_path):
     rows_before = sorted(
         (r["subj"], r["pred"], r["obj"]) for r in t1.select("subj", "pred", "obj").collect()
     )
-    os.remove(os.path.join(out, "triples", "_MANIFEST.json"))
+    _drop_stages(out, "triples")
     m2 = run_codekg_pipeline(spark, repos_df, out, run_id="r2")
     assert m2["stages"]["mentions"]["resumed"] is True
     assert m2["stages"]["triples"]["resumed"] is False
@@ -353,12 +356,12 @@ def test_ingest_batch_replay_and_partial_bootstrap(spark, tmp_path):
     assert m0["mode"] == "bootstrap"
     m1 = ingest_repos_batch(spark, StageStore(root, run_id="b1"), mk(rows[40:]))
     assert m1["mode"] == "incremental" and m1["new_docs"] == 20
-    digest_after = StageStore(root).manifest("mentions")["input_sha_digest"]
+    digest_after = StageStore(root).record()["input_sha_digest"]
 
     # (a) full replay of batch 1 -> no-op, digest unchanged
     m_replay = ingest_repos_batch(spark, StageStore(root, run_id="b1r"), mk(rows[40:]))
     assert m_replay["mode"] == "replay_noop" and m_replay["replayed_docs"] == 20
-    assert StageStore(root).manifest("mentions")["input_sha_digest"] == digest_after
+    assert StageStore(root).record()["input_sha_digest"] == digest_after
 
     # (b) partial overlap (10 old + 10 genuinely new) is NOT a replay
     more = repos_src_rows(80, seed=41)[60:70]
@@ -371,13 +374,7 @@ def test_ingest_batch_replay_and_partial_bootstrap(spark, tmp_path):
     # SAME first batch resumes mentions and rebuilds candidates
     root2 = str(tmp_path / "w2")
     ingest_repos_batch(spark, StageStore(root2, run_id="c0"), mk(rows[:40]))
-    import shutil
-
-    shutil.rmtree(f"{root2}/candidates")
-    import os as _os
-
-    if _os.path.exists(f"{root2}/_input_pairs"):
-        shutil.rmtree(f"{root2}/_input_pairs")  # crash before sidecar write
+    _drop_stages(root2, "candidates", "_input_pairs")  # crash before their commits
     m_heal = ingest_repos_batch(spark, StageStore(root2, run_id="c1"), mk(rows[:40]))
     assert m_heal["mode"] == "bootstrap"
     st2 = StageStore(root2)
@@ -400,7 +397,8 @@ def test_full_run_refusal_does_not_poison_legacy_sidecar(spark, tmp_path):
     )
     root = str(tmp_path / "w")
     run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
-    shutil.rmtree(f"{root}/_input_pairs")  # legacy warehouse
+    _drop_stages(root, "_input_pairs")  # legacy warehouse
+    shutil.rmtree(f"{root}/_input_pairs")
     from structured_data_entity_extraction_spark.materialize import StageStore
 
     with pytest.raises(RuntimeError, match="different input"):
@@ -455,17 +453,17 @@ def test_append_refuses_warehouse_without_sidecar(spark, tmp_path):
     )
     root = str(tmp_path / "w")
     run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
+    _drop_stages(root, "_input_pairs")
     shutil.rmtree(f"{root}/_input_pairs")
     store = StageStore(root)
-    stages = ("mentions", "candidates", "edges", "nodes", "triples")
 
-    def manifests():
-        return {st: open(store.manifest_path(st), encoding="utf-8").read() for st in stages}
+    def manifest():
+        return open(store.manifest_path, encoding="utf-8").read()
 
-    before = manifests()
+    before = manifest()
     with pytest.raises(RuntimeError, match="sidecar"):
         run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
-    assert manifests() == before
+    assert manifest() == before
     assert not store.is_complete("_input_pairs")
 
     m = run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
@@ -485,13 +483,22 @@ def _files(root):
     return out
 
 
+def _drop_stages(root, *stages):
+    """Drop stages from the warehouse's manifest, as a kill before their
+    commit leaves them: unlisted, with their files still on disk."""
+    store = StageStore(root)
+    record = store.record()
+    for stage in stages:
+        del record["stages"][stage]
+    store._swap(record)
+
+
 def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
     """The sidecar refuses another input like any committed stage: a
-    warehouse built over docs 0-19 whose data-stage manifests are
-    deleted refuses a rebuild over docs 20-39 at the sidecar before any
-    work, leaving every file under the root as it was, and a batch
-    overlapping the sidecar's docs refuses the same way, leaving every
-    manifest as it was."""
+    warehouse built over docs 0-19 whose manifest lists only the sidecar
+    refuses a rebuild over docs 20-39 before any work, leaving every
+    file under the root as it was, and a batch overlapping the sidecar's
+    docs refuses the same way, leaving the manifest as it was."""
     from structured_data_entity_extraction_spark.pipeline import ingest_repos_batch
 
     rows = repos_src_rows(60, seed=3)
@@ -503,12 +510,10 @@ def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
     run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="a")
     with pytest.raises(RuntimeError, match="different input"):
         run_codekg_pipeline(spark, mk(rows[20:40]), root, run_id="b")
-    store = StageStore(root)
-    for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
-        os.remove(store.manifest_path(stage))
+    _drop_stages(root, "mentions", "candidates", "edges", "nodes", "triples")
 
     files_before = _files(root)
-    with pytest.raises(RuntimeError, match="stage '_input_pairs' .* different input"):
+    with pytest.raises(RuntimeError, match="stages '_input_pairs' of .* different input"):
         run_codekg_pipeline(spark, mk(rows[20:40]), root, run_id="b2")
     assert _files(root) == files_before
 
@@ -527,8 +532,9 @@ def test_stale_sidecar_refuses_rebuild_and_append(spark, tmp_path):
 
 
 def test_manifestless_sidecar_reads_as_aborted(spark, tmp_path):
-    """A sidecar directory without a manifest (an aborted write, or one
-    written before the sidecar was a committed stage) is no sidecar: an
+    """A sidecar directory the warehouse's manifest does not list (an
+    aborted write, or one written before the sidecar was a committed
+    stage) is no sidecar: an
     append refuses it, and a full run over the warehouse's input
     resumes every stage and rewrites it."""
     from structured_data_entity_extraction_spark.pipeline import (
@@ -543,7 +549,7 @@ def test_manifestless_sidecar_reads_as_aborted(spark, tmp_path):
     root = str(tmp_path / "w")
     run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     store = StageStore(root)
-    os.remove(store.manifest_path("_input_pairs"))
+    _drop_stages(root, "_input_pairs")
     with pytest.raises(RuntimeError, match="no input-identity sidecar"):
         run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
     assert not store.is_complete("_input_pairs")
@@ -628,12 +634,14 @@ def test_uncommitted_files_roll_back_on_resume(spark, tmp_path):
     assert got == want
 
 
-def test_tear_between_stage_commits_refuses(spark, tmp_path):
-    """Crash point between two stages' manifest swaps: after an append,
-    candidates' pre-append manifest is restored (mentions and the
-    sidecar committed the batch, candidates did not). The next append
-    and the next full run each refuse, naming the stage, and leave
-    every file byte-identical."""
+def test_append_killed_before_its_swap_heals(spark, tmp_path, monkeypatch):
+    """Crash points inside an append, which grows mentions, candidates
+    and the sidecar in ONE manifest swap: killed in candidates' append
+    after mentions' files landed, and killed in that swap after all
+    three appends wrote. Either way nothing is committed, so the
+    redelivered batch appends (mode incremental) with each grown stage's
+    data/ holding exactly its lineage files, and the finalize triples
+    equal a from-scratch run's."""
     from structured_data_entity_extraction_spark.pipeline import ingest_repos_batch
 
     rows = repos_src_rows(40, seed=34)
@@ -641,22 +649,44 @@ def test_tear_between_stage_commits_refuses(spark, tmp_path):
         [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
         REPOS_SRC,
     )
-    root = str(tmp_path / "w")
+    root, full_root = str(tmp_path / "w"), str(tmp_path / "full")
     run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
     store = StageStore(root)
-    with open(store.manifest_path("candidates"), "rb") as fh:
-        pre_append = fh.read()
-    assert ingest_repos_batch(spark, StageStore(root, run_id="i1"), mk(rows[20:30]))["mode"] == "incremental"
-    with open(store.manifest_path("candidates"), "wb") as fh:
-        fh.write(pre_append)
+    real_append = StageStore.append
 
-    before = _files(root)
-    with pytest.raises(RuntimeError, match="stage 'candidates' .* different input"):
-        ingest_repos_batch(spark, StageStore(root, run_id="i2"), mk(rows[30:]))
-    assert _files(root) == before
-    with pytest.raises(RuntimeError, match="stage 'candidates' .* different input"):
-        run_codekg_pipeline(spark, mk(rows[:30]), root, run_id="r")
-    assert _files(root) == before
+    def killed_in_candidates(self, df, stage, *args):
+        if stage == "candidates":
+            raise OSError("killed in candidates' append")
+        return real_append(self, df, stage, *args)
+
+    def killed_in_swap(self, entries, drop=()):
+        raise OSError("killed before the manifest swap")
+
+    grown = ("mentions", "candidates", "_input_pairs")
+    for attr, kill, batch in (
+        ("append", killed_in_candidates, rows[20:30]),
+        ("publish", killed_in_swap, rows[30:]),
+    ):
+        before = {stage: store.manifest(stage) for stage in grown}
+        monkeypatch.setattr(StageStore, attr, kill)
+        with pytest.raises(OSError, match="killed"):
+            ingest_repos_batch(spark, StageStore(root, run_id="k"), mk(batch))
+        monkeypatch.undo()
+        assert {stage: store.manifest(stage) for stage in grown} == before
+        assert not _committed_files_only(store, "mentions")
+        m = ingest_repos_batch(spark, StageStore(root, run_id=f"i{attr}"), mk(batch))
+        assert m["mode"] == "incremental" and m["new_docs"] == len(batch)
+        for stage in grown:
+            assert _committed_files_only(store, stage), stage
+        assert not store.is_complete("triples") and not os.path.exists(os.path.join(root, "triples"))
+    run_codekg_pipeline(spark, mk(rows), root, run_id="f")
+    run_codekg_pipeline(spark, mk(rows), full_root, run_id="s")
+    tcols = ["subj", "pred", "obj", "doc_id", "repo", "lang", "content_sha", "conf"]
+    got, want = (
+        sorted(map(tuple, StageStore(r).read(spark, "triples").select(*tcols).collect()))
+        for r in (root, full_root)
+    )
+    assert got == want
 
 
 def test_compact_killed_midway_heals(spark, tmp_path, monkeypatch):
@@ -679,21 +709,21 @@ def test_compact_killed_midway_heals(spark, tmp_path, monkeypatch):
     store = StageStore(root)
     cols = ["doc_id", "field", "value", "content_sha"]
     committed = sorted(map(tuple, store.read(spark, "mentions").select(*cols).collect()))
-    real_publish = StageStore._publish
+    real_swap = StageStore._swap
 
-    def killed_before_swap(self, stage, manifest):
+    def killed_before_swap(self, record):
         raise OSError("killed before the manifest swap")
 
-    def killed_after_swap(self, stage, manifest):
-        real_publish(self, stage, manifest)
+    def killed_after_swap(self, record):
+        real_swap(self, record)
         raise OSError("killed after the manifest swap")
 
     for kill, swapped in ((killed_before_swap, False), (killed_after_swap, True)):
         lineage = store.manifest("mentions")["lineage"]
-        monkeypatch.setattr(StageStore, "_publish", kill)
+        monkeypatch.setattr(StageStore, "_swap", kill)
         with pytest.raises(OSError, match="killed"):
             StageStore(root, run_id="c").compact(spark, "mentions")
-        monkeypatch.setattr(StageStore, "_publish", real_publish)
+        monkeypatch.setattr(StageStore, "_swap", real_swap)
         assert (store.manifest("mentions")["lineage"] != lineage) == swapped
         assert not _committed_files_only(store, "mentions")
         m = run_codekg_pipeline(spark, mk(rows), root, run_id="r")
@@ -756,6 +786,47 @@ def test_compact_preserves_reads_and_guards(spark, tmp_path):
     )
     with pytest.raises(RuntimeError, match="different input"):
         run_codekg_pipeline(spark, mk(rows).unionByName(extra), root, run_id="r2")
+
+
+def test_compact_all_compacts_the_listed_stages(spark, tmp_path, monkeypatch, capsys):
+    """``--compact all`` compacts every stage the warehouse's manifest
+    lists, the sidecar and the stages an append rebuilt included, with
+    reads unchanged; a stream checkpoint under the root (the stream's
+    default ``<root>/_stream_ckpt``) is no stage and stays
+    byte-identical."""
+    import collections
+
+    from structured_data_entity_extraction_spark import pipeline, session
+
+    rows = repos_src_rows(40, seed=38)
+    mk = lambda rs: spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
+        REPOS_SRC,
+    )
+    root = str(tmp_path / "w")
+    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
+    pipeline.run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
+    ckpt = os.path.join(root, "_stream_ckpt")
+    os.makedirs(os.path.join(ckpt, "offsets"))
+    for name, text in (("metadata", '{"id":"q"}\n'), ("offsets/0", "v1\n{}\n")):
+        with open(os.path.join(ckpt, name), "w", encoding="utf-8") as fh:
+            fh.write(text)
+    ckpt_before = _files(ckpt)
+    store = StageStore(root)
+    stages = sorted(store.record()["stages"])
+    assert len(stages) == 6
+    read = lambda st: collections.Counter(map(tuple, store.read(spark, st).collect()))
+    before = {st: read(st) for st in stages}
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    pipeline.main(["--output", root, "--compact", "all", "--run-id", "c"])
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["mode"] == "compact" and sorted(out["stages"]) == stages
+    for st in stages:
+        assert store.manifest(st)["run_id"] == "c", st
+        assert read(st) == before[st], st
+        assert _committed_files_only(store, st), st
+    assert _files(ckpt) == ckpt_before
 
 
 def test_append_writes_one_file_per_partition_per_batch(spark, tmp_path):
@@ -833,7 +904,7 @@ def test_checked_commit_keeps_layout_and_refuses_foreign_row(spark, tmp_path):
     foreign = frame(rows + [("d0", "x", "f" * 64, 0, "py")])
     with pytest.raises(RuntimeError, match="invariant violated at stage bad: 1 "):
         checked.write(foreign, "bad", ["repo_bucket", "lang"])
-    assert not os.path.exists(checked.manifest_path("bad"))
+    assert not checked.is_complete("bad")
 
 
 def test_determinism(spark, repos_df, tmp_path):
@@ -861,23 +932,13 @@ def _rows_of(stage_df, repos_src):
     return stage_df.join(ids, "doc_id", "left_semi")
 
 
-def _strip_layout(root):
-    """Make a warehouse look like one written before layouts were
-    recorded: no manifest carries a layout or input_bytes key."""
-    store = StageStore(root)
-    for stage in ("mentions", "candidates", "edges", "nodes", "triples"):
-        m = store.manifest(stage)
-        m.pop("layout", None)
-        del m["input_bytes"]
-        store._publish(stage, m)
-
-
 def test_pipeline_layout_derived_and_recorded(spark, repos_df, tmp_path, monkeypatch):
     """The partitioned stages' layout comes from the input's content
-    bytes: a small input gets (1, 1), recorded in the mentions,
-    candidates and triples manifests, with all data under
-    repo_bucket=0. The derivation clamps to (64, 8); given a recorded
-    bucket count, the salt makes up the remaining keys."""
+    bytes: a small input gets (1, 1), recorded once in the warehouse's
+    manifest (no stage entry copies it), with all mentions, candidates
+    and triples data under repo_bucket=0. The derivation clamps to
+    (64, 8); given a recorded bucket count, the salt makes up the
+    remaining keys."""
     from structured_data_entity_extraction_spark import pipeline
     from structured_data_entity_extraction_spark.ops.cache import cache_scope
 
@@ -886,16 +947,16 @@ def test_pipeline_layout_derived_and_recorded(spark, repos_df, tmp_path, monkeyp
     small = {"bucket_count": 1, "write_salt": 1}
     assert m["layout"] == small
     store = StageStore(out)
+    assert store.record()["layout"] == small
     for stage in ("mentions", "candidates", "triples"):
-        assert store.manifest(stage)["layout"] == small
         assert _stage_buckets(out, stage) == {0}
-    for stage in ("edges", "nodes"):
-        assert "layout" not in store.manifest(stage)
+    for stage in ("mentions", "candidates", "edges", "nodes", "triples", "_input_pairs"):
+        assert not {"layout", "input_sha_digest", "input_docs", "input_bytes"} & set(store.manifest(stage))
 
     with cache_scope():
         _pairs, _digest, _n, content_bytes = pipeline.input_identity(repos_df)
     assert content_bytes == sum(len((r or "").encode()) for (r,) in repos_df.select("content").collect())
-    assert store.manifest("triples")["input_bytes"] == content_bytes
+    assert store.record()["input_bytes"] == content_bytes
     monkeypatch.setattr(pipeline, "LAYOUT_TARGET_BYTES", 1)
     assert pipeline.derive_layout(content_bytes) == {"bucket_count": 64, "write_salt": 8}
     assert pipeline.derive_layout(content_bytes, 2) == {"bucket_count": 2, "write_salt": 256}
@@ -934,9 +995,9 @@ def test_append_keeps_recorded_layout(spark, tmp_path, monkeypatch):
     assert grown["write_salt"] > 1
     assert m_inc["layout"] == grown
     store = StageStore(inc_root)
+    assert store.record()["layout"] == grown
+    assert store.record()["input_bytes"] == total_bytes
     for stage in ("mentions", "candidates", "triples"):
-        assert store.manifest(stage)["layout"] == grown
-        assert store.manifest(stage)["input_bytes"] == total_bytes
         assert _stage_buckets(inc_root, stage) <= set(range(8))
     new = _rows_of(store.read(spark, "mentions"), mk(rows[100:]))
     assert new.count() > 0
@@ -952,76 +1013,6 @@ def test_append_keeps_recorded_layout(spark, tmp_path, monkeypatch):
         for r in (inc_root, full_root)
     )
     assert got == want
-
-
-def test_unrecorded_layout_refuses_resume_and_append(spark, tmp_path):
-    """A warehouse whose manifests record no layout (written before
-    layouts were recorded) refuses both a resume over its own input and
-    an append, before writing anything."""
-    from structured_data_entity_extraction_spark import pipeline
-
-    rows = repos_src_rows(30, seed=37)
-    mk = lambda rs: spark.createDataFrame(
-        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
-        REPOS_SRC,
-    )
-    root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
-    _strip_layout(root)
-    before = _files(root)
-    with pytest.raises(RuntimeError, match="stage 'candidates' records no partition layout"):
-        run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="r")
-    assert _files(root) == before
-    with pytest.raises(RuntimeError, match="stage 'candidates' records no partition layout"):
-        pipeline.run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
-    assert _files(root) == before
-
-
-def test_append_refuses_stale_global_stage(spark, tmp_path):
-    """An append holds every committed stage to mentions' recorded
-    input, the corpus-global ones included: a triples manifest that
-    records another input digest refuses the append before it writes
-    anything."""
-    from structured_data_entity_extraction_spark.pipeline import (
-        run_codekg_pipeline_incremental,
-    )
-
-    rows = repos_src_rows(30, seed=53)
-    mk = lambda rs: spark.createDataFrame(
-        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rs],
-        REPOS_SRC,
-    )
-    root = str(tmp_path / "w")
-    run_codekg_pipeline(spark, mk(rows[:20]), root, run_id="b")
-    store = StageStore(root)
-    m = store.manifest("triples")
-    m["input_sha_digest"] = str(int(m["input_sha_digest"]) + 1)
-    store._publish("triples", m)
-
-    def manifests():
-        return {p: b for p, b in _files(root).items() if p.endswith("_MANIFEST.json")}
-
-    before = manifests()
-    with pytest.raises(RuntimeError, match="stage 'triples' .* different input"):
-        run_codekg_pipeline_incremental(spark, mk(rows[20:]), root, run_id="i")
-    assert manifests() == before
-
-
-def test_resumed_stage_must_match_layout(spark, rows, tmp_path):
-    """A resumed partitioned stage written with another bucket count
-    than the mentions stage refuses instead of mixing layouts."""
-    out = str(tmp_path / "w")
-    df = spark.createDataFrame(
-        [(r["repo"], r["path"], r["commit"], r["lang"], r["content"]) for r in rows[:20]],
-        REPOS_SRC,
-    )
-    run_codekg_pipeline(spark, df, out)
-    store = StageStore(out)
-    m = store.manifest("candidates")
-    m["layout"] = {"bucket_count": 64, "write_salt": 8}
-    store._publish("candidates", m)
-    with pytest.raises(RuntimeError, match="stage 'candidates' was written with 64 repo buckets"):
-        run_codekg_pipeline(spark, df, out, run_id="r")
 
 
 def _cache_empty(spark) -> bool:
@@ -1434,7 +1425,7 @@ def test_empty_content_doc_does_not_abort(spark, tmp_path):
     assert m["stages"]["mentions"]["sha_invariant_ok"] is True
     store = StageStore(str(tmp_path / "w"))
     assert store.read(spark, "mentions").select("doc_id").distinct().count() == 1
-    assert store.manifest("mentions")["input_docs"] == 3
+    assert store.record()["input_docs"] == 3
 
 
 def test_avaluo_pipeline_gate_and_invariant(spark, tmp_path):

@@ -1,12 +1,13 @@
 """Live kill -9 probes for the STREAMING ingest itself (VERDICT r5 #7;
 BENCH.md records the batch-path kill probes).
 
-Two scenarios, each against a real `run_pipeline.py --stream` child
+Three scenarios, each against a real `run_pipeline.py --stream` child
 process over a multi-file input (maxFilesPerTrigger=8 -> multiple
 micro-batches):
 
-A) SIGKILL mid-BOOTSTRAP foreachBatch: poll for the mentions manifest
-   and kill the driver before the candidates commit / identity sidecar.
+A) SIGKILL mid-BOOTSTRAP foreachBatch: poll for the warehouse's
+   manifest listing mentions and kill the driver before the candidates
+   commit / identity sidecar.
    Restarting from the SAME checkpoint must redeliver micro-batch 0
    (its offset never committed), self-heal via the bootstrap dispatch
    (mentions resumed under the identity guard, candidates + sidecar
@@ -15,12 +16,19 @@ A) SIGKILL mid-BOOTSTRAP foreachBatch: poll for the mentions manifest
 
 B) SIGKILL mid-APPEND foreachBatch: wait for the bootstrap to commit,
    then kill while a later batch's mentions write is in flight (its
-   `mentions/data/_temporary` exists while the mentions manifest still
+   `mentions/data/_temporary` exists while mentions' entry still
    carries an earlier batch's run_id). The batch's files are
    uncommitted: restarting from the same checkpoint redelivers the
    batch, whose stamp rolls mentions back to its lineage, so the
    stream must drain with exit 0 and a finalize run must match the
    from-scratch triples.
+
+C) SIGKILL between two stages' appends: as B, but kill once a later
+   batch's `candidates/data/_temporary` exists, i.e. after that batch's
+   mentions files landed. The append grows mentions, candidates and
+   the sidecar in one manifest swap, so nothing of the batch is
+   committed yet: the restart must drain with exit 0 and the finalize
+   must match the from-scratch triples.
 
 The pytest twin (simulated mid-batch fault, same cut point as A) is
 tests/test_streaming.py::test_stream_mid_batch_abort_restart_self_heals.
@@ -149,15 +157,16 @@ def main() -> None:
 
     want = triples_sorted(wh_ref)
 
+    def drained(out: str) -> dict:
+        return json.loads(
+            [l for l in out.splitlines() if l.startswith('{"mode": "stream"')][-1]
+        )["stages"]
+
     # ---------------- scenario A: kill mid-bootstrap
     whA = os.path.join(base, "whA")
     pA = _spawn_stream(inp, whA, "kA")
-    t_kill = _poll_kill(
-        pA,
-        lambda: os.path.exists(os.path.join(whA, "mentions", "_MANIFEST.json")),
-        "A",
-    )
     stA = StageStore(whA)
+    t_kill = _poll_kill(pA, lambda: stA.is_complete("mentions"), "A")
     report["A"] = {
         "killed_after_s": t_kill,
         "at_kill": {
@@ -171,39 +180,49 @@ def main() -> None:
     outA = _wait_stream(pA2, "A-restart")
     finA = _run(["--input", inp, "--output", whA, "--run-id", "finA"])
     mA = json.loads(finA.stdout.strip().splitlines()[-1])
-    report["A"]["restart_drained"] = json.loads(
-        [l for l in outA.splitlines() if l.startswith('{"mode": "stream"')][-1]
-    )["stages"]
+    report["A"]["restart_rc"] = pA2.returncode
+    report["A"]["restart_drained"] = drained(outA)
     report["A"]["finalize_resumed"] = {
         s: mA["stages"][s]["resumed"] for s in ("mentions", "candidates")
     }
     report["A"]["triples_match_scratch"] = triples_sorted(whA) == want
 
-    # ---------------- scenario B: kill mid-append (inside mentions' write)
-    whB = os.path.join(base, "whB")
-    pB = _spawn_stream(inp, whB, "kB")
-    stB = StageStore(whB)
-    temporary = os.path.join(whB, "mentions", "data", "_temporary")
+    # ---------------- scenarios B and C: kill inside a later batch's
+    # append, in mentions' write (B) or in candidates' write, after
+    # mentions' files landed (C)
+    for label, stage in (("B", "mentions"), ("C", "candidates")):
+        wh = os.path.join(base, f"wh{label}")
+        proc = _spawn_stream(inp, wh, f"k{label}")
+        st = StageStore(wh)
+        temporary = os.path.join(wh, stage, "data", "_temporary")
 
-    def append_window() -> bool:
-        # only an append writes into a committed mentions stage
-        return stB.is_complete("mentions") and os.path.exists(temporary)
+        def append_window() -> bool:
+            # only an append writes into a listed stage
+            return st.is_complete(stage) and os.path.exists(temporary)
 
-    t_killB = _poll_kill(pB, append_window, "B")
-    report["B"] = {
-        "killed_after_s": t_killB,
-        "mentions_run_id_at_kill": stB.manifest("mentions")["run_id"],
-        "temporary_present": os.path.exists(temporary),
-    }
-    # restart from the same checkpoint: the batch is redelivered and its
-    # stamp rolls the uncommitted files back
-    pB2 = _spawn_stream(inp, whB, "kB2")
-    outB = _wait_stream(pB2, "B-restart")
-    report["B"]["restart_drained"] = json.loads(
-        [l for l in outB.splitlines() if l.startswith('{"mode": "stream"')][-1]
-    )["stages"]
-    _run(["--input", inp, "--output", whB, "--run-id", "finB"])
-    report["B"]["triples_match_scratch"] = triples_sorted(whB) == want
+        t_kill = _poll_kill(proc, append_window, label)
+        mentions = os.path.join(wh, "mentions", "data")
+        listed = {f["file"] for f in st.manifest("mentions")["lineage"]}
+        report[label] = {
+            "killed_after_s": t_kill,
+            "mentions_run_id_at_kill": st.manifest("mentions")["run_id"],
+            "temporary_present": os.path.exists(temporary),
+            # the killed batch's mentions files that landed outside _temporary
+            "unlisted_mentions_files": sum(
+                n.endswith(".parquet") and "_temporary" not in r
+                and os.path.relpath(os.path.join(r, n), mentions) not in listed
+                for r, _d, names in os.walk(mentions)
+                for n in names
+            ),
+        }
+        # restart from the same checkpoint: the batch is redelivered and
+        # its stamp rolls the uncommitted files back
+        restart = _spawn_stream(inp, wh, f"k{label}2")
+        out = _wait_stream(restart, f"{label}-restart")
+        report[label]["restart_rc"] = restart.returncode
+        report[label]["restart_drained"] = drained(out)
+        _run(["--input", inp, "--output", wh, "--run-id", f"fin{label}"])
+        report[label]["triples_match_scratch"] = triples_sorted(wh) == want
 
     print(json.dumps(report, indent=2))
 
